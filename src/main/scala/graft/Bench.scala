@@ -84,13 +84,15 @@ object Bench {
       .mkString("{", ",", "}")
     val acts = results.map { case (k, _, a) => s"\"" + k + "\":" + fmt(a) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    // a failed query records -1 in the maps and stays out of the total
+    val total = results.map(_._2).filter(_ >= 0d).sum
+    val nFailed = results.count(_._2 < 0d)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "docs/bench_latest.json")
     val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","file":"$outFile"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"queries":$qs,"sf":"$sfDir","file":"$outFile"}"""
     val fileLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"action":$acts,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"queries":$qs,"action":$acts,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (fileLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Throwable => () } // stdout line still carries everything

@@ -809,9 +809,7 @@ private[graft] object QueriesMultimodal {
       (s, dir) => QuerySupport.withStreamingPartitions(s) {
         import s.implicits._
         import graft.pipeline.{ImageCodec, ImageProbe}
-        val name = "sip_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_iprobe").toString
-        val srcDir = QuerySupport.stagedStreamSource("image_payloads", dir) { p =>
+        val srcDir = QuerySupport.stagedStreamSource("image_payloads", s, dir) { p =>
           val base = Tables.documents(s, dir).filter(col("doc_id") < 400)
             .select(col("doc_id")).as[Long]
           val payloads = base.map { id =>
@@ -836,14 +834,8 @@ private[graft] object QueriesMultimodal {
             val info = ImageProbe.probe(bytes)
             (id, info.format, info.width, info.height)
           }.toDF("doc_id", "format", "width", "height")
-        val q = probed.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        QuerySupport.cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).filter(col("doc_id") >= 0).orderBy(col("doc_id"))
+        QuerySupport.runToMemory(s, "iprobe", "append")(probed)
+          .filter(col("doc_id") >= 0).orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id,
         |  CASE WHEN doc_id % 4 = 0 THEN 'png' WHEN doc_id % 4 = 1 THEN 'bmp'
@@ -977,9 +969,7 @@ private[graft] object QueriesMultimodal {
     Q("streaming_audio_meta",
       (s, dir) => QuerySupport.withStreamingPartitions(s) {
         import s.implicits._
-        val name = "sam_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ameta").toString
-        val srcDir = QuerySupport.stagedStreamSource("audio_meta_payloads", dir) { p =>
+        val srcDir = QuerySupport.stagedStreamSource("audio_meta_payloads", s, dir) { p =>
           val ids = Tables.events(s, dir).select(col("event_id").cast("long"))
             .filter(col("event_id") < 240).distinct().as[Long]
           val payloads = ids.map { id =>
@@ -1010,14 +1000,8 @@ private[graft] object QueriesMultimodal {
             val m = graft.pipeline.AudioMeta.probeMeta(bytes)
             (id, m.format, m.nFields, m.metaBytes)
           }.toDF("id", "format", "n_fields", "meta_bytes")
-        val q = probed.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        QuerySupport.cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).filter(col("id") >= 0).orderBy(col("id"))
+        QuerySupport.runToMemory(s, "ameta", "append")(probed)
+          .filter(col("id") >= 0).orderBy(col("id"))
       },
       Some("""WITH ids AS (SELECT DISTINCT CAST(event_id AS BIGINT) AS id
         |  FROM events WHERE event_id < 240),
@@ -1040,9 +1024,7 @@ private[graft] object QueriesMultimodal {
     Q("streaming_pdf_probe",
       (s, dir) => QuerySupport.withStreamingPartitions(s) {
         import s.implicits._
-        val name = "spp_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_pdf").toString
-        val srcDir = QuerySupport.stagedStreamSource("pdf_payloads", dir) { p =>
+        val srcDir = QuerySupport.stagedStreamSource("pdf_payloads", s, dir) { p =>
           val base = Tables.documents(s, dir).filter(col("doc_id") < 300)
             .select(col("doc_id")).as[Long]
           val payloads = base.map { id =>
@@ -1059,14 +1041,8 @@ private[graft] object QueriesMultimodal {
             (id, p.versionMinor, p.nPages, p.hasEncrypt, p.xrefOk)
           }.toDF("doc_id", "version_minor", "n_pages", "has_encrypt",
             "xref_ok")
-        val q = probed.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        QuerySupport.cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).filter(col("doc_id") >= 0).orderBy(col("doc_id"))
+        QuerySupport.runToMemory(s, "pdf", "append")(probed)
+          .filter(col("doc_id") >= 0).orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id,
         |  CAST(4 + doc_id % 4 AS BIGINT) AS version_minor,
@@ -1304,9 +1280,7 @@ private[graft] object QueriesMultimodal {
     Q("streaming_warc_ingest",
       (s, dir) => QuerySupport.withStreamingPartitions(s) {
         import s.implicits._
-        val name = "swi_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_warc").toString
-        val srcDir = QuerySupport.stagedStreamSource("warc_payloads", dir) { p =>
+        val srcDir = QuerySupport.stagedStreamSource("warc_payloads", s, dir) { p =>
           val base = Tables.documents(s, dir).filter(col("doc_id") < 240)
             .select(col("doc_id")).as[Long]
           val payloads = base.map { id =>
@@ -1332,14 +1306,7 @@ private[graft] object QueriesMultimodal {
                 (id, j.toLong, r.warcType, r.payload.length.toLong)
             }
           }.toDF("doc_id", "rec_index", "warc_type", "content_length")
-        val q = parsed.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        QuerySupport.cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).filter(col("doc_id") >= 0)
+        QuerySupport.runToMemory(s, "warc", "append")(parsed).filter(col("doc_id") >= 0)
           .orderBy(col("doc_id"), col("rec_index"))
       },
       Some("""WITH b AS (SELECT doc_id, 1 + doc_id % 3 AS n
@@ -1416,9 +1383,7 @@ private[graft] object QueriesMultimodal {
     Q("streaming_format_sniff",
       (s, dir) => QuerySupport.withStreamingPartitions(s) {
         import s.implicits._
-        val name = "sfs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_fmt").toString
-        val srcDir = QuerySupport.stagedStreamSource("fmt_payloads", dir) { p =>
+        val srcDir = QuerySupport.stagedStreamSource("fmt_payloads", s, dir) { p =>
           val base = Tables.documents(s, dir).filter(col("doc_id") < 300)
             .select(col("doc_id")).as[Long]
           val payloads = base.map { id =>
@@ -1445,14 +1410,8 @@ private[graft] object QueriesMultimodal {
           .map { case (id, bytes) =>
             (id, graft.pipeline.FormatSniff.sniff(bytes))
           }.toDF("doc_id", "sniffed")
-        val q = sniffed.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        QuerySupport.cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).filter(col("doc_id") >= 0).orderBy(col("doc_id"))
+        QuerySupport.runToMemory(s, "fmt", "append")(sniffed)
+          .filter(col("doc_id") >= 0).orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id,
         |  CASE doc_id % 6 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
@@ -1547,9 +1506,7 @@ private[graft] object QueriesMultimodal {
     Q("streaming_srt_gate",
       (s, dir) => QuerySupport.withStreamingPartitions(s) {
         import s.implicits._
-        val name = "ssg_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_srt").toString
-        val srcDir = QuerySupport.stagedStreamSource("srt_payloads", dir) { p =>
+        val srcDir = QuerySupport.stagedStreamSource("srt_payloads", s, dir) { p =>
           val base = Tables.documents(s, dir).filter(col("doc_id") < 300)
             .select(col("doc_id")).as[Long]
           val payloads = base.map { id =>
@@ -1578,14 +1535,8 @@ private[graft] object QueriesMultimodal {
               case _: IllegalArgumentException => (id, false, -1L, -1L)
             }
           }.toDF("doc_id", "decode_ok", "n_cues", "dur_us")
-        val q = gated.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        QuerySupport.cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).filter(col("doc_id") >= 0).orderBy(col("doc_id"))
+        QuerySupport.runToMemory(s, "srt", "append")(gated)
+          .filter(col("doc_id") >= 0).orderBy(col("doc_id"))
       },
       Some("""WITH c AS (SELECT doc_id,
         |    unnest(range(0, 1 + doc_id % 4)) AS j
@@ -1862,12 +1813,8 @@ private[graft] object QueriesMultimodal {
     Q("streaming_container_router",
       (s, dir) => QuerySupport.withStreamingPartitions(s) {
         import s.implicits._
-        val name = "scr_" + java.util.UUID.randomUUID().toString
-          .replace("-", "")
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_stream_container").toString
         val srcDir = QuerySupport.stagedStreamSource("container_payloads",
-          dir) { p =>
+          s, dir) { p =>
           val base = Tables.documents(s, dir).filter(col("doc_id") < 300)
             .select(col("doc_id")).as[Long]
           val payloads = base.map { id =>
@@ -1892,14 +1839,8 @@ private[graft] object QueriesMultimodal {
           .map { case (id, bytes) =>
             (id, graft.pipeline.FormatSniff.sniff(bytes))
           }.toDF("doc_id", "routed")
-        val q = routed.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        QuerySupport.cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).filter(col("doc_id") >= 0).orderBy(col("doc_id"))
+        QuerySupport.runToMemory(s, "container", "append")(routed)
+          .filter(col("doc_id") >= 0).orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id,
         |  CASE doc_id % 4 WHEN 0 THEN 'tar' WHEN 1 THEN 'zip'
@@ -1981,12 +1922,8 @@ private[graft] object QueriesMultimodal {
     Q("streaming_docx_gate",
       (s, dir) => QuerySupport.withStreamingPartitions(s) {
         import s.implicits._
-        val name = "sdg_" + java.util.UUID.randomUUID().toString
-          .replace("-", "")
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_stream_docx").toString
         val srcDir = QuerySupport.stagedStreamSource("docx_payloads",
-          dir) { p =>
+          s, dir) { p =>
           val base = Tables.documents(s, dir).filter(col("doc_id") < 300)
             .select(col("doc_id")).as[Long]
           val payloads = base.map { id =>
@@ -2014,14 +1951,8 @@ private[graft] object QueriesMultimodal {
               case scala.util.Failure(_) => (id, false, -1L)
             }
           }.toDF("doc_id", "ok", "n_chars")
-        val q = gated.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        QuerySupport.cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).filter(col("doc_id") >= 0).orderBy(col("doc_id"))
+        QuerySupport.runToMemory(s, "docx", "append")(gated)
+          .filter(col("doc_id") >= 0).orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id, doc_id % 17 <> 0 AS ok,
         |  CAST(CASE WHEN doc_id % 17 <> 0

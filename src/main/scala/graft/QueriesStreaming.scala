@@ -25,9 +25,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_near_dup",
       (s, dir) => withStreamingPartitions(s) {
         import s.implicits._
-        val name = "snd_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_snd").toString
-        val srcDir = stagedStreamSource("sndsrc", dir) { p =>
+        val srcDir = stagedStreamSource("sndsrc", s, dir) { p =>
           graft.expr.LongArrayDot.register(s)
           graft.expr.SrpSignature.register(s)
           val cs = graft.ops.SrpLsh.coefficients(60, 64)
@@ -45,14 +43,9 @@ private[graft] object QueriesStreaming {
           graft.streaming.StreamingOps.VecBucket].schema
         val raw = s.readStream.schema(schema).parquet(srcDir)
           .as[graft.streaming.StreamingOps.VecBucket]
-        val q = graft.streaming.StreamingOps.streamingNearDup(raw, minCos = 0.45)
-          .writeStream.format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).select(col("band").cast("long").as("band"), col("bv"),
+        runToMemory(s, "snd", "append")(
+          graft.streaming.StreamingOps.streamingNearDup(raw, minCos = 0.45))
+          .select(col("band").cast("long").as("band"), col("bv"),
             col("a"), col("b"), col("dot"), col("cos"))
           .orderBy(col("band"), col("bv"), col("b"))
       },
@@ -106,9 +99,7 @@ private[graft] object QueriesStreaming {
           struct(lit(id).as("sid"), array(v.map(lit(_)): _*).as("sv"),
             lit(math.sqrt(v.map(x => x.toDouble * x).sum)).as("snorm"))
         }: _*)
-        val name = "ivfin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ivfin").toString
-        val srcDir = stagedStreamSource("emb_r2", dir)(p =>
+        val srcDir = stagedStreamSource("emb_r2", s, dir)(p =>
           base.repartition(2).write.mode("overwrite").parquet(p.toString))
         val counts = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -127,14 +118,8 @@ private[graft] object QueriesStreaming {
             }))
           .select(col("best.sid").as("cell"))
           .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
-        val q = counts.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).select(col("cell"), col("n_vecs")).orderBy(col("cell"))
+        runToMemory(s, "ivfin", "complete")(counts)
+          .select(col("cell"), col("n_vecs")).orderBy(col("cell"))
       },
       Some(s"""WITH $quantSqlCte,
         |seeds AS (SELECT vec_id AS seed_id, qv AS sv,
@@ -188,9 +173,7 @@ private[graft] object QueriesStreaming {
             aggregate(col("qv"), lit(0L), (a, x) => a + x * x).as("pnn"))
           .cache()
         probes.count()
-        val name = "sdec_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_sdec").toString
-        val srcDir = stagedStreamSource("emb_r2", dir)(p =>
+        val srcDir = stagedStreamSource("emb_r2", s, dir)(p =>
           base.repartition(2).write.mode("overwrite").parquet(p.toString))
         val hits = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -218,14 +201,7 @@ private[graft] object QueriesStreaming {
             (sqrt(col("nn").cast("double")) * sqrt(col("pnn").cast("double"))))
           .filter(col("cos") >= 0.30)
           .select(col("a"), col("b"), col("dot"), col("cos"))
-        val q = hits.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("a"), col("b"))
+        runToMemory(s, "sdec", "append")(hits).orderBy(col("a"), col("b"))
       },
       Some(s"""WITH $quantSqlCte,
         |seeds AS (SELECT vec_id AS seed_id, qv AS sv,
@@ -257,9 +233,7 @@ private[graft] object QueriesStreaming {
         val d = 3; val w = 256
         val cms = udaf(new CmsSketchAgg(d, w))
         val base = Tables.documents(s, dir)
-        val name = "sk_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_cms").toString
-        val srcDir = stagedStreamSource("docs_r2", dir)(p =>
+        val srcDir = stagedStreamSource("docs_r2", s, dir)(p =>
           base.repartition(2).write.mode("overwrite").parquet(p.toString))
         val grid = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -267,14 +241,7 @@ private[graft] object QueriesStreaming {
           .select(CmsSketch.cells(col("tok"), d, w).as("cs"))
           .groupBy()
           .agg(cms(col("cs")).as("grid"))
-        val q = grid.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir is shared, JVM-exit cleaned
-        val g = s.table(name).select(col("grid"))
+        val g = runToMemory(s, "cms", "complete")(grid).select(col("grid"))
         base.select(explode(TextOps.tokens(col("text"))).as("tok"))
           .groupBy(col("tok")).agg(count(lit(1)).as("exact_count"))
           .orderBy(col("exact_count").desc, col("tok")).limit(15)
@@ -313,9 +280,7 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/documents.parquet"
         val schema = s.read.parquet(path).schema
-        val name = "slg_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_lic").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, path, "documents.parquet"))
         val flagged = s.readStream.schema(schema).parquet(srcDir)
           .withColumn("t", lower(concat(col("text"),
@@ -331,14 +296,7 @@ private[graft] object QueriesStreaming {
             col("t").contains("all rights reserved").as("has_rights"))
           .filter(col("has_spdx") || col("has_copyright")
             || col("has_rights"))
-        val q = flagged.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("doc_id"))
+        runToMemory(s, "lic", "append")(flagged).orderBy(col("doc_id"))
       },
       Some("""WITH d2 AS (SELECT doc_id, lower(text
         |    || CASE WHEN doc_id % 7 = 0
@@ -371,9 +329,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_crawl_gate",
       (s, dir) => withStreamingPartitions(s) {
         import s.implicits._
-        val name = "scg_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_crawl").toString
-        val srcDir = stagedStreamSource("crawl_payloads", dir) { p =>
+        val srcDir = stagedStreamSource("crawl_payloads", s, dir) { p =>
           val base = Tables.documents(s, dir).filter(col("doc_id") < 300)
             .select(col("doc_id"), col("text")).as[(Long, String)]
           val payloads = base.map { case (id, text) =>
@@ -438,14 +394,8 @@ private[graft] object QueriesStreaming {
               }
             (id, status, n)
           }.toDF("doc_id", "status", "main_chars")
-        val q = gated.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).filter(col("doc_id") >= 0).orderBy(col("doc_id"))
+        runToMemory(s, "crawl", "append")(gated)
+          .filter(col("doc_id") >= 0).orderBy(col("doc_id"))
       },
       Some("""WITH b AS (SELECT doc_id,
         |    9 + len(trim(regexp_replace(text, '\s+', ' ', 'g'))) AS mc
@@ -466,9 +416,7 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/documents.parquet"
         val schema = s.read.parquet(path).schema
-        val name = "sog_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ocr").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, path, "documents.parquet"))
         val base = s.readStream.schema(schema).parquet(srcDir)
           .withColumn("text2",
@@ -480,14 +428,7 @@ private[graft] object QueriesStreaming {
             thresholdE6 = 30000L)
           .filter(col("ocr_suspect"))
           .select(col("doc_id"), col("n_tokens"), col("artifact_rate_e6"))
-        val q = gated.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("doc_id"))
+        runToMemory(s, "ocr", "append")(gated).orderBy(col("doc_id"))
       },
       Some("""WITH d2 AS (SELECT doc_id,
         |    CASE WHEN doc_id % 4 = 0 THEN text || ' a b c inter- l0ve'
@@ -521,9 +462,7 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/documents.parquet"
         val schema = s.read.parquet(path).schema
-        val name = "sga_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_gate").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, path, "documents.parquet"))
         val masked = s.readStream.schema(schema).parquet(srcDir)
           .select(col("doc_id"), col("n_chars"),
@@ -540,14 +479,7 @@ private[graft] object QueriesStreaming {
             + when(col("nt") >= 20L, lit(0L)).otherwise(lit(8L)))
             .as("fail_mask"))
           .groupBy(col("fail_mask")).agg(count(lit(1)).as("n"))
-        val q = masked.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("fail_mask"))
+        runToMemory(s, "gate", "complete")(masked).orderBy(col("fail_mask"))
       },
       Some("""WITH d2 AS (SELECT doc_id, n_chars,
         |    list_filter(string_split(text, ' '), x -> x != '') AS toks
@@ -578,9 +510,7 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/documents.parquet"
         val schema = s.read.parquet(path).schema
-        val name = "smn_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_mcn").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, path, "documents.parquet"))
         val scored = graft.ops.EvalOps.mcnemar(
           s.readStream.schema(schema).parquet(srcDir)
@@ -588,14 +518,7 @@ private[graft] object QueriesStreaming {
             .select((pmod(col("doc_id") * 7L, lit(10L)) < 7L).as("a_ok"),
               (pmod(col("doc_id") * 11L, lit(10L)) < 6L).as("b_ok")),
           "a_ok", "b_ok")
-        val q = scored.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name)
+        runToMemory(s, "mcn", "complete")(scored)
       },
       Some("""WITH b AS (SELECT (doc_id * 7) % 10 < 7 AS a,
         |    (doc_id * 11) % 10 < 6 AS b
@@ -621,12 +544,10 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/documents.parquet"
         val schema = s.read.parquet(path).schema
-        val name = "sc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_cur").toString
         // the file stream source consumes a DIRECTORY (the shape files
         // land in on a real feed); the oracle table is a single parquet
         // file, so stage it into a temp dir (hardlink, copy fallback)
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, path, "documents.parquet"))
         val gated = s.readStream.schema(schema).parquet(srcDir)
           .select(col("doc_id"), col("lang"), TextOps.tokens(col("text")).as("toks"))
@@ -638,14 +559,7 @@ private[graft] object QueriesStreaming {
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("total_tokens"),
             min(col("doc_id")).as("first_doc"))
-        val q = gated.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir is shared, JVM-exit cleaned
-        s.table(name).orderBy(col("lang"))
+        runToMemory(s, "cur", "complete")(gated).orderBy(col("lang"))
       },
       Some(s"""WITH $toksSqlCte,
         |sc AS (SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -672,9 +586,7 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/documents.parquet"
         val schema = s.read.parquet(path).schema
-        val name = "qn_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_qn").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, path, "documents.parquet"))
         val base = Tables.documents(s, dir)
           .select(col("source"), size(TextOps.tokens(col("text"))).cast("long").as("s"))
@@ -700,14 +612,7 @@ private[graft] object QueriesStreaming {
           .join(broadcast(gHist), col("p") > col("lo") && col("p") <= col("hi"))
           .select(col("doc_id"), col("source"), col("s").as("raw"),
             col("p"), col("gs").as("norm"))
-        val q = flagged.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("doc_id"))
+        runToMemory(s, "qn", "append")(flagged).orderBy(col("doc_id"))
       },
       Some("""WITH b AS (SELECT doc_id, source,
         |    CAST(len(list_filter(string_split(text, ' '), x -> x != '')) AS BIGINT) AS s
@@ -743,9 +648,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_bottomk",
       (s, dir) => withStreamingPartitions(s) {
         val base = Tables.documents(s, dir)
-        val name = "bk_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_bk").toString
-        val srcDir = stagedStreamSource("docs_r2", dir)(p =>
+        val srcDir = stagedStreamSource("docs_r2", s, dir)(p =>
           base.repartition(2).write.mode("overwrite").parquet(p.toString))
         val topk = udaf(new graft.expr.TopKAgg(10))
         val h = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
@@ -755,14 +658,7 @@ private[graft] object QueriesStreaming {
           .select(col("lang"), col("doc_id"), h.as("__h"))
           .groupBy(col("lang"))
           .agg(topk(-col("__h"), col("doc_id")).as("tk"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir is shared, JVM-exit cleaned
-        s.table(name)
+        runToMemory(s, "bk", "complete")(agg)
           .select(col("lang"), posexplode(col("tk")))
           .select(col("lang"), (col("pos") + 1).cast("long").as("rank"),
             col("col.id").as("doc_id"), (-col("col.value")).as("h"))
@@ -794,14 +690,12 @@ private[graft] object QueriesStreaming {
         val base = s.read.parquet(path)
         val schema = base.schema
         val gapUs = 4L * 3600L * 1000000L
-        val name = "ss_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ses").toString
         // events link + per-user heartbeat file (one row per user, +10
         // days past the global max event time, synthesized in the
         // file's own ts type, nulls elsewhere). Staged once per
         // session: the sentinel content is a deterministic function of
         // the input file, so warm-up and timed bench passes share it.
-        val srcDir = stagedStreamSource("sessrc", dir) { p =>
+        val srcDir = stagedStreamSource("sessrc", s, dir) { p =>
           linkInto(p, path, "events.parquet")
           val maxUs = base.select(Tables.tsUs(base).as("us"))
             .agg(max(col("us"))).head.getLong(0)
@@ -823,14 +717,7 @@ private[graft] object QueriesStreaming {
           .withWatermark("etime", "0 seconds")
           .groupBy(col("user_id"), session_window(col("etime"), "4 hours"))
           .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("sum_cents"))
-        val q = sessions.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir shared, JVM-exit cleaned
-        s.table(name).select(col("user_id"),
+        runToMemory(s, "ses", "append")(sessions).select(col("user_id"),
             unix_micros(col("session_window.start")).as("start_us"),
             (unix_micros(col("session_window.end")) - gapUs).as("end_us"),
             col("n_events"), col("sum_cents"))
@@ -866,8 +753,6 @@ private[graft] object QueriesStreaming {
         val path = s"$dir/events.parquet"
         val base = s.read.parquet(path)
         val schema = base.schema
-        val name = "sa_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_asof").toString
         val srcDir = eventsWithPurchaseHeartbeat(s, dir, path, base, schema)
         val rawStream = s.readStream.schema(schema).parquet(srcDir)
         val in = rawStream
@@ -879,14 +764,7 @@ private[graft] object QueriesStreaming {
             coalesce(round(col("value") * 100d).cast("long"), lit(0L)).as("payload"))
           .as[graft.streaming.TemporalEnrich.TimedEnrichInput]
         val out = graft.streaming.TemporalEnrich.eventTimeAsof(in, "0 seconds")
-        val q = out.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir shared, JVM-exit cleaned
-        s.table(name)
+        runToMemory(s, "asof", "append")(out)
           .select(col("k").cast("long").as("user_id"), col("tie").as("event_id"),
             col("ts").as("tus"), col("asofTs").as("prev_tus"),
             col("asofPayload").as("prev_cents"),
@@ -921,9 +799,7 @@ private[graft] object QueriesStreaming {
         val path = s"$dir/events.parquet"
         val base = s.read.parquet(path)
         val schema = base.schema
-        val name = "ste_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_enrich").toString
-        val srcDir = stagedStreamSource("enrichsrc", dir) { p =>
+        val srcDir = stagedStreamSource("enrichsrc", s, dir) { p =>
           linkInto(p, path, "events.parquet")
         }
         val rawStream = s.readStream.schema(schema).parquet(srcDir)
@@ -936,14 +812,7 @@ private[graft] object QueriesStreaming {
             coalesce(round(col("value") * 100d).cast("long"), lit(0L)).as("payload"))
           .as[graft.streaming.EnrichInput]
         val out = graft.streaming.TemporalEnrich.latestStateEnrich(in)
-        val q = out.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir shared, JVM-exit cleaned
-        s.table(name)
+        runToMemory(s, "enrich", "append")(out)
           .select(col("k").cast("long").as("user_id"), col("tie").as("event_id"),
             col("ts").as("tus"), col("asofTs").as("prev_tus"),
             col("asofPayload").as("prev_cents"))
@@ -975,8 +844,6 @@ private[graft] object QueriesStreaming {
         val path = s"$dir/events.parquet"
         val base = s.read.parquet(path)
         val schema = base.schema
-        val name = "sal_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_attr").toString
         val srcDir = eventsWithPurchaseHeartbeat(s, dir, path, base, schema)
         val rawStream = s.readStream.schema(schema).parquet(srcDir)
         val in = rawStream
@@ -989,14 +856,7 @@ private[graft] object QueriesStreaming {
           .as[graft.streaming.TemporalEnrich.AttrInput]
         val credits = graft.streaming.TemporalEnrich.eventTimeAttribution(
           in, "0 seconds", window = 86400000000L)
-        val q = credits.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir shared, JVM-exit cleaned
-        s.table(name).filter(col("k") =!= "-1")
+        runToMemory(s, "attr", "append")(credits).filter(col("k") =!= "-1")
           .groupBy(col("touchId").as("touch_id"),
             col("k").cast("long").as("user_id"))
           .agg(countDistinct(col("convId")).as("n_convs"),
@@ -1031,22 +891,13 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/documents.parquet"
         val schema = s.read.parquet(path).schema
-        val name = "sdp_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_dd").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, path, "documents.parquet"))
         val agg = s.readStream.schema(schema).parquet(srcDir)
           .select(col("lang"), TextOps.fingerprint(col("text"), 200).as("fp"))
           .groupBy(col("lang"), col("fp"))
           .agg(count(lit(1)).as("n_copies"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir is shared, JVM-exit cleaned
-        s.table(name).groupBy(col("lang"))
+        runToMemory(s, "dd", "complete")(agg).groupBy(col("lang"))
           .agg(count(lit(1)).as("n_unique"),
             sum(col("n_copies")).as("n_docs"),
             sum(when(col("n_copies") > 1, col("n_copies") - 1).otherwise(0L))
@@ -1071,9 +922,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_shots",
       (s, dir) => withStreamingPartitions(s) {
         import s.implicits._
-        val name = "shots_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_shots").toString
-        val srcDir = stagedStreamSource("shotsrc", dir) { p =>
+        val srcDir = stagedStreamSource("shotsrc", s, dir) { p =>
           val frames = Tables.documents(s, dir).filter(col("doc_id") < 500)
             .select(col("doc_id"),
               explode(expr("sequence(0L, 23L + doc_id % 17)")).as("frame"))
@@ -1090,14 +939,9 @@ private[graft] object QueriesStreaming {
           graft.streaming.StreamingOps.FrameEvent].schema
         val raw = s.readStream.schema(schema).parquet(srcDir)
           .as[graft.streaming.StreamingOps.FrameEvent]
-        val q = graft.streaming.StreamingOps.streamingShots(raw, maxDist = 3)
-          .writeStream.format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).select(col("vid").as("doc_id"), col("shot_id"),
+        runToMemory(s, "shots", "append")(
+          graft.streaming.StreamingOps.streamingShots(raw, maxDist = 3))
+          .select(col("vid").as("doc_id"), col("shot_id"),
             col("key_frame"), col("n_frames"))
           .orderBy(col("doc_id"), col("shot_id"))
       },
@@ -1121,9 +965,7 @@ private[graft] object QueriesStreaming {
         val bounds = base.select(Tables.tsUs(base).as("tus"))
           .agg(min(dayCol).cast("long"), max(dayCol).cast("long")).head()
         val (dmin, dmax) = (bounds.getLong(0), bounds.getLong(1))
-        val name = "dk_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_dk").toString
-        val srcDir = stagedStreamSource("events_link", dir)(p =>
+        val srcDir = stagedStreamSource("events_link", s, dir)(p =>
           linkInto(p, path, "events.parquet"))
         val rawStream = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -1134,14 +976,7 @@ private[graft] object QueriesStreaming {
               .as("__w"))
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), sum(col("__w")).as("decayed_num"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir is shared, JVM-exit cleaned
-        s.table(name)
+        runToMemory(s, "dk", "complete")(agg)
           .select(col("event_type"), col("n"), col("decayed_num"),
             lit(dmax - dmin).as("scale"),
             (col("decayed_num").cast("double") /
@@ -1160,9 +995,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_hh",
       (s, dir) => withStreamingPartitions(s) {
         val base = Tables.documents(s, dir)
-        val name = "hh_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_hh").toString
-        val srcDir = stagedStreamSource("docs_r2", dir)(p =>
+        val srcDir = stagedStreamSource("docs_r2", s, dir)(p =>
           base.repartition(2).write.mode("overwrite").parquet(p.toString))
         val ss = udaf(new graft.expr.SpaceSavingAgg(64, 10),
           org.apache.spark.sql.Encoders.STRING)
@@ -1170,14 +1003,7 @@ private[graft] object QueriesStreaming {
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
           .select(col("lang"), explode(TextOps.tokens(col("text"))).as("tok"))
           .groupBy(col("lang")).agg(ss(col("tok")).as("hh"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir is shared, JVM-exit cleaned
-        s.table(name)
+        runToMemory(s, "hh", "complete")(agg)
           .select(col("lang"), posexplode(col("hh")))
           .select(col("lang"), (col("pos") + 1).cast("long").as("rank"),
             col("col.key").as("tok"), col("col.est").as("est"),
@@ -1198,14 +1024,12 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/events.parquet"
         val base = s.read.parquet(path)
-        val name = "ij_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ij").toString
         // 2 staged files -> 2 micro-batches: enough to exercise cross-batch
         // join state, while every extra batch pays a full state-store
         // checkpoint cycle across all shuffle partitions (measured 20.7 s
         // at 5 batches vs ~8 s at 2, sf0.1). coalesce avoids shuffling the
         // whole table just to stage it.
-        val srcDir = stagedStreamSource("events_c2", dir)(p =>
+        val srcDir = stagedStreamSource("events_c2", s, dir)(p =>
           base.coalesce(2).write.mode("overwrite").parquet(p.toString))
         def side(tpe: String, pfx: String) = {
           val st = s.readStream.schema(base.schema)
@@ -1222,17 +1046,10 @@ private[graft] object QueriesStreaming {
           expr("v_user = p_user AND p_wts >= v_wts" +
             " AND p_wts <= v_wts + INTERVAL 1 HOUR"),
           "v_wts", "p_wts", delay = "40 days")
-        val q = joined
+        runToMemory(s, "ij", "append")(joined
           .select(col("v_user").as("user_id"), col("v_id"), col("v_tus"),
-            col("p_id"), col("p_tus"))
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir is shared, JVM-exit cleaned
-        s.table(name).orderBy(col("user_id"), col("v_id"), col("p_id"))
+            col("p_id"), col("p_tus")))
+          .orderBy(col("user_id"), col("v_id"), col("p_id"))
       },
       Some("""WITH v AS (SELECT user_id, event_id AS v_id, epoch_us(ts) AS v_tus
         |  FROM events WHERE event_type = 'view'),
@@ -1258,22 +1075,13 @@ private[graft] object QueriesStreaming {
         // re-reads the static side — a few-ms scan, not the two
         // training-corpus aggregations)
         val (c2, c1, vocab) = sessionLmModel(s, dir)
-        val name = "lf_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_lf").toString
-        val srcDir = stagedStreamSource("docs_c2", dir)(p =>
+        val srcDir = stagedStreamSource("docs_c2", s, dir)(p =>
           base.coalesce(2).write.mode("overwrite").parquet(p.toString))
         val stream = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
         val rollup = graft.streaming.StreamingOps.familiarityRollup(
           stream, c2, c1, vocab, "text", "lang", scale = 1000000L)
-        val q = rollup.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir is shared, JVM-exit cleaned
-        s.table(name).orderBy(col("lang"))
+        runToMemory(s, "lf", "complete")(rollup).orderBy(col("lang"))
       },
       Some("""WITH d AS (SELECT doc_id, lang,
         |    list_filter(string_split(text, ' '), x -> x != '') AS toks FROM documents),
@@ -1307,22 +1115,13 @@ private[graft] object QueriesStreaming {
     Q("streaming_dedup",
       (s, dir) => withStreamingPartitions(s) {
         val base = Tables.documents(s, dir)
-        val name = "sd_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_sd").toString
-        val srcDir = stagedStreamSource("docs_r2", dir)(p =>
+        val srcDir = stagedStreamSource("docs_r2", s, dir)(p =>
           base.repartition(2).write.mode("overwrite").parquet(p.toString))
         val dd = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
           .select(md5(col("text")).as("fp"))
           .dropDuplicates("fp")
-        val q = dd.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir is shared, JVM-exit cleaned
-        s.table(name).orderBy(col("fp"))
+        runToMemory(s, "sd", "append")(dd).orderBy(col("fp"))
       },
       Some("SELECT DISTINCT md5(text) AS fp FROM documents ORDER BY fp")),
 
@@ -1340,9 +1139,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_dedup_wm",
       (s, dir) => withStreamingPartitions(s) {
         val base = Tables.events(s, dir)
-        val name = "sdw_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_sdw").toString
-        val srcDir = stagedStreamSource("events_r2", dir)(p =>
+        val srcDir = stagedStreamSource("events_r2", s, dir)(p =>
           base.repartition(2).write.mode("overwrite").parquet(p.toString))
         val st = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -1357,14 +1154,7 @@ private[graft] object QueriesStreaming {
               col("event_type"))).as("fp"))
           .dropDuplicatesWithinWatermark("fp")
           .select(col("fp"))
-        val q = dd.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("fp"))
+        runToMemory(s, "sdw", "append")(dd).orderBy(col("fp"))
       },
       Some("""SELECT DISTINCT md5(concat(CAST(user_id AS VARCHAR), '|', event_type)) AS fp
         |FROM events ORDER BY fp""".stripMargin)),
@@ -1385,10 +1175,8 @@ private[graft] object QueriesStreaming {
         val path = s"$dir/events.parquet"
         val base = s.read.parquet(path)
         val schema = base.schema
-        val name = "sc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_cusum").toString
         // staged once per session: sentinel content is deterministic
-        val srcDir = stagedStreamSource("cusumsrc", dir) { p =>
+        val srcDir = stagedStreamSource("cusumsrc", s, dir) { p =>
           linkInto(p, path, "events.parquet")
           val maxUs = base.select(Tables.tsUs(base).as("us"))
             .agg(max(col("us"))).head.getLong(0)
@@ -1428,14 +1216,7 @@ private[graft] object QueriesStreaming {
           .as[graft.streaming.TemporalEnrich.CusumInput]
         val out = graft.streaming.TemporalEnrich.eventTimeCusum(
           in, "0 seconds", h = 2000000L)
-        val q = out.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt)) // srcDir shared, JVM-exit cleaned
-        s.table(name).filter(col("k") =!= "__hb")
+        runToMemory(s, "cusum", "append")(out).filter(col("k") =!= "__hb")
           .select(col("tie").as("event_id"), col("k").as("event_type"),
             col("ts").as("tus"), col("drift"), col("cusum"), col("alarm"))
           .orderBy(col("event_id"))
@@ -1469,9 +1250,7 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/documents.parquet"
         val schema = s.read.parquet(path).schema
-        val name = "sw_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_wer").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, s"$dir/documents.parquet", "documents.parquet"))
         val toks = TextOps.tokens(col("text"))
         val refs = Tables.documents(s, dir).filter(size(toks) > 0)
@@ -1494,14 +1273,7 @@ private[graft] object QueriesStreaming {
           .select(col("doc_id"), hyp.as("hyp"))
         val scored = TextOps.wordErrorRate(
           stream.join(broadcast(refs), Seq("doc_id")), "doc_id", "ref", "hyp")
-        val q = scored.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("doc_id"))
+        runToMemory(s, "wer", "append")(scored).orderBy(col("doc_id"))
       },
       Some(s"""WITH $toksSqlCte,
         |base AS (SELECT doc_id, toks[1:40] AS ref FROM d WHERE len(toks) > 0),
@@ -1540,9 +1312,7 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         import s.implicits._
         import graft.pipeline.{FlacAudio, WavAudio}
-        val name = "scl_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_clip").toString
-        val srcDir = stagedStreamSource("clip_payloads", dir) { p =>
+        val srcDir = stagedStreamSource("clip_payloads", s, dir) { p =>
           val ids = Tables.events(s, dir).select(col("event_id").cast("long"))
             .filter(col("event_id") < 200).distinct().as[Long]
           val payloads = ids.map { id =>
@@ -1565,14 +1335,7 @@ private[graft] object QueriesStreaming {
           .as[(String, Array[Byte])]
         val stats = Multimodal.amplitudeStats(
           WavAudio.decodeDataset(stream), 9000)
-        val q = stats.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("file"))
+        runToMemory(s, "clip", "append")(stats).orderBy(col("file"))
       },
       Some("""WITH ids AS (SELECT DISTINCT CAST(event_id AS BIGINT) AS id
         |  FROM events WHERE event_id < 200),
@@ -1603,9 +1366,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_ece",
       (s, dir) => withStreamingPartitions(s) {
         val base = Tables.documents(s, dir)
-        val name = "sece_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ece").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, s"$dir/documents.parquet", "documents.parquet"))
         val score = col("doc_id") * 7919L % 1000001L
         val y = when(col("doc_id") * 104729L % 1000001L < score, 1L)
@@ -1617,14 +1378,7 @@ private[graft] object QueriesStreaming {
           .groupBy(col("bin"))
           .agg(count(lit(1)).as("n"), sum(col("sc")).as("sum_conf_e6"),
             sum(col("y")).as("n_pos"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name)
+        runToMemory(s, "ece", "complete")(agg)
           .withColumn("gap_e6_num",
             abs(col("sum_conf_e6") - col("n_pos") * 1000000L))
           .withColumn("conf", col("sum_conf_e6").cast("double")
@@ -1644,9 +1398,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_script_mix",
       (s, dir) => withStreamingPartitions(s) {
         val base = Tables.documents(s, dir)
-        val name = "ssm_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_script").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, s"$dir/documents.parquet", "documents.parquet"))
         val minted = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -1659,14 +1411,7 @@ private[graft] object QueriesStreaming {
             sum(when(col("mixed"), 1L).otherwise(0L)).as("n_mixed"),
             sum(when(col("mojibake"), 1L).otherwise(0L)).as("n_mojibake"),
             sum(col("n_chars")).as("sum_chars"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("dominant_script"))
+        runToMemory(s, "script", "complete")(agg).orderBy(col("dominant_script"))
       },
       Some(scriptProfileOracleSql)),
 
@@ -1681,9 +1426,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_hll",
       (s, dir) => withStreamingPartitions(s) {
         val base = s.read.parquet(s"$dir/events.parquet")
-        val name = "shll_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_hll").toString
-        val srcDir = stagedStreamSource("events_link", dir)(p =>
+        val srcDir = stagedStreamSource("events_link", s, dir)(p =>
           linkInto(p, s"$dir/events.parquet", "events.parquet"))
         val agg = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -1698,14 +1441,7 @@ private[graft] object QueriesStreaming {
               .otherwise(lit(57L) - length(conv(col("w"), 10, 2))).as("reg"))
           .groupBy(col("event_type"), col("bucket"))
           .agg(max(col("reg")).as("reg"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name)
+        runToMemory(s, "hll", "complete")(agg)
           .groupBy(col("event_type"))
           .agg(map_from_entries(collect_list(struct(col("bucket"), col("reg"))))
             .as("__rm"))
@@ -1773,9 +1509,7 @@ private[graft] object QueriesStreaming {
         def qExpr = thr.foldRight(lit(-1L)) { case ((g, v), acc) =>
           when(col("event_type") === g, lit(v)).otherwise(acc)
         }
-        val name = "scm_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_conf").toString
-        val srcDir = stagedStreamSource("events_link", dir)(p =>
+        val srcDir = stagedStreamSource("events_link", s, dir)(p =>
           linkInto(p, s"$dir/events.parquet", "events.parquet"))
         val agg = s.readStream.schema(base.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -1786,14 +1520,7 @@ private[graft] object QueriesStreaming {
           .agg(count(lit(1)).as("n_test"),
             sum(when(col("s") <= col("qhat_e6"), 1L).otherwise(0L))
               .as("n_covered"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name)
+        runToMemory(s, "conf", "complete")(agg)
           .select(col("event_type").as("group"), qExpr.as("qhat_e6"),
             col("n_test"), col("n_covered"))
           .withColumn("coverage_e6",
@@ -1829,9 +1556,7 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         val path = s"$dir/documents.parquet"
         val schema = s.read.parquet(path).schema
-        val name = "srd_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_rdr").toString
-        val srcDir = stagedStreamSource("docs_link", dir)(p =>
+        val srcDir = stagedStreamSource("docs_link", s, dir)(p =>
           linkInto(p, path, "documents.parquet"))
         val vv = col("src") % 10
         val edges = broadcast(
@@ -1873,14 +1598,7 @@ private[graft] object QueriesStreaming {
           col("hops"),
           when(col("status").isin("resolved", "direct"), col("cur"))
             .otherwise(lit(-1L)).as("final_id"))
-        val q = out.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
-        s.table(name).orderBy(col("id"))
+        runToMemory(s, "rdr", "append")(out).orderBy(col("id"))
       },
       Some("""SELECT doc_id AS id,
         |  CASE WHEN doc_id % 10 IN (1, 4) THEN 'direct'
@@ -1906,9 +1624,7 @@ private[graft] object QueriesStreaming {
     Q("streaming_benford",
       (s, dir) => withStreamingPartitions(s) {
         val ev = Tables.events(s, dir)
-        val name = "sbf_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_bf").toString
-        val srcDir = stagedStreamSource("events_link", dir)(p =>
+        val srcDir = stagedStreamSource("events_link", s, dir)(p =>
           linkInto(p, s"$dir/events.parquet", "events.parquet"))
         val agg = s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", 1).parquet(srcDir)
@@ -1917,16 +1633,9 @@ private[graft] object QueriesStreaming {
           .select(substring(col("v").cast("string"), 1, 1)
             .cast("long").as("digit"))
           .groupBy(col("digit")).agg(count(lit(1)).as("n_d"))
-        val q = agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete")
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        cleanupDirs(java.nio.file.Paths.get(ckpt))
         val expected = Seq(301029L, 176091L, 124938L, 96910L, 79181L,
           66946L, 57991L, 51152L, 45757L)
-        val counts = s.table(name)
+        val counts = runToMemory(s, "bf", "complete")(agg)
         val tot = counts.agg(sum(col("n_d")).as("n"))
         counts.crossJoin(broadcast(tot))
           .withColumn("share_e6", expr("(n_d * 1000000L) div n"))

@@ -1,16 +1,17 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Curation, Dedup, SegmentOps, Similarity, TextOps}
 
 /** Shared infrastructure of the query registry (split from SparkEntry):
-  * the Q entry shape, session-lifetime memos of cross-family
-  * intermediates, streaming staging, the loopback fixture service, and
-  * the DuckDB CTE fragments shared by many oracles. See SparkEntry for
-  * the driver contract and the determinism policy.
+  * the Q entry shape, the session-lifetime registry of staged
+  * cross-family intermediates, the streaming runner, the loopback
+  * fixture service, and the DuckDB CTE fragments shared by many
+  * oracles. See SparkEntry for the driver contract and the determinism
+  * policy.
   */
 private[graft] object QuerySupport {
 
@@ -194,12 +195,8 @@ private[graft] object QuerySupport {
       fn: (SparkSession, String) => DataFrame,
       sql: Option[String])
 
-  /** Best-effort recursive delete of the one-shot streaming staging and
-    * checkpoint dirs a query created: once the AvailableNow run has
-    * terminated, the result lives entirely in the memory sink, so
-    * nothing on disk needs to outlive the stream (a Verify/Bench session
-    * runs many queries — without the janitor every run leaks its temp
-    * trees).
+  /** Best-effort recursive delete of temp trees (staging, checkpoint
+    * and sentinel dirs).
     */
   private[graft] def cleanupDirs(paths: java.nio.file.Path*): Unit =
     paths.foreach { p =>
@@ -211,27 +208,101 @@ private[graft] object QuerySupport {
       } catch { case _: Exception => () }
     }
 
-  /** Session-lifetime cache of staged streaming-source directories. The
-    * file-stream source consumes a DIRECTORY, so the batch parquet gets
-    * staged into a temp dir; staging used to run per query — at sf0.1
-    * the 14 streaming queries re-wrote the same documents/events tables
-    * eleven times, a fixed ~1 s floor each. Staged once per
-    * (tag, sf dir) per JVM now, shared by every query that streams the
-    * same shape, deleted at JVM exit instead of per query.
+  /** Run a streaming DataFrame to completion (AvailableNow) into a memory
+    * sink and return the sink's result table. The sink's temp view and
+    * the `graft_stream_<tag>` checkpoint dir are released before return,
+    * whether the stream succeeded or failed; the returned DataFrame keeps
+    * its own reference to the sink's rows.
     */
-  private[graft] val streamStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def runToMemory(s: SparkSession, tag: String, mode: String)(
+      stream: Dataset[_]): DataFrame = {
+    val name = s"${tag}_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft_stream_$tag")
+    try {
+      stream.writeStream.format("memory").queryName(name).outputMode(mode)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      s.table(name)
+    } finally {
+      s.catalog.dropTempView(name)
+      cleanupDirs(ckpt)
+    }
+  }
 
-  /** Session-keyed cache of the streaming-familiarity LM model tables
-    * (bigram counts, unigram counts, vocab) — deterministic per corpus.
-    * Keyed by the SparkSession INSTANCE (identity equality), never by a
-    * hash: identityHashCode can collide across sessions and would hand
-    * a new session DataFrames bound to a stopped one. Sessions per JVM
-    * are few (one in Verify/Bench), so the pin is bounded.
+  /** Session-lifetime registry of staged intermediates, keyed by
+    * (SparkSession INSTANCE, tag, sf dir). Identity on the session, never
+    * a hash: identityHashCode can collide across sessions and would hand
+    * a new session DataFrames bound to a stopped one; a second session
+    * stages its own copies. Sessions per JVM are few (one in
+    * Verify/Bench), so the pin is bounded.
     */
-  private[graft] val lmModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (DataFrame, DataFrame, DataFrame)]()
+  private val staged =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Staged]()
+
+  /** One registry entry: its value is built on first access, once, under
+    * the entry's own lock. A build may stage other keys (pairs → cells →
+    * quant), which a nested `computeIfAbsent` on the map would reject
+    * with "Recursive update"; keys form a DAG, so the per-entry locks
+    * never cycle. A build that throws leaves the entry unbuilt for the
+    * next caller.
+    */
+  private final class Staged(build: => AnyRef) {
+    lazy val value: AnyRef = build
+  }
+
+  private def memo[T <: AnyRef](s: SparkSession, tag: String, dir: String)(
+      build: => T): T = {
+    val fresh = new Staged(build)
+    val prev = staged.putIfAbsent((s, tag, dir), fresh)
+    (if (prev != null) prev else fresh).value.asInstanceOf[T]
+  }
+
+  /** Temp dirs the registry created, deleted by one hook at JVM exit. */
+  private lazy val stagedDirs = {
+    val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    Runtime.getRuntime.addShutdownHook(new Thread(() => dirs.forEach(d => cleanupDirs(d))))
+    dirs
+  }
+
+  private def stagingDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    stagedDirs.add(d)
+    d
+  }
+
+  /** Stage a deterministic shared intermediate to session-lifetime
+    * LOCAL PARQUET once and hand every consumer the scan read once after
+    * the write — the cluster-scale "checkpoint the candidate graph once,
+    * fan the queries out over it" design, and the reason staged
+    * relations survive Bench's per-query `clearCache()`: an in-memory
+    * `.cache()` dies with the cache sweep and every later consumer
+    * silently re-ran the full candidate chain (~2.5 s/query of pure
+    * re-derivation at sf0.1), whereas the parquet scan is a few ms of
+    * local I/O. Values are exact across the round-trip
+    * (longs/strings/doubles and arrays thereof are bit-preserved by
+    * parquet).
+    */
+  private[graft] def stagedRelation(tag: String, s: SparkSession, dir: String)(
+      build: => DataFrame): DataFrame =
+    memo(s, s"graft_rel_$tag", dir) {
+      val path = stagingDir(s"graft_rel_$tag").resolve("rel").toString
+      build.write.mode("overwrite").parquet(path)
+      s.read.parquet(path)
+    }
+
+  /** The file-stream source consumes a DIRECTORY, so the batch parquet
+    * gets staged into a temp dir once per (session, tag, sf dir) and
+    * shared by every query that streams the same shape: staging per
+    * query costs a fixed ~1 s floor each at sf0.1.
+    */
+  private[graft] def stagedStreamSource(tag: String, s: SparkSession, dir: String)(
+      build: java.nio.file.Path => Unit): String =
+    memo(s, s"graft_stream_$tag", dir) {
+      val d = stagingDir(s"graft_stream_$tag")
+      build(d)
+      d.toString
+    }
 
   /** The en-corpus bigram LM model tables (c2, c1, vocab) shared by
     * four queries (familiarity, next-token, DoReMi, the streaming
@@ -244,73 +315,26 @@ private[graft] object QuerySupport {
     */
   private[graft] def sessionLmModel(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    lmModelCache.computeIfAbsent((s, dir), { _ =>
+    memo(s, "lm", dir) {
       val m = Curation.lmModel(
         Tables.documents(s, dir).filter(col("lang") === "en"), "text")
       (stagedRelation("lmc2", s, dir)(m._1),
         stagedRelation("lmc1", s, dir)(m._2),
         stagedRelation("lmvocab", s, dir)(m._3))
-    })
-
-  /** Session-lifetime memo of the two intermediates the dedup family
-    * shares: the full-corpus 3-gram shingle table (eight queries) and
-    * the 8-band J≥0.5 MinHash pair graph (five queries). One
-    * tokenize+explode+distinct and one LSH candidate+verify per
-    * session instead of one per query. Keyed by the SparkSession
-    * INSTANCE + sf dir (identity, cf. lmModelCache); two separate maps
-    * because the pair loader calls the shingle loader (nested
-    * computeIfAbsent on one ConcurrentHashMap throws).
-    */
-  private[graft] val shingleMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[graft] val minhashPairMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Stage a deterministic shared intermediate to session-lifetime
-    * LOCAL PARQUET once and hand every consumer a scan of it — the
-    * cluster-scale "checkpoint the candidate graph once, fan the
-    * queries out over it" design, and the reason the memos survive
-    * Bench's per-query `clearCache()`: an in-memory `.cache()` dies
-    * with the cache sweep and every later consumer silently re-ran
-    * the full candidate chain (~2.5 s/query of pure re-derivation at
-    * sf0.1), whereas the parquet scan is a few ms of local I/O.
-    * Values are exact across the round-trip (longs/strings/doubles
-    * and arrays thereof are bit-preserved by parquet).
-    */
-  private[graft] def stagedRelation(tag: String, s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = {
-    // NOT computeIfAbsent: staged builders nest (pairs → cells → quant
-    // all stage through this one map), and ConcurrentHashMap throws
-    // "Recursive update" whenever a nested computeIfAbsent lands in the
-    // bin the outer call holds — a HASH-DEPENDENT landmine that adding
-    // a key can trip. get/putIfAbsent is nesting-safe; builds are
-    // deterministic and staged to fresh temp dirs, so the worst case of
-    // a (driver-side, effectively single-threaded) race is a duplicate
-    // build whose loser's dir is cleaned at JVM exit like every other.
-    val key = s"rel_$tag|$dir"
-    val cached = streamStageCache.get(key)
-    val path = if (cached != null) cached else {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_rel_$tag")
-      build.write.mode("overwrite").parquet(d.resolve("rel").toString)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => cleanupDirs(d)))
-      val p = d.resolve("rel").toString
-      val prev = streamStageCache.putIfAbsent(key, p)
-      if (prev != null) prev else p
     }
-    s.read.parquet(path)
-  }
 
+  /** The two intermediates the dedup family shares: the full-corpus
+    * 3-gram shingle table (eight queries) and the 8-band J≥0.5 MinHash
+    * pair graph (five queries). One tokenize+explode+distinct and one
+    * LSH candidate+verify per session instead of one per query.
+    */
   private[graft] def sessionShingles(s: SparkSession, dir: String): DataFrame =
-    shingleMemo.computeIfAbsent((s, dir), { _ =>
-      stagedRelation("shingles", s, dir)(graft.ops.TextOps.shingleTable(
-        Tables.documents(s, dir), "doc_id", "text", 3))
-    })
+    stagedRelation("shingles", s, dir)(graft.ops.TextOps.shingleTable(
+      Tables.documents(s, dir), "doc_id", "text", 3))
 
   private[graft] def sessionMinhashPairs(s: SparkSession, dir: String): DataFrame =
-    minhashPairMemo.computeIfAbsent((s, dir), { _ =>
-      stagedRelation("mhpairs", s, dir)(graft.ops.Dedup.minhashLshPairs(
-        sessionShingles(s, dir), "doc_id", 8, 0.5))
-    })
+    stagedRelation("mhpairs", s, dir)(graft.ops.Dedup.minhashLshPairs(
+      sessionShingles(s, dir), "doc_id", 8, 0.5))
 
   /** The EVENT LINK GRAPH — per-user consecutive-event chain edges plus
     * event→type-hub edges — shared VERBATIM by twelve g_* queries
@@ -320,30 +344,24 @@ private[graft] object QuerySupport {
     * broadcast join to derive the same (src, dst) edge set, and the
     * iterative ops then localCheckpoint that derivation again. One
     * derivation per session (guide §5); exact across the parquet
-    * round-trip (two long columns). Same key/nesting rules as the
-    * shingle memos. NOT used by g_harmonic (chain-only on a bounded
-    * slice) or g_crawl_pagerank (a different graph).
+    * round-trip (two long columns). NOT used by g_harmonic (chain-only
+    * on a bounded slice) or g_crawl_pagerank (a different graph).
     */
-  private[graft] val eventEdgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def sessionEventEdges(s: SparkSession, dir: String): DataFrame =
-    eventEdgeMemo.computeIfAbsent((s, dir), { _ =>
-      stagedRelation("evedges", s, dir) {
-        val ev = evPoints(s, dir)
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("tus"), col("event_id"))
-        val chain = ev.withColumn("nxt", lead(col("event_id"), 1).over(w))
-          .filter(col("nxt").isNotNull)
-          .select(col("event_id").as("src"), col("nxt").as("dst"))
-        val hubs = ev.groupBy(col("event_type"))
-          .agg(min(col("event_id")).as("hub"))
-        val hubEdges = ev.join(broadcast(hubs), "event_type")
-          .filter(col("event_id") =!= col("hub"))
-          .select(col("event_id").as("src"), col("hub").as("dst"))
-        chain.unionByName(hubEdges)
-      }
-    })
+    stagedRelation("evedges", s, dir) {
+      val ev = evPoints(s, dir)
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("tus"), col("event_id"))
+      val chain = ev.withColumn("nxt", lead(col("event_id"), 1).over(w))
+        .filter(col("nxt").isNotNull)
+        .select(col("event_id").as("src"), col("nxt").as("dst"))
+      val hubs = ev.groupBy(col("event_type"))
+        .agg(min(col("event_id")).as("hub"))
+      val hubEdges = ev.join(broadcast(hubs), "event_type")
+        .filter(col("event_id") =!= col("hub"))
+        .select(col("event_id").as("src"), col("hub").as("dst"))
+      chain.unionByName(hubEdges)
+    }
 
   /** The full-corpus 8-band MinHash signature table over
     * [[sessionShingles]] — signatures are a pure per-doc function of
@@ -352,14 +370,9 @@ private[graft] object QuerySupport {
     * dedup_incremental's seen/new split reads two filters of it
     * instead of aggregating the shingle table twice per run.
     */
-  private[graft] val minhashSigMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def sessionMinhashSigs(s: SparkSession, dir: String): DataFrame =
-    minhashSigMemo.computeIfAbsent((s, dir), { _ =>
-      stagedRelation("mhsigs", s, dir)(graft.ops.Dedup.minhashSignatures(
-        sessionShingles(s, dir), "doc_id", 8))
-    })
+    stagedRelation("mhsigs", s, dir)(graft.ops.Dedup.minhashSignatures(
+      sessionShingles(s, dir), "doc_id", 8))
 
   /** The rare-shingle (df ≤ 50) pair-commons relation over
     * [[sessionShingles]] — (a, b, common, na, nb) with `common` exact
@@ -369,61 +382,37 @@ private[graft] object QuerySupport {
     * per-pair gate/score — the expensive stage is shared, the gates are
     * not (guide §5). All columns are longs, so the parquet round-trip
     * is bit-exact and every derived double is computed by the consumer
-    * from the same integers. Same key/nesting rules as the shingle
-    * memos.
+    * from the same integers.
     */
-  private[graft] val pairCommonsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def sessionPairCommons(s: SparkSession, dir: String): DataFrame =
-    pairCommonsMemo.computeIfAbsent((s, dir), { _ =>
-      stagedRelation("paircommons", s, dir)(graft.ops.Dedup.pairCommons(
-        sessionShingles(s, dir), "doc_id", 50L))
-    })
+    stagedRelation("paircommons", s, dir)(graft.ops.Dedup.pairCommons(
+      sessionShingles(s, dir), "doc_id", 50L))
 
   /** The CC labels over [[sessionMinhashPairs]] — four queries
     * (components, source_flow, canonical_best, leakage split) each ran
     * the full O(log² n) star-contraction loop on the same graph; one
-    * run per session now. Separate map: the loader calls
-    * sessionMinhashPairs (same nesting rule as above).
+    * run per session now.
     */
-  private[graft] val ccLabelMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def sessionCcLabels(s: SparkSession, dir: String): DataFrame =
-    ccLabelMemo.computeIfAbsent((s, dir), { _ =>
-      stagedRelation("cclabels", s, dir)(graft.ops.Dedup.connectedComponents(
-        sessionMinhashPairs(s, dir), "a", "b")
-        .withColumnRenamed("id", "doc_id"))
-    })
+    stagedRelation("cclabels", s, dir)(graft.ops.Dedup.connectedComponents(
+      sessionMinhashPairs(s, dir), "a", "b")
+      .withColumnRenamed("id", "doc_id"))
 
-  /** Session-lifetime memo of the IVF family's shared intermediates
-    * (same key/nesting rules as the shingle memos): the quantized
-    * full-corpus embedding table, the rank-1 cell assignment over it,
-    * and the verified cos≥0.45 same-cell pair set. dedup_semdedup and
-    * dedup_embedding_ivf consume the SAME pair table; the profile reads
-    * the assignment; the recall audit reuses the assignment restricted
-    * to its bounded slice (rank-1 assignment is row-local given the
-    * broadcast seeds, so the restriction is exact).
+  /** The IVF family's shared intermediates: the quantized full-corpus
+    * embedding table, the rank-1 cell assignment over it, and the
+    * verified same-cell pair set. dedup_semdedup and dedup_embedding_ivf
+    * consume the SAME pair table; the profile reads the assignment; the
+    * recall audit reuses the assignment restricted to its bounded slice
+    * (rank-1 assignment is row-local given the broadcast seeds, so the
+    * restriction is exact).
     */
-  private[graft] val quantEmbMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[graft] val ivfCellMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[graft] val ivfPairMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   private[graft] def sessionQuantEmb(s: SparkSession, dir: String): DataFrame =
-    quantEmbMemo.computeIfAbsent((s, dir), { _ =>
-      stagedRelation("quantemb", s, dir)(Similarity.quantize(
-        Tables.embeddings(s, dir), "vec_id", "embedding"))
-    })
+    stagedRelation("quantemb", s, dir)(Similarity.quantize(
+      Tables.embeddings(s, dir), "vec_id", "embedding"))
 
   private[graft] def sessionIvfCells(s: SparkSession, dir: String): DataFrame =
-    ivfCellMemo.computeIfAbsent((s, dir), { _ =>
-      stagedRelation("ivfcells", s, dir)(
-        Similarity.ivfCells(sessionQuantEmb(s, dir), "vec_id"))
-    })
+    stagedRelation("ivfcells", s, dir)(
+      Similarity.ivfCells(sessionQuantEmb(s, dir), "vec_id"))
 
   /** The verified same-cell pair table is staged at the LOOSEST cosine
     * any consumer needs (0.30, sim_dbscan's ε): `cos` is computed once
@@ -434,28 +423,21 @@ private[graft] object QuerySupport {
     * one per threshold (guide §5).
     */
   private[graft] def sessionIvfPairsLoose(s: SparkSession, dir: String): DataFrame =
-    ivfPairMemo.computeIfAbsent((s, dir), { _ =>
-      stagedRelation("ivfpairs30", s, dir)(Similarity.verifyPairs(
-        Similarity.ivfCandidatesFrom(sessionIvfCells(s, dir), "vec_id"),
-        sessionQuantEmb(s, dir), "vec_id", 0.30))
-    })
+    stagedRelation("ivfpairs30", s, dir)(Similarity.verifyPairs(
+      Similarity.ivfCandidatesFrom(sessionIvfCells(s, dir), "vec_id"),
+      sessionQuantEmb(s, dir), "vec_id", 0.30))
 
   private[graft] def sessionIvfPairs(s: SparkSession, dir: String): DataFrame =
     sessionIvfPairsLoose(s, dir).filter(col("cos") >= 0.45)
 
   /** One BPE training run per session serves induction (t_bpe_merges)
-    * AND application (t_bpe_encode) — same key rules as the shingle
-    * memos. Value = (merge-rule table: a driver-local relation; fully
-    * merged word table: already eagerly localCheckpoint-materialized
-    * by the training loop, nothing further to cache).
+    * AND application (t_bpe_encode). Value = (merge-rule table: a
+    * driver-local relation; fully merged word table: already eagerly
+    * localCheckpoint-materialized by the training loop, nothing further
+    * to cache) — kept in memory, not staged to parquet.
     */
-  private[graft] val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
-
   private[graft] def sessionBpe(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeMemo.computeIfAbsent((s, dir), { _ =>
-      TextOps.bpeTrainFull(Tables.documents(s, dir), "text", 4)
-    })
+    memo(s, "bpe", dir)(TextOps.bpeTrainFull(Tables.documents(s, dir), "text", 4))
 
   /** Session-lifetime token-count fixture service driving
     * `svc_batch_inference` (one loopback server per JVM, closed at
@@ -475,15 +457,6 @@ private[graft] object QuerySupport {
     Runtime.getRuntime.addShutdownHook(new Thread(() => svc.close()))
     svc
   }
-
-  private[graft] def stagedStreamSource(tag: String, dir: String)(
-      build: java.nio.file.Path => Unit): String =
-    streamStageCache.computeIfAbsent(s"$tag|$dir", { _ =>
-      val d = java.nio.file.Files.createTempDirectory(s"graft_stream_$tag")
-      build(d)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => cleanupDirs(d)))
-      d.toString
-    })
 
   /** coalesce(1)-write `sentinel` to a temp dir, copy its single part
     * file into `dest` as `asName` (default `zz_heartbeat.parquet`,
@@ -514,7 +487,7 @@ private[graft] object QuerySupport {
   private[graft] def eventsWithPurchaseHeartbeat(s: SparkSession, dir: String,
       path: String, base: DataFrame,
       schema: org.apache.spark.sql.types.StructType): String =
-    stagedStreamSource("asofsrc", dir) { p =>
+    stagedStreamSource("asofsrc", s, dir) { p =>
       linkInto(p, path, "events.parquet")
       val maxUs = base.select(Tables.tsUs(base).as("us"))
         .agg(max(col("us"))).head.getLong(0)

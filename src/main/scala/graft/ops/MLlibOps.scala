@@ -14,53 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object MLlibOps {
 
-  /** ANN via random-projection LSH on L2-normalized vectors: for unit
-    * vectors `||a-b||² = 2 - 2·cos(a,b)`, so a Euclidean radius is a
-    * cosine floor. `approxSimilarityJoin` shuffles on the hash-bucket
-    * key — candidate generation is an equi join, never all-pairs.
-    */
-  def annCosinePairs(emb: DataFrame, idCol: String, embCol: String,
-                     minCos: Double, numHashTables: Int = 4,
-                     bucketLength: Double = 0.5): DataFrame = {
-    val v = emb.select(col(idCol), array_to_vector(col(embCol)).as("vec"))
-    val nv = new Normalizer().setInputCol("vec").setOutputCol("features").setP(2.0)
-      .transform(v).select(col(idCol), col("features"))
-      .cache() // reused by fit + both sides of the self-join
-    nv.count() // eager: racing subtrees of one action must hit the cache
-    val lsh = new BucketedRandomProjectionLSH()
-      .setBucketLength(bucketLength).setNumHashTables(numHashTables).setSeed(42L)
-      .setInputCol("features").setOutputCol("hashes")
-    val model = lsh.fit(nv)
-    val maxDist = math.sqrt(math.max(0d, 2d - 2d * minCos))
-    model.approxSimilarityJoin(nv, nv, maxDist, "dist")
-      .select(col(s"datasetA.$idCol").as("a"), col(s"datasetB.$idCol").as("b"),
-        col("dist"))
-      .filter(col("a") < col("b"))
-  }
-
-  /** MinHash-LSH near-dup join over hashed shingle sets (Jaccard
-    * distance ≤ `maxJaccardDist`). Input: (id, text).
-    */
-  def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                          shingleN: Int, maxJaccardDist: Double,
-                          numHashTables: Int = 5): DataFrame = {
-    val sh = df.select(col(idCol),
-        TextOps.shingles(TextOps.tokens(col(textCol)), shingleN).as("shs"))
-      .filter(size(col("shs")) > 0)
-    val tf = new HashingTF().setInputCol("shs").setOutputCol("features")
-      .setNumFeatures(1 << 18).setBinary(true)
-    val feat = tf.transform(sh).select(col(idCol), col("features"))
-      .cache() // reused by fit + both sides of the self-join
-    feat.count() // eager: racing subtrees of one action must hit the cache
-    val lsh = new MinHashLSH().setNumHashTables(numHashTables).setSeed(42L)
-      .setInputCol("features").setOutputCol("hashes")
-    val model = lsh.fit(feat)
-    model.approxSimilarityJoin(feat, feat, maxJaccardDist, "jaccard_dist")
-      .select(col(s"datasetA.$idCol").as("a"), col(s"datasetB.$idCol").as("b"),
-        col("jaccard_dist"))
-      .filter(col("a") < col("b"))
-  }
-
   /** The production composition: MLlib ANN *candidates* verified by the
     * exact quantized cosine ([[Similarity.verifyPairs]]). Candidates are
     * the pairs colliding in ≥1 of the model's `numHashTables` buckets —

@@ -123,19 +123,6 @@ object TextOps {
     }
   }
 
-  /** Character n-grams over canonicalized text (lowercase, trimmed,
-    * whitespace collapsed to single spaces) — the language-ID feature
-    * that survives short/noisy documents where word markers miss. Pure
-    * HOF (sequence + substr), evaluated once per row via `let`.
-    */
-  def charNgrams(textCol: Column, n: Int): Column =
-    let(regexp_replace(trim(lower(textCol)), "\\s+", " ")) { canon =>
-      when(length(canon) >= n,
-        transform(sequence(lit(0), length(canon) - n),
-          i => canon.substr(i + 1, lit(n))))
-        .otherwise(array())
-    }
-
   /** Per-language characteristic character trigrams with INTEGER weights
     * (exact-domain scores; Cavnar–Trenkle-style profile, hand-sized to a
     * broadcastable literal). pidx is the deterministic tie-break rank.

@@ -226,4 +226,47 @@ class IOSpec extends SparkSpec {
     assert(df.filter($"dot" =!= $"ref").count() == 0)
     assert(df.select("dot").collect().map(_.getLong(0)).toSeq == Seq(32L, -13L))
   }
+
+  test("staged registry: one build per (session, tag, dir), nesting-safe, thread-safe") {
+    import java.util.concurrent.atomic.AtomicInteger
+    val dir = "registry-spec"
+    val builds = new AtomicInteger
+    def once() = QuerySupport.stagedRelation("spec_once", spark, dir) {
+      builds.incrementAndGet()
+      spark.range(5).toDF("id")
+    }
+    val first = once()
+    val second = once()
+    assert(builds.get == 1)
+    assert(second.collect().toSeq == first.collect().toSeq)
+    // the staged dir keeps the graft_rel_<tag> name: <dir>/rel/part-*
+    val staged = first.inputFiles.map(f =>
+      java.nio.file.Paths.get(new java.net.URI(f)).getParent.getParent.getFileName.toString)
+    assert(staged.nonEmpty && staged.forall(_.startsWith("graft_rel_spec_once")),
+      staged.mkString(","))
+
+    // a builder that stages another tag inside its own build
+    val outer = QuerySupport.stagedRelation("spec_outer", spark, dir) {
+      QuerySupport.stagedRelation("spec_inner", spark, dir)(spark.range(3).toDF("id"))
+        .withColumn("twice", col("id") * 2)
+    }
+    assert(outer.orderBy("id").collect().map(_.getLong(1)).toSeq == Seq(0L, 2L, 4L))
+
+    // three pool threads asking for one key
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    val poolBuilds = new AtomicInteger
+    try {
+      val tasks = (1 to 3).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+          def call(): Seq[Long] = QuerySupport.stagedRelation("spec_pool", spark, dir) {
+            poolBuilds.incrementAndGet()
+            spark.range(20).toDF("id")
+          }.collect().map(_.getLong(0)).sorted.toSeq
+        })
+      }
+      val rows = tasks.map(_.get())
+      assert(rows.forall(_ == (0L until 20L)))
+      assert(poolBuilds.get == 1)
+    } finally pool.shutdown()
+  }
 }

@@ -659,4 +659,41 @@ class StreamingSpec extends SparkSpec {
         s"got $rows")
     } finally q.stop()
   }
+
+  test("runToMemory releases its checkpoint dir and sink view, on failure too") {
+    def views = spark.catalog.listTables().collect().map(_.name).toSet
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def ckptDirs(tag: String) = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.filter(_.getFileName.toString.startsWith(s"graft_stream_$tag")).count()
+      finally ls.close()
+    }
+    val before = views
+    val ckptBefore = Seq("specfail", "sd").map(ckptDirs)
+
+    // a stream that fails inside its batch: the error surfaces, nothing stays
+    val src = java.nio.file.Files.createTempDirectory("graft_spec_src")
+    try {
+      spark.range(10).toDF("id").write.mode("overwrite").parquet(src.toString)
+      val failing = spark.readStream.schema("id LONG").parquet(src.toString)
+        .select(expr("if(id = 3, raise_error('boom at 3'), id)").as("id"))
+      val e = intercept[Exception] {
+        QuerySupport.runToMemory(spark, "specfail", "append")(failing)
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("boom at 3")), e)
+      assert(ckptDirs("specfail") == ckptBefore(0))
+      assert(views == before)
+    } finally QuerySupport.cleanupDirs(src)
+
+    // a registry query returns the batch rows and leaves no view behind
+    val dir = "perfbench/fixture/sf0.001"
+    val got = SparkEntry.queries("streaming_dedup")(spark, dir)
+      .collect().map(_.getString(0)).toSeq
+    val want = Tables.documents(spark, dir).select(md5(col("text")))
+      .distinct().collect().map(_.getString(0)).sorted.toSeq
+    assert(got.nonEmpty && got == want)
+    assert(ckptDirs("sd") == ckptBefore(1))
+    assert(views == before)
+  }
 }
