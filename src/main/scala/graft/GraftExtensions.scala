@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, ExpressionInfo}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.expr.{LongArrayDot, Polyval, WinnowFingerprint}
+import graft.expr.GraftFunctions
 import graft.plans.{ContainmentJoinStrategy, RangeJoinRule}
 
 /** Catalyst extension point: registers the engine's native expressions
@@ -13,30 +12,18 @@ import graft.plans.{ContainmentJoinStrategy, RangeJoinRule}
   * `spark-submit --conf spark.sql.extensions=graft.GraftExtensions` on a
   * real cluster — gets them without touching the library API.
   *
-  * `graft_dot(a, b)`          — fused long-array dot product
-  * `graft_polyval_mos(x)`     — the DNSMOS polyfit polynomial (F3)
-  * `graft_winnow_8_4(text)`   — fused MOSS winnowing fingerprints
-  * [[RangeJoinRule]]          — containment-join bucketing (X4), gated by
-  *                              `spark.graft.rangeJoin.bucketWidth`
+  * Functions: every row of the [[GraftFunctions.table]].
+  * [[RangeJoinRule]]: containment-join bucketing (X4), gated by
+  * `spark.graft.rangeJoin.bucketWidth`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RangeJoinRule)
     e.injectPlannerStrategy(_ => ContainmentJoinStrategy)
-    e.injectFunction((
-      new FunctionIdentifier(LongArrayDot.fnName),
-      new ExpressionInfo(classOf[LongArrayDot].getName, LongArrayDot.fnName),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        LongArrayDot(exprs.head, exprs(1))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_polyval_mos"),
-      new ExpressionInfo(classOf[Polyval].getName, "graft_polyval_mos"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        Polyval(Cast(exprs.head, DoubleType), Seq(0.99, -2.5, 1.7, 0.06))))
-    e.injectFunction((
-      new FunctionIdentifier("graft_winnow_8_4"),
-      new ExpressionInfo(classOf[WinnowFingerprint].getName, "graft_winnow_8_4"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WinnowFingerprint(exprs.head, 8, 4)))
+    GraftFunctions.table.foreach { row =>
+      e.injectFunction((new FunctionIdentifier(row.name),
+        new ExpressionInfo(GraftFunctions.getClass.getName.stripSuffix("$"), row.name),
+        row.build))
+    }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expr.Polyval
+import graft.expr.GraftFunctions.polyvalMos
 import graft.ops.{Curation, Dedup, EventAnalytics, GraphOps, MLlibOps, Multimodal, Retrieval, SegmentAlgebra, SegmentOps, Similarity, TextOps}
 import graft.QuerySupport._
 
@@ -594,9 +594,8 @@ private[graft] object QueriesCore {
     // Expression (dnsmos.py:91-104), aggregated in the exact domain.
     Q("f3_polyval",
       (s, dir) => {
-        val fname = Polyval.register(s, "mos", Seq(0.99, -2.5, 1.7, 0.06))
         Tables.lineitem(s, dir)
-          .withColumn("p", expr(s"$fname(l_discount)"))
+          .withColumn("p", polyvalMos(col("l_discount")))
           .groupBy(col("l_returnflag"))
           .agg(sum(round(col("p") * 100000000d).cast("long")).as("sum_p_e8"),
             count(lit(1)).as("n"))

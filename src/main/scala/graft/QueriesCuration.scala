@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expr.Polyval
 import graft.ops.{Curation, Dedup, EventAnalytics, GraphOps, MLlibOps, Multimodal, Retrieval, SegmentAlgebra, SegmentOps, Similarity, TextOps}
 import graft.QuerySupport._
 
@@ -1944,25 +1943,16 @@ private[graft] object QueriesCuration {
           col("event_id")).cache()
         pts.count()
         // The three layout builds are INDEPENDENT and each blocks on an
-        // eager two-pass-rank materialization — overlap them from a
-        // small thread pool (guide §2.6) so the audit's build time is
-        // the max of the three, not the sum. Job descriptions are
-        // thread-local; results are deterministic either way.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        val (lm, zm, hm) = try {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutor(pool)
-          val lmF = Future(Curation.linearLayout(pts, "user_id", "tus",
-            "event_id", rowsPerFile = 4096))
-          val zmF = Future(Curation.zorderLayout(pts, "user_id", "tus",
-            "event_id", bits = 12, rowsPerFile = 4096))
-          val hmF = Future(Curation.hilbertLayout(pts, "user_id", "tus",
-            "event_id", bits = 12, rowsPerFile = 4096))
-          import scala.concurrent.duration.Duration
-          (Await.result(lmF, Duration.Inf), Await.result(zmF, Duration.Inf),
-            Await.result(hmF, Duration.Inf))
-        } finally pool.shutdown()
+        // eager two-pass-rank materialization — overlap them so the
+        // audit's build time is the max of the three, not the sum.
+        // Results are deterministic either way.
+        val Seq(lm, zm, hm) = overlap(s)(
+          () => Curation.linearLayout(pts, "user_id", "tus", "event_id",
+            rowsPerFile = 4096),
+          () => Curation.zorderLayout(pts, "user_id", "tus", "event_id",
+            bits = 12, rowsPerFile = 4096),
+          () => Curation.hilbertLayout(pts, "user_id", "tus", "event_id",
+            bits = 12, rowsPerFile = 4096))
         val w = Curation.rangeWorkload(pts, "user_id", "tus", nQueries = 8)
         Curation.layoutSkipAudit(
             Seq("hilbert" -> hm, "linear" -> lm, "zorder" -> zm), w,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expr.Polyval
+import graft.expr.GraftFunctions.{cdc, winnow84}
 import graft.ops.{Curation, Dedup, EventAnalytics, GraphOps, MLlibOps, Multimodal, Retrieval, SegmentAlgebra, SegmentOps, Similarity, TextOps}
 import graft.QuerySupport._
 
@@ -21,10 +21,9 @@ private[graft] object QueriesDedup {
     // quadratic hazard; here the cap genuinely binds, max df is ~1300).
     Q("dedup_winnow",
       (s, dir) => {
-        val fn = graft.expr.WinnowFingerprint.register(s, 8, 4)
         Dedup.winnowPairs(
             Tables.documents(s, dir)
-              .select(col("doc_id"), explode(expr(s"$fn(text)")).as("fp")),
+              .select(col("doc_id"), explode(winnow84(col("text"))).as("fp")),
             "doc_id", minShared = 10L, maxDocFreq = 50L)
           .orderBy(col("a"), col("b"))
       },
@@ -55,9 +54,8 @@ private[graft] object QueriesDedup {
     // cross-document shared-chunk table (the dedup signal).
     Q("dedup_cdc_chunks",
       (s, dir) => {
-        val fn = graft.expr.CdcChunks.register(s)
         Tables.documents(s, dir)
-          .select(col("doc_id"), explode(expr(s"$fn(text)")).as("chunk"))
+          .select(col("doc_id"), explode(cdc(col("text"))).as("chunk"))
           .groupBy(md5(col("chunk")).as("chunk_fp"))
           .agg(countDistinct(col("doc_id")).as("n_docs"),
             count(lit(1)).as("n_occ"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expr.Polyval
+import graft.expr.GraftFunctions.dhash
 import graft.ops.{Curation, Dedup, EventAnalytics, GraphOps, MLlibOps, Multimodal, Retrieval, SegmentAlgebra, SegmentOps, Similarity, TextOps}
 import graft.QuerySupport._
 
@@ -117,7 +117,7 @@ private[graft] object QueriesMultimodal {
             .repartition(s.sparkContext.defaultParallelism, col("doc_id")),
           "doc_id", "g")
         val hashed = base
-          .select(col("doc_id"), Multimodal.dHashBands(base, "g").as("bands"))
+          .select(col("doc_id"), dhash(col("g")).as("bands"))
         Multimodal.dhashNearDupPairs(hashed, "doc_id", "bands", maxDist = 2)
           .orderBy(col("a"), col("b"))
       },
@@ -293,7 +293,7 @@ private[graft] object QueriesMultimodal {
           pmod(col("fkey"), lit(1000L)).as("frame"), col("g"))
         val hashed = hashed0
           .select(col("doc_id"), col("frame"),
-            Multimodal.dHashBands(hashed0, "g").as("bands"))
+            dhash(col("g")).as("bands"))
           .withColumn("fhash",
             element_at(col("bands"), 1).cast("long")
               + element_at(col("bands"), 2).cast("long") * 65536L

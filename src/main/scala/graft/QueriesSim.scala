@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expr.Polyval
 import graft.ops.{Curation, Dedup, EvalOps, EventAnalytics, GraphOps, MLlibOps, Multimodal, Retrieval, SegmentAlgebra, SegmentOps, Similarity, TextOps}
 import graft.QuerySupport._
 
@@ -651,24 +650,16 @@ private[graft] object QueriesSim {
         val q = sessionQuantEmb(s, dir).filter(col("vec_id") < 1500).cache()
         q.count() // eager: truth, both candidate paths, and the joins
         // truth and the two candidate indexes are INDEPENDENT given the
-        // cached slice — overlap their blocking materializations
-        // (guide §2.6): the audit pays the max, not the sum.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        val (truth, candIvf, candSrp) = try {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutor(pool)
-          def mat(df: DataFrame): DataFrame = {
-            val c = df.select(col("a"), col("b")).cache(); c.count(); c
-          }
-          val tF = Future(mat(Similarity.nearDupPairs(q, "vec_id", 0.45)))
-          val iF = Future(mat(Similarity.ivfCandidatesFrom(
-            sessionIvfCells(s, dir).filter(col("vec_id") < 1500), "vec_id")))
-          val sF = Future(mat(Similarity.srpCandidates(q, "vec_id", 64)))
-          import scala.concurrent.duration.Duration
-          (Await.result(tF, Duration.Inf), Await.result(iF, Duration.Inf),
-            Await.result(sF, Duration.Inf))
-        } finally pool.shutdown()
+        // cached slice — overlap their blocking materializations: the
+        // audit pays the max, not the sum.
+        def mat(df: DataFrame): DataFrame = {
+          val c = df.select(col("a"), col("b")).cache(); c.count(); c
+        }
+        val Seq(truth, candIvf, candSrp) = overlap(s)(
+          () => mat(Similarity.nearDupPairs(q, "vec_id", 0.45)),
+          () => mat(Similarity.ivfCandidatesFrom(
+            sessionIvfCells(s, dir).filter(col("vec_id") < 1500), "vec_id")),
+          () => mat(Similarity.srpCandidates(q, "vec_id", 64)))
         def audit(idx: String, cand: DataFrame) = {
           truth.agg(count(lit(1)).as("n_true"))
             .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
@@ -963,7 +954,6 @@ private[graft] object QueriesSim {
     // integers.
     Q("sim_cluster_ari",
       (s, dir) => {
-        graft.expr.SrpSignature.register(s)
         val emb = Tables.embeddings(s, dir)
         val cs = graft.ops.SrpLsh.coefficients(60, 64)
         val base = Similarity.quantize(emb, "vec_id", "embedding")
@@ -1008,7 +998,6 @@ private[graft] object QueriesSim {
     // exact-by-cell floors both engines replay.
     Q("sim_bcubed",
       (s, dir) => {
-        graft.expr.SrpSignature.register(s)
         val emb = Tables.embeddings(s, dir)
         val cs = graft.ops.SrpLsh.coefficients(60, 64)
         val base = Similarity.quantize(emb, "vec_id", "embedding")

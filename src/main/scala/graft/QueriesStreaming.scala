@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expr.Polyval
 import graft.ops.{Curation, Dedup, EventAnalytics, GraphOps, MLlibOps, Multimodal, Retrieval, SegmentAlgebra, SegmentOps, Similarity, TextOps}
 import graft.QuerySupport._
 
@@ -26,8 +25,6 @@ private[graft] object QueriesStreaming {
       (s, dir) => withStreamingPartitions(s) {
         import s.implicits._
         val srcDir = stagedStreamSource("sndsrc", s, dir) { p =>
-          graft.expr.LongArrayDot.register(s)
-          graft.expr.SrpSignature.register(s)
           val cs = graft.ops.SrpLsh.coefficients(60, 64)
           val q = Similarity.quantize(
             Tables.embeddings(s, dir), "vec_id", "embedding")

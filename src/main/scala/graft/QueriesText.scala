@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expr.Polyval
+import graft.expr.GraftFunctions.winnow84
 import graft.ops.{Curation, Dedup, EvalOps, EventAnalytics, GraphOps, MLlibOps, Multimodal, Retrieval, SegmentAlgebra, SegmentOps, Similarity, TextOps}
 import graft.QuerySupport._
 
@@ -140,9 +140,8 @@ private[graft] object QueriesText {
     // statistics, so the two engines' distinct orders don't matter.
     Q("t_winnow_fp",
       (s, dir) => {
-        val fn = graft.expr.WinnowFingerprint.register(s, 8, 4)
         Tables.documents(s, dir)
-          .withColumn("fps", expr(s"$fn(text)"))
+          .withColumn("fps", winnow84(col("text")))
           .select(col("doc_id"),
             greatest(length(regexp_replace(col("text"), "[^A-Za-z0-9]", "")) - 7,
               lit(0)).cast("long").as("n_grams"),

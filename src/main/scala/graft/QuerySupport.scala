@@ -230,6 +230,32 @@ private[graft] object QuerySupport {
     }
   }
 
+  /** Run independent blocking builds side by side on a small pool and
+    * return their results in order, so the caller pays the slowest build,
+    * not the sum (guide §2.6). Every Spark job the thunks start carries
+    * one fresh job tag: the first failure cancels the siblings' jobs and
+    * is rethrown at once. No job group is set — the pool threads inherit
+    * the caller's, by which callers attribute the work.
+    */
+  private[graft] def overlap[T](s: SparkSession)(thunks: (() => T)*): Seq[T] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val sc = s.sparkContext
+    val tag = s"graft_overlap_${java.util.UUID.randomUUID()}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    // only the thunks run on the pool: a callback of a sibling that ends
+    // after the pool shut down must not be rejected
+    implicit val callbacks: ExecutionContext = ExecutionContext.parasitic
+    try {
+      val all = Future.sequence(thunks.map { t =>
+        val f = Future { sc.addJobTag(tag); t() }(ExecutionContext.fromExecutor(pool))
+        f.failed.foreach(_ => sc.cancelJobsWithTag(tag))
+        f
+      })
+      Await.result(all, Duration.Inf)
+    } finally pool.shutdown()
+  }
+
   /** Session-lifetime registry of staged intermediates, keyed by
     * (SparkSession INSTANCE, tag, sf dir). Identity on the session, never
     * a hash: identityHashCode can collide across sessions and would hand

@@ -31,7 +31,8 @@ object Tables {
     // fork/execs (readlink) per checkpoint rename — from a large JVM
     // every fork copies page tables, and a micro-batch does many
     // renames. The FileSystem-based manager uses File.renameTo. The
-    // checksum sidecar files double the I/O for nothing on local disk.
+    // checksum sidecar files double the I/O for nothing on local disk,
+    // and their manager deadlocked local[4] stateful queries on close.
     spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
       "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")

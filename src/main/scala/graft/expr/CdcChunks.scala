@@ -1,7 +1,6 @@
 package graft.expr
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -86,13 +85,5 @@ object CdcChunks {
     new GenericArrayData(chunks.toArray)
   }
 
-  /** Registers `graft_cdc` (register-once, cf. WinnowFingerprint). */
-  def register(spark: SparkSession): String = {
-    val name = "graft_cdc"
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(name)))
-      registry.createOrReplaceTempFunction(
-        name, exprs => CdcChunks(exprs.head), "built-in")
-    name
-  }
+  def register(spark: SparkSession): String = GraftFunctions.register(spark, GraftFunctions.Cdc)
 }

@@ -1,7 +1,6 @@
 package graft.expr
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -9,7 +8,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 
 /** Perceptual difference hash (dHash) over an 8×9 grayscale grid
   * (row-major array of 72 ints): 64 horizontal brightness comparisons
-  * packed as FOUR 16-bit bands. One fused expression for the same
+  * packed as FOUR 16-bit bands — the image-near-dup fingerprint (a
+  * resize/re-encode/brightness-shift of the same picture flips only a
+  * few comparison bits). Bands instead of one 64-bit word keep every
+  * value < 2^16: no sign/overflow hazards in either engine, and the band
+  * IS the LSH bucket key. One fused expression for the same
   * reason as [[WinnowFingerprint]]: the HOF formulation
   * (transform × aggregate × element_at trees) costs seconds of plan
   * compilation per occurrence and is interpreted per element; this is
@@ -56,13 +59,5 @@ object DHashBands {
     new GenericArrayData(bands)
   }
 
-  /** Registers `graft_dhash` (register-once, cf. WinnowFingerprint). */
-  def register(spark: SparkSession): String = {
-    val name = "graft_dhash"
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(name)))
-      registry.createOrReplaceTempFunction(
-        name, exprs => DHashBands(exprs.head), "built-in")
-    name
-  }
+  def register(spark: SparkSession): String = GraftFunctions.register(spark, GraftFunctions.DHash)
 }

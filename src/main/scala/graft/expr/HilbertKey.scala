@@ -78,18 +78,6 @@ case class HilbertKey(first: Expression, second: Expression,
 }
 
 object HilbertKey {
-  val fnName = "graft_hilbert_key"
 
-  /** Registers `graft_hilbert_key` in the session registry (idempotent
-    * and silent on re-registration, the [[LongArrayDot.register]]
-    * posture). */
-  def register(spark: SparkSession): String = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)
-    if (!registry.functionExists(id))
-      registry.createOrReplaceTempFunction(
-        fnName, exprs => HilbertKey(exprs.head, exprs(1), exprs(2)),
-        "built-in")
-    fnName
-  }
+  def register(spark: SparkSession): String = GraftFunctions.register(spark, GraftFunctions.Hilbert)
 }

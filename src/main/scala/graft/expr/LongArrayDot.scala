@@ -52,19 +52,6 @@ case class LongArrayDot(left: Expression, right: Expression)
 }
 
 object LongArrayDot {
-  val fnName = "graft_dot"
 
-  /** Registers `graft_dot` in the session function registry. Idempotent
-    * AND silent on re-registration: `createOrReplaceTempFunction` logs a
-    * "replaced" warning per call, which at one call per query builder
-    * floods a 50-query bench run.
-    */
-  def register(spark: SparkSession): String = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)
-    if (!registry.functionExists(id))
-      registry.createOrReplaceTempFunction(
-        fnName, exprs => LongArrayDot(exprs.head, exprs(1)), "built-in")
-    fnName
-  }
+  def register(spark: SparkSession): String = GraftFunctions.register(spark, GraftFunctions.Dot)
 }

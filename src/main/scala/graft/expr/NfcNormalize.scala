@@ -47,18 +47,6 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
 object NfcNormalize {
 
-  val fnName = "graft_nfc"
 
-  /** Registers `graft_nfc` in the session function registry. Idempotent
-    * and silent on re-registration (the [[LongArrayDot.register]]
-    * discipline).
-    */
-  def register(spark: SparkSession): String = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)
-    if (!registry.functionExists(id))
-      registry.createOrReplaceTempFunction(
-        fnName, exprs => NfcNormalize(exprs.head), "built-in")
-    fnName
-  }
+  def register(spark: SparkSession): String = GraftFunctions.register(spark, GraftFunctions.Nfc)
 }

@@ -69,16 +69,7 @@ case class PackedAdcSum(left: Expression, right: Expression)
 }
 
 object PackedAdcSum {
-  val fnName = "graft_packed_adc"
 
-  /** Registers `graft_packed_adc` (idempotent and silent, like
-    * [[LongArrayDot.register]]). */
-  def register(spark: SparkSession): String = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)
-    if (!registry.functionExists(id))
-      registry.createOrReplaceTempFunction(
-        fnName, exprs => PackedAdcSum(exprs.head, exprs(1)), "built-in")
-    fnName
-  }
+  def register(spark: SparkSession): String =
+    GraftFunctions.register(spark, GraftFunctions.PackedAdc)
 }

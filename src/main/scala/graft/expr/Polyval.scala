@@ -2,7 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** F3 — fixed-coefficient polynomial evaluation as a native Catalyst
@@ -48,19 +48,6 @@ case class Polyval(child: Expression, coeffs: Seq[Double])
 }
 
 object Polyval {
-  /** Registers `graft_polyval_<tag>` with the session's function registry
-    * so plans can use it via `selectExpr` without touching Column
-    * internals. Idempotent.
-    */
-  def register(spark: SparkSession, tag: String, coeffs: Seq[Double]): String = {
-    val name = s"graft_polyval_$tag"
-    val registry = spark.sessionState.functionRegistry
-    // register-once: replacing on every call would log a warning per
-    // query build (see LongArrayDot.register). Same tag + different
-    // coeffs is a caller bug; tags name one fixed polynomial.
-    if (!registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-      registry.createOrReplaceTempFunction(
-        name, exprs => Polyval(Cast(exprs.head, DoubleType), coeffs), "built-in")
-    name
-  }
+  def register(spark: SparkSession, tag: String, coeffs: Seq[Double]): String =
+    GraftFunctions.register(spark, GraftFunctions.polyvalRow(tag, coeffs))
 }

@@ -107,16 +107,6 @@ case class QuantizeE4(child: Expression) extends UnaryExpression {
 }
 
 object QuantizeE4 {
-  val fnName = "graft_quant_e4"
 
-  /** Registers `graft_quant_e4` (idempotent and silent, the
-    * [[LongArrayDot.register]] posture). */
-  def register(spark: SparkSession): String = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)
-    if (!registry.functionExists(id))
-      registry.createOrReplaceTempFunction(
-        fnName, exprs => QuantizeE4(exprs.head), "built-in")
-    fnName
-  }
+  def register(spark: SparkSession): String = GraftFunctions.register(spark, GraftFunctions.QuantE4)
 }

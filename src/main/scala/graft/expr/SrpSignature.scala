@@ -81,17 +81,6 @@ case class SrpSignature(first: Expression, second: Expression,
 }
 
 object SrpSignature {
-  val fnName = "graft_srp_sig"
 
-  /** Registers `graft_srp_sig` in the session registry (idempotent and
-    * silent on re-registration, the [[LongArrayDot.register]] posture). */
-  def register(spark: SparkSession): String = {
-    val registry = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)
-    if (!registry.functionExists(id))
-      registry.createOrReplaceTempFunction(
-        fnName, exprs => SrpSignature(exprs.head, exprs(1), exprs(2)),
-        "built-in")
-    fnName
-  }
+  def register(spark: SparkSession): String = GraftFunctions.register(spark, GraftFunctions.SrpSig)
 }

@@ -3,7 +3,6 @@ package graft.expr
 import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -113,15 +112,6 @@ object WinnowFingerprint {
     new GenericArrayData(out)
   }
 
-  /** Registers `graft_winnow_<k>_<w>` (register-once, see
-    * [[LongArrayDot.register]]).
-    */
-  def register(spark: SparkSession, k: Int, w: Int): String = {
-    val name = s"graft_winnow_${k}_$w"
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(name)))
-      registry.createOrReplaceTempFunction(
-        name, exprs => WinnowFingerprint(exprs.head, k, w), "built-in")
-    name
-  }
+  def register(spark: SparkSession, k: Int, w: Int): String =
+    GraftFunctions.register(spark, GraftFunctions.winnowRow(k, w))
 }

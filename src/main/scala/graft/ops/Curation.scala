@@ -987,9 +987,8 @@ object Curation {
     // the fused codegen form of [[hilbertKey]] (identical exact-long
     // fold, pinned in OpsSpec): the HOF `aggregate` evaluates
     // interpreted with a per-level struct allocation per row (§1.2)
-    graft.expr.HilbertKey.register(df.sparkSession)
     curveLayout(df, c0, c1, tieCol, bits, rowsPerFile,
-      (a, b) => call_function(graft.expr.HilbertKey.fnName, a, b, lit(bits)),
+      (a, b) => graft.expr.GraftFunctions.hilbertKey(a, b, lit(bits)),
       "hilbertLayout")
   }
 

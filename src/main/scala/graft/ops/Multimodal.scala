@@ -285,23 +285,6 @@ object Multimodal {
       .toDF(idCol, gridCol)
   }
 
-  /** Perceptual difference hash (dHash) over an 8×9 grayscale grid
-    * (row-major array of 72 ints): 64 horizontal brightness
-    * comparisons packed as FOUR 16-bit bands — the image-near-dup
-    * fingerprint (a resize/re-encode/brightness-shift of the same
-    * picture flips only a few comparison bits, so near-dups sit within
-    * a small Hamming distance). Bands instead of one 64-bit word keep
-    * every value < 2^16: no sign/overflow hazards in either engine and
-    * the band IS the LSH bucket key. One fused codegen Expression
-    * ([[graft.expr.DHashBands]]) — the HOF formulation cost seconds of
-    * plan compilation per plan subtree (measured: 12 s → ~1 s on the
-    * oracle query).
-    */
-  def dHashBands(df: DataFrame, gridColName: String): org.apache.spark.sql.Column = {
-    val fn = graft.expr.DHashBands.register(df.sparkSession)
-    expr(s"$fn($gridColName)")
-  }
-
   /** Image near-dup pairs by dHash Hamming distance: pigeonhole
     * candidates — any EQUAL band (recall 1 for distance ≤ 3 with 4
     * bands) via a (band, value) equi self-join, then exact popcount

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expr.{LongArrayDot, PackedAdcSum}
+import graft.expr.GraftFunctions.{dot, packedAdc, quantE4}
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -24,18 +24,13 @@ object Similarity {
   /** (id, qv) with qv = integer-quantized embedding. One fused
     * [[graft.expr.QuantizeE4]] pass — the HOF `transform` form evaluated
     * interpreted per element (§4); output bit-identical. */
-  def quantize(df: DataFrame, idCol: String, embCol: String): DataFrame = {
-    graft.expr.QuantizeE4.register(df.sparkSession)
-    df.select(col(idCol),
-      call_function(graft.expr.QuantizeE4.fnName, col(embCol)).as("qv"))
-  }
+  def quantize(df: DataFrame, idCol: String, embCol: String): DataFrame =
+    df.select(col(idCol), quantE4(col(embCol)).as("qv"))
 
   // |qv|² as the fused self dot — the HOF `aggregate` form evaluates
   // interpreted (boxed per element); graft_dot(qv, qv) is the same exact
-  // long and inlines into whole-stage codegen (§4). Callers all register
-  // LongArrayDot before the column is analyzed.
-  private def sqNorm(qv: Column): Column =
-    call_function(LongArrayDot.fnName, qv, qv)
+  // long and inlines into whole-stage codegen (§4).
+  private def sqNorm(qv: Column): Column = dot(qv, qv)
 
   /** NEAREST-CENTROID CLASSIFIER (prototype classification / cluster
     * assignment — the label-propagation primitive for semi-supervised
@@ -54,10 +49,8 @@ object Similarity {
     */
   def centroidClassify(emb: DataFrame, idCol: String, embCol: String,
                        labelCol: String, dim: Int): DataFrame = {
-    LongArrayDot.register(emb.sparkSession)
-    graft.expr.QuantizeE4.register(emb.sparkSession)
     val q = emb.select(col(idCol), col(labelCol),
-      call_function(graft.expr.QuantizeE4.fnName, col(embCol)).as("qv"))
+      quantE4(col(embCol)).as("qv"))
     val cents = q.groupBy(col(labelCol))
       .agg(array((0 until dim).map(i => sum(col("qv").getItem(i))): _*).as("cv"))
       .withColumn("cnorm",
@@ -67,7 +60,7 @@ object Similarity {
       .orderBy(col("score").desc, col("c_label"))
     q.crossJoin(broadcast(cents))
       .withColumn("score",
-        expr(s"${LongArrayDot.fnName}(qv, cv)").cast("double") / col("cnorm"))
+        dot(col("qv"), col("cv")).cast("double") / col("cnorm"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .select(col(idCol), col(labelCol), col("c_label").as("pred_label"),
@@ -130,7 +123,6 @@ object Similarity {
 
   def sqAdcTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                 k: Int, levels: Int = 16): DataFrame = {
-    LongArrayDot.register(corpus.sparkSession)
     val stats = sqStats(corpus)
     val recon = corpus.crossJoin(broadcast(stats))
       .withColumn("recon2l",
@@ -148,7 +140,7 @@ object Similarity {
       .crossJoin(broadcast(
         queries.select(col(idCol).as("query_id"), col("qv").as("qq"))))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score2l", expr(s"${LongArrayDot.fnName}(qq, recon2l)"))
+      .withColumn("score2l", dot(col("qq"), col("recon2l")))
       .groupBy(col("query_id"))
       .agg(topk(col("score2l"), col("neighbor_id")).as("tk"))
       .select(col("query_id"), posexplode(col("tk")))
@@ -172,7 +164,6 @@ object Similarity {
   def sqAdcPackedTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                       k: Int): DataFrame = {
     val levels = 16 // nibble packing is exactly 4 bits per dimension
-    PackedAdcSum.register(corpus.sparkSession)
     val stats = sqStats(corpus)
     val packed = corpus.crossJoin(broadcast(stats))
       .withColumn("codes",
@@ -201,7 +192,7 @@ object Similarity {
     packed
       .crossJoin(broadcast(qlut))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score2l", expr(s"${PackedAdcSum.fnName}(packed, qlut)"))
+      .withColumn("score2l", packedAdc(col("packed"), col("qlut")))
       .groupBy(col("query_id"))
       .agg(topk(col("score2l"), col("neighbor_id")).as("tk"))
       .select(col("query_id"), posexplode(col("tk")))
@@ -216,12 +207,11 @@ object Similarity {
     * whole-stage codegen.
     */
   def cosinePairs(q: DataFrame, idCol: String): DataFrame = {
-    LongArrayDot.register(q.sparkSession)
     val withN = q.withColumn("nn", sqNorm(col("qv")))
     val a = withN.select(col(idCol).as("a"), col("qv").as("qa"), col("nn").as("na"))
     val b = withN.select(col(idCol).as("b"), col("qv").as("qb"), col("nn").as("nb"))
     a.crossJoin(b).filter(col("a") < col("b"))
-      .withColumn("dot", expr(s"${LongArrayDot.fnName}(qa, qb)"))
+      .withColumn("dot", dot(col("qa"), col("qb")))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
       .select(col("a"), col("b"), col("dot"), col("cos"))
@@ -255,14 +245,13 @@ object Similarity {
     * — the corpus streams by without a shuffle. */
   private def broadcastScored(queries: DataFrame, corpus: DataFrame,
                               idCol: String): DataFrame = {
-    LongArrayDot.register(queries.sparkSession)
     val qn = queries.withColumn("na", sqNorm(col("qv")))
       .select(col(idCol).as("query_id"), col("qv").as("qa"), col("na"))
     val cn = corpus.withColumn("nb", sqNorm(col("qv")))
       .select(col(idCol).as("neighbor_id"), col("qv").as("qb"), col("nb"))
     cn.crossJoin(broadcast(qn))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dot", expr(s"${LongArrayDot.fnName}(qa, qb)"))
+      .withColumn("dot", dot(col("qa"), col("qb")))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
   }
@@ -302,7 +291,7 @@ object Similarity {
       .orderBy(col("score").desc, col("seed_id"))
     df.select(col(idCol), col("qv")).crossJoin(broadcast(seeds))
       .withColumn("score",
-        expr(s"${LongArrayDot.fnName}(qv, sv)").cast("double") / col("snorm"))
+        dot(col("qv"), col("sv")).cast("double") / col("snorm"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= n)
       .select(col(idCol), col("seed_id").as("cell"))
@@ -322,7 +311,6 @@ object Similarity {
     */
   def ivfCellProfile(corpus0: DataFrame, idCol: String, embCol: String,
                      nCells: Int = 16): DataFrame = {
-    LongArrayDot.register(corpus0.sparkSession)
     val corpus = quantize(corpus0, idCol, embCol)
     val seeds = ivfSeeds(corpus, idCol, nCells)
     val counts = nearestCells(corpus, seeds, idCol, 1)
@@ -335,7 +323,6 @@ object Similarity {
 
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String, k: Int,
               nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    LongArrayDot.register(queries.sparkSession)
     val seeds = ivfSeeds(corpus, idCol, nCells)
     val cells = nearestCells(corpus, seeds, idCol, 1)
       .select(col(idCol).as("neighbor_id"), col("cell"))
@@ -353,7 +340,7 @@ object Similarity {
       .join(corpus.withColumn("nb", sqNorm(col("qv")))
         .select(col(idCol).as("neighbor_id"), col("qv").as("qb"), col("nb")),
         "neighbor_id")
-      .withColumn("dot", expr(s"${LongArrayDot.fnName}(qa, qb)"))
+      .withColumn("dot", dot(col("qa"), col("qb")))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
     val w = Window.partitionBy(col("query_id"))
@@ -382,7 +369,6 @@ object Similarity {
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, idCol: String, k: Int,
                 nCells: Int = 16, nProbe: Int = 4, dim: Int = 64,
                 m: Int = 8, nCodes: Int = 16): DataFrame = {
-    LongArrayDot.register(queries.sparkSession)
     val seeds = ivfSeeds(corpus, idCol, nCells)
     val cells = nearestCells(corpus, seeds, idCol, 1)
       .select(col(idCol).as("neighbor_id"), col("cell"))
@@ -400,7 +386,7 @@ object Similarity {
       .join(broadcast(
         queries.select(col(idCol).as("query_id"), col("qv").as("qq"))),
         "query_id")
-      .withColumn("score_pq", expr(s"${LongArrayDot.fnName}(qq, recon)"))
+      .withColumn("score_pq", dot(col("qq"), col("recon")))
       .groupBy(col("query_id"))
       .agg(topk(col("score_pq"), col("neighbor_id")).as("tk"))
       .select(col("query_id"), posexplode(col("tk")))
@@ -425,12 +411,11 @@ object Similarity {
     * stage. `q`: (id, qv) from [[quantize]].
     */
   def verifyPairs(cand: DataFrame, q: DataFrame, idCol: String, minCos: Double): DataFrame = {
-    LongArrayDot.register(q.sparkSession)
     val withN = q.withColumn("nn", sqNorm(col("qv")))
     cand
       .join(withN.select(col(idCol).as("a"), col("qv").as("qa"), col("nn").as("na")), "a")
       .join(withN.select(col(idCol).as("b"), col("qv").as("qb"), col("nn").as("nb")), "b")
-      .withColumn("dot", expr(s"${LongArrayDot.fnName}(qa, qb)"))
+      .withColumn("dot", dot(col("qa"), col("qb")))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
       .filter(col("cos") >= minCos)
@@ -447,7 +432,6 @@ object Similarity {
   def srpNearDupPairs(emb: DataFrame, idCol: String, embCol: String, minCos: Double,
                       dim: Int, bandBits: Int = SrpLsh.DefaultBandBits,
                       bands: Int = SrpLsh.DefaultBands): DataFrame = {
-    LongArrayDot.register(emb.sparkSession)
     val q = quantize(emb, idCol, embCol).cache()
     q.count() // eager: feeds the signature and both verify sides
     verifyPairs(srpCandidates(q, idCol, dim, bandBits, bands), q, idCol, minCos)
@@ -461,7 +445,6 @@ object Similarity {
   def srpCandidates(q: DataFrame, idCol: String, dim: Int,
                     bandBits: Int = SrpLsh.DefaultBandBits,
                     bands: Int = SrpLsh.DefaultBands): DataFrame = {
-    graft.expr.SrpSignature.register(q.sparkSession)
     val cs = SrpLsh.coefficients(bandBits * bands, dim)
     // eager: the 60-projection signature feeds BOTH sides of the band
     // self-join — uncached it would be computed twice
@@ -520,7 +503,7 @@ object Similarity {
       .select(col(idCol).as("code"), col("qv"))
       .select(col("code"), toSubs)
       .select(col("pos").as("sub_id"), col("code"), col("col").as("cvec"),
-        call_function(LongArrayDot.fnName, col("col"), col("col")).as("cn2"))
+        dot(col("col"), col("col")).as("cn2"))
     val codes = corpus.select(col(idCol), toSubs)
       .select(col(idCol), col("pos").as("sub_id"), col("col").as("v"))
       .join(broadcast(books), "sub_id")
@@ -528,8 +511,8 @@ object Similarity {
       // Σ(x−y)²; three fused dots (|c|² staged on the tiny book side)
       // replace the interpreted zip_with+aggregate HOF pair (§4)
       .withColumn("d2",
-        call_function(LongArrayDot.fnName, col("v"), col("v")) + col("cn2")
-          - lit(2L) * call_function(LongArrayDot.fnName, col("v"), col("cvec")))
+        dot(col("v"), col("v")) + col("cn2")
+          - lit(2L) * dot(col("v"), col("cvec")))
       // argmin as a partial-merge agg, not a window: struct ordering is
       // (d2, code)-lexicographic and code is unique -> deterministic
       .groupBy(col(idCol), col("sub_id"))
@@ -558,7 +541,6 @@ object Similarity {
     */
   def pqDistortion(corpus: DataFrame, idCol: String, dim: Int = 64,
       m: Int = 8, nCodes: Int = 16): DataFrame = {
-    LongArrayDot.register(corpus.sparkSession)
     require(dim % m == 0, s"need m | dim, got dim=$dim m=$m")
     val sub = dim / m
     val toSubs = expr(
@@ -567,7 +549,7 @@ object Similarity {
       .select(col(idCol).as("code"), col("qv"))
       .select(col("code"), toSubs)
       .select(col("pos").as("sub_id"), col("code"), col("col").as("cvec"),
-        call_function(LongArrayDot.fnName, col("col"), col("col")).as("cn2"))
+        dot(col("col"), col("col")).as("cn2"))
     corpus.select(col(idCol), toSubs)
       .select(col(idCol), col("pos").as("sub_id"), col("col").as("v"))
       .join(broadcast(books), "sub_id")
@@ -575,8 +557,8 @@ object Similarity {
       // Σ(x−y)²; three fused dots (|c|² staged on the tiny book side)
       // replace the interpreted zip_with+aggregate HOF pair (§4)
       .withColumn("d2",
-        call_function(LongArrayDot.fnName, col("v"), col("v")) + col("cn2")
-          - lit(2L) * call_function(LongArrayDot.fnName, col("v"), col("cvec")))
+        dot(col("v"), col("v")) + col("cn2")
+          - lit(2L) * dot(col("v"), col("cvec")))
       .groupBy(col(idCol), col("sub_id"))
       .agg(min(struct(col("d2"), col("code"))).as("best"))
       .groupBy(col("sub_id"))
@@ -588,13 +570,12 @@ object Similarity {
 
   def pqAdcTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                 k: Int, dim: Int = 64, m: Int = 8, nCodes: Int = 16): DataFrame = {
-    LongArrayDot.register(corpus.sparkSession)
     val topk = udaf(new graft.expr.TopKAgg(k))
     pqRecon(corpus, idCol, dim, m, nCodes)
       .crossJoin(broadcast(
         queries.select(col(idCol).as("query_id"), col("qv").as("qq"))))
       .filter(col("query_id") =!= col(idCol))
-      .withColumn("score_pq", expr(s"${LongArrayDot.fnName}(qq, recon)"))
+      .withColumn("score_pq", dot(col("qq"), col("recon")))
       .groupBy(col("query_id"))
       .agg(topk(col("score_pq"), col(idCol)).as("tk"))
       .select(col("query_id"), posexplode(col("tk")))
@@ -605,7 +586,6 @@ object Similarity {
 
   def ivfNearDupPairs(emb: DataFrame, idCol: String, embCol: String,
                       minCos: Double, nCells: Int = 16): DataFrame = {
-    LongArrayDot.register(emb.sparkSession)
     val q = quantize(emb, idCol, embCol).cache()
     q.count() // eager: feeds the seed table, cell assignment, and verify
     verifyPairs(ivfCandidates(q, idCol, nCells), q, idCol, minCos)
@@ -620,14 +600,13 @@ object Similarity {
     * caches (both sides of the candidate self-join read it).
     */
   def ivfCells(q: DataFrame, idCol: String, nCells: Int = 16): DataFrame = {
-    LongArrayDot.register(q.sparkSession)
     val seeds = q.filter(col(idCol) < nCells)
       .select(col(idCol).as("seed_id"), col("qv").as("sv"))
       .withColumn("snorm", sqrt(sqNorm(col("sv")).cast("double")))
     val scored = q.select(col(idCol), col("qv"))
       .crossJoin(broadcast(seeds))
       .withColumn("score",
-        expr(s"${LongArrayDot.fnName}(qv, sv)").cast("double") / col("snorm"))
+        dot(col("qv"), col("sv")).cast("double") / col("snorm"))
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("score").desc, col("seed_id"))
     scored.withColumn("__rn", row_number().over(w))
@@ -662,7 +641,6 @@ object Similarity {
   def ivfTrain(q: DataFrame, idCol: String, dim: Int, nCells: Int = 16,
                iters: Int = 2): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    LongArrayDot.register(q.sparkSession)
     var cents = q.filter(col(idCol) < nCells)
       .select(col(idCol).as("cell"), col("qv").as("cv"),
         lit(1L).as("n_vecs"))
@@ -673,7 +651,7 @@ object Similarity {
           sqrt(aggregate(col("cv"), lit(0L), (a, x) => a + x * x).cast("double")))
           .select(col("cell"), col("cv"), col("cnorm"))))
         .withColumn("score",
-          expr(s"${LongArrayDot.fnName}(qv, cv)").cast("double") / col("cnorm"))
+          dot(col("qv"), col("cv")).cast("double") / col("cnorm"))
       val w = Window.partitionBy(col(idCol))
         .orderBy(col("score").desc, col("cell"))
       cents = scored.withColumn("__rn", row_number().over(w))
@@ -715,7 +693,6 @@ object Similarity {
   def marginMine(emb: DataFrame, idCol: String, embCol: String,
                  sideCol: String, minMargin: Double,
                  nCells: Int = 16): DataFrame = {
-    LongArrayDot.register(emb.sparkSession)
     val q = quantize(emb, idCol, embCol)
       .join(emb.select(col(idCol), col(sideCol).cast("int").as("__side")),
         idCol)
@@ -734,7 +711,7 @@ object Similarity {
       .select(col(idCol).as("b"), col("qv").as("qb"), col("nn").as("nb"),
         col("cell"))
     val scored = qa.join(qb, "cell")
-      .withColumn("dot", expr(s"${LongArrayDot.fnName}(qa, qb)"))
+      .withColumn("dot", dot(col("qa"), col("qb")))
       .withColumn("cos", col("dot").cast("double") /
         (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
       .select(col("a"), col("b"), col("cos"))
@@ -893,7 +870,6 @@ object Similarity {
     * (the selection score; −1.0 for the seed, which has no prior set).
     */
   def coresetGreedy(q: DataFrame, idCol: String, k: Int = 4): DataFrame = {
-    LongArrayDot.register(q.sparkSession)
     val withN = q.withColumn("nn", sqNorm(col("qv")))
     var reps = withN.orderBy(col(idCol)).limit(1)
       .select(col(idCol).as("rep_id"), col("qv").as("rqv"), col("nn").as("rnn"),
@@ -905,7 +881,7 @@ object Similarity {
       val mc = withN
         .join(repsB.select(col("rep_id")), col(idCol) === col("rep_id"), "left_anti")
         .crossJoin(repsB)
-        .withColumn("c", expr(s"${LongArrayDot.fnName}(qv, rqv)").cast("double") /
+        .withColumn("c", dot(col("qv"), col("rqv")).cast("double") /
           (sqrt(col("nn").cast("double")) * sqrt(col("rnn").cast("double"))))
         .groupBy(col(idCol)).agg(max(col("c")).as("mc"))
       val winner = mc.join(withN, idCol)
@@ -942,7 +918,6 @@ object Similarity {
     */
   def lateInteractionTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                           dim: Int, nSub: Int, k: Int): DataFrame = {
-    LongArrayDot.register(queries.sparkSession)
     val w = dim / nSub
     def sub(df: DataFrame, id: String): DataFrame =
       df.select(col(idCol).as(id),
@@ -952,7 +927,7 @@ object Similarity {
     val ds = sub(corpus, "neighbor_id")
     val maxSim = ds.crossJoin(broadcast(qs))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("d", expr(s"${LongArrayDot.fnName}(query_id_sub, neighbor_id_sub)"))
+      .withColumn("d", dot(col("query_id_sub"), col("neighbor_id_sub")))
       .groupBy(col("query_id"), col("neighbor_id"), col("query_id_i"))
       .agg(max(col("d")).as("ms"))
     val scored = maxSim.groupBy(col("query_id"), col("neighbor_id"))
@@ -1012,7 +987,6 @@ object Similarity {
     */
   def prototypicalPrune(cells: DataFrame, q: DataFrame, idCol: String,
                         dim: Int, dropDenom: Int): DataFrame = {
-    LongArrayDot.register(q.sparkSession)
     val joined = cells.join(q.withColumn("nn", sqNorm(col("qv"))), idCol)
     val cents = joined.groupBy(col("cell"))
       .agg(array((0 until dim).map(i => sum(col("qv").getItem(i))): _*).as("cv"),
@@ -1020,7 +994,7 @@ object Similarity {
       .withColumn("cnorm",
         sqrt(aggregate(col("cv"), lit(0L), (a, x) => a + x * x).cast("double")))
     val scored = joined.join(broadcast(cents), Seq("cell"))
-      .withColumn("proto", expr(s"${LongArrayDot.fnName}(qv, cv)").cast("double")
+      .withColumn("proto", dot(col("qv"), col("cv")).cast("double")
         / (sqrt(col("nn").cast("double")) * col("cnorm")))
     val win = Window.partitionBy(col("cell"))
       .orderBy(col("proto").desc, col(idCol))
@@ -1055,7 +1029,6 @@ object Similarity {
   def mmrTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               poolK: Int, selectK: Int): DataFrame = {
     val spark = queries.sparkSession
-    LongArrayDot.register(spark)
     import spark.implicits._
     val pool = cosineTopK(queries, corpus, idCol, poolK)
     pool
@@ -1125,7 +1098,6 @@ object Similarity {
       nQueries: Long, maxHamming: Int, cosTau: Double): DataFrame = {
     require(dim >= 1 && dim <= 64,
       s"single-word packed codes cover dim <= 64, got $dim")
-    LongArrayDot.register(q.sparkSession)
     val stats = q.agg(count(lit(1)).as("n"),
       array((0 until dim).map(i => sum(element_at(col("qv"), i + 1))): _*)
         .as("sv"))
@@ -1141,7 +1113,7 @@ object Similarity {
     coded.crossJoin(broadcast(queries))
       .filter(col(idCol) =!= col("qid"))
       .withColumn("ham", expr("bit_count(code ^ qcode)"))
-      .withColumn("cos", expr(s"${LongArrayDot.fnName}(qv, qqv)")
+      .withColumn("cos", dot(col("qv"), col("qqv"))
         .cast("double")
         / (sqrt(col("nn").cast("double")) * sqrt(col("qnn").cast("double"))))
       .groupBy(col("qid"))

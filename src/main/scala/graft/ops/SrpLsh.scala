@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.expr.SrpSignature
+import graft.expr.GraftFunctions.srpSig
 
 /** Deterministic signed-random-projection (SRP / "hyperplane") LSH for
   * cosine similarity — the candidate-generation stage of embedding
@@ -38,17 +38,15 @@ object SrpLsh {
   }
 
   /** Bit-packed SRP signature of a quantized long-array column: bit j is
-    * set iff `coefficients(j) · qv > 0`. ONE fused [[SrpSignature]]
+    * set iff `coefficients(j) · qv > 0`. ONE fused [[graft.expr.SrpSignature]]
     * expression against the row-major flattened matrix — the former
     * per-bit `when(dot > 0)` chain planned ~4k expression nodes whose
     * generated code fell out of whole-stage codegen and ran ~0.4 ms per
     * row interpreted; this form is a compact nested loop with identical
-    * (exact integer) arithmetic. Caller must have registered
-    * [[SrpSignature]] in the session.
+    * (exact integer) arithmetic.
     */
   def signature(qv: Column, cs: IndexedSeq[Array[Long]]): Column =
-    call_function(SrpSignature.fnName, qv, lit(cs.flatten.toArray),
-      lit(cs.length))
+    srpSig(qv, lit(cs.flatten.toArray), lit(cs.length))
 
   /** Pigeonhole-style band candidates over a (id, sig) signature table:
     * explode each signature into `bands` values of `bandBits` bits and

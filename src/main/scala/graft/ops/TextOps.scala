@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expr.GraftFunctions.nfc
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language-ID, fingerprinting, shingling,
   * SimHash. All pure column expressions / higher-order functions — no
@@ -595,7 +597,6 @@ object TextOps {
     * joins, no windows; NFC is a codegen'd per-row expression.
     */
   def nfcDedup(docs: DataFrame, langCol: String, textCol: String): DataFrame = {
-    graft.expr.NfcNormalize.register(docs.sparkSession)
     // escaped, not raw: U+00E9 composed vs e+U+0301 decomposed stay
     // byte-distinct and visible in the source
     val composed = concat(col(textCol),
@@ -604,7 +605,7 @@ object TextOps {
       lit(" cafe\u0301 touche\u0301"))
     docs.select(col(langCol).as("lang"),
         explode(array(composed, decomposed)).as("v"))
-      .withColumn("nv", expr(s"${graft.expr.NfcNormalize.fnName}(v)"))
+      .withColumn("nv", nfc(col("v")))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("v")).as("n_distinct_raw"),

@@ -269,4 +269,32 @@ class IOSpec extends SparkSpec {
       assert(poolBuilds.get == 1)
     } finally pool.shutdown()
   }
+
+  test("overlap rethrows the first failure promptly and cancels the sibling jobs") {
+    val sc = spark.sparkContext
+    val siblingError = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException] {
+      QuerySupport.overlap(spark)(
+        () => { // one task per partition, each waiting a minute or until killed
+          try spark.range(0, 4, 1, 4).map { x =>
+            val tc = org.apache.spark.TaskContext.get()
+            var waited = 0
+            while (waited < 600 && !tc.isInterrupted()) { Thread.sleep(100L); waited += 1 }
+            x
+          }.count()
+          catch { case e: Throwable => siblingError.set(e); throw e }
+        },
+        () => {
+          // fail once the long job is running, so its cancel is observable
+          while (sc.statusTracker.getActiveJobIds().isEmpty) Thread.sleep(20L)
+          throw new IllegalStateException("first failure")
+        })
+    }
+    assert(err.getMessage == "first failure")
+    assert((System.nanoTime() - t0) / 1e9 < 30d, "the helper waited for the long job")
+    while (siblingError.get == null && (System.nanoTime() - t0) / 1e9 < 30d) Thread.sleep(50L)
+    assert(String.valueOf(siblingError.get).toLowerCase.contains("cancel"),
+      s"long job did not end cancelled: ${siblingError.get}")
+  }
 }

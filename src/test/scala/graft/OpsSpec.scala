@@ -1460,7 +1460,7 @@ class OpsSpec extends SparkSpec {
     val inc = (0 until 72).toArray
     val dec = inc.map(72 - _)
     val raw0 = Seq((1L, inc), (2L, dec)).toDF("doc_id", "g")
-    val df0 = raw0.select(col("doc_id"), Multimodal.dHashBands(raw0, "g").as("bands"))
+    val df0 = raw0.select(col("doc_id"), graft.expr.GraftFunctions.dhash(col("g")).as("bands"))
     val m = df0.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(m(1L) == Seq(0, 0, 0, 0))
     assert(m(2L) == Seq(65535, 65535, 65535, 65535))
@@ -1468,7 +1468,7 @@ class OpsSpec extends SparkSpec {
     val rnd = new scala.util.Random(31)
     val grids = (0L until 40L).map(i => (i, Array.fill(72)(rnd.nextInt(40))))
     val raw1 = grids.toDF("doc_id", "g")
-    val hashed = raw1.select(col("doc_id"), Multimodal.dHashBands(raw1, "g").as("bands"))
+    val hashed = raw1.select(col("doc_id"), graft.expr.GraftFunctions.dhash(col("g")).as("bands"))
     val bands = hashed.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     def dist(a: Long, b: Long): Int =
       bands(a).zip(bands(b)).map { case (x, y) => Integer.bitCount(x ^ y) }.sum
@@ -2831,13 +2831,12 @@ class OpsSpec extends SparkSpec {
     // the fused codegen expression (what hilbertLayout actually plans)
     // is bit-identical to the HOF fold on every cell — and on random
     // wide-coordinate inputs at the 20-bit cap
-    graft.expr.HilbertKey.register(spark)
     // fallback=false: the fused form must actually COMPILE, not fall
     // back to interpreted (the QuantizeE4 lesson)
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val fusedGrid = cells.select($"x", $"y",
-          call_function(graft.expr.HilbertKey.fnName, $"x", $"y", lit(bits)).as("d"))
+          graft.expr.GraftFunctions.hilbertKey($"x", $"y", lit(bits)).as("d"))
         .collect()
         .map(r => ((r.getLong(0).toInt, r.getLong(1).toInt), r.getLong(2))).toMap
       for (x <- 0 until n; y <- 0 until n)
@@ -2848,7 +2847,7 @@ class OpsSpec extends SparkSpec {
         .toDF("x", "y")
       val mismatch = wide.select(
           Curation.hilbertKey($"x", $"y", 20).as("h"),
-          call_function(graft.expr.HilbertKey.fnName, $"x", $"y", lit(20)).as("f"))
+          graft.expr.GraftFunctions.hilbertKey($"x", $"y", lit(20)).as("f"))
         .filter($"h" =!= $"f").count()
       assert(mismatch == 0L, s"$mismatch fused/HOF mismatches at 20 bits")
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
@@ -4244,6 +4243,46 @@ class OpsSpec extends SparkSpec {
         r.getLong(4))).toSeq
     assert(got == Seq(("g1", 4L, 2L, 60000L, 16L),
       ("g2", 2L, 2L, 0L, 4L)), s"got $got")
+  }
+
+  test("every function-table row compiles (fallback=false) and equals its interpreted run") {
+    import graft.expr.GraftFunctions._
+    val base = spark.range(300).selectExpr(
+      "id",
+      "transform(sequence(0, 63), i -> cast(((id * 7919 + i * 104729) % 2001 - 1000) / 1000.0 AS float)) AS emb",
+      "transform(sequence(0, 63), i -> (id * 31 + i * 17) % 20001 - 10000) AS qv",
+      "id % 65536 AS b0", "(id * 40503) % 65536 AS b1",
+      "concat_ws(' ', transform(sequence(0, id % 20), i -> concat('W', cast((id * 13 + i * 7) % 97 AS string), 'e\u0301'))) AS text",
+      "transform(sequence(0, 71), i -> cast((id * 5 + i * 11) % 256 AS int)) AS grid",
+      "transform(sequence(0, 3), i -> id * 2654435761 + i * 40503) AS packed")
+      .cache() // a project holding the generating HOFs could not join a codegen stage
+    base.count()
+    val mat = lit(Array.tabulate(60 * 64)(i => (i * 7L + 3) % 201 - 100))
+    val lut = lit(Array.tabulate(1024)(i => (i % 97).toLong))
+    val wrapped = Map(
+      Dot.name -> dot(col("qv"), col("qv")),
+      SrpSig.name -> srpSig(col("qv"), mat, lit(60)),
+      QuantE4.name -> quantE4(col("emb")),
+      Hilbert.name -> hilbertKey(col("b0"), col("b1"), lit(16)),
+      Nfc.name -> nfc(col("text")),
+      Cdc.name -> cdc(col("text")),
+      DHash.name -> dhash(col("grid")),
+      PackedAdc.name -> packedAdc(col("packed"), lut),
+      Winnow84.name -> winnow84(col("text")),
+      PolyvalMos.name -> polyvalMos(col("b0") / 65536.0))
+    assert(wrapped.keySet == table.map(_.name).toSet)
+    def run(conf: (String, String)*)(c: org.apache.spark.sql.Column) = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try base.select(col("id"), c.as("v")).collect().toSeq
+      finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    table.foreach { row =>
+      val compiled = run("spark.sql.codegen.fallback" -> "false")(wrapped(row.name))
+      val interpreted = run("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(wrapped(row.name))
+      assert(compiled.size == 300 && compiled == interpreted, s"${row.name} diverges")
+    }
+    base.unpersist()
   }
 
   test("fused SrpSignature == per-bit graft_dot composition, bit-for-bit") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.SegmentOps
@@ -69,17 +68,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("RangeJoinRule rewrites containment joins to bucketed equi joins") {
-    val prev = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[2]")
-      .appName("graft-rangejoin-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     try {
-      import s2.implicits._
       // Rows 501+ are INVERTED intervals (ss > se): they can satisfy the
       // raw containment condition (ss >= cs && se <= ce) while their
       // start bucket lies outside the chunk's bucket range — the rewrite
@@ -101,7 +90,7 @@ class ScaleSpec extends SparkSpec {
 
       val baseline = run() // rule disabled (default width 0)
       assert(baseline.nonEmpty)
-      s2.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "256")
+      spark.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "256")
       val rewritten = segs.alias("s").join(chunks.alias("c"),
         col("s.k") === col("c.k") && col("ss") >= col("cs") && col("se") <= col("ce"))
       val planStr = rewritten.queryExecution.optimizedPlan.toString
@@ -110,25 +99,11 @@ class ScaleSpec extends SparkSpec {
       val got = rewritten.select(col("seg_id"), col("chunk_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == baseline)
-      s2.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "0")
-    } finally {
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
-    }
+    } finally spark.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "0")
   }
 
   test("RangeJoinRule bucket arithmetic is exact above 2^53 (near-Long.MaxValue intervals)") {
-    val prev = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder().master("local[2]")
-      .appName("graft-rangejoin-bigval-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     try {
-      import s2.implicits._
       // Above 2^53 a double cannot represent every Long: the retired
       // double-divide bucket could round a probe start into a bucket the
       // build side never emitted, silently dropping the pair. Integer
@@ -147,17 +122,13 @@ class ScaleSpec extends SparkSpec {
         .select(col("seg_id"), col("chunk_id"))
       val baseline = join().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(baseline.nonEmpty)
-      s2.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "256")
+      spark.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "256")
       val rewritten = join()
       val planStr = rewritten.queryExecution.optimizedPlan.toString
       assert(planStr.contains("__gb_probe"), s"rule did not fire:\n$planStr")
       val got = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == baseline)
-      s2.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "0")
-    } finally {
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
-    }
+    } finally spark.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "0")
   }
 
   test("bucketed tables co-locate repeated joins: zero exchanges in the plan") {
@@ -188,26 +159,27 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("GraftExtensions registers native functions for plain SQL use") {
-    val prev = spark // keep the shared session alive; build a sibling with extensions
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // spark.sql.extensions is a static conf, fixed at SparkContext
-    // creation — with a live context, the programmatic form applies.
-    val s2 = SparkSession.builder().master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      val dot = s2.sql("SELECT graft_dot(array(1L,2L,3L), array(4L,5L,6L)) AS d")
-        .head.getLong(0)
-      assert(dot == 32L)
-      val p = s2.sql("SELECT graft_polyval_mos(0.0) AS p").head.getDouble(0)
-      assert(p == 0.06)
-    } finally {
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
+    // every row of the function table is callable by name from SQL in the
+    // shared session, which GraftSession builds with the extensions
+    val cases = Map( // name -> (arguments, result as a string)
+      "graft_dot" -> ("array(1L, 2L, 3L), array(4L, 5L, 6L)", "32"),
+      // bit 0: 1 + 2 > 0, bit 1: 1 - 2 <= 0
+      "graft_srp_sig" -> ("array(1L, -2L), array(1L, -1L, 1L, 1L), 2", "1"),
+      "graft_quant_e4" -> ("array(0.25D, -1.5D)", "[2500, -15000]"),
+      "graft_hilbert_key" -> ("2L, 3L, 2", "9"),
+      "graft_nfc" -> ("'e\u0301'", "\u00e9"),
+      "graft_cdc" -> ("'Hello, world'", "[helloworld]"),
+      "graft_dhash" -> ("sequence(0, 71)", "[0, 0, 0, 0]"),
+      // lut[0 * 16 + 1] + lut[1 * 16 + 2]
+      "graft_packed_adc" -> ("array(33L), sequence(0L, 31L)", "19"),
+      // three 8-grams, fewer than one window: the least md5
+      "graft_winnow_8_4" -> ("'abcdefghij'", "[08e5341eabb343d93d07ffa096ea649b]"),
+      "graft_polyval_mos" -> ("0.0", "0.06"))
+    assert(graft.expr.GraftFunctions.table.map(_.name).toSet == cases.keySet)
+    graft.expr.GraftFunctions.table.foreach { row =>
+      val (args, want) = cases(row.name)
+      assert(spark.sql(s"SELECT CAST(${row.name}($args) AS STRING)").head.getString(0) == want,
+        row.name)
     }
   }
 }

@@ -6,32 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one per JVM — Test/fork=true). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Spark 4.1's checksum checkpoint manager deadlocks local[4]
-      // stateful queries on delta-file close (futures never complete);
-      // plain file manager behaves.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // The default FileContext manager shells out (fork/exec readlink)
-      // per checkpoint rename — glacial from a large JVM in this sandbox.
-      // The FileSystem-based manager uses File.renameTo, no forking.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      .config("spark.ui.enabled", "false")
-      // Steal-proofing: local[*] heartbeats are in-process, so the only
-      // thing the default 10s heartbeat / 120s network timeout can do on
-      // this box is kill the SparkContext when the hypervisor stalls the
-      // whole JVM for minutes (observed: 60 consecutive missed heartbeats
-      // ended a 396/396-green suite with rc 1). Generous values cost
-      // nothing in-process and make the suite immune to steal bursts.
-      .config("spark.network.timeout", "3600s")
-      .config("spark.executor.heartbeatInterval", "300s")
-      .config("spark.rpc.askTimeout", "3600s")
-      .config("spark.rpc.lookupTimeout", "3600s")
-      .getOrCreate()
+    val s = GraftSession(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
