@@ -19,8 +19,8 @@ import AacTables._
   * (sine/KBD), section + scalefactor + spectral data, the x^(4/3)
   * dequantizer, M/S matrixing, TNS all-pole synthesis, and the
   * 2048/256 window-switching IMDCT filterbank (the IMDCT phase is the
-  * same n0 = N/4 + 1/2 convention as Vorbis, so [[VorbisAudio.imdct]]
-  * is reused directly — its TDAC property is already pinned).
+  * same n0 = N/4 + 1/2 convention as Vorbis, so both codecs share the
+  * [[Mdct]] kernel — its TDAC property is already pinned).
   *
   * Entropy codebooks and band partitions are ENGINE-LOCAL (see
   * [[AacTables]]): engine-minted streams ([[AacEncoder]]) round-trip;
@@ -371,7 +371,7 @@ object AacAudio {
     if (ch.info.short) {
       var w = 0
       while (w < 8) {
-        val t = VorbisAudio.imdct(ch.spec(w), 256)
+        val t = Mdct.inverse(ch.spec(w), 256)
         val wl = window(if (w == 0) state.prevShape else ch.info.windowShape, 256)
         val wr = window(ch.info.windowShape, 256)
         val base = 448 + 128 * w
@@ -383,7 +383,7 @@ object AacAudio {
         w += 1
       }
     } else {
-      val t = VorbisAudio.imdct(ch.spec(0), 2048)
+      val t = Mdct.inverse(ch.spec(0), 2048)
       val (wl, wr) = longWindowHalves(ch.info.windowSequence,
         state.prevShape, ch.info.windowShape)
       var i = 0

@@ -56,14 +56,14 @@ object AacEncoder {
           val wr = window(shape, 256)
           val buf = Array.tabulate(256)(j => x(base + 448 + 128 * w + j))
           val win = Array.tabulate(256)(j => if (j < 128) wl(j) else wr(j))
-          VorbisEncoder.mdct(buf, win)
+          Mdct.forward(buf, win)
         }
         Block(seq, spec)
       } else {
         val (wl, wr) = AacAudio.longWindowHalves(seq, shape, shape)
         val buf = Array.tabulate(2048)(j => x(base + j))
         val win = Array.tabulate(2048)(j => if (j < 1024) wl(j) else wr(j - 1024))
-        Block(seq, Array(VorbisEncoder.mdct(buf, win)))
+        Block(seq, Array(Mdct.forward(buf, win)))
       }
     }
   }

@@ -300,36 +300,6 @@ object VorbisAudio {
     }
   }
 
-  /** Vorbis IMDCT: y[j] = Σ_k X[k]·cos(2π/n·(j + ½ + n/4)(k + ½)),
-    * n output samples from n/2 lines. Direct form with a per-size
-    * memoized cosine matrix (per-JVM; block sizes are few and ≤ 8192 —
-    * the 256-point matrix the encoder emits is 256 KB). A fast DCT can
-    * replace the inner product later without touching callers.
-    */
-  private val imdctCos =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Array[Double]]]()
-
-  def imdct(spec: Array[Double], n: Int): Array[Double] = {
-    val n2 = n / 2
-    val cosTab = imdctCos.computeIfAbsent(n, _ =>
-      Array.tabulate(n, n2)((j, k) =>
-        math.cos(2 * math.Pi / n * (j + 0.5 + n / 4.0) * (k + 0.5))))
-    val out = new Array[Double](n)
-    var j = 0
-    while (j < n) {
-      val row = cosTab(j)
-      var acc = 0.0
-      var k = 0
-      while (k < n2) {
-        acc += spec(k) * row(k)
-        k += 1
-      }
-      out(j) = acc
-      j += 1
-    }
-    out
-  }
-
   /** The Vorbis window: sin(π/2 · sin²(π/n · (i+½))). */
   def window(n: Int): Array[Double] =
     Array.tabulate(n) { i =>
@@ -464,7 +434,7 @@ object VorbisAudio {
               while (k < n2) { spec(k) = curve(k) * residueVecs(c)(k); k += 1 }
             case None => () // silent channel
           }
-          val t = imdct(spec, n)
+          val t = Mdct.inverse(spec, n)
           var j = 0
           while (j < n) { blockOut(c)(j) = t(j) * win(j); j += 1 }
           c += 1

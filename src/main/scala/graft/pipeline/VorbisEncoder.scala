@@ -50,37 +50,6 @@ object VorbisEncoder {
   private val ValueLevels = 5
   private val MixedLevels = 9
 
-  /** Forward MDCT: X[k] = (4/n)·Σ_j x[j]·w[j]·cos(2π/n·(j+½+n/4)(k+½))
-    * — the TDAC inverse of [[VorbisAudio.imdct]] under overlap-add:
-    * Σ_k cos²(θ) = n/4 per fold, so 4/n makes the cascade unity
-    * (pinned by the identity property in VorbisSpec). Cosine matrix
-    * memoized per block size like the decoder's.
-    */
-  private val mdctCos =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Array[Double]]]()
-
-  def mdct(x: Array[Double], win: Array[Double]): Array[Double] = {
-    val n = x.length
-    val n2 = n / 2
-    val cosTab = mdctCos.computeIfAbsent(n, _ =>
-      Array.tabulate(n2, n)((k, j) =>
-        math.cos(2 * math.Pi / n * (j + 0.5 + n / 4.0) * (k + 0.5))))
-    val out = new Array[Double](n2)
-    var k = 0
-    while (k < n2) {
-      val row = cosTab(k)
-      var acc = 0.0
-      var j = 0
-      while (j < n) {
-        acc += x(j) * win(j) * row(j)
-        j += 1
-      }
-      out(k) = acc * 4.0 / n
-      k += 1
-    }
-    out
-  }
-
   private def headerPackets(sr: Int, mixed: Boolean = false): (Array[Byte], Array[Byte], Array[Byte]) = {
     // identification
     val ib = new BitWriter
@@ -245,7 +214,7 @@ object VorbisEncoder {
         x(j) = if (idx >= 0 && idx < samples.length) samples(idx) else 0.0
         j += 1
       }
-      packets += encodePacket(mdct(x, win))
+      packets += encodePacket(Mdct.forward(x, win))
       b += 1
     }
     val pkts = packets.result()
@@ -306,7 +275,7 @@ object VorbisEncoder {
         x(j) = if (idx >= 0 && idx < samples.length) samples(idx) else 0.0
         j += 1
       }
-      encodePacket(mdct(x, win), modeBits = 1, modeVal = if (long) 1 else 0,
+      encodePacket(Mdct.forward(x, win), modeBits = 1, modeVal = if (long) 1 else 0,
         longFlags = if (long) Some((isLong(i - 1) && i > 0, isLong(i + 1))) else None,
         levels = MixedLevels)
     }

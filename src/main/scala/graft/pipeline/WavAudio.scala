@@ -96,11 +96,10 @@ object WavAudio {
   /** Encode to any javax.sound container (WAVE little-endian, AIFF/AU
     * big-endian — the container's native sample order). [[decode]]
     * auto-detects all of them, so the decode seam is genuinely
-    * multi-format: three real containers here plus FLAC via
-    * [[FlacAudio]] and MP3 via [[Mp3Audio]]; the reference's
-    * aac/ogg/m4a need codec libraries absent from this environment
-    * (documented, SURVEY §7.4.4) and flow through the S10
-    * failed-status path instead of aborting.
+    * multi-format: three real containers here plus the pure-JVM codecs
+    * it dispatches by magic — FLAC ([[FlacAudio]]), MP3 ([[Mp3Audio]]),
+    * Ogg/Vorbis ([[VorbisAudio]]) and AAC in ADTS or M4A
+    * ([[AacAudio]]).
     */
   def encodeAs(sr: Int, samples: Array[Float],
                container: AudioFileFormat.Type): Array[Byte] = {
@@ -162,8 +161,8 @@ object WavAudio {
   }
 
   /** S2+S10 — decode with per-record fault isolation: a corrupt or
-    * non-WAV payload (the reference globs six formats,
-    * `modules/models/utils.py:11-16`; this engine decodes WAV) yields a
+    * undecodable payload (the reference globs six formats,
+    * `modules/models/utils.py:11-16`; [[decode]] handles all six) yields a
     * `status="failed"` row carrying the error instead of killing the
     * task (`vad_multi.py:48-54` per-file try/except). Tally with
     * [[graft.sources.Incremental.statusCounts]]; the failed subset is

@@ -1,0 +1,95 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.pipeline.{AacEncoder, Mdct, VorbisEncoder}
+
+/** Codec MDCT kernel: the fast transform against the direct-form
+  * definition, its size guard, and SHA-256 pins of the encoder bytes
+  * the kernel feeds.
+  */
+class MdctSpec extends AnyFunSuite {
+
+  /** The definition both codecs share, cos(2π/n·(j + ½ + n/4)(k + ½)),
+    * evaluated term by term: O(n²), kept only as the oracle.
+    */
+  private def basis(n: Int, j: Int, k: Int): Double =
+    math.cos(2 * math.Pi / n * (j + 0.5 + n / 4.0) * (k + 0.5))
+
+  private def directInverse(spec: Array[Double], n: Int): Array[Double] = {
+    val cosTab = Array.tabulate(n, n / 2)((j, k) => basis(n, j, k))
+    Array.tabulate(n)(j => (0 until n / 2).map(k => spec(k) * cosTab(j)(k)).sum)
+  }
+
+  private def directForward(x: Array[Double], win: Array[Double]): Array[Double] = {
+    val n = x.length
+    val cosTab = Array.tabulate(n / 2, n)((k, j) => basis(n, j, k))
+    Array.tabulate(n / 2)(k => (0 until n).map(j => x(j) * win(j) * cosTab(k)(j)).sum * 4.0 / n)
+  }
+
+  private def relErr(fast: Array[Double], direct: Array[Double]): Double = {
+    assert(fast.length == direct.length)
+    fast.zip(direct).map { case (a, b) => math.abs(a - b) }.max / direct.map(math.abs).max
+  }
+
+  test("fast inverse and forward match the direct form at n = 64..8192") {
+    for (n <- Seq(64, 256, 1024, 2048, 8192)) {
+      val rnd = new scala.util.Random(n)
+      val spec = Array.fill(n / 2)(rnd.nextGaussian())
+      val x = Array.fill(n)(rnd.nextGaussian())
+      val win = Array.fill(n)(rnd.nextGaussian())
+      val inv = relErr(Mdct.inverse(spec, n), directInverse(spec, n))
+      val fwd = relErr(Mdct.forward(x, win), directForward(x, win))
+      assert(inv <= 1e-11, s"inverse n=$n relative error $inv")
+      assert(fwd <= 1e-11, s"forward n=$n relative error $fwd")
+    }
+  }
+
+  test("sizes that are not a power of two >= 8 throw, naming n") {
+    for (n <- Seq(48, 0)) {
+      val e1 = intercept[IllegalArgumentException](Mdct.inverse(new Array[Double](n / 2), n))
+      assert(e1.getMessage.contains(s"n=$n"), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](
+        Mdct.forward(new Array[Double](n), new Array[Double](n)))
+      assert(e2.getMessage.contains(s"n=$n"), e2.getMessage)
+    }
+  }
+
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .map(x => f"${x & 0xff}%02x").mkString
+
+  private def tone(sr: Int): Array[Float] =
+    Array.tabulate(sr)(i => (0.5 * math.sin(2 * math.Pi * 500 * i / sr)).toFloat)
+
+  /** Hashes of the encoders' output before the fast kernel replaced the
+    * direct-form transform: the rewrite changed no byte.
+    */
+  private val pinned = Map(
+    "aac shape=0 short=0 tns=false" -> "c6e347a844300bf980ab84c1ee786033f7edfaf3fefc7c69fb410f76020637f1",
+    "aac shape=0 short=0 tns=true" -> "85e52da0ffed09162b86d678a2b6c42d227ef46271881cdb67823a7974fc239b",
+    "aac shape=0 short=3 tns=false" -> "61fd4dca8d5b89d68ebf36b390eb43f47b22f19b8545c6267b5d297ec2e5bafa",
+    "aac shape=0 short=3 tns=true" -> "2421eab28a90a9a15463be597451603882bab3017831f7f88d5e4b4725e38a28",
+    "aac shape=1 short=0 tns=false" -> "4d197cc62a4c6664898b565c156944d1842b04d69ebbafe1d53a97c1e7dd393c",
+    "aac shape=1 short=0 tns=true" -> "d2bb810d5feb1a03e98d0723b19ee1675d5944ebf15f1ad50043dbc629f0ac27",
+    "aac shape=1 short=3 tns=false" -> "c87225859edc332cab236870e319bd403af373f5d0dbc33329c7f52880bf0708",
+    "aac shape=1 short=3 tns=true" -> "de3d04f2181d5241e0717256278268262f7c7bee76f86c9796c89b88ca3f0514",
+    "aac m4a" -> "acc4fc904c1090ae8360518807d36c414b61de9407101902a86b39e10b191a96",
+    "vorbis" -> "227370022669ca44c71cf26b97159ef0c971b64c546e77476e1d1e07c90bb349",
+    "vorbis mixed" -> "2a826ede0f9d0d9a453038c318163d4ccc5354d483819a0813c326599b32cf6f")
+
+  test("encoder byte pins: AAC ADTS/M4A and Vorbis equal/mixed on a 1 s tone") {
+    val aac = tone(24000)
+    val vorbis = tone(16000)
+    val got =
+      (for (shape <- Seq(0, 1); sp <- Seq(0, 3); tns <- Seq(false, true))
+        yield s"aac shape=$shape short=$sp tns=$tns" ->
+          sha256(AacEncoder.encode(24000, aac, shape, sp, tns))).toMap ++ Map(
+        "aac m4a" -> sha256(AacEncoder.encodeM4a(24000, aac)),
+        "vorbis" -> sha256(VorbisEncoder.encode(16000, vorbis)),
+        "vorbis mixed" -> sha256(VorbisEncoder.encodeMixed(16000, vorbis)))
+    assert(got.keySet == pinned.keySet)
+    val moved = pinned.keys.toSeq.sorted.filter(k => got(k) != pinned(k))
+    assert(moved.isEmpty, s"encoder bytes changed for: ${moved.mkString(", ")}")
+  }
+}

@@ -92,7 +92,7 @@ class VorbisSpec extends AnyFunSuite {
   }
 
   test("Vorbis MDCT/IMDCT TDAC identity under the Vorbis window") {
-    import graft.pipeline.{VorbisAudio, VorbisEncoder}
+    import graft.pipeline.{Mdct, VorbisAudio}
     val n = 256
     val win = VorbisAudio.window(n)
     // Princen-Bradley condition of the Vorbis window
@@ -103,8 +103,8 @@ class VorbisSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(13)
     val a = Array.fill(n)(rnd.nextGaussian())
     val b = a.drop(n / 2) ++ Array.fill(n / 2)(rnd.nextGaussian())
-    val ya = VorbisAudio.imdct(VorbisEncoder.mdct(a, win), n).zip(win).map { case (v, w) => v * w }
-    val yb = VorbisAudio.imdct(VorbisEncoder.mdct(b, win), n).zip(win).map { case (v, w) => v * w }
+    val ya = Mdct.inverse(Mdct.forward(a, win), n).zip(win).map { case (v, w) => v * w }
+    val yb = Mdct.inverse(Mdct.forward(b, win), n).zip(win).map { case (v, w) => v * w }
     val rec = Array.tabulate(n / 2)(i => ya(n / 2 + i) + yb(i))
     val err = rec.zip(a.drop(n / 2)).map { case (x, y) => math.abs(x - y) }.max
     assert(err < 1e-9, s"TDAC error $err")
@@ -207,7 +207,7 @@ class VorbisSpec extends AnyFunSuite {
   }
 
   test("asymmetric transition windows reconstruct exactly across all four transition kinds") {
-    import graft.pipeline.{VorbisAudio, VorbisEncoder}
+    import graft.pipeline.{Mdct, VorbisAudio}
     val n0 = 256; val n1 = 1024
     def isLong(b: Int) = (b % 4) >= 2 // S S L L: exercises S-S, S-L, L-L, L-S
     val rnd = new scala.util.Random(7)
@@ -236,7 +236,7 @@ class VorbisSpec extends AnyFunSuite {
         val idx = starts(i) + j
         if (idx >= 0 && idx < sig.length) sig(idx) else 0.0
       }
-      val y = VorbisAudio.imdct(VorbisEncoder.mdct(x, win), n)
+      val y = Mdct.inverse(Mdct.forward(x, win), n)
         .zip(win).map { case (v, w) => v * w }
       if (prevTail != null) {
         val outLen = prevN / 4 + n / 4
