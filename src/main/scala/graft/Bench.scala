@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -39,58 +42,85 @@ object Bench {
       spark.catalog.clearCache()
       maybeGc(i)
     }
-    // Pass 2 — timed, steady-state. Caches are cleared after each query,
-    // so every figure includes rebuilding the query's own eager caches
-    // (that work is part of the query), but never pays for a neighbor's.
-    // GC BEFORE each query, OUTSIDE the timer: with the every-16 cadence
-    // the accumulated shuffle files of up to 15 neighbors plus the GC
-    // pause itself landed inside some victim query's timing (measured:
-    // dedup_minhash_lsh 6.7 s in-session vs 3.2 s solo). The brief sleep
-    // lets the ContextCleaner drain its async file deletes off-timer.
-    // Each query is timed in three phases: BUILD (DataFrame construction
-    // — includes any eager staging/caching the query does by design),
-    // PLAN (analysis, optimization and physical planning of the final
-    // plan) and ACTION (executing it). The stdout `queries` map stays
-    // total = build + plan + action for continuity with r01-r12; the
-    // file artifact adds the `plan` and `action` maps so flagged
-    // sub-second queries can be adjudicated on compute, not on fixed
-    // per-query session overhead (the r12 verdict's open dispute).
-    val results = sorted.map { case (name, fn) =>
-      System.gc(); Thread.sleep(50)
-      val t0 = System.nanoTime()
-      val df = try Some(fn(spark, sfDir)) catch { case _: Throwable => None }
-      val tb = System.nanoTime()
-      df.foreach(d => try d.queryExecution.executedPlan catch { case _: Throwable => () })
-      val t1 = System.nanoTime()
-      val ok = try { df.foreach(_.count()); df.isDefined } catch { case _: Throwable => false }
-      val t2 = System.nanoTime()
-      spark.catalog.clearCache()
-      def secs(from: Long, to: Long): Double = if (ok) (to - from) / 1e9 else -1d
-      (name, secs(t0, t2), secs(tb, t1), secs(t1, t2))
-    }
-    // Compact timings (ms precision — the box's ±40% noise band makes
-    // more digits fiction) keep the stdout line as short as possible,
-    // and the SAME JSON is also written to a file: the driver's stdout
-    // capture truncated the r11/r12 artifacts to a tail fragment
-    // (66/397 timings survived), so the file is the durable artifact.
-    def fmt(v: Double): String = f"$v%.3f"
-    def timings(v: ((String, Double, Double, Double)) => Double): String =
-      results.map(r => s"\"" + r._1 + "\":" + fmt(v(r))).mkString("{", ",", "}")
-    val qs = timings(_._2)
-    // a failed query records -1 in the maps and stays out of the total
-    val total = results.map(_._2).filter(_ >= 0d).sum
-    val nFailed = results.count(_._2 < 0d)
+    // Pass 2 — timed, steady-state (`timePass`). The stdout `queries`
+    // map stays total = build + plan + action for continuity with
+    // r01-r12; the file artifact adds the `plan` and `action` maps so
+    // flagged sub-second queries can be judged on compute, not on fixed
+    // per-query session overhead.
+    val results = timePass(spark, sfDir, sorted)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "docs/bench_latest.json")
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"queries":$qs,"sf":"$sfDir","file":"$outFile"}"""
-    val fileLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"queries":$qs,"plan":${timings(_._3)},"action":${timings(_._4)},"sf":"$sfDir"}"""
+    val (line, fileLine) = lines(results, sfDir, outFile)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (fileLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () } // stdout line still carries everything
+    catch { // stdout line still carries every timing
+      case e: Throwable => System.err.println(s"bench: artifact $outFile not written: $e")
+    }
     println(line)
     Console.out.flush()
     spark.stop()
+  }
+
+  /** One query's timed run: seconds total/plan/action (−1 when it
+    * failed) and, for a failed query, the first exception's class and
+    * message.
+    */
+  final case class Timing(name: String, total: Double, plan: Double, action: Double,
+                          error: Option[String])
+
+  /** The timed pass over `queries`, in order. Each query is timed in
+    * three phases: BUILD (DataFrame construction — includes any eager
+    * staging/caching the query does by design), PLAN (analysis,
+    * optimization and physical planning of the final plan) and ACTION
+    * (executing it). GC runs BEFORE each query, OUTSIDE the timer: with
+    * the every-16 cadence the accumulated shuffle files of up to 15
+    * neighbors plus the GC pause itself landed inside some victim
+    * query's timing (measured: dedup_minhash_lsh 6.7 s in-session vs
+    * 3.2 s solo). The brief sleep lets the ContextCleaner drain its async
+    * file deletes off-timer. Caches are cleared after each query, so
+    * every figure includes rebuilding the query's own eager caches (that
+    * work is part of the query), but never pays for a neighbor's.
+    */
+  def timePass(spark: SparkSession, sfDir: String,
+               queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[Timing] =
+    queries.map { case (name, fn) =>
+      System.gc(); Thread.sleep(50)
+      var error: Option[Throwable] = None
+      def attempt[T](body: => T): Option[T] =
+        try Some(body) catch { case e: Throwable => if (error.isEmpty) error = Some(e); None }
+      val t0 = System.nanoTime()
+      val df = attempt(fn(spark, sfDir))
+      val tb = System.nanoTime()
+      df.foreach(d => attempt(d.queryExecution.executedPlan))
+      val t1 = System.nanoTime()
+      val ok = df.exists(d => attempt(d.count()).isDefined)
+      val t2 = System.nanoTime()
+      spark.catalog.clearCache()
+      def secs(from: Long, to: Long): Double = if (ok) (to - from) / 1e9 else -1d
+      Timing(name, secs(t0, t2), secs(tb, t1), secs(t1, t2),
+        if (ok) None else error.map(e => s"${e.getClass.getName}: ${e.getMessage}"))
+    }
+
+  /** The stdout line and the file artifact line. Compact timings (ms
+    * precision — the box's ±40% noise band makes more digits fiction)
+    * keep the stdout line as short as possible, and the same JSON plus
+    * the `plan`, `action` and `errors` maps goes to a file: a captured
+    * stdout once kept only a tail fragment of the line (66 of 397
+    * timings), so the file is the durable artifact. A
+    * failed query records -1 in the maps, its exception in `errors`, and
+    * stays out of the total.
+    */
+  def lines(results: Seq[Timing], sfDir: String, outFile: String): (String, String) = {
+    def fmt(v: Double): String = f"$v%.3f"
+    def timings(v: Timing => Double): String =
+      results.map(r => s"\"" + r.name + "\":" + fmt(v(r))).mkString("{", ",", "}")
+    val qs = timings(_.total)
+    val total = results.map(_.total).filter(_ >= 0d).sum
+    val nFailed = results.count(_.total < 0d)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val errors = results.flatMap(r => r.error.map(e => s"\"${r.name}\":${json.writeValueAsString(e)}"))
+      .mkString("{", ",", "}")
+    (s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"queries":$qs,"sf":"$sfDir","file":"$outFile"}""",
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"queries":$qs,"plan":${timings(_.plan)},"action":${timings(_.action)},"errors":$errors,"sf":"$sfDir"}""")
   }
 }

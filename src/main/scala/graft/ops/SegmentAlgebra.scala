@@ -4,8 +4,6 @@ import org.apache.spark.sql.Dataset
 
 import graft.model._
 
-import scala.collection.mutable.ArrayBuffer
-
 /** The inherently-sequential segment kernels, run per key with
   * `groupByKey.flatMapGroups`: each group is one file's segment list
   * (bounded — one row per VAD span), sorted in-memory on the executor.
@@ -87,19 +85,10 @@ object SegmentAlgebra {
       : Dataset[SpeakerSegment] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_.file).flatMapGroups { (file, it) =>
-      val segs = it.toArray.sortBy(s => (s.start, s.end))
-      val out = ArrayBuffer.empty[SpeakerSegment]
-      var curS = 0d; var curE = 0d; var spk = ""; var n = 0
-      def flush(): Unit = if (n > 0 && curE - curS > minDuration)
-        out += SpeakerSegment(file, curS, curE, spk)
-      segs.foreach { s =>
-        val breaks = n == 0 || s.speaker != spk ||
-          s.start - curE > gap || math.max(curE, s.end) - curS > maxDuration
-        if (breaks) { flush(); curS = s.start; curE = s.end; spk = s.speaker; n = 1 }
-        else { curE = math.max(curE, s.end); n += 1 }
-      }
-      flush()
-      out.iterator
+      val turns = it.map(s => SegmentKernels.Turn(s.start, s.end, s.speaker)).toIndexedSeq
+        .sortBy(t => (t.start, t.end, t.speaker))
+      SegmentKernels.mergeBySpeaker(turns, gap, maxDuration, minDuration).iterator
+        .map(t => SpeakerSegment(file, t.start, t.end, t.speaker))
     }
   }
 

@@ -38,6 +38,28 @@ object SegmentKernels {
     out.toIndexedSeq
   }
 
+  final case class Turn(start: Double, end: Double, speaker: String)
+
+  /** W2 speaker-change merge over (start, end, speaker)-sorted turns —
+    * `speaker_rematch.py:25-43`: the [[mergeCapped]] fold that also
+    * breaks when the speaker changes; merged turns no longer than
+    * `minDuration` are dropped (P4, `speaker_rematch.py:42`).
+    */
+  def mergeBySpeaker(sorted: IndexedSeq[Turn], gap: Double, cap: Double,
+                     minDuration: Double): IndexedSeq[Turn] = {
+    val out = ArrayBuffer.empty[Turn]
+    var curS = 0d; var curE = 0d; var spk = ""; var n = 0
+    def flush(): Unit = if (n > 0 && curE - curS > minDuration) out += Turn(curS, curE, spk)
+    sorted.foreach { t =>
+      val breaks = n == 0 || t.speaker != spk ||
+        t.start - curE > gap || math.max(curE, t.end) - curS > cap
+      if (breaks) { flush(); curS = t.start; curE = t.end; spk = t.speaker; n = 1 }
+      else { curE = math.max(curE, t.end); n += 1 }
+    }
+    flush()
+    out.toIndexedSeq
+  }
+
   final case class MergedTyped(start: Double, end: Double, n: Int, types: Seq[String])
 
   /** W1 typed capped merge over pre-sorted WEIGHTED items

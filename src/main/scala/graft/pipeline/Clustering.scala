@@ -21,8 +21,8 @@ import scala.collection.mutable.ArrayBuffer
   *     mirroring `all_points_membership_vectors` + the ≥ 0.2 rule
   *     (`speaker_rematch.py:129-136`).
   *
-  * Pure and single-file-sized by design: [[SpeechPipeline.rematchStage]]
-  * runs it per key inside `flatMapGroups`, exactly the reference's
+  * Pure and single-file-sized by design: [[SpeechKernels.cluster]] runs
+  * it once per file inside each task, exactly the reference's
   * one-file-at-a-time granularity — 1000 executors cluster 1000 files
   * concurrently and no state ever leaves one key.
   */

@@ -1,16 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
 import graft.ops.SegmentAlgebra
 
-/** The reference's five-stage pipeline (§3 traces) as composed Dataset
-  * transformations in ONE logical plan — the process/env hops of
-  * `data_pipeline.sh` disappear; each stage is a transformation keyed by
-  * `file`, so the whole chain shuffles once per stage boundary at most
-  * and scales horizontally across files.
+/** The reference's five-stage pipeline (§3 traces) without the
+  * process/env hops of `data_pipeline.sh`. Every stage is per file, so
+  * [[runAll]] is ONE narrow pass over the audio: each partition runs the
+  * stages' [[SpeechKernels]] file by file on the waveform in place — no
+  * shuffle, no broadcast, one Spark job per action — and scales
+  * horizontally across files. Each stage is also callable on its own
+  * (`vadStage` … `hostMatchStage`) as a thin Dataset wrapper over the
+  * same kernel; a wrapper handed spans and audio as separate Datasets
+  * pairs them per file with one `groupByKey(file).cogroup`, so a
+  * waveform moves once per file, never once per span.
   *
   * Stage map (reference → here):
   *  1. VAD (`vad_multi.py`)                 → [[vadStage]]
@@ -21,29 +26,77 @@ import graft.ops.SegmentAlgebra
   */
 object SpeechPipeline {
 
+  private val MockVadName = "mock_vad"
+  private val VadBatch = 4
+
+  private def newMockVad(): SpeechKernels.Vad = new MockModels.MockVad()
+
+  /** This executor's mock embedder, typed by its trait so a wrapper put
+    * in the [[ModelCache]] under the same name serves it.
+    */
+  private def mockEmbedder: SpeechKernels.Embedder =
+    ModelCache.getOrCreate[SpeechKernels.Embedder]("mock_embedder")(new MockModels.MockEmbedder())
+
   /** The whole reference pipeline (stages 1-5) as one composed run under
     * a single config (the `data_pipeline.sh` orchestration without its
-    * process/env hops): returns the per-host match rollup.
+    * process/env hops): returns the per-host match rollup, the columns
+    * `file`, `host_id`, `host_total_duration`, `host_proportion` and
+    * `matched_speakers` (speaker, score).
+    *
+    * Contract: one `audio` row is one whole file — every stage runs per
+    * row, so a file split over two rows would be two files. Every
+    * producer meets it: `binaryFile` scans (one row per path), the test
+    * fixtures, and the `m1_vad_gate` query's distinct ids.
     */
   def runAll(spark: SparkSession, audio: Dataset[AudioFile],
              hostPrints: Map[String, Array[Float]],
-             cfg: PipelineConfig = PipelineConfig.production) = {
-    val vad = vadStage(audio, cfg.vadPadSec)
-    val (single, _) = diarizeStage(vad, audio)
-    val (merged, embTable) = rematchStage(single, audio,
-      minChunkSec = math.min(cfg.rematchChunkMinSec, 0.2),
-      mergedCapSec = cfg.rematchMergedCapSec,
-      minClusterRatio = cfg.clusterSizeRatio,
-      clusterSimThreshold = cfg.clusterSimThreshold,
-      softRescueThreshold = cfg.softRescueThreshold)
-    hostMatchStage(spark, merged, embTable, hostPrints, cfg.hostBudgetSec)
+             cfg: PipelineConfig = PipelineConfig.production): DataFrame = {
+    import spark.implicits._
+    audio.mapPartitions { files =>
+      val vad = ModelCache.getOrCreate[SpeechKernels.Vad](MockVadName)(newMockVad())
+      val embedder = mockEmbedder
+      vadBatched(files, vad, cfg.vadPadSec).flatMap { case (a, spans) =>
+        val single = SpeechKernels.diarize(a, spans).filter(_.speakers.length == 1)
+        val chunks = SpeechKernels.rematch(a, single, embedder,
+          minChunkSec = math.min(cfg.rematchChunkMinSec, 0.2),
+          mergedCapSec = cfg.rematchMergedCapSec,
+          minClusterRatio = cfg.clusterSizeRatio,
+          simThreshold = cfg.clusterSimThreshold,
+          softThreshold = cfg.softRescueThreshold)
+        SpeechKernels.hostMatch(a.file, chunks.map(_._1),
+          chunks.map { case (seg, emb) => (seg.speaker, seg.end - seg.start, emb) },
+          hostPrints, cfg.hostBudgetSec)
+      }
+    }.toDF()
+  }
+
+  /** VAD over one partition's files in model batches of [[VadBatch]]:
+    * each file with its padded, merged spans.
+    */
+  private def vadBatched(files: Iterator[AudioFile], model: SpeechKernels.Vad,
+                         padSec: Double): Iterator[(AudioFile, IndexedSeq[Segment])] =
+    files.grouped(VadBatch).flatMap { batch =>
+      batch.iterator.zip(model.predictBatch(batch).iterator)
+        .map { case (a, raw) => (a, SpeechKernels.vad(a, raw, padSec)) }
+    }
+
+  /** Pairs each file's `rows` with that file's waveform through one
+    * `groupByKey(file).cogroup` and applies `f` per file. Rows of a file
+    * with no audio are dropped, as an inner join would.
+    */
+  private def perFile[T, U: Encoder](rows: Dataset[T], file: T => String,
+      audio: Dataset[AudioFile])(f: (AudioFile, IndexedSeq[T]) => IndexedSeq[U]): Dataset[U] = {
+    import audio.sparkSession.implicits._
+    rows.groupByKey(file).cogroup(audio.groupByKey(_.file)) { (_, rs, as) =>
+      if (as.hasNext) f(as.next(), rs.toIndexedSeq) else Nil
+    }
   }
 
   /** Stage 1 — VAD: mock inference, pad+clamp (P1, `vad_multi.py:33-35`),
     * zero-gap merge (W1 with interval=0, cap=∞ — `vad_multi.py:37`).
     */
   def vadStage(audio: Dataset[AudioFile], padSec: Double = 0.1): Dataset[Segment] =
-    vadStageWith(audio, "mock_vad", () => new MockModels.MockVad(), padSec)
+    vadStageWith(audio, MockVadName, () => newMockVad(), padSec)
 
   /** M1 — the VAD stage over the ONNX Silero operator ([[Onnx
     * .OnnxSileroVad]]): the same pad+clamp and zero-gap merge as
@@ -57,23 +110,16 @@ object SpeechPipeline {
     vadStageWith(audio, s"onnx_vad:${provider.name}",
       () => new Onnx.OnnxSileroVad(provider), padSec)
 
-  /** Shared VAD stage body over any segment-emitting batch model. */
+  /** Shared VAD stage body over any segment-emitting batch model: one
+    * narrow pass, the model held once per executor in [[ModelCache]].
+    */
   def vadStageWith(audio: Dataset[AudioFile], modelName: String,
       load: () => BatchModel[AudioFile, Seq[Segment]],
       padSec: Double): Dataset[Segment] = {
     import audio.sparkSession.implicits._
-    val durations = audio.map(a => (a.file, a.waveform.length.toDouble / a.sr))
-      .toDF("file", "dur")
-    val raw = InferenceOp.flatMapBatched[AudioFile, Segment](
-      audio, modelName, load, batchSize = 4)
-    val padded = raw.toDF("file", "start", "end")
-      .join(broadcast(durations), "file")
-      .select(col("file"),
-        greatest(col("start") - lit(padSec), lit(0d)).as("start"),
-        least(col("end") + lit(padSec), col("dur")).as("end"))
-      .as[Segment]
-    SegmentAlgebra.sessionizeCapped(padded, gap = 0d, maxDuration = Double.MaxValue)
-      .map(m => Segment(m.file, m.start, m.end))
+    audio.mapPartitions { files =>
+      vadBatched(files, ModelCache.getOrCreate(modelName)(load()), padSec).flatMap(_._2)
+    }
   }
 
   /** Stage 2a — separation-economy merge (X3, `separation_filter.py:167-188`):
@@ -251,26 +297,13 @@ object SpeechPipeline {
   }
 
   /** Stage 3 — mock diarization: assign a speaker per VAD span from its
-    * dominant amplitude band, then resolve overlaps with the sweep line
-    * (J8) and split single vs overlapping (U3, `diarization.py:61-63`).
+    * peak amplitude, then resolve overlaps with the sweep line (J8) and
+    * split single vs overlapping (U3, `diarization.py:61-63`).
     */
   def diarizeStage(vad: Dataset[Segment], audio: Dataset[AudioFile])
       : (Dataset[ActiveInterval], Dataset[ActiveInterval]) = {
     import vad.sparkSession.implicits._
-    val waves = audio.map(a => (a.file, a.sr, a.waveform))
-      .toDF("file", "sr", "waveform")
-    val spk = vad.toDF("file", "start", "end").join(waves, "file")
-      .as[(String, Double, Double, Int, Array[Float])]
-      .map { case (file, s, e, sr, w) =>
-        val lo = math.max(0, (s * sr).toInt)
-        val hi = math.min(w.length, (e * sr).toInt)
-        var peak = 0f
-        var i = lo
-        while (i < hi) { if (math.abs(w(i)) > peak) peak = math.abs(w(i)); i += 1 }
-        val label = if (peak > 0.5f) "speaker_0" else "speaker_1"
-        SpeakerSegment(file, s, e, label)
-      }
-    val active = SegmentAlgebra.sweepLineActiveSets(spk)
+    val active = perFile(vad, (s: Segment) => s.file, audio)(SpeechKernels.diarize)
     (active.filter(a => a.speakers.length == 1),
       active.filter(a => a.speakers.length > 1))
   }
@@ -295,14 +328,9 @@ object SpeechPipeline {
                           cfg: HttpServiceConfig)
       : (Dataset[ActiveInterval], Dataset[ActiveInterval], Dataset[ServiceSpeakerRow]) = {
     import vad.sparkSession.implicits._
-    val waves = audio.map(a => (a.file, a.sr, a.waveform))
-      .toDF("file", "sr", "waveform")
-    val withWave = vad.toDF("file", "start", "end").join(waves, "file")
-      .as[(String, Double, Double, Int, Array[Float])]
-      .map { case (file, s, e, sr, w) =>
-        val slice = w.slice(math.max(0, (s * sr).toInt), math.min(w.length, (e * sr).toInt))
-        (file, s, e, sr, slice)
-      }
+    val withWave = perFile(vad, (s: Segment) => s.file, audio) { (a, spans) =>
+      spans.map(s => (a.file, s.start, s.end, a.sr, SpeechKernels.slice(a, s.start, s.end)))
+    }
     // NB: Charset is not Serializable — name it inside each closure
     val rows = HttpInference.mapService[(String, Double, Double, Int, Array[Float]), ServiceSpeakerRow](
       withWave, cfg,
@@ -343,53 +371,22 @@ object SpeechPipeline {
                    softRescueThreshold: Double = 0.2)
       : (Dataset[SpeakerSegment], Dataset[(String, String, Double, Array[Float])]) = {
     import single.sparkSession.implicits._
-    val withWave = mergedWithWave(single, audio, minChunkSec, mergedCapSec)
-    val embedded = InferenceOp.mapBatched[(SpeakerSegment, Array[Float]), (SpeakerSegment, Array[Float])](
-      withWave, "mock_embedder", () => new MockModels.MockEmbedder(), batchSize = 16)
-    clusterEmbedded(embedded, minClusterRatio, clusterSimThreshold, softRescueThreshold)
+    val clustered = perFile(single, (x: ActiveInterval) => x.file, audio) { (a, ivs) =>
+      SpeechKernels.rematch(a, ivs, mockEmbedder, minChunkSec, mergedCapSec,
+        minClusterRatio, clusterSimThreshold, softRescueThreshold)
+    }
+    relabeledAndEmbTable(clustered)
   }
 
-  /** The speaker-change-merged chunk table joined to its waveform slice
-    * — the shared front half of the M4 embedding stage (mock and
-    * service variants).
+  /** Splits clustered chunks into (relabeled chunks, embedding table
+    * keyed by the global labels), materialized once: both outputs derive
+    * from it, and consumers racing a cold cache would each rerun
+    * inference and clustering.
     */
-  private def mergedWithWave(single: Dataset[ActiveInterval], audio: Dataset[AudioFile],
-                             minChunkSec: Double, mergedCapSec: Double)
-      : Dataset[(SpeakerSegment, Array[Float])] = {
-    import single.sparkSession.implicits._
-    val spk = single.map(a => SpeakerSegment(a.file, a.start, a.end, a.speakers.head))
-    val merged = SegmentAlgebra.sessionizeBySpeaker(spk,
-      gap = 1d, maxDuration = mergedCapSec, minDuration = minChunkSec)
-    val waves = audio.map(a => (a.file, a.sr, a.waveform)).toDF("file", "sr", "waveform")
-    merged.toDF("file", "start", "end", "speaker").join(waves, "file")
-      .as[(String, Double, Double, String, Int, Array[Float])]
-      .map { case (file, s, e, spkr, sr, w) =>
-        (SpeakerSegment(file, s, e, spkr),
-          w.slice(math.max(0, (s * sr).toInt), math.min(w.length, (e * sr).toInt)))
-      }
-  }
-
-  /** M5 over an embedded chunk table — the shared back half: cluster
-    * each file's chunk embeddings (deterministic member order is part
-    * of the kernel contract) and emit (relabeled chunks, embedding
-    * table keyed by the global labels).
-    */
-  private def clusterEmbedded(embedded: Dataset[(SpeakerSegment, Array[Float])],
-                              minClusterRatio: Double, clusterSimThreshold: Double,
-                              softRescueThreshold: Double)
+  private def relabeledAndEmbTable(clustered: Dataset[(SpeakerSegment, Array[Float])])
       : (Dataset[SpeakerSegment], Dataset[(String, String, Double, Array[Float])]) = {
-    import embedded.sparkSession.implicits._
-    val clustered = embedded.groupByKey(_._1.file).flatMapGroups {
-      (file: String, it: Iterator[(SpeakerSegment, Array[Float])]) =>
-        val rows = it.toArray.sortBy(t => (t._1.start, t._1.end, t._1.speaker))
-        val labels = Clustering.clusterOne(rows.map(_._2).toIndexedSeq,
-          minClusterRatio, clusterSimThreshold, softRescueThreshold)
-        rows.iterator.zip(labels.iterator).map { case ((seg, emb), l) =>
-          (SpeakerSegment(file, seg.start, seg.end, if (l < 0) "noise" else s"g$l"), emb)
-        }
-    }.cache()
-    // eager: both returned outputs derive from it, and concurrent
-    // consumers racing a cold cache would each run inference+clustering
+    import clustered.sparkSession.implicits._
+    clustered.cache()
     clustered.count()
     val relabeled = clustered.map(_._1)
     val embTable = clustered.map { case (seg, emb) =>
@@ -407,7 +404,7 @@ object SpeechPipeline {
   /** Stage 4, EXTERNAL-SERVICE variant (SURVEY §7.4.4 — ECAPA has no
     * JVM runtime): [[rematchStage]] with the M4 chunk embedding fetched
     * from a batch HTTP service via [[HttpInference.mapService]], then
-    * the SAME M5 clustering back half. Wire protocol: request lines
+    * the SAME M5 clustering kernel. Wire protocol: request lines
     * `file TAB start TAB end TAB speaker TAB base64(f32le waveform)`,
     * response lines echoing the identity fields with
     * `base64(f32le embedding)` in place of the waveform (both base64
@@ -426,7 +423,9 @@ object SpeechPipeline {
       : (Dataset[SpeakerSegment], Dataset[(String, String, Double, Array[Float])],
          Dataset[ServiceEmbedRow]) = {
     import single.sparkSession.implicits._
-    val withWave = mergedWithWave(single, audio, minChunkSec, mergedCapSec)
+    val withWave = perFile(single, (x: ActiveInterval) => x.file, audio) { (a, ivs) =>
+      SpeechKernels.chunkSlices(a, ivs, minChunkSec, mergedCapSec)
+    }
     // NB: Charset is not Serializable — name it inside each closure
     val rows = HttpInference.mapService[(SpeakerSegment, Array[Float]), ServiceEmbedRow](
       withWave, cfg,
@@ -443,12 +442,15 @@ object SpeechPipeline {
         x._1.speaker, Array.emptyFloatArray, "failed",
         s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}"))
       .cache() // one service pass feeds both the ok and failed splits
-    val ok = rows.filter(_.status == "completed")
+    val clustered = rows.filter(_.status == "completed")
       .map(r => (SpeakerSegment(r.file, r.start, r.end, r.speaker), r.emb))
-    val failed = rows.filter(_.status == "failed")
-    val (relabeled, embTable) = clusterEmbedded(
-      ok, minClusterRatio, clusterSimThreshold, softRescueThreshold)
-    (relabeled, embTable, failed)
+      .groupByKey(_._1.file)
+      .flatMapGroups { (_, it) =>
+        SpeechKernels.cluster(it.toIndexedSeq, minClusterRatio, clusterSimThreshold,
+          softRescueThreshold)
+      }
+    val (relabeled, embTable) = relabeledAndEmbTable(clustered)
+    (relabeled, embTable, rows.filter(_.status == "failed"))
   }
 
   /** Stage 4b — the local→global remap trace (A6+J3+J5,
@@ -486,56 +488,17 @@ object SpeechPipeline {
 
   /** Stage 5 — host match: per-speaker duration rollup (A4), longest-first
     * 180 s budget (W6/O5), mock verification score (M6), threshold accept
-    * (P8), per-host rollup with proportions (A10).
+    * (P8), per-host rollup with proportions (A10) — [[SpeechKernels.hostMatch]]
+    * over each file's chunks and embedding rows, paired by one cogroup.
     */
   def hostMatchStage(spark: SparkSession, merged: Dataset[SpeakerSegment],
                      embTable: Dataset[(String, String, Double, Array[Float])],
                      hostPrints: Map[String, Array[Float]],
-                     budgetSec: Double = 180d) = {
+                     budgetSec: Double = 180d): DataFrame = {
     import spark.implicits._
-    // A4: duration totals are the FULL per-speaker durations...
-    val perSpeaker = merged.groupByKey(s => (s.file, s.speaker))
-      .mapGroups { (key, it) =>
-        (key._1, key._2, it.map(s => s.end - s.start).sum)
-      }.toDF("file", "speaker", "total_dur")
-    // ...while W6/O5 budgets only the audio fed to verification: take
-    // segments longest-first while the running total stays within
-    // budget, reference break-at-first-overflow (host_rematch.py:100-109).
-    val avgEmb = embTable.groupByKey(t => (t._1, t._2))
-      .mapGroups { (key, it) =>
-        val rows = it.toArray.sortBy(-_._3)
-        val kept = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-        var cum = 0d
-        var i = 0
-        var overflowed = false
-        while (i < rows.length && !overflowed) {
-          cum += rows(i)._3
-          if (cum <= budgetSec) kept += rows(i)._4 else overflowed = true
-          i += 1
-        }
-        val embs = if (kept.nonEmpty) kept.toArray else Array(rows.head._4)
-        val dim = embs.head.length
-        val mean = new Array[Float](dim)
-        embs.foreach(e => (0 until dim).foreach(j => mean(j) += e(j) / embs.length))
-        (key._1, key._2, mean)
-      }
-    val hosts = spark.sparkContext.broadcast(hostPrints)
-    val scored = avgEmb.flatMap { case (file, spkr, emb) =>
-      hosts.value.iterator.map { case (hostId, print) =>
-        val score = MockModels.cosine(emb, print)
-        (file, hostId, spkr, score, score > 0.5)
-      }
-    }.toDF("file", "host_id", "speaker", "score", "prediction")
-    val accepted = scored.filter(col("prediction") && col("score") > 0.5)
-      .join(perSpeaker, Seq("file", "speaker"))
-    val totals = perSpeaker.groupBy("file")
-      .agg(sum("total_dur").as("file_total"))
-    accepted.groupBy(col("file"), col("host_id"))
-      .agg(sum(col("total_dur")).as("host_total_duration"),
-        collect_list(struct(col("speaker"), col("score"))).as("matched_speakers"))
-      .join(broadcast(totals), "file")
-      .withColumn("host_proportion", col("host_total_duration") / col("file_total"))
-      .select(col("file"), col("host_id"), col("host_total_duration"),
-        col("host_proportion"), col("matched_speakers"))
+    merged.groupByKey(_.file).cogroup(embTable.groupByKey(_._1)) { (file, segs, embs) =>
+      SpeechKernels.hostMatch(file, segs.toIndexedSeq,
+        embs.map(t => (t._2, t._3, t._4)).toIndexedSeq, hostPrints, budgetSec)
+    }.toDF()
   }
 }

@@ -658,4 +658,98 @@ class PipelineSpec extends SparkSpec {
         .collect()
     }
   }
+
+  // --- runAll: one narrow per-file pass ---------------------------------
+
+  /** A 10 s file at 1 kHz with bursts (start s, end s, patterned). Flat
+    * 0.9 bursts diarize as speaker_0 with a flat mock embedding;
+    * patterned ones (0.45 on 4 samples of every 16, else 0.12) as
+    * speaker_1, with an embedding that leans on a few dimensions.
+    */
+  private def burstFile(file: String, bursts: (Double, Double, Boolean)*): AudioFile = {
+    val w = new Array[Float](10 * sr)
+    for ((s, e, patterned) <- bursts; i <- (s * sr).toInt until (e * sr).toInt)
+      w(i) = if (!patterned) 0.9f else if (i % 16 < 4) 0.45f else 0.12f
+    AudioFile(file, sr, w)
+  }
+
+  private lazy val speechFiles = Seq(
+    burstFile("a", (0.5, 1.5, false), (2.5, 3.5, true), (4.5, 6.0, false), (7.0, 8.0, true)),
+    burstFile("b", (0.3, 2.0, false), (3.0, 3.6, true), (5.0, 5.8, true), (7.5, 9.5, false)),
+    burstFile("c", (1.0, 1.8, true), (3.0, 4.2, false), (6.0, 6.7, true), (8.0, 8.5, false)),
+    burstFile("d", (2.0, 3.0, false))) // one chunk: below the A12 floor, so "noise"
+  private val speechPrints = Map(
+    "host_flat" -> Array.fill(16)(1f),
+    "host_lean" -> Array.tabulate(16)(j => if (j < 4) 1f else 0f))
+
+  test("runAll equals vadStage → diarizeStage → rematchStage → hostMatchStage") {
+    val cfg = graft.pipeline.PipelineConfig.production
+    val audio = speechFiles.toDS()
+    val vad = SpeechPipeline.vadStage(audio, cfg.vadPadSec)
+    val (single, _) = SpeechPipeline.diarizeStage(vad, audio)
+    val diarized = single.collect().groupBy(_.file).view.mapValues(_.map(_.speakers.head).toSet)
+    assert(diarized.count(_._2 == Set("speaker_0", "speaker_1")) >= 3, diarized.toMap)
+    val (merged, emb) = SpeechPipeline.rematchStage(single, audio,
+      minChunkSec = math.min(cfg.rematchChunkMinSec, 0.2),
+      mergedCapSec = cfg.rematchMergedCapSec, minClusterRatio = cfg.clusterSizeRatio,
+      clusterSimThreshold = cfg.clusterSimThreshold, softRescueThreshold = cfg.softRescueThreshold)
+    assert(merged.collect().exists(_.speaker == "noise"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
+      (r.getAs[String]("file"), r.getAs[String]("host_id"), r.getAs[Double]("host_total_duration"),
+        r.getAs[Double]("host_proportion"),
+        r.getAs[collection.Seq[org.apache.spark.sql.Row]]("matched_speakers")
+          .map(m => (m.getString(0), m.getDouble(1))).toSeq.sortBy(_._1))
+    }.toSeq.sortBy(r => (r._1, r._2))
+    val stages = rows(SpeechPipeline.hostMatchStage(spark, merged, emb, speechPrints, cfg.hostBudgetSec))
+    val composed = rows(SpeechPipeline.runAll(spark, audio, speechPrints, cfg))
+    assert(stages.map(_._1).distinct == Seq("a", "b", "c", "d"))
+    assert(stages.map(_._2).distinct.sorted == speechPrints.keys.toSeq.sorted)
+    assert(composed.map(r => (r._1, r._2)) == stages.map(r => (r._1, r._2)))
+    composed.zip(stages).foreach { case (x, y) =>
+      assert(math.abs(x._3 - y._3) <= 1e-9 * math.abs(y._3), s"$x vs $y")
+      assert(math.abs(x._4 - y._4) <= 1e-12, s"$x vs $y")
+      assert(x._5.map(_._1) == y._5.map(_._1), s"$x vs $y")
+      x._5.zip(y._5).foreach { case (a, b) => assert(math.abs(a._2 - b._2) <= 1e-6, s"$x vs $y") }
+    }
+  }
+
+  test("runAll plans one narrow pass: no shuffle or broadcast exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    val out = SpeechPipeline.runAll(spark, speechFiles.toDS(), speechPrints)
+    out.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plan = out.queryExecution.executedPlan
+    val exchanges = nodes(plan).collect {
+      case e: ShuffleExchangeLike => e
+      case e: BroadcastExchangeLike => e
+    }
+    assert(exchanges.isEmpty, plan.toString)
+  }
+
+  test("collecting runAll starts exactly one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = "runall_one_job"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    val out = SpeechPipeline.runAll(spark, speechFiles.toDS(), speechPrints)
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "runAll job count")
+    try out.collect()
+    finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() == 1)
+  }
 }

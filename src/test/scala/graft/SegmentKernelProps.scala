@@ -182,4 +182,34 @@ object SegmentKernelProps extends Properties("SegmentKernels") {
         .map(a => a.end - a.start).sum
       math.abs(covered - union) < 1e-9
     }
+
+  // coarse half-second grid: equal starts with different speakers occur
+  private val genSpeakerCorpus: Gen[(Seq[graft.model.SpeakerSegment], Double, Double, Double)] = for {
+    segs <- Gen.listOfN(80, for {
+      file <- Gen.oneOf("f0", "f1", "f2", "f3")
+      s <- Gen.choose(0, 400).map(_ * 0.5)
+      d <- Gen.choose(1, 20).map(_ * 0.5)
+      spk <- Gen.oneOf("s0", "s1", "s2")
+    } yield graft.model.SpeakerSegment(file, s, s + d, spk))
+    gap <- Gen.oneOf(0d, 1d, 5d)
+    cap <- Gen.oneOf(5d, 20d, 1000d)
+    minDur <- Gen.oneOf(0d, 2d, 6d)
+  } yield (segs, gap, cap, minDur)
+
+  property("sessionizeBySpeaker (Dataset) == mergeBySpeaker applied per file") = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    Prop.forAll(genSpeakerCorpus) { case (segs, gap, cap, minDur) =>
+      val got = graft.ops.SegmentAlgebra.sessionizeBySpeaker(segs.toDS(), gap, cap, minDur)
+        .collect().toSeq
+      val want = segs.groupBy(_.file).toSeq.flatMap { case (file, ss) =>
+        val turns = ss.map(s => SegmentKernels.Turn(s.start, s.end, s.speaker)).toIndexedSeq
+          .sortBy(t => (t.start, t.end, t.speaker))
+        SegmentKernels.mergeBySpeaker(turns, gap, cap, minDur)
+          .map(t => graft.model.SpeakerSegment(file, t.start, t.end, t.speaker))
+      }
+      def canon(xs: Seq[graft.model.SpeakerSegment]) = xs.sortBy(s => (s.file, s.start, s.end))
+      canon(got) == canon(want)
+    }
+  }
 }
