@@ -36,12 +36,7 @@ object Bench {
     // dedup_cascade 12.6 s solo vs 27 s at position ~110 of a session.
     // A periodic System.gc() (same idea as spark.cleaner.periodicGC,
     // compressed to bench timescale) keeps the session stationary.
-    def maybeGc(i: Int): Unit = if ((i & 15) == 15) System.gc()
-    sorted.zipWithIndex.foreach { case ((_, fn), i) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-      maybeGc(i)
-    }
+    val warmupErrors = warmUp(spark, sfDir, sorted)
     // Pass 2 — timed, steady-state (`timePass`). The stdout `queries`
     // map stays total = build + plan + action for continuity with
     // r01-r12; the file artifact adds the `plan` and `action` maps so
@@ -50,7 +45,7 @@ object Bench {
     val results = timePass(spark, sfDir, sorted)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "docs/bench_latest.json")
-    val (line, fileLine) = lines(results, sfDir, outFile)
+    val (line, fileLine) = lines(results, sfDir, outFile, warmupErrors)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (fileLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { // stdout line still carries every timing
@@ -60,6 +55,24 @@ object Bench {
     Console.out.flush()
     spark.stop()
   }
+
+  /** The untimed warm-up pass (see `main`): runs every query once and
+    * returns, per failed query, `warmup:<query>` with the exception's
+    * class and message. A warm-up failure does not fail the query; the
+    * timed pass decides that.
+    */
+  def warmUp(spark: SparkSession, sfDir: String,
+             queries: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[(String, String)] =
+    queries.zipWithIndex.flatMap { case ((name, fn), i) =>
+      val error =
+        try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(s"warmup:$name" -> describe(e)) }
+      spark.catalog.clearCache()
+      if ((i & 15) == 15) System.gc()
+      error
+    }
+
+  private def describe(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
 
   /** One query's timed run: seconds total/plan/action (−1 when it
     * failed) and, for a failed query, the first exception's class and
@@ -98,7 +111,7 @@ object Bench {
       spark.catalog.clearCache()
       def secs(from: Long, to: Long): Double = if (ok) (to - from) / 1e9 else -1d
       Timing(name, secs(t0, t2), secs(tb, t1), secs(t1, t2),
-        if (ok) None else error.map(e => s"${e.getClass.getName}: ${e.getMessage}"))
+        if (ok) None else error.map(describe))
     }
 
   /** The stdout line and the file artifact line. Compact timings (ms
@@ -108,9 +121,11 @@ object Bench {
     * stdout once kept only a tail fragment of the line (66 of 397
     * timings), so the file is the durable artifact. A
     * failed query records -1 in the maps, its exception in `errors`, and
-    * stays out of the total.
+    * stays out of the total. Warm-up failures ([[warmUp]]) go into
+    * `errors` too, keyed `warmup:<query>`, and change nothing else.
     */
-  def lines(results: Seq[Timing], sfDir: String, outFile: String): (String, String) = {
+  def lines(results: Seq[Timing], sfDir: String, outFile: String,
+            warmupErrors: Seq[(String, String)] = Nil): (String, String) = {
     def fmt(v: Double): String = f"$v%.3f"
     def timings(v: Timing => Double): String =
       results.map(r => s"\"" + r.name + "\":" + fmt(v(r))).mkString("{", ",", "}")
@@ -118,7 +133,8 @@ object Bench {
     val total = results.map(_.total).filter(_ >= 0d).sum
     val nFailed = results.count(_.total < 0d)
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
-    val errors = results.flatMap(r => r.error.map(e => s"\"${r.name}\":${json.writeValueAsString(e)}"))
+    val errors = (warmupErrors ++ results.flatMap(r => r.error.map(r.name -> _)))
+      .map { case (k, e) => s"${json.writeValueAsString(k)}:${json.writeValueAsString(e)}" }
       .mkString("{", ",", "}")
     (s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"queries":$qs,"sf":"$sfDir","file":"$outFile"}""",
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_failed":$nFailed,"queries":$qs,"plan":${timings(_.plan)},"action":${timings(_.action)},"errors":$errors,"sf":"$sfDir"}""")

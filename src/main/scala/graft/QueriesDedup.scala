@@ -176,18 +176,13 @@ private[graft] object QueriesDedup {
     // corpus beats the (1−J)^bands formula assumed per paper.
     Q("dedup_lsh_recall",
       (s, dir) => {
-        // the shingle table feeds BOTH pair pipelines (exhaustive truth
-        // and LSH) — cache it here so the explode+distinct runs once,
-        // not once per pipeline (their internal caches each re-derived
-        // it; measured ~0.9 s saved at sf0.1)
         // truth side: exhaustive rare-shingle pairs over the SLICE's own
         // shingle table — its df≤50 cap counts over the slice, so it is
-        // NOT derivable from any full-corpus relation and is computed
-        // here (the audit is the query).
-        val sd = TextOps.shingleTable(
-          Tables.documents(s, dir).filter(col("doc_id") < 1500),
-          "doc_id", "text", 3).cache()
-        sd.count()
+        // NOT derivable from any full-corpus pair relation and is
+        // computed here (the audit is the query). The slice's shingle
+        // table itself is exactly the session table's restriction, since
+        // shingling is per document.
+        val sd = sessionShingles(s, dir).filter(col("doc_id") < 1500)
         val truth = Dedup.ngramJaccardPairs(sd, "doc_id", 0.5,
           maxShingleDocFreq = 50L).select(col("a"), col("b")).cache()
         truth.count() // eager: feeds n_true AND the overlap join

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * Jaccard, MinHash+LSH, SimHash. Designed scale-first:
   *
   *  - exact dedup is one hash-aggregate on a fingerprint;
-  *  - the Jaccard path only ever joins on a shingle/bucket equi key, so
-  *    Catalyst plans shuffled hash joins — no quadratic cross products;
+  *  - the Jaccard path only ever joins on a shingle/bucket/id equi key,
+  *    so Catalyst plans hash joins — no quadratic cross products;
   *  - MinHash+LSH bounds candidate generation: collisions require two
   *    docs to agree on a band's minimum hash, which happens with
   *    probability ≈ Jaccard per band — random pairs virtually never
@@ -25,14 +25,46 @@ object Dedup {
       .agg(count(lit(1)).as("n_dups"), min(col(idCol)).as("canonical"))
       .filter(col("n_dups") > 1)
 
-  /** Per-doc distinct-shingle counts, the denominator input of Jaccard. */
-  private def shingleCounts(sd: DataFrame, idCol: String): DataFrame =
-    sd.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
+  /** Per-document shingle lists `(id, __sh)`. `sd` is distinct per
+    * (id, shingle), so a list holds each shingle once and its size is the
+    * document's shingle count.
+    */
+  private def shingleSets(sd: DataFrame, idCol: String): DataFrame =
+    sd.filter(col(idCol).isNotNull)
+      .groupBy(col(idCol)).agg(collect_list(col("shingle")).as("__sh"))
 
-  /** Jaccard for candidate pairs: join the pair list back to the shingle
-    * table on the equi (id, shingle) keys, count commons, divide exact
-    * integers. Input `cand`: (a, b) with a < b; `sd`: (id, shingle)
-    * distinct.
+  /** (a, b, common, na, nb) for candidate pairs against per-document
+    * shingle lists ([[shingleSets]]): each pair joins its two documents'
+    * lists once and counts commons as `size(array_intersect(…))`, in
+    * either orientation. Pairs sharing no shingle are dropped, as a join
+    * on the shared shingle would drop them, whatever the threshold.
+    */
+  private def setCommons(cand: DataFrame, sets: DataFrame,
+                         idCol: String): DataFrame =
+    cand
+      .join(sets.select(col(idCol).as("a"), col("__sh").as("__sa")), "a")
+      .join(sets.select(col(idCol).as("b"), col("__sh").as("__sb")), "b")
+      .select(col("a"), col("b"), evalOnce(
+        size(array_intersect(col("__sa"), col("__sb"))).cast("long").as("common"),
+        size(col("__sa")).cast("long").as("na"),
+        size(col("__sb")).cast("long").as("nb")))
+      .filter(col("common") > 0L)
+
+  /** The named columns `cols`, computed once per row behind a one-row
+    * `inline`. A gate on a plain projected column is pushed into the
+    * join condition below it, with the column's expression substituted
+    * at every reference: the Jaccard gate would intersect each pair's
+    * lists three times, and the projection once more. A filter is never
+    * pushed below the generator that produces its columns.
+    */
+  private def evalOnce(cols: Column*): Column = inline(array(struct(cols: _*)))
+
+  /** Jaccard for candidate pairs: one `groupBy(id)` builds each
+    * document's shingle list, the pair list joins it once on `a` and once
+    * on `b`, and `common` is the size of the two lists' intersection —
+    * so the verify moves one row per pair, never one row per shared
+    * shingle. Input `cand`: (a, b) in either orientation; `sd`:
+    * (id, shingle) distinct. Output: (a, b, common, jaccard).
     */
   def jaccardVerify(cand: DataFrame, sd0: DataFrame, idCol: String,
                     minJaccard: Double,
@@ -40,38 +72,22 @@ object Dedup {
     // §3.2 semi-join pre-filter, OPT-IN: when the candidate pair set
     // touches few distinct docs (prefix-filter candidates, an
     // incremental batch probing a big corpus), dropping non-candidate
-    // docs from the shingle table BEFORE the verify exchanges cuts the
+    // docs from the shingle table before the list aggregate cuts the
     // shuffled bytes to the candidate slice; when candidates cover most
     // docs (SNM's every-doc windows), the extra pass is pure overhead —
-    // callers choose. Per-pair commons/counts only ever read the two
-    // endpoint docs' rows, so the restriction is exact.
-    // in the pruned form the candidate set is read twice (id
-    // enumeration + the commons join) and the pruned shingle table
-    // three times (both commons sides + the counts) — eager-cache both
-    // so the caller's candidate pipeline and the semi filter run once
+    // callers choose. A pair only reads its two endpoints' lists, so the
+    // restriction is exact. The pruned form reads the candidate set
+    // twice (id enumeration + the list joins): eager-cache it so the
+    // caller's candidate pipeline runs once.
     val (cnd, sd) = if (!pruneToCandidates) (cand, sd0) else {
       val c = cand.cache()
       c.count()
       val ids = c.select(col("a").as(idCol))
         .unionByName(c.select(col("b").as(idCol))).distinct()
-      val sdc = sd0.join(ids, Seq(idCol), "left_semi").cache()
-      sdc.count()
-      (c, sdc)
+      (c, sd0.join(ids, Seq(idCol), "left_semi"))
     }
-    val n = shingleCounts(sd, idCol)
-    val commons = cnd
-      .join(sd.select(col(idCol).as("a"), col("shingle")), "a")
-      .join(sd.select(col(idCol).as("b"), col("shingle").as("shingle_b")),
-        Seq("b"))
-      .filter(col("shingle") === col("shingle_b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
-    commons
-      .join(n.select(col(idCol).as("a"), col("n_sh").as("na")), "a")
-      .join(n.select(col(idCol).as("b"), col("n_sh").as("nb")), "b")
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("na") + col("nb") - col("common")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("a"), col("b"), col("common"), col("jaccard"))
+    ngramJaccardPairsFrom(setCommons(cnd, shingleSets(sd, idCol), idCol),
+      minJaccard)
   }
 
   /** SORTED-NEIGHBORHOOD dedup (Hernández & Stolfo 1995, the
@@ -175,43 +191,28 @@ object Dedup {
     * structurally misses (a 100-shingle doc inside a 10000-shingle doc
     * has J ≈ 0.01 but containment 1.0). The gate
     * `common·1000 ≥ permille·min(na, nb)` stays in integers; the
-    * reported score is the one division, last. Same join discipline as
-    * [[jaccardVerify]]: pairs join the shingle table on (id, shingle)
-    * equi keys, commons counted over ALL shingles.
+    * reported score is the one division, last. Same verify as
+    * [[jaccardVerify]]: pairs join per-document shingle lists, commons
+    * counted over ALL shingles.
     *
     * Output: (a, b, common, na, nb, containment).
     */
   def containmentVerify(cand: DataFrame, sd: DataFrame, idCol: String,
-                        minContainPermille: Int): DataFrame = {
-    val n = shingleCounts(sd, idCol)
-    val commons = cand
-      .join(sd.select(col(idCol).as("a"), col("shingle")), "a")
-      .join(sd.select(col(idCol).as("b"), col("shingle").as("shingle_b")),
-        Seq("b"))
-      .filter(col("shingle") === col("shingle_b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
-    commons
-      .join(n.select(col(idCol).as("a"), col("n_sh").as("na")), "a")
-      .join(n.select(col(idCol).as("b"), col("n_sh").as("nb")), "b")
-      .filter(col("common") * lit(1000L)
-        >= least(col("na"), col("nb")) * lit(minContainPermille.toLong))
-      .withColumn("containment",
-        col("common").cast("double") / least(col("na"), col("nb")).cast("double"))
-      .select(col("a"), col("b"), col("common"), col("na"), col("nb"),
-        col("containment"))
-  }
+                        minContainPermille: Int): DataFrame =
+    containmentPairsFrom(setCommons(cand, shingleSets(sd, idCol), idCol),
+      minContainPermille)
 
   /** Exhaustive n-gram Jaccard dedup with a hot-shingle frequency cap.
     *
     * `maxShingleDocFreq` bounds the quadratic term: a shingle shared by k
     * documents produces k² self-join rows, so one stopword 3-gram at 10⁹
-    * docs would be a cartesian bomb. The self-join that enumerates
-    * pairs-and-their-common-counts therefore runs over *rare* shingles
-    * only (df ≤ cap); the few shared HOT shingles of each surviving pair
-    * are counted in a second, cheap join (pairs × per-doc hot
-    * memberships — hot shingles are by definition few distinct values,
-    * and each doc holds few of them), and added back, so reported Jaccard
-    * values are exact over ALL shingles. Recall is lost only for pairs
+    * docs would be a cartesian bomb. Pairs and their common counts are
+    * therefore enumerated over *rare* shingles only (df ≤ cap); the few
+    * shared HOT shingles of each surviving pair are added back from the
+    * two documents' hot-shingle lists (hot shingles are by definition few
+    * distinct values, and each doc holds few of them; see
+    * [[pairCommons]]), so reported Jaccard values are exact over ALL
+    * shingles. Recall is lost only for pairs
     * whose *every* shared shingle is hot — impossible at
     * `minJaccard ≥ 0.5` unless a doc is mostly stopword n-grams.
     */
@@ -234,11 +235,11 @@ object Dedup {
     * by `common·1000 ≥ permille·min(na, nb)` — the asymmetric near-dup
     * measure that catches a short doc quoted whole inside a long one
     * (see [[containmentVerify]] for the measure; this is its corpus-scale
-    * driver). Shares [[pairCommonsRareHot]] with the Jaccard path, so
-    * candidate pairs never fan out across the full shingle table — the
-    * naive verify (pair list × both docs' complete shingle sets) costs
-    * O(Σ pairs·|shingles|) and dominated the bench at 4× the Jaccard
-    * query's cost on the same corpus.
+    * form). Shares [[pairCommons]] with the Jaccard path, so only
+    * each pair's few hot shingles are intersected — verifying every
+    * candidate by intersecting both docs' complete shingle lists
+    * ([[containmentVerify]]) costs O(Σ pairs·(na + nb)), where the rare
+    * commons fall out of the per-shingle pair explosion for free.
     *
     * Output: (a, b, common, na, nb, containment), a < b.
     */
@@ -266,7 +267,7 @@ object Dedup {
     * the pipeline once per candidate threshold is pure waste. Every
     * gate is integer cross-multiplied (`common·den ≥ num·(na+nb−common)`
     * ⟺ J ≥ num/den — no double thresholds), all counts fall out of one
-    * aggregate over [[pairCommonsRareHot]], and the wide one-row result
+    * aggregate over [[pairCommons]], and the wide one-row result
     * unpivots with `stack`.
     *
     * Candidate recall carries the rare-shingle caveat of the Jaccard
@@ -318,7 +319,7 @@ object Dedup {
   def prefixFilterPairs(sd0: DataFrame, idCol: String,
                         tNum: Int, tDen: Int): DataFrame = {
     require(tNum >= 1 && tNum <= tDen, s"need a threshold in (0,1], got $tNum/$tDen")
-    // eager cache: feeds df, prefix, and both verify sides of one action.
+    // eager cache: feeds df, prefix, and the verify's lists of one action.
     // Never unpersisted here (the returned plan still references it) —
     // like every dedup-path cache this relies on MEMORY_AND_DISK LRU
     // block eviction; long sessions can sd.unpersist() after the final
@@ -371,73 +372,52 @@ object Dedup {
         "y -> struct(x AS a, y AS b))))"))
 
   /** Shared core of [[ngramJaccardPairs]] / [[containmentPairs]] /
-    * [[thresholdCurve]]: (a, b, common, na, nb) for every pair sharing
-    * ≥1 rare (df ≤ maxShingleDocFreq) shingle, with `common` exact over
-    * ALL shingles — rare commons fall out of a per-shingle pair
-    * explosion (bounded by the df cap), hot commons (each doc holds few
-    * df-capped shingles) are added back by a cheap pairs ×
-    * hot-membership join, and the df split partitions the shingle set
-    * so their sum is exact.
+    * [[thresholdCurve]]: (a, b, common, na, nb), a < b, for every pair
+    * sharing ≥1 rare (df ≤ maxShingleDocFreq) shingle, with `common`
+    * exact over ALL shingles. The df split partitions the shingle set, so
+    * `common = common_rare + common_hot`:
+    *
+    *  - capped: one `groupBy(shingle)` yields each shingle's df and
+    *    sorted id list; rare lists (bounded by the cap) explode into
+    *    their pairs map-side ([[sortedPairs]]), counted per pair. The
+    *    same lists explode back into one per-document relation
+    *    `(n_sh, hot shingles)`, joined on `a` and `b`, and
+    *    `common_hot = size(array_intersect(ha, hb))` — a document holds
+    *    few hot shingles, so the intersection is over short lists, and
+    *    rare commons are never recounted by set intersection;
+    *  - uncapped: a hot shingle's id list is unbounded, so it must
+    *    stream through a self-join, never materialize as one array; there
+    *    is no hot shingle, and the per-document relation carries `n_sh`.
     */
-  def pairCommons(sd0: DataFrame, idCol: String,
-                  maxShingleDocFreq: Long): DataFrame =
-    pairCommonsRareHot(sd0, idCol, maxShingleDocFreq)
-      .select(col("a"), col("b"), col("common"), col("na"), col("nb"))
-
-  private def pairCommonsRareHot(sd0: DataFrame, idCol: String,
-                                 maxShingleDocFreq: Long): DataFrame = {
-    // Eager cache: the shingle table feeds several plan subtrees of ONE
-    // final action; a lazy cache would still be cold while they race, so
-    // each would recompute the tokenize+explode+distinct lineage.
-    val sd = sd0.cache()
-    sd.count()
+  def pairCommons(sd: DataFrame, idCol: String,
+                  maxShingleDocFreq: Long): DataFrame = {
     val capped = maxShingleDocFreq != Long.MaxValue
-    // eager like sd: fq feeds BOTH the rare and hot branches of one action
-    val fq = if (!capped) None else Some {
-      val f = sd.groupBy(col("shingle")).agg(count(lit(1)).as("__df")).cache()
-      f.count()
-      f
-    }
-    val rare = fq.fold(sd)(f =>
-      sd.join(f.filter(col("__df") <= maxShingleDocFreq).select(col("shingle")),
-        Seq("shingle")))
-    // capped: per-shingle id lists are ≤ maxShingleDocFreq by the df
-    // cap, so the wedge enumerates as a bounded array explosion — one
-    // shuffle of `rare` instead of the self-join's two, and the (a, b)
-    // partial aggregation runs map-side in the same stage. Uncapped
-    // callers keep the self-join: a hot shingle's membership list is
-    // unbounded there and must stream through the join, never
-    // materialize as one array.
-    val commonRare = (if (capped)
-      rare.groupBy(col("shingle"))
-        .agg(sort_array(collect_list(col(idCol))).as("__ids"))
-        .select(sortedPairs("__ids").as("p"))
-        .select(col("p.a").as("a"), col("p.b").as("b"))
-    else
-      rare.select(col(idCol).as("a"), col("shingle"))
-        .join(rare.select(col(idCol).as("b"), col("shingle")), Seq("shingle"))
+    def perDoc(rows: DataFrame, hot: Column): DataFrame =
+      rows.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"),
+        collect_list(when(hot, col("shingle"))).as("__hot"))
+    val (pairs, docs) = if (capped) {
+      val fq = sd.groupBy(col("shingle")).agg(count(lit(1)).as("__df"),
+        sort_array(collect_list(col(idCol))).as("__ids"))
+      (fq.filter(col("__df") <= maxShingleDocFreq)
+          .select(sortedPairs("__ids").as("p"))
+          .select(col("p.a").as("a"), col("p.b").as("b")),
+        perDoc(fq.select(col("shingle"), col("__df"),
+          explode(col("__ids")).as(idCol)), col("__df") > maxShingleDocFreq))
+    } else (
+      sd.select(col(idCol).as("a"), col("shingle"))
+        .join(sd.select(col(idCol).as("b"), col("shingle")), Seq("shingle"))
         .filter(col("a") < col("b"))
-        .select(col("a"), col("b")))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common_rare"))
-    val common =
-      if (!capped) commonRare.withColumn("common", col("common_rare"))
-      else {
-        val hot = sd.join(
-          fq.get.filter(col("__df") > maxShingleDocFreq).select(col("shingle")),
-          Seq("shingle"))
-        val commonHot = commonRare.select(col("a"), col("b"))
-          .join(hot.select(col(idCol).as("a"), col("shingle")), "a")
-          .join(hot.select(col(idCol).as("b"), col("shingle").as("__sh_b")), Seq("b"))
-          .filter(col("shingle") === col("__sh_b"))
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common_hot"))
-        commonRare.join(commonHot, Seq("a", "b"), "left")
-          .withColumn("common",
-            col("common_rare") + coalesce(col("common_hot"), lit(0L)))
-      }
-    val n = shingleCounts(sd, idCol)
-    common
-      .join(n.select(col(idCol).as("a"), col("n_sh").as("na")), "a")
-      .join(n.select(col(idCol).as("b"), col("n_sh").as("nb")), "b")
+        .select(col("a"), col("b")),
+      perDoc(sd, lit(false)))
+    pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("__rare"))
+      .join(docs.select(col(idCol).as("a"), col("n_sh").as("na"),
+        col("__hot").as("__ha")), "a")
+      .join(docs.select(col(idCol).as("b"), col("n_sh").as("nb"),
+        col("__hot").as("__hb")), "b")
+      .select(col("a"), col("b"), evalOnce(
+        (col("__rare") + size(array_intersect(col("__ha"), col("__hb"))))
+          .as("common"),
+        col("na"), col("nb")))
   }
 
   /** MinHash band signatures from ONE digest per shingle: band i orders
@@ -448,17 +428,24 @@ object Dedup {
     * aggregated 8× exploded rows by (id, band); this one digests once,
     * takes all `bands` minima in a single groupBy(id) pass (16-char
     * substrings of the doubled digest), and posexplodes the compact
-    * signature row AFTER the aggregate, so pre-shuffle volume is one row
-    * per doc. Candidate-set differences vs the salted scheme are
-    * immaterial: the exact-Jaccard verify restores precision and the
-    * oracle mirrors these exact signatures. Input: (id, shingle)
-    * distinct; output: (id, band, sig).
+    * signature row AFTER the aggregate. Candidate-set differences vs the
+    * salted scheme are immaterial: the exact-Jaccard verify restores
+    * precision and the oracle mirrors these exact signatures. Input:
+    * (id, shingle) distinct; output: (id, band, sig).
     */
-  def minhashSignatures(sd: DataFrame, idCol: String, bands: Int): DataFrame = {
+  def minhashSignatures(sd: DataFrame, idCol: String, bands: Int): DataFrame =
+    signatures(shingleSets(sd, idCol), idCol, bands)
+
+  /** [[minhashSignatures]] from per-document shingle lists: the lists
+    * are partitioned by id already, so the minima aggregate runs in the
+    * lists' own stage, without a second shuffle.
+    */
+  private def signatures(sets: DataFrame, idCol: String, bands: Int): DataFrame = {
     require(bands >= 1 && bands <= 8, s"rotation bands support 1..8, got $bands")
     // codegen subexpression elimination evaluates the repeated md5 once
-    val m = sd.select(col(idCol),
-      concat(md5(col("shingle")), md5(col("shingle"))).as("__mm"))
+    val m = sets.select(col(idCol), explode(col("__sh")).as("shingle"))
+      .select(col(idCol),
+        concat(md5(col("shingle")), md5(col("shingle"))).as("__mm"))
     // The aggregate takes the min over 15-char HEX SLICES (substring
     // only — the cheapest possible per-shingle-row map work; measured:
     // parsing to long before the min costs more per row than the
@@ -476,26 +463,24 @@ object Dedup {
           .as(Seq("band", "sig")))
   }
 
-  /** MinHash+LSH near-dup pairs: bucket-join on (band, sig), then verify
+  /** MinHash+LSH near-dup pairs: bucket on (band, sig), then verify
     * candidates with exact Jaccard. The LSH stage is the 100 TB path: a
-    * shuffle on the bucket key replaces the all-pairs comparison.
+    * shuffle on the bucket key replaces the all-pairs comparison. The
+    * signatures and the verify read the same per-document shingle lists
+    * (one `groupBy(id)`), so an unstaged shingle table (tokenize +
+    * explode + distinct) is derived once, without a cache; each bucket's
+    * sorted id list enumerates its pairs ([[sortedPairs]]), so the
+    * signatures are consumed once, not by both sides of a self-join.
     */
-  def minhashLshPairs(sd0: DataFrame, idCol: String, bands: Int,
+  def minhashLshPairs(sd: DataFrame, idCol: String, bands: Int,
                       minJaccard: Double): DataFrame = {
-    // The shingle table feeds five plan branches (signatures, both verify
-    // sides, counts); cache it once instead of re-deriving the explode +
-    // distinct each time — eagerly, so racing subtrees of the single
-    // final action all hit the cache.
-    val sd = sd0.cache()
-    sd.count()
-    val mh = minhashSignatures(sd, idCol, bands).cache()
-    mh.count() // eager: both sides of the band self-join race one action
-    val cand = mh.select(col(idCol).as("a"), col("band"), col("sig"))
-      .join(mh.select(col(idCol).as("b"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    jaccardVerify(cand, sd, idCol, minJaccard)
+    val sets = shingleSets(sd, idCol)
+    val cand = signatures(sets, idCol, bands)
+      .groupBy(col("band"), col("sig"))
+      .agg(sort_array(collect_list(col(idCol))).as("__ids"))
+      .select(sortedPairs("__ids").as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
+    ngramJaccardPairsFrom(setCommons(cand, sets, idCol), minJaccard)
   }
 
   /** L199 — MINHASH S-CURVE CALIBRATION TABLE: the analytic LSH

@@ -102,7 +102,7 @@ object Onnx {
   object OnnxRuntimeJvm {
     def available: Boolean =
       try { Class.forName("ai.onnxruntime.OrtEnvironment"); true }
-      catch { case _: Throwable => false }
+      catch { case _: ClassNotFoundException | _: LinkageError => false }
 
     /** Create a real OrtSession from model bytes (reflection only). */
     def load(modelBytes: Array[Byte]): OnnxSession = {

@@ -32,4 +32,26 @@ class BenchSpec extends SparkSpec {
       assert(line.get("n_failed").asInt == 1 && !line.has("errors") && line.get("file").asText == "out.json")
     }
   }
+
+  test("a warm-up failure lands in errors as warmup:<query> and leaves the timed pass alone") {
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val flaky: (SparkSession, String) => DataFrame = (s, _) =>
+      if (calls.getAndIncrement() == 0) throw new IllegalStateException("cold start")
+      else s.range(5).toDF()
+    val queries = Seq("ok" -> ok, "flaky" -> flaky)
+    val warm = Bench.warmUp(spark, "unused", queries)
+    assert(warm == Seq("warmup:flaky" -> "java.lang.IllegalStateException: cold start"))
+    val results = Bench.timePass(spark, "unused", queries)
+    val (stdout, file) = Bench.lines(results, "sf", "out.json", warm)
+    val j = new ObjectMapper().readTree(file)
+    assert(j.get("n_failed").asInt == 0, file)
+    assert(j.get("queries").get("flaky").asDouble >= 0d, file)
+    val total = j.get("queries").get("ok").asDouble + j.get("queries").get("flaky").asDouble
+    assert(math.abs(j.get("value").asDouble - total) <= 0.0015, file)
+    val errors = j.get("errors")
+    assert(errors.size == 1, file)
+    assert(errors.get("warmup:flaky").asText == "java.lang.IllegalStateException: cold start", file)
+    val line = new ObjectMapper().readTree(stdout)
+    assert(line.get("n_failed").asInt == 0 && !line.has("errors"))
+  }
 }

@@ -1186,6 +1186,25 @@ class OpsSpec extends SparkSpec {
       (5L, 3L, 97L, 1L, true)))
   }
 
+  test("dedup_lsh_recall builds and runs in at most 32 Spark jobs at sf0.01") {
+    // a fresh dir holding only the documents table, so the query pays
+    // its staged shingle and pair relations inside the count
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_jobs")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get("/root/testdata/sf0.01/documents.parquet"),
+      dir.resolve("documents.parquet"))
+    var rows: Array[org.apache.spark.sql.Row] = Array.empty
+    val jobs = try jobsStarted("dedup_lsh_recall_jobs") {
+      rows = SparkEntry.queries("dedup_lsh_recall")(spark, dir.toString).collect()
+    } finally {
+      spark.catalog.clearCache()
+      java.nio.file.Files.delete(dir.resolve("documents.parquet"))
+      java.nio.file.Files.delete(dir)
+    }
+    assert(rows.length == 1)
+    assert(jobs <= 32, s"dedup_lsh_recall started $jobs Spark jobs")
+  }
+
   test("containmentVerify catches subset dups that Jaccard misses") {
     // doc 2's text is entirely inside doc 1's much longer text:
     // containment = 1.0 but Jaccard = small/large is tiny.

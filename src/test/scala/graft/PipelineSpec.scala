@@ -733,23 +733,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("collecting runAll starts exactly one Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = "runall_one_job"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
     val out = SpeechPipeline.runAll(spark, speechFiles.toDS(), speechPrints)
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "runAll job count")
-    try out.collect()
-    finally {
-      spark.sparkContext.clearJobGroup()
-      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get() == 1)
+    assert(jobsStarted("runall_one_job")(out.collect()) == 1)
   }
 }
