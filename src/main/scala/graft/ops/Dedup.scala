@@ -50,6 +50,16 @@ object Dedup {
         size(col("__sb")).cast("long").as("nb")))
       .filter(col("common") > 0L)
 
+  /** `gate` over [[setCommons]], its survivors behind a hash exchange on
+    * (a, b). A sort downstream samples its input stage by running it once
+    * more before it shuffles; the exchange ends the stage that
+    * intersects every candidate's lists, so that extra run reads only
+    * the gate's survivors.
+    */
+  private def setVerify(cand: DataFrame, sets: DataFrame, idCol: String)(
+      gate: DataFrame => DataFrame): DataFrame =
+    gate(setCommons(cand, sets, idCol)).repartition(col("a"), col("b"))
+
   /** The named columns `cols`, computed once per row behind a one-row
     * `inline`. A gate on a plain projected column is pushed into the
     * join condition below it, with the column's expression substituted
@@ -77,17 +87,21 @@ object Dedup {
     // docs (SNM's every-doc windows), the extra pass is pure overhead —
     // callers choose. A pair only reads its two endpoints' lists, so the
     // restriction is exact. The pruned form reads the candidate set
-    // twice (id enumeration + the list joins): eager-cache it so the
-    // caller's candidate pipeline runs once.
-    val (cnd, sd) = if (!pruneToCandidates) (cand, sd0) else {
+    // twice (id enumeration + the list joins) and the pruned lists
+    // twice (the `a` and `b` joins): eager-cache both, so the caller's
+    // candidate pipeline and the pruned list aggregate each run once
+    // (Spark does not reuse an exchange whose input is a cached
+    // relation, so a lazy plan aggregates the lists once per side).
+    val (cnd, sets) = if (!pruneToCandidates) (cand, shingleSets(sd0, idCol)) else {
       val c = cand.cache()
       c.count()
       val ids = c.select(col("a").as(idCol))
         .unionByName(c.select(col("b").as(idCol))).distinct()
-      (c, sd0.join(ids, Seq(idCol), "left_semi"))
+      val l = shingleSets(sd0.join(ids, Seq(idCol), "left_semi"), idCol).cache()
+      l.count()
+      (c, l)
     }
-    ngramJaccardPairsFrom(setCommons(cnd, shingleSets(sd, idCol), idCol),
-      minJaccard)
+    setVerify(cnd, sets, idCol)(ngramJaccardPairsFrom(_, minJaccard))
   }
 
   /** SORTED-NEIGHBORHOOD dedup (Hernández & Stolfo 1995, the
@@ -199,8 +213,8 @@ object Dedup {
     */
   def containmentVerify(cand: DataFrame, sd: DataFrame, idCol: String,
                         minContainPermille: Int): DataFrame =
-    containmentPairsFrom(setCommons(cand, shingleSets(sd, idCol), idCol),
-      minContainPermille)
+    setVerify(cand, shingleSets(sd, idCol), idCol)(
+      containmentPairsFrom(_, minContainPermille))
 
   /** Exhaustive n-gram Jaccard dedup with a hot-shingle frequency cap.
     *
@@ -377,47 +391,54 @@ object Dedup {
     * exact over ALL shingles. The df split partitions the shingle set, so
     * `common = common_rare + common_hot`:
     *
-    *  - capped: one `groupBy(shingle)` yields each shingle's df and
-    *    sorted id list; rare lists (bounded by the cap) explode into
-    *    their pairs map-side ([[sortedPairs]]), counted per pair. The
-    *    same lists explode back into one per-document relation
-    *    `(n_sh, hot shingles)`, joined on `a` and `b`, and
+    *  - capped: a window count over one shuffle of `sd` by shingle tags
+    *    each (id, shingle) row with its df. Only rare shingles collect
+    *    their sorted id list (bounded by the cap), which explodes into
+    *    its pairs map-side ([[sortedPairs]]), counted per pair; a hot
+    *    shingle's rows stream through the window buffer, never one
+    *    array. The same tagged rows group into one per-document relation
+    *    `(n, hot shingles)`, joined on `a` and `b`, and
     *    `common_hot = size(array_intersect(ha, hb))` — a document holds
     *    few hot shingles, so the intersection is over short lists, and
     *    rare commons are never recounted by set intersection;
-    *  - uncapped: a hot shingle's id list is unbounded, so it must
-    *    stream through a self-join, never materialize as one array; there
-    *    is no hot shingle, and the per-document relation carries `n_sh`.
+    *  - uncapped: every shingle counts as rare, and its id list is
+    *    unbounded, so the pairs stream through a self-join; `na`/`nb`
+    *    come from one per-document count.
     */
   def pairCommons(sd: DataFrame, idCol: String,
                   maxShingleDocFreq: Long): DataFrame = {
-    val capped = maxShingleDocFreq != Long.MaxValue
-    def perDoc(rows: DataFrame, hot: Column): DataFrame =
-      rows.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"),
+    // joins the per-document columns `cols` onto both pair ends, named
+    // with the end's suffix: n → na, nb
+    def onEnds(pairs: DataFrame, docs: DataFrame, cols: String*): DataFrame =
+      Seq("a", "b").foldLeft(pairs)((p, e) => p.join(docs.select(
+        col(idCol).as(e) +: cols.map(c => col(c).as(c + e)): _*), e))
+    if (maxShingleDocFreq == Long.MaxValue) {
+      val n = sd.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
+      onEnds(
+        sd.select(col(idCol).as("a"), col("shingle"))
+          .join(sd.select(col(idCol).as("b"), col("shingle")), Seq("shingle"))
+          .filter(col("a") < col("b"))
+          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common")),
+        n, "n")
+        .select(col("a"), col("b"), col("common"), col("na"), col("nb"))
+    } else {
+      val tagged = sd.withColumn("__df",
+        count(lit(1)).over(Window.partitionBy(col("shingle"))))
+      val hot = col("__df") > maxShingleDocFreq
+      val docs = tagged.groupBy(col(idCol)).agg(count(lit(1)).as("n"),
         collect_list(when(hot, col("shingle"))).as("__hot"))
-    val (pairs, docs) = if (capped) {
-      val fq = sd.groupBy(col("shingle")).agg(count(lit(1)).as("__df"),
-        sort_array(collect_list(col(idCol))).as("__ids"))
-      (fq.filter(col("__df") <= maxShingleDocFreq)
+      onEnds(
+        tagged.filter(!hot).groupBy(col("shingle"))
+          .agg(sort_array(collect_list(col(idCol))).as("__ids"))
           .select(sortedPairs("__ids").as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b")),
-        perDoc(fq.select(col("shingle"), col("__df"),
-          explode(col("__ids")).as(idCol)), col("__df") > maxShingleDocFreq))
-    } else (
-      sd.select(col(idCol).as("a"), col("shingle"))
-        .join(sd.select(col(idCol).as("b"), col("shingle")), Seq("shingle"))
-        .filter(col("a") < col("b"))
-        .select(col("a"), col("b")),
-      perDoc(sd, lit(false)))
-    pairs.groupBy(col("a"), col("b")).agg(count(lit(1)).as("__rare"))
-      .join(docs.select(col(idCol).as("a"), col("n_sh").as("na"),
-        col("__hot").as("__ha")), "a")
-      .join(docs.select(col(idCol).as("b"), col("n_sh").as("nb"),
-        col("__hot").as("__hb")), "b")
-      .select(col("a"), col("b"), evalOnce(
-        (col("__rare") + size(array_intersect(col("__ha"), col("__hb"))))
-          .as("common"),
-        col("na"), col("nb")))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(count(lit(1)).as("__rare")),
+        docs, "n", "__hot")
+        .select(col("a"), col("b"), evalOnce(
+          (col("__rare") + size(array_intersect(col("__hota"), col("__hotb"))))
+            .as("common"),
+          col("na"), col("nb")))
+    }
   }
 
   /** MinHash band signatures from ONE digest per shingle: band i orders
@@ -463,24 +484,27 @@ object Dedup {
           .as(Seq("band", "sig")))
   }
 
-  /** MinHash+LSH near-dup pairs: bucket on (band, sig), then verify
+  /** MinHash+LSH near-dup pairs: bucket-join on (band, sig), then verify
     * candidates with exact Jaccard. The LSH stage is the 100 TB path: a
-    * shuffle on the bucket key replaces the all-pairs comparison. The
-    * signatures and the verify read the same per-document shingle lists
-    * (one `groupBy(id)`), so an unstaged shingle table (tokenize +
-    * explode + distinct) is derived once, without a cache; each bucket's
-    * sorted id list enumerates its pairs ([[sortedPairs]]), so the
-    * signatures are consumed once, not by both sides of a self-join.
+    * shuffle on the bucket key replaces the all-pairs comparison. A
+    * bucket's size is data-dependent (k exact duplicates share every
+    * band), so its pairs stream through the self-join, never one array.
+    * Both join sides' signatures and the verify read the same
+    * per-document shingle lists (one `groupBy(id)`), whose exchange
+    * Spark reuses: an unstaged shingle table (tokenize + explode +
+    * distinct) is derived once, without a cache. Each join side hashes
+    * the lists into signatures itself.
     */
   def minhashLshPairs(sd: DataFrame, idCol: String, bands: Int,
                       minJaccard: Double): DataFrame = {
     val sets = shingleSets(sd, idCol)
-    val cand = signatures(sets, idCol, bands)
-      .groupBy(col("band"), col("sig"))
-      .agg(sort_array(collect_list(col(idCol))).as("__ids"))
-      .select(sortedPairs("__ids").as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b")).distinct()
-    ngramJaccardPairsFrom(setCommons(cand, sets, idCol), minJaccard)
+    val mh = signatures(sets, idCol, bands)
+    val cand = mh.select(col(idCol).as("a"), col("band"), col("sig"))
+      .join(mh.select(col(idCol).as("b"), col("band"), col("sig")),
+        Seq("band", "sig"))
+      .filter(col("a") < col("b"))
+      .select(col("a"), col("b")).distinct()
+    setVerify(cand, sets, idCol)(ngramJaccardPairsFrom(_, minJaccard))
   }
 
   /** L199 — MINHASH S-CURVE CALIBRATION TABLE: the analytic LSH

@@ -206,6 +206,21 @@ class OpsSpec extends SparkSpec {
     assert(inc.nonEmpty, "test corpus must actually produce near-dups")
   }
 
+  test("minhashLshPairs returns every pair of one large exact-duplicate bucket") {
+    // 400 copies of one text share every (band, sig) bucket: 79,800
+    // pairs from one bucket key, all verified at Jaccard 1; the
+    // unrelated document pairs with none of them
+    val k = 400L
+    val docs = ((0L until k).map(i => (i, "one text copied into every document of the bucket")) :+
+      ((k, "an unrelated line about rivers mountains and slow trains"))).toDF("doc_id", "text")
+    val got = graft.ops.Dedup.minhashLshPairs(
+        graft.ops.TextOps.shingleTable(docs, "doc_id", "text", 3), "doc_id", 8, 0.5)
+      .agg(count(lit(1)), min($"jaccard"), max($"b")).head()
+    assert(got.getLong(0) == k * (k - 1) / 2)
+    assert(got.getDouble(1) == 1.0)
+    assert(got.getLong(2) == k - 1)
+  }
+
   test("connectedComponents == union-find on random graphs, paths, cliques") {
     def bruteCC(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
       val parent = Array.tabulate(n)(identity)
