@@ -11,7 +11,7 @@ package graft.pipeline
   *
   * Also recognizes git-lfs POINTER files (`version https://git-lfs...`
   * + `oid sha256:...` + `size N`): a checkout without `git lfs pull`
-  * ships 133-byte pointers where the weights should be, and feeding
+  * ships 132/133-byte pointers where the weights should be, and feeding
   * one to an ONNX runtime yields a parse error long after job launch.
   * The reference snapshot itself ships exactly such pointers for
   * `sig_bak_ovr.onnx` / `UVR-MDX-NET-Inst_HQ_3.onnx` (dnsmos.py:149,
