@@ -419,14 +419,8 @@ private[graft] object QueriesSpeech {
         def run(ds: org.apache.spark.sql.Dataset[(Long, String)], tag: String,
                 cfg: HttpServiceConfig) =
           HttpInference.mapService[(Long, String), (Long, Long, String)](ds, cfg,
-            encode = xs => xs.map { case (id, t) =>
-              s"$tag\t$id\t${HttpInference.b64t(t)}"
-            }.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            decode = bytes => new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-              .split("\n", -1).toSeq.filter(_.nonEmpty).map { l =>
-                val f = l.split("\t", -1)
-                (f(0).toLong, f(1).toLong, "completed")
-              },
+            encode = { case (id, t) => s"$tag\t$id\t${HttpInference.b64t(t)}" },
+            decode = f => (f(0).toLong, f(1).toLong, "completed"),
             onFailure = (x, _) => (x._1, -1L, "failed"))
         val clean = run(docs.filter(_._1 % 97 != 0), "OK",
           HttpServiceConfig(ep, batchSize = 64, maxInFlight = 4,

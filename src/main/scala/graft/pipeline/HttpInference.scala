@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets
 import java.time.Duration
 
 import org.apache.spark.sql.{Dataset, Encoder}
@@ -53,8 +54,13 @@ final class HttpInferenceException(msg: String, cause: Throwable)
   *    flaky service, mirroring the per-file try/except posture of the
   *    reference (`vad_multi.py:48-54`).
   *
-  * The wire protocol is caller-supplied (`encode`/`decode` over raw
-  * bytes), keeping the operator generic across services.
+  * The framing is fixed here, one line protocol for every service: a
+  * request body is one UTF-8 line per input row, joined by `\n`; a
+  * response body is one line per row in the same order, blank lines
+  * dropped, each split on TAB. Callers state only their fields, per row:
+  * `encode` renders one input as its line and `decode` builds one output
+  * from one response line's fields. A failed row's error text is
+  * `Class: message` of the terminal cause.
   */
 object HttpInference {
 
@@ -122,16 +128,18 @@ object HttpInference {
     * never blocks the submission of its successors beyond the window.
     */
   def mapService[I, O: Encoder](ds: Dataset[I], cfg: HttpServiceConfig,
-      encode: Seq[I] => Array[Byte],
-      decode: Array[Byte] => Seq[O],
-      onFailure: (I, Throwable) => O): Dataset[O] =
+      encode: I => String,
+      decode: Array[String] => O,
+      onFailure: (I, String) => O): Dataset[O] =
     ds.mapPartitions { it =>
       val cl = client(cfg)
+      def body(batch: Seq[I]): Array[Byte] =
+        batch.map(encode).mkString("\n").getBytes(StandardCharsets.UTF_8)
       val inflight = new java.util.ArrayDeque[
         (Seq[I], java.util.concurrent.CompletableFuture[HttpResponse[Array[Byte]]])]()
 
       def submit(batch: Seq[I]): Unit =
-        inflight.addLast((batch, cl.sendAsync(request(cfg, encode(batch)),
+        inflight.addLast((batch, cl.sendAsync(request(cfg, body(batch)),
           HttpResponse.BodyHandlers.ofByteArray())))
 
       def settle(batch: Seq[I],
@@ -171,17 +179,19 @@ object HttpInference {
                     s"non-retriable async failure from ${cfg.endpoint}: $c", c)
                 }
             }
-          val body = bytes match {
+          val answer = bytes match {
             case Right(b) => b
-            case Left(_) => postWithRetry(cfg, encode(batch), attemptsUsed = 1)
+            case Left(_) => postWithRetry(cfg, body(batch), attemptsUsed = 1)
           }
-          val outs = decode(body)
-          if (outs.length != batch.length)
+          val lines = new String(answer, StandardCharsets.UTF_8).split("\n", -1).filter(_.nonEmpty)
+          if (lines.length != batch.length)
             throw new HttpInferenceException(
-              s"service returned ${outs.length} rows for a ${batch.length}-row batch", null)
-          outs
+              s"service returned ${lines.length} rows for a ${batch.length}-row batch", null)
+          lines.toSeq.map(l => decode(l.split("\t", -1)))
         } catch {
-          case e: Exception => batch.map(onFailure(_, e))
+          case e: Exception =>
+            val err = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}"
+            batch.map(onFailure(_, err))
         }
       }
 

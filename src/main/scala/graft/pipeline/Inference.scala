@@ -48,17 +48,6 @@ object InferenceOp {
       it.grouped(batchSize).flatMap(b => model.predictBatch(b))
     }
 
-  /** 1→many batched inference (M1/M3 generator shape): one input chunk
-    * yields many relational rows.
-    */
-  def flatMapBatched[I, O: Encoder](ds: Dataset[I], modelName: String,
-                                    load: () => BatchModel[I, Seq[O]],
-                                    batchSize: Int = 32): Dataset[O] =
-    ds.mapPartitions { it =>
-      val model = ModelCache.getOrCreate(modelName)(load())
-      it.grouped(batchSize).flatMap(b => model.predictBatch(b).flatten)
-    }
-
   /** S10 — per-record fault isolation: wrap inference in Try, emit a
     * status instead of failing the task (the reference's per-file
     * try/except, `vad_multi.py:48-54`); Spark adds task retry on top.

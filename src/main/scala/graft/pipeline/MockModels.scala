@@ -36,19 +36,6 @@ object MockModels {
     }
   }
 
-  /** M2 — source separation (`separate_fast.py:109-293`): vocal = 0.8x,
-    * nonvocal = residual (F9 subtraction contract preserved).
-    */
-  final class MockSeparator extends BatchModel[AudioChunk, (AudioChunk, Array[Float], Array[Float])] {
-    val name = "mock_separator"
-    def predictBatch(xs: Seq[AudioChunk]): Seq[(AudioChunk, Array[Float], Array[Float])] =
-      xs.map { c =>
-        val vocal = c.samples.map(_ * 0.8f)
-        val nonvocal = c.samples.zip(vocal).map { case (m, v) => m - v }
-        (c, vocal, nonvocal)
-      }
-  }
-
   /** M2 — the per-STFT-frame mock separation kernel
     * (`separate_fast.py:228-234` runs the real model per frame batch).
     * Linear per sample, so it commutes with the W5 frame/margin algebra

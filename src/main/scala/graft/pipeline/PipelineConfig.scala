@@ -12,7 +12,6 @@ package graft.pipeline
 final case class PipelineConfig(
     // stage 1 — VAD (vad_multi.py:33-37,66)
     vadPadSec: Double = 0.1,
-    vadThreads: Int = 4,
     // stage 2 — separation economy + windows (separation_filter.py:281-302)
     separationMergeGapSec: Double = 5.0,
     separationMergeCapSec: Double = 60.0,
@@ -32,14 +31,12 @@ final case class PipelineConfig(
     clusterSizeRatio: Double = 0.04,
     clusterSimThreshold: Double = 0.75,
     softRescueThreshold: Double = 0.2,
-    // stage 5 — host match (host_rematch.py:19,55,91,136)
-    hostBudgetSec: Double = 180.0,
-    hostAcceptScore: Double = 0.5)
+    // stage 5 — host match (host_rematch.py:19,55,91)
+    hostBudgetSec: Double = 180.0)
 
 object PipelineConfig {
   /** Production overrides, `scripts/data_pipeline.sh:48`. */
   val production: PipelineConfig = PipelineConfig(
-    vadThreads = 8,
     vRatioThreshold = 0.995,
     nvRatioThreshold = 0.0005,
     silenceEnergyThreshold = 1e-4,

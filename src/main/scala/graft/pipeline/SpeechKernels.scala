@@ -14,6 +14,7 @@ object SpeechKernels {
 
   type Vad = BatchModel[AudioFile, Seq[Segment]]
   type Embedder = BatchModel[(SpeakerSegment, Array[Float]), (SpeakerSegment, Array[Float])]
+  type Separator = BatchModel[StftFrame, StftFrame]
 
   /** The samples of `[s, e)` seconds, clamped to the waveform. */
   def slice(a: AudioFile, s: Double, e: Double): Array[Float] =
@@ -29,6 +30,94 @@ object SpeechKernels {
       .toIndexedSeq.sorted
     SegmentKernels.mergeCapped(padded, gap = 0d, cap = Double.MaxValue)
       .map(m => Segment(a.file, m.start, m.end))
+  }
+
+  /** W5 — overlapped chunking with margins (`separate_fast.py:148-186`):
+    * fixed-size core chunks of one waveform, each with up to `marginSamples`
+    * samples either side, so per-chunk memory stays bounded for
+    * hour-long audio (X6).
+    */
+  def marginChunks(a: AudioFile, chunkSamples: Int, marginSamples: Int): IndexedSeq[AudioChunk] = {
+    val n = a.waveform.length
+    (0 until math.max(1, (n + chunkSamples - 1) / chunkSamples)).map { ci =>
+      val coreStart = ci * chunkSamples
+      val coreLen = math.min(chunkSamples, n - coreStart)
+      val lo = math.max(0, coreStart - marginSamples)
+      val hi = math.min(n, coreStart + coreLen + marginSamples)
+      AudioChunk(a.file, a.sr, ci, coreStart, coreLen, a.waveform.slice(lo, hi))
+    }
+  }
+
+  /** W5 — STFT inference framing (`separate_fast.py:208-221`): the exact
+    * window arithmetic the reference feeds its spectral model. With
+    * `trim = nFft/2` and `gen = chunkSize − 2·trim`,
+    *
+    *   pad    = gen − n mod gen   (a FULL extra gen when n mod gen == 0 —
+    *                               the reference's modulo quirk, kept)
+    *   padded = [0]×trim ++ w ++ [0]×pad ++ [0]×trim
+    *   frames = padded[i, i+chunkSize) for i = 0, gen, …  while i < n+pad
+    *
+    * — exactly (n+pad)/gen frames of chunkSize samples each, adjacent
+    * frames overlapping by 2·trim. An iterator, so the state held is one
+    * frame, never the padded waveform × frame count.
+    */
+  def stftFrames(a: AudioFile, chunkSize: Int, nFft: Int): Iterator[StftFrame] = {
+    val trim = nFft / 2
+    val gen = chunkSize - 2 * trim
+    require(gen > 0, s"chunkSize $chunkSize must exceed nFft $nFft")
+    val n = a.waveform.length
+    val pad = gen - n % gen
+    Iterator.range(0, (n + pad) / gen).map { fi =>
+      val out = new Array[Float](chunkSize)
+      // padded index p maps to waveform index p − trim when in range
+      val pStart = fi * gen
+      var j = 0
+      while (j < chunkSize) {
+        val src = pStart + j - trim
+        if (src >= 0 && src < n) out(j) = a.waveform(src)
+        j += 1
+      }
+      StftFrame(a.file, a.sr, fi, n, pad, out)
+    }
+  }
+
+  /** W5 — STFT frame reassembly (`separate_fast.py:236-241`): per frame
+    * keep `[trim, chunkSize − trim)` (the generated core), place it at
+    * its frame's offset, drop the trailing `pad` — the exact inverse of
+    * [[stftFrames]] for one file's frames, in any order.
+    */
+  def stftReassemble(frames: Iterator[StftFrame], chunkSize: Int, nFft: Int): Array[Float] = {
+    val trim = nFft / 2
+    val gen = chunkSize - 2 * trim
+    val fs = frames.buffered
+    val out = new Array[Float](fs.head.nSample)
+    fs.foreach { f =>
+      val at = f.frameIdx * gen
+      val len = math.min(gen, f.nSample - at)
+      if (len > 0) System.arraycopy(f.samples, trim, out, at, len)
+    }
+    out
+  }
+
+  private val SeparatorBatch = 8
+
+  /** Stage 2c — separation of one file through the W5 window algebra,
+    * nested like the reference: margin chunks ([[marginChunks]]) →
+    * per-chunk STFT frames ([[stftFrames]]) → the per-frame model in
+    * batches of 8 frames → frame reassembly ([[stftReassemble]]) →
+    * margin strip, each core written at its offset. Returns the vocal
+    * stem; a model that is linear per sample commutes with all of it.
+    */
+  def separate(a: AudioFile, model: Separator, chunkSamples: Int, marginSamples: Int,
+               chunkSize: Int, nFft: Int): Array[Float] = {
+    val out = new Array[Float](a.waveform.length)
+    marginChunks(a, chunkSamples, marginSamples).foreach { c =>
+      val frames = stftFrames(AudioFile(c.file, c.sr, c.samples), chunkSize, nFft)
+      val vocal = stftReassemble(frames.grouped(SeparatorBatch).flatMap(model.predictBatch), chunkSize, nFft)
+      val lo = c.coreStart - math.max(0, c.coreStart - marginSamples)
+      System.arraycopy(vocal, lo, out, c.coreStart, c.coreLen)
+    }
+    out
   }
 
   /** Stage 3 — mock diarization of one file: label each VAD span by its
@@ -101,6 +190,11 @@ object SpeechKernels {
     * in both inputs to match. Rows come out ordered by host, matched
     * speakers by name.
     */
+  /** The verification score a speaker must exceed to match a host (P8,
+    * `host_rematch.py:136`).
+    */
+  private val HostAcceptScore = 0.5
+
   def hostMatch(file: String, chunks: Seq[SpeakerSegment], embs: Seq[(String, Double, Array[Float])],
                 hostPrints: Map[String, Array[Float]], budgetSec: Double): IndexedSeq[HostMatch] = {
     val totals = chunks.groupBy(_.speaker).map { case (spk, cs) =>
@@ -113,7 +207,7 @@ object SpeechKernels {
     val accepted = for {
       (spk, mean) <- means if totals.contains(spk)
       (host, print) <- hostPrints.toSeq
-      score = MockModels.cosine(mean, print) if score > 0.5
+      score = MockModels.cosine(mean, print) if score > HostAcceptScore
     } yield (host, MatchedSpeaker(spk, score))
     accepted.groupBy(_._1).toIndexedSeq.sortBy(_._1).map { case (host, ms) =>
       val matched = ms.map(_._2)

@@ -19,7 +19,7 @@ import graft.ops.SegmentAlgebra
   *
   * Stage map (reference → here):
   *  1. VAD (`vad_multi.py`)                 → [[vadStage]]
-  *  2. separation filter (`separation_filter.py`) → [[separationEconomyMerge]] + mock separate
+  *  2. separation filter (`separation_filter.py`) → [[separationEconomyMerge]] + [[separateStage]]
   *  3. diarization (`diarization.py`)       → [[diarizeStage]] (mock) + sweep line
   *  4. speaker rematch (`speaker_rematch.py`) → [[rematchStage]]
   *  5. host match (`host_rematch.py`)       → [[hostMatchStage]]
@@ -84,7 +84,7 @@ object SpeechPipeline {
     * `groupByKey(file).cogroup` and applies `f` per file. Rows of a file
     * with no audio are dropped, as an inner join would.
     */
-  private def perFile[T, U: Encoder](rows: Dataset[T], file: T => String,
+  private[pipeline] def perFile[T, U: Encoder](rows: Dataset[T], file: T => String,
       audio: Dataset[AudioFile])(f: (AudioFile, IndexedSeq[T]) => IndexedSeq[U]): Dataset[U] = {
     import audio.sparkSession.implicits._
     rows.groupByKey(file).cogroup(audio.groupByKey(_.file)) { (_, rs, as) =>
@@ -154,146 +154,50 @@ object SpeechPipeline {
         (col("chunk_e_us").cast("double") / 1e6d).as("chunk_end"))
   }
 
-  /** W5 — overlapped chunking with margins (`separate_fast.py:148-186`):
-    * split each waveform into fixed-size core chunks plus `margin`
-    * samples each side; bounded per-task memory for hour-long audio (X6).
-    */
-  def chunkWithMargins(audio: Dataset[AudioFile], chunkSamples: Int,
-                       marginSamples: Int): Dataset[AudioChunk] = {
-    import audio.sparkSession.implicits._
-    audio.flatMap { a =>
-      val n = a.waveform.length
-      val nChunks = math.max(1, (n + chunkSamples - 1) / chunkSamples)
-      (0 until nChunks).iterator.map { ci =>
-        val coreStart = ci * chunkSamples
-        val coreLen = math.min(chunkSamples, n - coreStart)
-        val lo = math.max(0, coreStart - marginSamples)
-        val hi = math.min(n, coreStart + coreLen + marginSamples)
-        AudioChunk(a.file, a.sr, ci, coreStart, coreLen,
-          a.waveform.slice(lo, hi))
-      }
-    }
-  }
-
-  /** W5 reassembly — strip margins, order by chunk index, flatten
-    * (`separate_fast.py:236-241` margin strip + order-preserving concat).
-    */
-  def reassemble(chunks: Dataset[AudioChunk], marginSamples: Int): Dataset[AudioFile] = {
-    import chunks.sparkSession.implicits._
-    chunks.map { c =>
-      val lo = c.coreStart - math.max(0, c.coreStart - marginSamples)
-      (c.file, c.sr, c.chunkIdx, c.samples.slice(lo, lo + c.coreLen))
-    }.groupByKey(t => (t._1, t._2))
-      .mapGroups { (key, it) =>
-        val parts = it.toArray.sortBy(_._3)
-        AudioFile(key._1, key._2, parts.flatMap(_._4))
-      }
-  }
-
-  /** W5 — STFT inference framing (`separate_fast.py:208-221`): the exact
-    * window arithmetic the reference feeds its spectral model. With
-    * `trim = nFft/2` and `gen = chunkSize − 2·trim`,
-    *
-    *   pad    = gen − n mod gen   (a FULL extra gen when n mod gen == 0 —
-    *                               the reference's modulo quirk, kept)
-    *   padded = [0]×trim ++ w ++ [0]×pad ++ [0]×trim
-    *   frames = padded[i, i+chunkSize) for i = 0, gen, …  while i < n+pad
-    *
-    * — exactly (n+pad)/gen frames of chunkSize samples each, adjacent
-    * frames overlapping by 2·trim. Emitted via flatMap so per-task state
-    * is one frame, never the padded waveform × frame count.
+  /** W5 — STFT inference framing of every file: [[SpeechKernels.stftFrames]]
+    * in a flatMap, so per-task state is one frame.
     */
   def stftFrames(audio: Dataset[AudioFile], chunkSize: Int, nFft: Int)
       : Dataset[StftFrame] = {
     import audio.sparkSession.implicits._
-    val trim = nFft / 2
-    val gen = chunkSize - 2 * trim
-    require(gen > 0, s"chunkSize $chunkSize must exceed nFft $nFft")
-    audio.flatMap { a =>
-      val n = a.waveform.length
-      val pad = gen - n % gen
-      val nFrames = (n + pad) / gen
-      (0 until nFrames).iterator.map { fi =>
-        val out = new Array[Float](chunkSize)
-        // padded index p maps to waveform index p − trim when in range
-        val pStart = fi * gen
-        var j = 0
-        while (j < chunkSize) {
-          val src = pStart + j - trim
-          if (src >= 0 && src < n) out(j) = a.waveform(src)
-          j += 1
-        }
-        StftFrame(a.file, a.sr, fi, n, pad, out)
-      }
-    }
+    audio.flatMap(a => SpeechKernels.stftFrames(a, chunkSize, nFft))
   }
 
-  /** W5 — STFT frame reassembly (`separate_fast.py:236-241`): per frame
-    * keep `[trim, chunkSize − trim)` (the generated core), concatenate in
-    * frame order, drop the trailing `pad` — the exact inverse of
-    * [[stftFrames]], so frame ⊕ reassemble is the identity for every
-    * length (property-tested in PipelineSpec).
+  /** W5 — STFT frame reassembly: each file's frames grouped and handed to
+    * [[SpeechKernels.stftReassemble]], the exact inverse of [[stftFrames]]
+    * (property-tested in PipelineSpec).
     */
   def stftReassemble(frames: Dataset[StftFrame], chunkSize: Int, nFft: Int)
       : Dataset[AudioFile] = {
     import frames.sparkSession.implicits._
-    val trim = nFft / 2
-    val gen = chunkSize - 2 * trim
-    frames.map(f => (f.file, f.sr, f.frameIdx, f.nSample,
-        f.samples.slice(trim, chunkSize - trim)))
-      .groupByKey(t => (t._1, t._2))
-      .mapGroups { (key, it) =>
-        val parts = it.toArray.sortBy(_._3)
-        val n = parts.head._4
-        val out = new Array[Float](n)
-        parts.foreach { case (_, _, fi, _, core) =>
-          val at = fi * gen
-          val len = math.min(gen, n - at)
-          if (len > 0) System.arraycopy(core, 0, out, at, len)
-        }
-        AudioFile(key._1, key._2, out)
-      }
+    frames.groupByKey(f => (f.file, f.sr)).mapGroups { (key, it) =>
+      AudioFile(key._1, key._2, SpeechKernels.stftReassemble(it, chunkSize, nFft))
+    }
   }
 
-  /** Stage 2c — separation through the REAL W5 window algebra, nested
-    * exactly like the reference: margin chunking ([[chunkWithMargins]],
-    * `separate_fast.py:148-186`) → per-chunk STFT framing
-    * ([[stftFrames]], `:208-221`) → the per-frame model kernel (mock
-    * here; an [[Onnx]] session at production) → frame reassembly with
-    * trim/unpad ([[stftReassemble]], `:236-241`) → margin-strip
-    * order-preserving concat ([[reassemble]]) → the F9 residual
-    * `nonvocal = mixture − vocal` (`separation_filter.py:117`). Chunk
-    * identity rides an encoded file key through the frame algebra so
-    * every level stays a plain Dataset op. A linear per-sample kernel
-    * commutes with all of it — the PipelineSpec test asserts the
-    * composition equals the kernel applied directly, which is the
-    * transparency the reference's trim/pad arithmetic promises.
+  /** Stage 2c — separation per file: [[SpeechKernels.separate]] (margin
+    * chunks → STFT frames → the per-frame model kernel, mock here and an
+    * [[Onnx]] session at production → frame and margin reassembly) gives
+    * the vocal stem, and the F9 residual `nonvocal = mixture − vocal`
+    * (`separation_filter.py:117`) is taken from the same pass. A linear
+    * per-sample kernel commutes with the window algebra — the PipelineSpec
+    * test asserts the result equals the kernel applied directly, which is
+    * the transparency the reference's trim/pad arithmetic promises.
     */
   def separateStage(audio: Dataset[AudioFile], chunkSamples: Int = 4096,
                     marginSamples: Int = 512, chunkSize: Int = 1024,
                     nFft: Int = 512): (Dataset[AudioFile], Dataset[AudioFile]) = {
     import audio.sparkSession.implicits._
-    val chunks = chunkWithMargins(audio, chunkSamples, marginSamples)
-    val asFiles = chunks.map(c => AudioFile(
-      s"${c.file}\u0000${c.chunkIdx}\u0000${c.coreStart}\u0000${c.coreLen}",
-      c.sr, c.samples))
-    val frames = stftFrames(asFiles, chunkSize, nFft)
-    val sep = InferenceOp.mapBatched[StftFrame, StftFrame](
-      frames, "mock_frame_separator",
-      () => new MockModels.MockFrameSeparator(), batchSize = 8)
-    val vocalChunks = stftReassemble(sep, chunkSize, nFft).map { a =>
-      val parts = a.file.split('\u0000')
-      AudioChunk(parts(0), a.sr, parts(1).toInt, parts(2).toInt,
-        parts(3).toInt, a.waveform)
+    val stems = audio.mapPartitions { files =>
+      val model = ModelCache.getOrCreate[SpeechKernels.Separator]("mock_frame_separator")(
+        new MockModels.MockFrameSeparator())
+      files.map { a =>
+        val v = SpeechKernels.separate(a, model, chunkSamples, marginSamples, chunkSize, nFft)
+        (AudioFile(a.file, a.sr, v),
+          AudioFile(a.file, a.sr, Array.tabulate(v.length)(i => a.waveform(i) - v(i))))
+      }
     }
-    val vocal = reassemble(vocalChunks, marginSamples)
-    val mixDf = audio.map(a => (a.file, a.sr, a.waveform)).toDF("file", "sr", "mix")
-    val vocDf = vocal.map(a => (a.file, a.waveform)).toDF("file", "voc")
-    val nonvocal = mixDf.join(vocDf, "file")
-      .as[(String, Int, Array[Float], Array[Float])]
-      .map { case (f, sr, m, v) =>
-        AudioFile(f, sr, Array.tabulate(m.length)(i => m(i) - v(i))) }
-    (vocal, nonvocal)
+    (stems.map(_._1), stems.map(_._2))
   }
 
   /** Stage 3 — mock diarization: assign a speaker per VAD span from its
@@ -331,19 +235,11 @@ object SpeechPipeline {
     val withWave = perFile(vad, (s: Segment) => s.file, audio) { (a, spans) =>
       spans.map(s => (a.file, s.start, s.end, a.sr, SpeechKernels.slice(a, s.start, s.end)))
     }
-    // NB: Charset is not Serializable — name it inside each closure
     val rows = HttpInference.mapService[(String, Double, Double, Int, Array[Float]), ServiceSpeakerRow](
       withWave, cfg,
-      encode = xs => xs.map { case (f, s, e, sr, w) =>
-        s"$f\t$s\t$e\t$sr\t${HttpInference.b64(w)}"
-      }.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      decode = bytes => new String(bytes, java.nio.charset.StandardCharsets.UTF_8).split("\n", -1).toSeq
-        .filter(_.nonEmpty).map { line =>
-          val f = line.split("\t", -1)
-          ServiceSpeakerRow(f(0), f(1).toDouble, f(2).toDouble, f(3), "completed", "")
-        },
-      onFailure = (x, e) => ServiceSpeakerRow(x._1, x._2, x._3, "failed",
-        "failed", s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}"))
+      encode = { case (f, s, e, sr, w) => s"$f\t$s\t$e\t$sr\t${HttpInference.b64(w)}" },
+      decode = f => ServiceSpeakerRow(f(0), f(1).toDouble, f(2).toDouble, f(3), "completed", ""),
+      onFailure = (x, err) => ServiceSpeakerRow(x._1, x._2, x._3, "failed", "failed", err))
       .cache() // one service pass feeds both the ok and failed splits
     val ok = rows.filter(_.status == "completed")
       .map(r => SpeakerSegment(r.file, r.start, r.end, r.speaker))
@@ -426,21 +322,14 @@ object SpeechPipeline {
     val withWave = perFile(single, (x: ActiveInterval) => x.file, audio) { (a, ivs) =>
       SpeechKernels.chunkSlices(a, ivs, minChunkSec, mergedCapSec)
     }
-    // NB: Charset is not Serializable — name it inside each closure
     val rows = HttpInference.mapService[(SpeakerSegment, Array[Float]), ServiceEmbedRow](
       withWave, cfg,
-      encode = xs => xs.map { case (seg, w) =>
-        s"${seg.file}\t${seg.start}\t${seg.end}\t${seg.speaker}\t${HttpInference.b64(w)}"
-      }.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      decode = bytes => new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n", -1).toSeq.filter(_.nonEmpty).map { line =>
-          val f = line.split("\t", -1)
-          ServiceEmbedRow(f(0), f(1).toDouble, f(2).toDouble, f(3),
-            HttpInference.unb64(f(4)), "completed", "")
-        },
-      onFailure = (x, e) => ServiceEmbedRow(x._1.file, x._1.start, x._1.end,
-        x._1.speaker, Array.emptyFloatArray, "failed",
-        s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}"))
+      encode = { case (seg, w) =>
+        s"${seg.file}\t${seg.start}\t${seg.end}\t${seg.speaker}\t${HttpInference.b64(w)}" },
+      decode = f => ServiceEmbedRow(f(0), f(1).toDouble, f(2).toDouble, f(3),
+        HttpInference.unb64(f(4)), "completed", ""),
+      onFailure = (x, err) => ServiceEmbedRow(x._1.file, x._1.start, x._1.end,
+        x._1.speaker, Array.emptyFloatArray, "failed", err))
       .cache() // one service pass feeds both the ok and failed splits
     val clustered = rows.filter(_.status == "completed")
       .map(r => (SpeakerSegment(r.file, r.start, r.end, r.speaker), r.emb))

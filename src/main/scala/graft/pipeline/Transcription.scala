@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -28,17 +28,20 @@ object Transcription {
   def asrStage(segments: Dataset[SpeakerSegment], audio: Dataset[AudioFile])
       : Dataset[AsrRow] = {
     import segments.sparkSession.implicits._
-    val waves = audio.map(a => (a.file, a.sr, a.waveform)).toDF("file", "sr", "waveform")
-    val withWave = segments.toDF("file", "start", "end", "speaker")
-      .join(waves, "file")
-      .as[(String, Double, Double, String, Int, Array[Float])]
-      .map { case (file, s, e, spk, sr, w) =>
-        val slice = w.slice(math.max(0, (s * sr).toInt), math.min(w.length, (e * sr).toInt))
-        (SpeakerSegment(file, s, e, spk), slice)
-      }
     InferenceOp.mapBatched[(SpeakerSegment, Array[Float]), AsrRow](
-      withWave, "mock_asr", () => new MockAsr(), batchSize = 8)
+      slices(segments, audio)((seg, _, w) => (seg, w)), "mock_asr", () => new MockAsr(),
+      batchSize = 8)
   }
+
+  /** Each segment with its file's sample rate and waveform slice (F7),
+    * paired per file by [[SpeechPipeline.perFile]]: a waveform moves once
+    * per file, and segments of a file with no audio are dropped.
+    */
+  private def slices[U: Encoder](segments: Dataset[SpeakerSegment], audio: Dataset[AudioFile])
+      (row: (SpeakerSegment, Int, Array[Float]) => U): Dataset[U] =
+    SpeechPipeline.perFile(segments, (s: SpeakerSegment) => s.file, audio) { (a, segs) =>
+      segs.map(s => row(s, a.sr, SpeechKernels.slice(a, s.start, s.end)))
+    }
 
   /** [[AsrRow]] plus the S10 status/error pair for the external-service
     * path ([[graft.model.DecodedAudio]] convention).
@@ -59,29 +62,14 @@ object Transcription {
   def asrStageService(segments: Dataset[SpeakerSegment], audio: Dataset[AudioFile],
                       cfg: HttpServiceConfig): Dataset[ServiceAsrRow] = {
     import segments.sparkSession.implicits._
-    val waves = audio.map(a => (a.file, a.sr, a.waveform)).toDF("file", "sr", "waveform")
-    val withWave = segments.toDF("file", "start", "end", "speaker")
-      .join(waves, "file")
-      .as[(String, Double, Double, String, Int, Array[Float])]
-      .map { case (file, s, e, spk, sr, w) =>
-        val slice = w.slice(math.max(0, (s * sr).toInt), math.min(w.length, (e * sr).toInt))
-        (SpeakerSegment(file, s, e, spk), sr, slice)
-      }
-    // NB: Charset is not Serializable — name it inside each closure
     HttpInference.mapService[(SpeakerSegment, Int, Array[Float]), ServiceAsrRow](
-      withWave, cfg,
-      encode = xs => xs.map { case (seg, sr, w) =>
-        s"${seg.file}\t${seg.start}\t${seg.end}\t${seg.speaker}\t$sr\t${HttpInference.b64(w)}"
-      }.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      decode = bytes => new String(bytes, java.nio.charset.StandardCharsets.UTF_8).split("\n", -1).toSeq
-        .filter(_.nonEmpty).map { line =>
-          val f = line.split("\t", -1)
-          ServiceAsrRow(f(0), f(1).toDouble, f(2).toDouble, f(3), f(4), f(5),
-            "completed", "")
-        },
-      onFailure = (x, e) => ServiceAsrRow(x._1.file, x._1.start, x._1.end,
-        x._1.speaker, "", "", "failed",
-        s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}"))
+      slices(segments, audio)((seg, sr, w) => (seg, sr, w)), cfg,
+      encode = { case (seg, sr, w) =>
+        s"${seg.file}\t${seg.start}\t${seg.end}\t${seg.speaker}\t$sr\t${HttpInference.b64(w)}" },
+      decode = f => ServiceAsrRow(f(0), f(1).toDouble, f(2).toDouble, f(3), f(4), f(5),
+        "completed", ""),
+      onFailure = (x, err) => ServiceAsrRow(x._1.file, x._1.start, x._1.end,
+        x._1.speaker, "", "", "failed", err))
   }
 
   final class MockAsr extends BatchModel[(SpeakerSegment, Array[Float]), AsrRow] {

@@ -298,10 +298,10 @@ class OnnxSpec extends SparkSpec {
     // replay through Spark: state must thread window-to-window exactly,
     // or fingerprints miss and the recorded session throws
     val provider = RecordedProvider("vad-replay", rec.fixtures)
-    val out = InferenceOp.flatMapBatched[AudioFile, graft.model.Segment](
+    val out = InferenceOp.mapBatched[AudioFile, Seq[graft.model.Segment]](
       audio.toDS(), "onnx_vad_replay",
       () => new OnnxSileroVad(provider), batchSize = 1)
-      .collect().toSeq.sortBy(_.start)
+      .collect().toSeq.flatten.sortBy(_.start)
     assert(out == expected.flatten.sortBy(_.start))
 
     // an unrecorded input (hence any marshalling/state drift) fails loudly

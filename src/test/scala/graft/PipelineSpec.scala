@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.model._
-import graft.pipeline.{MockModels, SpeechPipeline}
+import graft.pipeline.{MockModels, SpeechKernels, SpeechPipeline}
 
 /** Golden end-to-end: synthetic waveforms (sine bursts + silence,
   * FIXTURES.md §A9) through the composed five-stage pipeline with
@@ -36,13 +36,16 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("chunkWithMargins + reassemble is identity") {
-    val audio = Seq(fixture("a")).toDS()
-    val chunks = SpeechPipeline.chunkWithMargins(audio, chunkSamples = 512,
-      marginSamples = 64)
-    assert(chunks.count() == 10) // ceil(5000/512)
-    val back = SpeechPipeline.reassemble(chunks, marginSamples = 64).collect().head
-    assert(back.waveform.toSeq == fixture("a").waveform.toSeq)
+  test("marginChunks + separate(identity model) is identity") {
+    val a = fixture("a")
+    assert(SpeechKernels.marginChunks(a, chunkSamples = 512, marginSamples = 64).length == 10) // ceil(5000/512)
+    val identity = new SpeechKernels.Separator {
+      val name = "identity"
+      def predictBatch(xs: Seq[StftFrame]): Seq[StftFrame] = xs
+    }
+    val back = SpeechKernels.separate(a, identity, chunkSamples = 512, marginSamples = 64,
+      chunkSize = 1024, nFft = 512)
+    assert(back.toSeq == a.waveform.toSeq)
   }
 
   test("stftFrames + stftReassemble is identity for random lengths (reference frame algebra)") {
@@ -96,6 +99,14 @@ class PipelineSpec extends SparkSpec {
       assert(v(a.file).toSeq == expectV.toSeq, s"${a.file} vocal differs")
       val expectNv = a.waveform.zip(expectV).map { case (m, x) => m - x }
       assert(nv(a.file).toSeq == expectNv.toSeq, s"${a.file} nonvocal differs")
+    }
+  }
+
+  test("separateStage plans one narrow pass: no shuffle or broadcast exchange") {
+    val (vocal, nonvocal) = SpeechPipeline.separateStage(Seq(fixture("a"), fixture("b")).toDS())
+    for (ds <- Seq(vocal, nonvocal)) {
+      ds.collect()
+      assert(exchanges(ds.queryExecution.executedPlan).isEmpty, ds.queryExecution.executedPlan.toString)
     }
   }
 
@@ -471,6 +482,28 @@ class PipelineSpec extends SparkSpec {
     assert(rel == Seq((0d, "g0"), (12d, "g0"), (20d, "g1")))
   }
 
+  /** Every node of an executed plan, through adaptive wrappers and query stages. */
+  private def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+  }
+
+  private def exchanges(p: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    nodes(p).filter {
+      case _: ShuffleExchangeLike | _: BroadcastExchangeLike => true
+      case _ => false
+    }
+  }
+
+  private def joins(p: org.apache.spark.sql.execution.SparkPlan) =
+    nodes(p).filter(_.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec])
+
   // ------------------------------------------------ external service (§7.4.4)
 
   test("external-service diarize equals the local mock path; transient 500s recovered by retry") {
@@ -511,6 +544,21 @@ class PipelineSpec extends SparkSpec {
     } finally stub.close()
   }
 
+  test("asrStage and asrStageService pair segments with audio per file: no join operator") {
+    import graft.pipeline.{HttpServiceConfig, Transcription}
+    val audio = Seq(fixture("a"), fixture("b")).toDS()
+    val segs = Seq(SpeakerSegment("a", 1.0, 2.0, "s0"), SpeakerSegment("b", 3.0, 4.0, "s1")).toDS()
+    val stub = new ServiceStub(ServiceStub.asr)
+    try {
+      val cfg = HttpServiceConfig(stub.endpoint, batchSize = 2, maxRetries = 0)
+      for (ds <- Seq(Transcription.asrStage(segs, audio).toDF(),
+                     Transcription.asrStageService(segs, audio, cfg).toDF())) {
+        assert(ds.collect().length == 2)
+        assert(joins(ds.queryExecution.executedPlan).isEmpty, ds.queryExecution.executedPlan.toString)
+      }
+    } finally stub.close()
+  }
+
   test("LineService fixture: clean lines served, poisoned body exhausts retries into S10 rows") {
     import graft.pipeline.{HttpInference, HttpServiceConfig, LineService}
     val svc = new LineService(_.map(_.toUpperCase), poisonMarker = Some("BAD"))
@@ -519,9 +567,7 @@ class PipelineSpec extends SparkSpec {
         maxRetries = 1, baseBackoffMs = 2)
       val ds = spark.createDataset(Seq("ok1", "BADx", "ok2")).coalesce(1)
       val out = HttpInference.mapService[String, String](ds, cfg,
-        xs => xs.mkString("\n").getBytes("UTF-8"),
-        b => new String(b, "UTF-8").split("\n", -1).toSeq.filter(_.nonEmpty),
-        (x, _) => s"FAIL:$x").collect().toSeq
+        x => x, f => f(0), (x, _) => s"FAIL:$x").collect().toSeq
       assert(out == Seq("OK1", "FAIL:BADx", "OK2"), s"got $out")
     } finally svc.close()
   }
@@ -609,9 +655,7 @@ class PipelineSpec extends SparkSpec {
         maxRetries = 0, requestTimeoutMs = 5000)
       val ds = spark.createDataset((0 until 12).map(i => s"x$i")).coalesce(1)
       val out = HttpInference.mapService[String, String](ds, cfg,
-        xs => xs.mkString("\n").getBytes("UTF-8"),
-        b => new String(b, "UTF-8").split("\n", -1).toSeq.filter(_.nonEmpty),
-        (x, _) => s"FAIL:$x").collect().toSeq
+        x => x, f => f(0), (x, _) => s"FAIL:$x").collect().toSeq
       assert(out == (0 until 12).map(i => s"X$i"))
       assert(stub.maxConcurrent.get() <= 3, s"in-flight bound: ${stub.maxConcurrent.get()}")
       assert(stub.maxConcurrent.get() >= 2,
@@ -714,22 +758,10 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("runAll plans one narrow pass: no shuffle or broadcast exchange") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
     val out = SpeechPipeline.runAll(spark, speechFiles.toDS(), speechPrints)
     out.collect()
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case other => other +: other.children.flatMap(nodes)
-    }
     val plan = out.queryExecution.executedPlan
-    val exchanges = nodes(plan).collect {
-      case e: ShuffleExchangeLike => e
-      case e: BroadcastExchangeLike => e
-    }
-    assert(exchanges.isEmpty, plan.toString)
+    assert(exchanges(plan).isEmpty, plan.toString)
   }
 
   test("collecting runAll starts exactly one Spark job") {

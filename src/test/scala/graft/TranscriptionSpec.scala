@@ -18,10 +18,11 @@ class TranscriptionSpec extends SparkSpec {
   test("asrStage slices segments and emits deterministic transcripts") {
     val segs = Seq(
       SpeakerSegment("a", 0.0, 2.0, "s0"),
-      SpeakerSegment("a", 3.0, 4.0, "s1")).toDS()
+      SpeakerSegment("a", 3.0, 4.0, "s1"),
+      SpeakerSegment("no_audio", 0.0, 1.0, "s0")).toDS()
     val rows = Transcription.asrStage(segs, Seq(audio("a", 0.9f)).toDS())
       .collect().sortBy(_.start)
-    assert(rows.length == 2)
+    assert(rows.length == 2) // the segment whose file has no audio is dropped
     assert(rows(0).text == "loud loud" && rows(0).language == "en")
     assert(rows(1).text == "loud" && rows(1).speaker == "s1")
   }
