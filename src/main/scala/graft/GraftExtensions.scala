@@ -5,25 +5,23 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.expr.GraftFunctions
-import graft.plans.{ContainmentJoinStrategy, RangeJoinRule}
 
 /** Catalyst extension point: registers the engine's native expressions
-  * and optimizer rules so any session — including one created by
-  * `spark-submit --conf spark.sql.extensions=graft.GraftExtensions` on a
-  * real cluster — gets them without touching the library API.
+  * so any session — including one created by `spark-submit --conf
+  * spark.sql.extensions=graft.GraftExtensions` on a real cluster — can
+  * call them from SQL without touching the library API.
   *
-  * Functions: every row of the [[GraftFunctions.table]].
-  * [[RangeJoinRule]]: containment-join bucketing (X4), gated by
-  * `spark.graft.rangeJoin.bucketWidth`.
+  * It injects every row of the [[GraftFunctions.table]] and nothing
+  * else: no optimizer rule and no planner strategy. A containment-join
+  * plan is picked by the operator the caller chooses, never by session
+  * state; the one custom strategy, [[graft.plans.ContainmentJoinStrategy]],
+  * is registered by the only function that builds its logical node.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => RangeJoinRule)
-    e.injectPlannerStrategy(_ => ContainmentJoinStrategy)
+  override def apply(e: SparkSessionExtensions): Unit =
     GraftFunctions.table.foreach { row =>
       e.injectFunction((new FunctionIdentifier(row.name),
         new ExpressionInfo(GraftFunctions.getClass.getName.stripSuffix("$"), row.name),
         row.build))
     }
-  }
 }

@@ -595,11 +595,11 @@ private[graft] object QueriesSpeech {
             (((id * 31 + i.toLong * 17) % 201) - 100) / 128f)
           graft.model.AudioFile(id.toString, 16000, w)
         }
-        val (vocal, nonvocal) = graft.pipeline.SpeechPipeline.separateStage(audio)
-        val mixDf = audio.map(a => (a.file, a.waveform)).toDF("file", "mix")
-        val v = vocal.map(a => (a.file, a.waveform)).toDF("file", "voc")
-        val nv = nonvocal.map(a => (a.file, a.waveform)).toDF("file", "nonvoc")
-        mixDf.join(v, "file").join(nv, "file")
+        val stems = graft.pipeline.SpeechPipeline.separateStage(audio)
+          .map { case (v, nv) => (v.file, v.waveform, nv.waveform) }
+          .toDF("file", "voc", "nonvoc")
+        audio.map(a => (a.file, a.waveform)).toDF("file", "mix")
+          .join(stems, "file")
           .as[(String, Array[Float], Array[Float], Array[Float])]
           .map { case (f, mix, voc, non) =>
             val vocalExact = voc.length == mix.length &&

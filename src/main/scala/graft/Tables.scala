@@ -23,6 +23,11 @@ object Tables {
     * SparkSession (the driver builds its own for Verify/Bench). UTC makes
     * the NTZ↔epoch conversions in [[tsUs]] match DuckDB's naive-as-UTC
     * reading; `nanosAsLong` keeps TIMESTAMP(NANOS) files readable.
+    *
+    * [[GraftSession]] already sets all four. This stays because not
+    * every session comes from it: perfbench builds its own
+    * (`perfbench/src/graftbench/Main.scala`, `session`), and so does
+    * any `spark-submit` driver that calls the library.
     */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -176,23 +176,38 @@ object SegmentOps {
   /** J1 at 100 TB — bucketed containment join (SURVEY X4): when one key's
     * chunk list is huge, the plain theta condition makes every chunk of
     * the key a candidate for every segment. Bucketing both sides on
-    * `floor(start / bucketWidth)` (chunks explode to every bucket they
+    * `start div bucketWidth` (chunks explode to every bucket they
     * overlap) turns the join equi on (key, bucket); the containment
-    * predicate then only filters within a bucket. Exact for any width:
-    * a contained segment's start always lies in one of its chunk's
-    * buckets. Width trades chunk fan-out against bucket selectivity —
-    * pick ≈ the max chunk length.
+    * predicate stays in the condition and only filters within a bucket.
+    * Width trades chunk fan-out against bucket selectivity — pick ≈ the
+    * max chunk length.
+    *
+    * Equal to [[containmentJoin]] for any width and any rows:
+    *   - buckets are integer `div`, exact over the whole Long domain (a
+    *     double quotient rounds above 2^53 and can put a start one
+    *     bucket off its chunk's range);
+    *   - a segment with `start <= end` takes its start bucket, which
+    *     every containing chunk's bucket range covers;
+    *   - any other segment (inverted, or a null bound) takes the
+    *     catch-all bucket `Long.MinValue`, which every chunk also emits,
+    *     so it sees all chunks of its key;
+    *   - a chunk whose bucket range is inverted or null emits only the
+    *     catch-all: no well-formed segment fits inside it.
     */
   def bucketedContainmentJoin(segs: DataFrame, chunks: DataFrame, key: String,
                               segStart: String, segEnd: String,
                               chunkStart: String, chunkEnd: String,
                               bucketWidth: Long): DataFrame = {
+    require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
+    def bucket(c: String): Column = expr(s"CAST(`$c` AS BIGINT) div ${bucketWidth}L")
+    val catchAll = lit(Long.MinValue)
     val segB = segs.withColumn("__bucket",
-      (col(segStart).cast("double") / lit(bucketWidth)).cast("long"))
+      when(col(segStart) <= col(segEnd), bucket(segStart)).otherwise(catchAll))
+    val (bs, be) = (bucket(chunkStart), bucket(chunkEnd))
     val chunkB = chunks.withColumn("__bucket",
-      explode(sequence(
-        (col(chunkStart).cast("double") / lit(bucketWidth)).cast("long"),
-        (col(chunkEnd).cast("double") / lit(bucketWidth)).cast("long"))))
+      explode(concat(
+        when(bs <= be, sequence(bs, be)).otherwise(typedLit(Seq.empty[Long])),
+        array(catchAll))))
     segB.alias("s").join(chunkB.alias("c"),
         col(s"s.$key") === col(s"c.$key") &&
           col("s.__bucket") === col("c.__bucket") &&

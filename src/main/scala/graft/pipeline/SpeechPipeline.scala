@@ -57,6 +57,12 @@ object SpeechPipeline {
       val embedder = mockEmbedder
       vadBatched(files, vad, cfg.vadPadSec).flatMap { case (a, spans) =>
         val single = SpeechKernels.diarize(a, spans).filter(_.speakers.length == 1)
+        // The 0.2 s clamp: rematch drops merged turns no longer than
+        // minChunkSec, and the test fixtures' turns are short. With
+        // production's 3.0 s, runAll returns no row for PipelineSpec's
+        // fixture files and three of its tests fail. perfbench's stage
+        // chain repeats the clamp (its `stages`), so the clamp changes
+        // only together with that benchmark.
         val chunks = SpeechKernels.rematch(a, single, embedder,
           minChunkSec = math.min(cfg.rematchChunkMinSec, 0.2),
           mergedCapSec = cfg.rematchMergedCapSec,
@@ -179,16 +185,18 @@ object SpeechPipeline {
     * chunks → STFT frames → the per-frame model kernel, mock here and an
     * [[Onnx]] session at production → frame and margin reassembly) gives
     * the vocal stem, and the F9 residual `nonvocal = mixture − vocal`
-    * (`separation_filter.py:117`) is taken from the same pass. A linear
-    * per-sample kernel commutes with the window algebra — the PipelineSpec
-    * test asserts the result equals the kernel applied directly, which is
-    * the transparency the reference's trim/pad arithmetic promises.
+    * (`separation_filter.py:117`) is taken from the same pass. One row
+    * per file holds both stems, (vocal, nonvocal), so a consumer of both
+    * runs separation once. A linear per-sample kernel commutes with the
+    * window algebra — the PipelineSpec test asserts the result equals the
+    * kernel applied directly, which is the transparency the reference's
+    * trim/pad arithmetic promises.
     */
   def separateStage(audio: Dataset[AudioFile], chunkSamples: Int = 4096,
                     marginSamples: Int = 512, chunkSize: Int = 1024,
-                    nFft: Int = 512): (Dataset[AudioFile], Dataset[AudioFile]) = {
+                    nFft: Int = 512): Dataset[(AudioFile, AudioFile)] = {
     import audio.sparkSession.implicits._
-    val stems = audio.mapPartitions { files =>
+    audio.mapPartitions { files =>
       val model = ModelCache.getOrCreate[SpeechKernels.Separator]("mock_frame_separator")(
         new MockModels.MockFrameSeparator())
       files.map { a =>
@@ -197,7 +205,6 @@ object SpeechPipeline {
           AudioFile(a.file, a.sr, Array.tabulate(v.length)(i => a.waveform(i) - v(i))))
       }
     }
-    (stems.map(_._1), stems.map(_._2))
   }
 
   /** Stage 3 — mock diarization: assign a speaker per VAD span from its

@@ -148,8 +148,9 @@ object ContainmentJoin {
 
   /** DataFrame surface: build the logical node from two analyzed plans,
     * registering the planner strategy on the session (idempotent, via
-    * the public `experimental.extraStrategies` hook — `GraftExtensions`
-    * also injects it for `spark.sql.extensions` deployments).
+    * the public `experimental.extraStrategies` hook). This is the only
+    * registration: [[ContainmentJoinPlan]] is built nowhere else, and it
+    * also works in sessions built without `GraftExtensions`.
     */
   def sortedContainmentJoin(segs: DataFrame, chunks: DataFrame, key: String,
                             segStart: String, segEnd: String,

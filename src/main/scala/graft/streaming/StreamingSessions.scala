@@ -17,9 +17,10 @@ final case class TimedTypedSegment(file: String, ts: Timestamp, start: Double,
 
 /** W1 capped sessionization under Structured Streaming (SURVEY §2.10):
   * `session_window` cannot express the running-span cap, so the capped
-  * merge runs in `flatMapGroupsWithState` — the same pure kernel as the
-  * batch path ([[SegmentKernels.mergeCapped]]), with the open (last)
-  * session carried as group state and flushed on processing-time timeout.
+  * merge runs in `flatMapGroupsWithState` — the same capped fold as the
+  * batch path ([[SegmentKernels.mergeCapped]]), in its weighted form
+  * ([[SegmentKernels.mergeTypedCapped]]), with the open (last) session
+  * carried as group state and flushed on processing-time timeout.
   *
   * Arrival-order note: within a micro-batch rows are sorted before the
   * fold; segments arriving in a later batch that predate the open session
@@ -52,17 +53,12 @@ object StreamingSessions {
             state.remove()
             out.iterator
           } else {
-            val incoming = it.map(s => (s.start, s.end)).toIndexedSeq.sorted
-            val seeded = state.getOption
-              .map(s => IndexedSeq((s.start, s.end))).getOrElse(IndexedSeq.empty) ++
-              incoming
-            val merged = SegmentKernels.mergeCapped(seeded.sorted, gap, cap)
-            val adjusted = restoreOpenCount(merged, state.getOption)
-            adjusted.lastOption.foreach { l =>
+            val merged = mergeWithOpen(it.map(s => (s.start, s.end)), state.getOption, gap, cap)
+            merged.lastOption.foreach { l =>
               state.update(OpenSession(l.start, l.end, l.n))
               flushTimeout.foreach(state.setTimeoutDuration)
             }
-            adjusted.dropRight(1).iterator
+            merged.dropRight(1).iterator
               .map(m => MergedSegment(file, m.start, m.end, m.n, Nil))
           }
       }
@@ -117,23 +113,19 @@ object StreamingSessions {
       }
   }
 
-  /** The open session entered the merge kernel as ONE pseudo-segment;
-    * restore its true member count on the merged group that absorbed it.
-    * That group is the one whose span covers the open session's start —
-    * NOT necessarily the first group: a late segment older than the open
-    * session (and outside its gap) forms its own earlier group, which
-    * must keep its true count.
+  /** One batch's segments merged with the carried-over open session.
+    * The open session re-enters [[SegmentKernels.mergeTypedCapped]] as ONE
+    * weighted item with its accumulated count, so every merged group's
+    * count is exact with no post-merge fix-up — including a late segment
+    * older than the open session, which forms its own group and keeps
+    * its own count.
     */
-  private[graft] def restoreOpenCount(merged: IndexedSeq[SegmentKernels.Merged],
-                                      open: Option[OpenSession])
-      : IndexedSeq[SegmentKernels.Merged] =
-    open match {
-      case Some(o) if merged.nonEmpty =>
-        val i = merged.indexWhere(m => m.start <= o.start && o.start <= m.end)
-        if (i < 0) merged
-        else merged.updated(i, merged(i).copy(n = merged(i).n + o.n - 1))
-      case _ => merged
-    }
+  private[graft] def mergeWithOpen(incoming: Iterator[(Double, Double)], open: Option[OpenSession],
+                            gap: Double, cap: Double): IndexedSeq[SegmentKernels.MergedTyped] = {
+    val items = open.map(o => (o.start, o.end, o.n, Nil)).toIndexedSeq ++
+      incoming.map { case (s, e) => (s, e, 1, Nil) }
+    SegmentKernels.mergeTypedCapped(items.sortBy(t => (t._1, t._2)), gap, cap)
+  }
 
   /** Event-time flavor: the open session flushes when the WATERMARK
     * passes its end + gap — the principled late-data posture (SURVEY
@@ -158,17 +150,13 @@ object StreamingSessions {
           } else {
             val rows = it.toIndexedSeq
             val maxEventMs = rows.map(_.ts.getTime).max
-            val incoming = rows.map(s => (s.start, s.end)).sorted
-            val seeded = state.getOption
-              .map(s => IndexedSeq((s.start, s.end))).getOrElse(IndexedSeq.empty) ++
-              incoming
-            val merged = SegmentKernels.mergeCapped(seeded.sorted, gap, cap)
-            val adjusted = restoreOpenCount(merged, state.getOption)
-            adjusted.lastOption.foreach { l =>
+            val merged = mergeWithOpen(rows.iterator.map(s => (s.start, s.end)),
+              state.getOption, gap, cap)
+            merged.lastOption.foreach { l =>
               state.update(OpenSession(l.start, l.end, l.n))
               state.setTimeoutTimestamp(maxEventMs + gapMs)
             }
-            adjusted.dropRight(1).iterator
+            merged.dropRight(1).iterator
               .map(m => MergedSegment(file, m.start, m.end, m.n, Nil))
           }
       }

@@ -188,15 +188,17 @@ class IOSpec extends SparkSpec {
 
   test("restoreOpenCount targets the group covering the open session") {
     import graft.streaming.StreamingSessions
-    import graft.ops.SegmentKernels.Merged
+    import graft.ops.SegmentKernels.MergedTyped
     // open session (10,20,n=4); a LATE segment (0,2) predates it and does
-    // not merge — the adjustment must land on the second group, not head
-    val merged = IndexedSeq(Merged(0d, 2d, 1), Merged(10d, 25d, 3))
-    val fixed = StreamingSessions.restoreOpenCount(merged,
-      Some(StreamingSessions.OpenSession(10d, 20d, 4)))
-    assert(fixed == IndexedSeq(Merged(0d, 2d, 1), Merged(10d, 25d, 6)))
-    // no open session: untouched
-    assert(StreamingSessions.restoreOpenCount(merged, None) == merged)
+    // not merge — the open session's count must land on the second group,
+    // not on head; it enters the merge as one weighted item
+    val open = Some(StreamingSessions.OpenSession(10d, 20d, 4))
+    val batch = Seq((0d, 2d), (18d, 22d), (21d, 25d))
+    val merged = StreamingSessions.mergeWithOpen(batch.iterator, open, 1d, 100d)
+    assert(merged == IndexedSeq(MergedTyped(0d, 2d, 1, Nil), MergedTyped(10d, 25d, 6, Nil)))
+    // no open session: every segment counts once
+    assert(StreamingSessions.mergeWithOpen(batch.iterator, None, 1d, 100d) ==
+      IndexedSeq(MergedTyped(0d, 2d, 1, Nil), MergedTyped(18d, 25d, 2, Nil)))
   }
 
   test("IntervalUnionAgg: partial merges equal the single-pass union") {

@@ -829,4 +829,17 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("m2_separate_transparent separates once per file: one MapPartitions node") {
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val p = SparkEntry.queries("m2_separate_transparent")(spark, dir)
+      .queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    // vocal and nonvocal ride in one row per file: a plan that reads
+    // the two stems through separate branches runs separation twice
+    assert(p.collect { case m: MapPartitionsExec => m }.size == 1, p.toString)
+  }
+
 }

@@ -10,6 +10,11 @@ import scala.util.Random
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The (seg_id, chunk_id) pairs of a containment join's output. */
+  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select(col("seg_id"), col("chunk_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("bucketedContainmentJoin is equivalent to the plain theta join") {
     val rnd = new Random(7)
     val chunks = (1 to 3).flatMap { k =>
@@ -67,68 +72,47 @@ class ScaleSpec extends SparkSpec {
     assert(plain.nonEmpty && got == plain)
   }
 
-  test("RangeJoinRule rewrites containment joins to bucketed equi joins") {
-    try {
-      // Rows 501+ are INVERTED intervals (ss > se): they can satisfy the
-      // raw containment condition (ss >= cs && se <= ce) while their
-      // start bucket lies outside the chunk's bucket range — the rewrite
-      // must route them through the catch-all bucket, not drop them.
-      val segs = ((1 to 500).map(i => (i % 5L, i.toLong, (i * 13L) % 3000L))
-        .map { case (k, id, s) => (k, id, s, s + 20L) } ++
-        (501 to 520).map(i => (i % 5L, i.toLong, 2000L + i, 50L)) :+
-        ((1L, 600L, 3100L, 5L))) // matches only the inverted chunk below
-        .toDF("k", "seg_id", "ss", "se")
-      // Chunk 40 is inverted (cs > ce): only inverted segs can match it,
-      // and a naive bucket Sequence over it would throw.
-      val chunks = ((0 until 40).map(i => (i % 5L, i.toLong, i * 80L, i * 80L + 200L)) :+
-        ((1L, 40L, 3000L, 10L)))
-        .toDF("k", "chunk_id", "cs", "ce")
-      def run(): Set[(Long, Long)] = segs.alias("s").join(chunks.alias("c"),
-          col("s.k") === col("c.k") && col("ss") >= col("cs") && col("se") <= col("ce"))
-        .select(col("seg_id"), col("chunk_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-      val baseline = run() // rule disabled (default width 0)
-      assert(baseline.nonEmpty)
-      spark.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "256")
-      val rewritten = segs.alias("s").join(chunks.alias("c"),
-        col("s.k") === col("c.k") && col("ss") >= col("cs") && col("se") <= col("ce"))
-      val planStr = rewritten.queryExecution.optimizedPlan.toString
-      assert(planStr.contains("__gb_probe") && planStr.contains("__gb_build"),
-        s"rule did not fire:\n$planStr")
-      val got = rewritten.select(col("seg_id"), col("chunk_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == baseline)
-    } finally spark.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "0")
+  test("bucketedContainmentJoin keeps inverted intervals through the catch-all bucket") {
+    // Rows 501+ are INVERTED intervals (ss > se): they can satisfy the
+    // raw containment condition (ss >= cs && se <= ce) while their
+    // start bucket lies outside the chunk's bucket range — the bucketed
+    // join must route them through the catch-all bucket, not drop them.
+    val segs = ((1 to 500).map(i => (i % 5L, i.toLong, (i * 13L) % 3000L))
+      .map { case (k, id, s) => (k, id, s, s + 20L) } ++
+      (501 to 520).map(i => (i % 5L, i.toLong, 2000L + i, 50L)) :+
+      ((1L, 600L, 3100L, 5L))) // matches only the inverted chunk below
+      .toDF("k", "seg_id", "ss", "se")
+    // Chunk 40 is inverted (cs > ce): only inverted segs can match it,
+    // and a naive bucket sequence over it would run backwards.
+    val chunks = ((0 until 40).map(i => (i % 5L, i.toLong, i * 80L, i * 80L + 200L)) :+
+      ((1L, 40L, 3000L, 10L)))
+      .toDF("k", "chunk_id", "cs", "ce")
+    val plain = pairs(SegmentOps.containmentJoin(segs, chunks, "k", "ss", "se", "cs", "ce"))
+    assert(plain.nonEmpty)
+    val bucketed = pairs(SegmentOps.bucketedContainmentJoin(
+      segs, chunks, "k", "ss", "se", "cs", "ce", bucketWidth = 256L))
+    assert(bucketed == plain, s"missing ${(plain -- bucketed).size} of ${plain.size} pairs")
   }
 
-  test("RangeJoinRule bucket arithmetic is exact above 2^53 (near-Long.MaxValue intervals)") {
-    try {
-      // Above 2^53 a double cannot represent every Long: the retired
-      // double-divide bucket could round a probe start into a bucket the
-      // build side never emitted, silently dropping the pair. Integer
-      // `div` is exact; rewrite must equal the theta join here.
-      val top = Long.MaxValue - 10000L
-      val segs = (0 until 200).map { i =>
-        val s = top + (i * 37L) % 9000L
-        (i % 3L, i.toLong, s, s + 40L)
-      }.toDF("k", "seg_id", "ss", "se")
-      val chunks = (0 until 30).map { i =>
-        val s = top + i * 300L
-        (i % 3L, i.toLong, s, s + 700L)
-      }.toDF("k", "chunk_id", "cs", "ce")
-      def join() = segs.alias("s").join(chunks.alias("c"),
-        col("s.k") === col("c.k") && col("ss") >= col("cs") && col("se") <= col("ce"))
-        .select(col("seg_id"), col("chunk_id"))
-      val baseline = join().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(baseline.nonEmpty)
-      spark.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "256")
-      val rewritten = join()
-      val planStr = rewritten.queryExecution.optimizedPlan.toString
-      assert(planStr.contains("__gb_probe"), s"rule did not fire:\n$planStr")
-      val got = rewritten.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == baseline)
-    } finally spark.conf.set(graft.plans.RangeJoinRule.CONF_KEY, "0")
+  test("bucketedContainmentJoin is exact above 2^53 (near-Long.MaxValue intervals)") {
+    // Above 2^53 a double cannot represent every Long: a double-divide
+    // bucket could round a probe start into a bucket the chunk side
+    // never emitted, silently dropping the pair. Integer `div` is exact;
+    // the bucketed join must equal the theta join here.
+    val top = Long.MaxValue - 10000L
+    val segs = (0 until 200).map { i =>
+      val s = top + (i * 37L) % 9000L
+      (i % 3L, i.toLong, s, s + 40L)
+    }.toDF("k", "seg_id", "ss", "se")
+    val chunks = (0 until 30).map { i =>
+      val s = top + i * 300L
+      (i % 3L, i.toLong, s, s + 700L)
+    }.toDF("k", "chunk_id", "cs", "ce")
+    val plain = pairs(SegmentOps.containmentJoin(segs, chunks, "k", "ss", "se", "cs", "ce"))
+    assert(plain.nonEmpty)
+    val bucketed = pairs(SegmentOps.bucketedContainmentJoin(
+      segs, chunks, "k", "ss", "se", "cs", "ce", bucketWidth = 256L))
+    assert(bucketed == plain)
   }
 
   test("bucketed tables co-locate repeated joins: zero exchanges in the plan") {

@@ -56,6 +56,16 @@ class StreamingSpec extends SparkSpec {
       val rows = spark.table("capped_out")
         .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getInt(3)))
       assert(rows.toSeq == Seq(("f", 0d, 20d, 2)))
+      // open session is (100,118,2) after (112,118); then a LATE segment
+      // (50,52) predates it outside the gap: it closes as its own group
+      // with its own count, and the open session keeps its two members
+      input.addData(Segment("f", 112, 118))
+      q.processAllAvailable()
+      input.addData(Segment("f", 50, 52), Segment("f", 300, 310))
+      q.processAllAvailable()
+      val late = spark.table("capped_out")
+        .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getInt(3)))
+      assert(late.toSet == Set(("f", 0d, 20d, 2), ("f", 50d, 52d, 1), ("f", 100d, 118d, 2)))
     } finally q.stop()
   }
 
