@@ -2,11 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{AacEncoder, Mdct, VorbisEncoder}
+import graft.pipeline.{AacEncoder, FlacAudio, Mdct, Mp3Encoder, VorbisEncoder, WavAudio}
 
 /** Codec MDCT kernel: the fast transform against the direct-form
-  * definition, its size guard, and SHA-256 pins of the encoder bytes
-  * the kernel feeds.
+  * definition, its size guard, and SHA-256 pins of every encoder's
+  * bytes and of the float32 PCM each pinned stream decodes to.
   */
 class MdctSpec extends AnyFunSuite {
 
@@ -76,20 +76,58 @@ class MdctSpec extends AnyFunSuite {
     "aac shape=1 short=3 tns=true" -> "de3d04f2181d5241e0717256278268262f7c7bee76f86c9796c89b88ca3f0514",
     "aac m4a" -> "acc4fc904c1090ae8360518807d36c414b61de9407101902a86b39e10b191a96",
     "vorbis" -> "227370022669ca44c71cf26b97159ef0c971b64c546e77476e1d1e07c90bb349",
-    "vorbis mixed" -> "2a826ede0f9d0d9a453038c318163d4ccc5354d483819a0813c326599b32cf6f")
+    "vorbis mixed" -> "2a826ede0f9d0d9a453038c318163d4ccc5354d483819a0813c326599b32cf6f",
+    // FLAC and MP3 bytes, and the decoded PCM of every pinned stream plus
+    // one WAV, pinned before the codecs moved onto one bit reader/writer,
+    // one canonical-Huffman builder and one decode trie
+    "flac" -> "9b041d64d098c3f2a5a5fa2656c357b0a710642f5da92210116011a04e03b9a6",
+    "flac lpc" -> "11ab5933769092ed8d6dcb85f3c836e4cd4afa42abe3fe1c0242afb512b884ec",
+    "mp3 128" -> "e01be4a2d58d3d7b1ea64a0ca295746d012be70a5e0fbbbf7fa3a3ff8d714e0e",
+    "mp3 lsf" -> "454b3dae5413da98192452fa8bfd50fa37fe64ba8012dc67bfdd2ecf9393de49",
+    "pcm aac shape=0 short=0 tns=false" -> "5c43ddc4fc58587e62aa45ae8a4f355c31cd4aec52a2cc4d0c84e102be358a1e",
+    "pcm aac shape=0 short=0 tns=true" -> "5c43ddc4fc58587e62aa45ae8a4f355c31cd4aec52a2cc4d0c84e102be358a1e",
+    "pcm aac shape=0 short=3 tns=false" -> "35a07d538829eaa455933b05b4628dff682c38ee046741c98aeccf6cadea5800",
+    "pcm aac shape=0 short=3 tns=true" -> "35a07d538829eaa455933b05b4628dff682c38ee046741c98aeccf6cadea5800",
+    "pcm aac shape=1 short=0 tns=false" -> "9ab5e656160b3163e913602833b302a920ec35d1e2abae511f15028a5ac3bbab",
+    "pcm aac shape=1 short=0 tns=true" -> "9ab5e656160b3163e913602833b302a920ec35d1e2abae511f15028a5ac3bbab",
+    "pcm aac shape=1 short=3 tns=false" -> "cc487c6f59af3436337b6b0e25a94687fb441478b97a83aeb3de2d53bd28ca0a",
+    "pcm aac shape=1 short=3 tns=true" -> "cc487c6f59af3436337b6b0e25a94687fb441478b97a83aeb3de2d53bd28ca0a",
+    "pcm aac m4a" -> "5c43ddc4fc58587e62aa45ae8a4f355c31cd4aec52a2cc4d0c84e102be358a1e",
+    "pcm vorbis" -> "0f4d3f23cf51aa1cb211f7b936a99d71820f269f0e9bff8e77f5a9d2636b46c4",
+    "pcm vorbis mixed" -> "4072facb44658a1444f3256a0bafda9f41462dc5e3008fad054c456573806f5d",
+    "pcm flac" -> "367819711f7344e74927f24229d06602bf7dc1893d11fae5e35e94d51c411671",
+    "pcm flac lpc" -> "367819711f7344e74927f24229d06602bf7dc1893d11fae5e35e94d51c411671",
+    "pcm mp3 128" -> "368c86ed2d969d4d0f9a64a06da68898708fb726847454668d7738c167e40353",
+    "pcm mp3 lsf" -> "d4dbf6a1f7c26fe3259691a95f45f177a83fe954bc3e57586f06aa2e8b41aa00",
+    "pcm wav" -> "367819711f7344e74927f24229d06602bf7dc1893d11fae5e35e94d51c411671")
+
+  /** SHA-256 of the float32 samples [[WavAudio.decode]] returns. */
+  private def pcmSha(bytes: Array[Byte]): String = {
+    val (_, pcm) = WavAudio.decode(bytes)
+    val bb = java.nio.ByteBuffer.allocate(4 * pcm.length)
+    pcm.foreach(x => bb.putInt(java.lang.Float.floatToRawIntBits(x)))
+    sha256(bb.array)
+  }
 
   test("encoder byte pins: AAC ADTS/M4A and Vorbis equal/mixed on a 1 s tone") {
     val aac = tone(24000)
     val vorbis = tone(16000)
-    val got =
+    val streams =
       (for (shape <- Seq(0, 1); sp <- Seq(0, 3); tns <- Seq(false, true))
         yield s"aac shape=$shape short=$sp tns=$tns" ->
-          sha256(AacEncoder.encode(24000, aac, shape, sp, tns))).toMap ++ Map(
-        "aac m4a" -> sha256(AacEncoder.encodeM4a(24000, aac)),
-        "vorbis" -> sha256(VorbisEncoder.encode(16000, vorbis)),
-        "vorbis mixed" -> sha256(VorbisEncoder.encodeMixed(16000, vorbis)))
+          AacEncoder.encode(24000, aac, shape, sp, tns)).toMap ++ Map(
+        "aac m4a" -> AacEncoder.encodeM4a(24000, aac),
+        "vorbis" -> VorbisEncoder.encode(16000, vorbis),
+        "vorbis mixed" -> VorbisEncoder.encodeMixed(16000, vorbis),
+        "flac" -> FlacAudio.encode(16000, vorbis),
+        "flac lpc" -> FlacAudio.encode(16000, vorbis, lpc = true),
+        "mp3 128" -> Mp3Encoder.encode(32000, tone(32000), 128),
+        "mp3 lsf" -> Mp3Encoder.encodeLsf(16000, vorbis))
+    val got = streams.map { case (k, b) => k -> sha256(b) } ++
+      streams.map { case (k, b) => s"pcm $k" -> pcmSha(b) } +
+      ("pcm wav" -> pcmSha(WavAudio.encode(16000, vorbis)))
     assert(got.keySet == pinned.keySet)
     val moved = pinned.keys.toSeq.sorted.filter(k => got(k) != pinned(k))
-    assert(moved.isEmpty, s"encoder bytes changed for: ${moved.mkString(", ")}")
+    assert(moved.isEmpty, s"pinned hashes changed for: ${moved.mkString(", ")}")
   }
 }
