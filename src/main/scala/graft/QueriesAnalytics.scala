@@ -88,20 +88,7 @@ private[graft] object QueriesAnalytics {
               .as("cms_est"))
           .orderBy(col("exact_count").desc, col("tok"))
       },
-      Some(s"""WITH $toksSqlCte,
-        |t AS (SELECT unnest(toks) AS tok FROM d),
-        |cnt AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact_count FROM t GROUP BY tok),
-        |cells AS (SELECT r.r AS r,
-        |    ('0x' || substr(md5(tok), 1 + r.r*8, 8))::BIGINT % 256 AS p,
-        |    CAST(COUNT(*) AS BIGINT) AS c
-        |  FROM t, range(3) r(r) GROUP BY 1, 2),
-        |top AS (SELECT tok, exact_count FROM cnt
-        |  ORDER BY exact_count DESC, tok LIMIT 15)
-        |SELECT top.tok AS tok, top.exact_count AS exact_count, MIN(c.c) AS cms_est
-        |FROM top JOIN cells c
-        |  ON c.p = ('0x' || substr(md5(top.tok), 1 + c.r*8, 8))::BIGINT % 256
-        |GROUP BY 1, 2
-        |ORDER BY exact_count DESC, tok""".stripMargin)),
+      Some(cmsTopkOracleSql)),
 
 
     // L45 — LOG-HISTOGRAM QUANTILE SKETCH (the DDSketch shape, Masson
@@ -570,20 +557,7 @@ private[graft] object QueriesAnalytics {
             col("n_convs"), col("attributed_cents"))
           .orderBy(col("touch_id"))
       },
-      Some(s"""WITH $evPointsSqlCte,
-        |v AS (SELECT user_id, event_id AS touch_id, tus FROM e WHERE event_type = 'view'),
-        |p AS (SELECT user_id, event_id AS conv_id, tus, cents FROM e WHERE event_type = 'purchase'),
-        |tp AS (SELECT p.user_id, p.conv_id, p.cents, v.touch_id, v.tus AS t_tus
-        |  FROM p JOIN v ON v.user_id = p.user_id
-        |    AND v.tus <= p.tus AND v.tus > p.tus - 86400000000),
-        |rk AS (SELECT user_id, conv_id, cents, touch_id,
-        |    CAST(row_number() OVER (PARTITION BY conv_id ORDER BY t_tus, touch_id) AS BIGINT) AS rk,
-        |    CAST(COUNT(*) OVER (PARTITION BY conv_id) AS BIGINT) AS k FROM tp),
-        |cr AS (SELECT user_id, conv_id, touch_id,
-        |    cents // k + CASE WHEN rk <= cents % k THEN 1 ELSE 0 END AS credit FROM rk)
-        |SELECT touch_id, user_id, CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS n_convs,
-        |  CAST(SUM(credit) AS BIGINT) AS attributed_cents
-        |FROM cr GROUP BY touch_id, user_id ORDER BY touch_id""".stripMargin)),
+      Some(attributionOracleSql)),
 
 
     // L89 — CUSUM DRIFT DETECTION (Page 1954), window-exact: the
@@ -855,25 +829,7 @@ private[graft] object QueriesAnalytics {
             (pmod(col("doc_id") * 11L, lit(10L)) < 6L).as("b_ok"))
         EvalOps.mcnemar(base, "a_ok", "b_ok")
       },
-      Some("""WITH b AS (SELECT (doc_id * 7) % 10 < 7 AS a,
-        |    (doc_id * 11) % 10 < 6 AS b
-        |  FROM documents WHERE doc_id < 600),
-        |ag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(CASE WHEN a AND b THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
-        |    CAST(SUM(CASE WHEN a AND NOT b THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_only_a,
-        |    CAST(SUM(CASE WHEN NOT a AND b THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_only_b,
-        |    CAST(SUM(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_neither
-        |  FROM b)
-        |SELECT n, n_both, n_only_a, n_only_b, n_neither,
-        |  (n_only_a - n_only_b) * (n_only_a - n_only_b) AS chisq_num,
-        |  CASE WHEN n_only_a + n_only_b > 0
-        |    THEN CAST((n_only_a - n_only_b) * (n_only_a - n_only_b) AS DOUBLE)
-        |      / CAST(n_only_a + n_only_b AS DOUBLE)
-        |    ELSE -1.0 END AS chisq
-        |FROM ag""".stripMargin)),
+      Some(mcnemarOracleSql)),
 
     // L229 — exact two-sample Kolmogorov–Smirnov statistic between the
     // even- and odd-event cents distributions: D·n_a·n_b is an exact
@@ -1064,22 +1020,7 @@ private[graft] object QueriesAnalytics {
     // smoke detector.
     Q("e_benford",
       (s, dir) => EvalOps.benfordAudit(evPoints(s, dir), "cents"),
-      Some("""WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS v
-        |  FROM events),
-        |p AS (SELECT v FROM e WHERE v > 0),
-        |t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM p),
-        |d AS (SELECT CAST(substr(CAST(v AS VARCHAR), 1, 1) AS BIGINT)
-        |    AS digit, CAST(COUNT(*) AS BIGINT) AS n_d FROM p GROUP BY 1)
-        |SELECT digit, n_d, t.n, (n_d * 1000000) // t.n AS share_e6,
-        |  CAST(CASE digit WHEN 1 THEN 301029 WHEN 2 THEN 176091
-        |    WHEN 3 THEN 124938 WHEN 4 THEN 96910 WHEN 5 THEN 79181
-        |    WHEN 6 THEN 66946 WHEN 7 THEN 57991 WHEN 8 THEN 51152
-        |    ELSE 45757 END AS BIGINT) AS expected_e6,
-        |  (n_d * 1000000) // t.n - CASE digit WHEN 1 THEN 301029
-        |    WHEN 2 THEN 176091 WHEN 3 THEN 124938 WHEN 4 THEN 96910
-        |    WHEN 5 THEN 79181 WHEN 6 THEN 66946 WHEN 7 THEN 57991
-        |    WHEN 8 THEN 51152 ELSE 45757 END AS dev_e6
-        |FROM d CROSS JOIN t ORDER BY digit""".stripMargin)),
+      Some(benfordOracleSql)),
 
     // L251 — Gwet's AC1 over a prevalence-skewed two-rater mint
     // (labels 0..2, rater B flips on every 5th doc): the

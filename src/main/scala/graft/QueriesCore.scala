@@ -361,13 +361,7 @@ private[graft] object QueriesCore {
             col("c.start_us").as("chunk_start"), col("c.end_us").as("chunk_end"))
           .orderBy(col("user_id"), col("event_id"))
       },
-      Some(s"""WITH $chunksSqlCte,
-        |seg AS (SELECT user_id, event_id, s_us, e_us FROM i WHERE event_type = 'click')
-        |SELECT seg.user_id AS user_id, seg.event_id AS event_id,
-        |  ch.start_us AS chunk_start, ch.end_us AS chunk_end
-        |FROM seg JOIN ch ON seg.user_id = ch.user_id
-        |  AND seg.s_us >= ch.start_us AND seg.e_us <= ch.end_us
-        |ORDER BY user_id, event_id""".stripMargin)),
+      Some(containmentOracleSql)),
 
 
     // J1 via the custom physical operator (plans/ContainmentJoin):
@@ -386,13 +380,7 @@ private[graft] object QueriesCore {
           .select(col("user_id"), col("event_id"), col("chunk_start"), col("chunk_end"))
           .orderBy(col("user_id"), col("event_id"))
       },
-      Some(s"""WITH $chunksSqlCte,
-        |seg AS (SELECT user_id, event_id, s_us, e_us FROM i WHERE event_type = 'click')
-        |SELECT seg.user_id AS user_id, seg.event_id AS event_id,
-        |  ch.start_us AS chunk_start, ch.end_us AS chunk_end
-        |FROM seg JOIN ch ON seg.user_id = ch.user_id
-        |  AND seg.s_us >= ch.start_us AND seg.e_us <= ch.end_us
-        |ORDER BY user_id, event_id""".stripMargin)),
+      Some(containmentOracleSql)),
 
 
     // J3 — max-overlap interval join, argmax with first-max tie-break
@@ -691,16 +679,7 @@ private[graft] object QueriesCore {
             (col("tus") - col("asof.tus")).as("lag_us"))
           .orderBy(col("user_id"), col("tus"), col("event_id"))
       },
-      Some(s"""WITH $evPointsSqlCte,
-        |l AS (SELECT user_id, event_id, tus FROM e WHERE event_type = 'click'),
-        |r0 AS (SELECT user_id, event_id, tus, cents FROM e WHERE event_type = 'purchase'),
-        |r AS (SELECT user_id, tus, cents FROM (SELECT user_id, tus, cents,
-        |  row_number() OVER (PARTITION BY user_id, tus ORDER BY event_id DESC) AS rn
-        |  FROM r0) t WHERE rn = 1)
-        |SELECT l.user_id, l.event_id, l.tus, r.tus AS prev_tus,
-        |  r.cents AS prev_cents, l.tus - r.tus AS lag_us
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.tus >= r.tus
-        |ORDER BY l.user_id, l.tus, l.event_id""".stripMargin)),
+      Some(asofOracleSql)),
 
 
     // L115 — LINK-GRAPH PAGERANK (integer fixed-point, 2 damped

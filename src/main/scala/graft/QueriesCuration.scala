@@ -987,14 +987,7 @@ private[graft] object QueriesCuration {
     Q("c_bottomk_sample",
       (s, dir) => Curation.bottomKSample(
         Tables.documents(s, dir), "lang", "doc_id", 10),
-      Some("""WITH h AS (SELECT lang, doc_id,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
-        |  FROM documents),
-        |r AS (SELECT lang, doc_id, h,
-        |    CAST(row_number() OVER (PARTITION BY lang
-        |      ORDER BY h, doc_id) AS BIGINT) AS rank FROM h)
-        |SELECT lang, rank, doc_id, h FROM r WHERE rank <= 10
-        |ORDER BY lang, rank""".stripMargin)),
+      Some(bottomkOracleSql)),
 
 
     // L57 — Z-ORDER DATA LAYOUT + MIN-MAX FILE SKIPPING (Delta OPTIMIZE
@@ -2581,20 +2574,7 @@ private[graft] object QueriesCuration {
               .otherwise(lit(-1L)).as("final_id"))
           .orderBy(col("id"))
       },
-      Some("""SELECT doc_id AS id,
-        |  CASE WHEN doc_id % 10 IN (1, 4) THEN 'direct'
-        |    WHEN doc_id % 10 IN (0, 2, 3) THEN 'resolved'
-        |    WHEN doc_id % 10 = 5 THEN 'too_many_hops'
-        |    ELSE 'loop' END AS status,
-        |  CAST(CASE doc_id % 10 WHEN 1 THEN 0 WHEN 4 THEN 0
-        |    WHEN 0 THEN 1 WHEN 3 THEN 1 WHEN 6 THEN 1
-        |    WHEN 2 THEN 2 WHEN 8 THEN 2 WHEN 9 THEN 2
-        |    ELSE 3 END AS BIGINT) AS hops,
-        |  CAST(CASE WHEN doc_id % 10 IN (1, 4) THEN doc_id
-        |    WHEN doc_id % 10 IN (0, 3) THEN doc_id + 1
-        |    WHEN doc_id % 10 = 2 THEN doc_id + 2
-        |    ELSE -1 END AS BIGINT) AS final_id
-        |FROM documents WHERE doc_id < 500 ORDER BY id""".stripMargin)),
+      Some(redirectChainsOracleSql)),
 
     // L284 — CRAWL-TRAP DETECTION by URL-template folding: a trap host
     // (calendar pages, session ids, faceted search) mints unboundedly

@@ -201,12 +201,7 @@ private[graft] object QueriesMultimodal {
         Multimodal.imageProbe(base, "doc_id", "kind", "rgb", "w", "h")
           .orderBy(col("doc_id"))
       },
-      Some("""SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 0 THEN 'png' WHEN doc_id % 4 = 1 THEN 'bmp'
-        |       WHEN doc_id % 4 = 2 THEN 'jpg' ELSE 'gif' END AS format,
-        |  CAST(16 + doc_id % 13 AS BIGINT) AS width,
-        |  CAST(8 + doc_id % 7 AS BIGINT) AS height
-        |FROM documents WHERE doc_id < 400 ORDER BY doc_id""".stripMargin)),
+      Some(imageProbeOracleSql)),
 
 
     // L200 — IMAGE METADATA AUDIT + PRIVACY SCRUB: real encoder output
@@ -568,23 +563,7 @@ private[graft] object QueriesMultimodal {
         Multimodal.amplitudeStats(WavAudio.decodeDataset(payloads), 9000)
           .orderBy(col("file"))
       },
-      Some("""WITH ids AS (SELECT DISTINCT CAST(event_id AS BIGINT) AS id
-        |  FROM events WHERE event_id < 200),
-        |c AS (SELECT id, CAST(300 + id % 500 AS BIGINT) AS n,
-        |    CASE WHEN id % 4 = 0 THEN 2 ELSE 1 END AS mult FROM ids),
-        |q AS (SELECT id, n,
-        |    list_transform(range(0, n),
-        |      i -> abs(((id * 13 + i * 29) % 401 - 200) * 25 * mult)) AS qs
-        |  FROM c)
-        |SELECT id AS file, n AS n_samples,
-        |  CAST(list_max(qs) AS BIGINT) AS peak_q,
-        |  CAST(len(list_filter(qs, x -> x >= 9000)) AS BIGINT) AS n_hot,
-        |  CASE WHEN n > 0
-        |    THEN CAST(len(list_filter(qs, x -> x >= 9000)) AS DOUBLE)
-        |      / CAST(n AS DOUBLE)
-        |    ELSE -1.0 END AS hot_rate,
-        |  len(list_filter(qs, x -> x >= 9000)) > 0 AS clipped
-        |FROM q ORDER BY file""".stripMargin)),
+      Some(clippingOracleSql)),
 
 
     // L195 — silence-trim offsets over the real decode path: the
@@ -837,12 +816,7 @@ private[graft] object QueriesMultimodal {
         QuerySupport.runToMemory(s, "iprobe", "append")(probed)
           .filter(col("doc_id") >= 0).orderBy(col("doc_id"))
       },
-      Some("""SELECT doc_id,
-        |  CASE WHEN doc_id % 4 = 0 THEN 'png' WHEN doc_id % 4 = 1 THEN 'bmp'
-        |       WHEN doc_id % 4 = 2 THEN 'jpg' ELSE 'gif' END AS format,
-        |  CAST(16 + doc_id % 13 AS BIGINT) AS width,
-        |  CAST(8 + doc_id % 7 AS BIGINT) AS height
-        |FROM documents WHERE doc_id < 400 ORDER BY doc_id""".stripMargin)),
+      Some(imageProbeOracleSql)),
 
     // L235 — PDF STRUCTURAL PROBE: version, object/page counts,
     // trailer /Encrypt, and startxref→xref agreement read from the raw

@@ -901,31 +901,7 @@ private[graft] object QueriesSpeech {
         TextOps.wordErrorRate(pairs, "doc_id", "ref", "hyp")
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH $toksSqlCte,
-        |base AS (SELECT doc_id, toks[1:40] AS ref FROM d WHERE len(toks) > 0),
-        |hy AS (SELECT doc_id, ref,
-        |    list_transform(list_filter(
-        |      list_transform(range(1, CAST(len(ref) + 1 AS BIGINT)),
-        |        i -> {'w': ref[CAST(i AS INTEGER)], 'i': i}),
-        |      s -> s['i'] % 7 != 4),
-        |      s -> CASE WHEN s['i'] % 5 = 3 THEN s['w'] || 'x' ELSE s['w'] END) AS hyp
-        |  FROM base),
-        |dic AS (SELECT doc_id, ref, hyp,
-        |    list_sort(list_distinct(list_concat(ref, hyp))) AS dict FROM hy),
-        |ec AS (SELECT doc_id,
-        |    CAST(len(ref) AS BIGINT) AS n_ref, CAST(len(hyp) AS BIGINT) AS n_hyp,
-        |    CASE WHEN len(dict) <= 200 THEN CAST(levenshtein(
-        |      list_reduce(list_transform(ref,
-        |        w -> chr(CAST(list_position(dict, w) + 47 AS INTEGER))), (a, b) -> a || b),
-        |      list_reduce(list_transform(hyp,
-        |        w -> chr(CAST(list_position(dict, w) + 47 AS INTEGER))), (a, b) -> a || b))
-        |      AS BIGINT) ELSE -1 END AS dist
-        |  FROM dic)
-        |SELECT doc_id, n_ref, n_hyp, dist,
-        |  CASE WHEN dist >= 0 AND n_ref > 0
-        |    THEN CAST(dist AS DOUBLE) / CAST(n_ref AS DOUBLE)
-        |    ELSE -1.0 END AS wer
-        |FROM ec ORDER BY doc_id""".stripMargin)),
+      Some(werOracleSql)),
 
     // L156∘L155 — the WER COMPOSITION closed: chunkUtterances splits
     // every transcript into <=100-token utterances (the reference

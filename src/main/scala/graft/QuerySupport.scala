@@ -831,4 +831,192 @@ GROUP BY token ORDER BY cnt DESC, token"""
     Tables.documents(s, dir).select(col("doc_id"), col("lang"),
       TextOps.tokens(col("text")).as("toks"))
 
+  // ---------------------------------------------------------------------
+  // Oracles shared by a batch query and its twin (streaming or sorted
+  // plan): both compute the same exact result, so one SQL mirror checks
+  // both. Defined after the CTE fragments they interpolate.
+  // ---------------------------------------------------------------------
+
+  /** The oracle of `sketch_cms_topk` and `streaming_sketch`. */
+  private[graft] val cmsTopkOracleSql: String =
+    s"""WITH $toksSqlCte,
+      |t AS (SELECT unnest(toks) AS tok FROM d),
+      |cnt AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS exact_count FROM t GROUP BY tok),
+      |cells AS (SELECT r.r AS r,
+      |    ('0x' || substr(md5(tok), 1 + r.r*8, 8))::BIGINT % 256 AS p,
+      |    CAST(COUNT(*) AS BIGINT) AS c
+      |  FROM t, range(3) r(r) GROUP BY 1, 2),
+      |top AS (SELECT tok, exact_count FROM cnt
+      |  ORDER BY exact_count DESC, tok LIMIT 15)
+      |SELECT top.tok AS tok, top.exact_count AS exact_count, MIN(c.c) AS cms_est
+      |FROM top JOIN cells c
+      |  ON c.p = ('0x' || substr(md5(top.tok), 1 + c.r*8, 8))::BIGINT % 256
+      |GROUP BY 1, 2
+      |ORDER BY exact_count DESC, tok""".stripMargin
+
+  /** The oracle of `e_attribution` and `streaming_attribution`. */
+  private[graft] val attributionOracleSql: String =
+    s"""WITH $evPointsSqlCte,
+      |v AS (SELECT user_id, event_id AS touch_id, tus FROM e WHERE event_type = 'view'),
+      |p AS (SELECT user_id, event_id AS conv_id, tus, cents FROM e WHERE event_type = 'purchase'),
+      |tp AS (SELECT p.user_id, p.conv_id, p.cents, v.touch_id, v.tus AS t_tus
+      |  FROM p JOIN v ON v.user_id = p.user_id
+      |    AND v.tus <= p.tus AND v.tus > p.tus - 86400000000),
+      |rk AS (SELECT user_id, conv_id, cents, touch_id,
+      |    CAST(row_number() OVER (PARTITION BY conv_id ORDER BY t_tus, touch_id) AS BIGINT) AS rk,
+      |    CAST(COUNT(*) OVER (PARTITION BY conv_id) AS BIGINT) AS k FROM tp),
+      |cr AS (SELECT user_id, conv_id, touch_id,
+      |    cents // k + CASE WHEN rk <= cents % k THEN 1 ELSE 0 END AS credit FROM rk)
+      |SELECT touch_id, user_id, CAST(COUNT(DISTINCT conv_id) AS BIGINT) AS n_convs,
+      |  CAST(SUM(credit) AS BIGINT) AS attributed_cents
+      |FROM cr GROUP BY touch_id, user_id ORDER BY touch_id""".stripMargin
+
+  /** The oracle of `e_mcnemar` and `streaming_mcnemar`. */
+  private[graft] val mcnemarOracleSql: String =
+    """WITH b AS (SELECT (doc_id * 7) % 10 < 7 AS a,
+      |    (doc_id * 11) % 10 < 6 AS b
+      |  FROM documents WHERE doc_id < 600),
+      |ag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+      |    CAST(SUM(CASE WHEN a AND b THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
+      |    CAST(SUM(CASE WHEN a AND NOT b THEN 1 ELSE 0 END) AS BIGINT)
+      |      AS n_only_a,
+      |    CAST(SUM(CASE WHEN NOT a AND b THEN 1 ELSE 0 END) AS BIGINT)
+      |      AS n_only_b,
+      |    CAST(SUM(CASE WHEN NOT a AND NOT b THEN 1 ELSE 0 END) AS BIGINT)
+      |      AS n_neither
+      |  FROM b)
+      |SELECT n, n_both, n_only_a, n_only_b, n_neither,
+      |  (n_only_a - n_only_b) * (n_only_a - n_only_b) AS chisq_num,
+      |  CASE WHEN n_only_a + n_only_b > 0
+      |    THEN CAST((n_only_a - n_only_b) * (n_only_a - n_only_b) AS DOUBLE)
+      |      / CAST(n_only_a + n_only_b AS DOUBLE)
+      |    ELSE -1.0 END AS chisq
+      |FROM ag""".stripMargin
+
+  /** The oracle of `e_benford` and `streaming_benford`. */
+  private[graft] val benfordOracleSql: String =
+    """WITH e AS (SELECT CAST(round(value * 100) AS BIGINT) AS v
+      |  FROM events),
+      |p AS (SELECT v FROM e WHERE v > 0),
+      |t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM p),
+      |d AS (SELECT CAST(substr(CAST(v AS VARCHAR), 1, 1) AS BIGINT)
+      |    AS digit, CAST(COUNT(*) AS BIGINT) AS n_d FROM p GROUP BY 1)
+      |SELECT digit, n_d, t.n, (n_d * 1000000) // t.n AS share_e6,
+      |  CAST(CASE digit WHEN 1 THEN 301029 WHEN 2 THEN 176091
+      |    WHEN 3 THEN 124938 WHEN 4 THEN 96910 WHEN 5 THEN 79181
+      |    WHEN 6 THEN 66946 WHEN 7 THEN 57991 WHEN 8 THEN 51152
+      |    ELSE 45757 END AS BIGINT) AS expected_e6,
+      |  (n_d * 1000000) // t.n - CASE digit WHEN 1 THEN 301029
+      |    WHEN 2 THEN 176091 WHEN 3 THEN 124938 WHEN 4 THEN 96910
+      |    WHEN 5 THEN 79181 WHEN 6 THEN 66946 WHEN 7 THEN 57991
+      |    WHEN 8 THEN 51152 ELSE 45757 END AS dev_e6
+      |FROM d CROSS JOIN t ORDER BY digit""".stripMargin
+
+  /** The oracle of `j1_containment` and `j1_sorted_containment`. */
+  private[graft] val containmentOracleSql: String =
+    s"""WITH $chunksSqlCte,
+      |seg AS (SELECT user_id, event_id, s_us, e_us FROM i WHERE event_type = 'click')
+      |SELECT seg.user_id AS user_id, seg.event_id AS event_id,
+      |  ch.start_us AS chunk_start, ch.end_us AS chunk_end
+      |FROM seg JOIN ch ON seg.user_id = ch.user_id
+      |  AND seg.s_us >= ch.start_us AND seg.e_us <= ch.end_us
+      |ORDER BY user_id, event_id""".stripMargin
+
+  /** The oracle of `j9_asof_join` and `streaming_asof`. */
+  private[graft] val asofOracleSql: String =
+    s"""WITH $evPointsSqlCte,
+      |l AS (SELECT user_id, event_id, tus FROM e WHERE event_type = 'click'),
+      |r0 AS (SELECT user_id, event_id, tus, cents FROM e WHERE event_type = 'purchase'),
+      |r AS (SELECT user_id, tus, cents FROM (SELECT user_id, tus, cents,
+      |  row_number() OVER (PARTITION BY user_id, tus ORDER BY event_id DESC) AS rn
+      |  FROM r0) t WHERE rn = 1)
+      |SELECT l.user_id, l.event_id, l.tus, r.tus AS prev_tus,
+      |  r.cents AS prev_cents, l.tus - r.tus AS lag_us
+      |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.tus >= r.tus
+      |ORDER BY l.user_id, l.tus, l.event_id""".stripMargin
+
+  /** The oracle of `c_bottomk_sample` and `streaming_bottomk`. */
+  private[graft] val bottomkOracleSql: String =
+    """WITH h AS (SELECT lang, doc_id,
+      |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
+      |  FROM documents),
+      |r AS (SELECT lang, doc_id, h,
+      |    CAST(row_number() OVER (PARTITION BY lang
+      |      ORDER BY h, doc_id) AS BIGINT) AS rank FROM h)
+      |SELECT lang, rank, doc_id, h FROM r WHERE rank <= 10
+      |ORDER BY lang, rank""".stripMargin
+
+  /** The oracle of `c_redirect_chains` and `streaming_redirects`. */
+  private[graft] val redirectChainsOracleSql: String =
+    """SELECT doc_id AS id,
+      |  CASE WHEN doc_id % 10 IN (1, 4) THEN 'direct'
+      |    WHEN doc_id % 10 IN (0, 2, 3) THEN 'resolved'
+      |    WHEN doc_id % 10 = 5 THEN 'too_many_hops'
+      |    ELSE 'loop' END AS status,
+      |  CAST(CASE doc_id % 10 WHEN 1 THEN 0 WHEN 4 THEN 0
+      |    WHEN 0 THEN 1 WHEN 3 THEN 1 WHEN 6 THEN 1
+      |    WHEN 2 THEN 2 WHEN 8 THEN 2 WHEN 9 THEN 2
+      |    ELSE 3 END AS BIGINT) AS hops,
+      |  CAST(CASE WHEN doc_id % 10 IN (1, 4) THEN doc_id
+      |    WHEN doc_id % 10 IN (0, 3) THEN doc_id + 1
+      |    WHEN doc_id % 10 = 2 THEN doc_id + 2
+      |    ELSE -1 END AS BIGINT) AS final_id
+      |FROM documents WHERE doc_id < 500 ORDER BY id""".stripMargin
+
+  /** The oracle of `mm_image_probe` and `streaming_image_probe`. */
+  private[graft] val imageProbeOracleSql: String =
+    """SELECT doc_id,
+      |  CASE WHEN doc_id % 4 = 0 THEN 'png' WHEN doc_id % 4 = 1 THEN 'bmp'
+      |       WHEN doc_id % 4 = 2 THEN 'jpg' ELSE 'gif' END AS format,
+      |  CAST(16 + doc_id % 13 AS BIGINT) AS width,
+      |  CAST(8 + doc_id % 7 AS BIGINT) AS height
+      |FROM documents WHERE doc_id < 400 ORDER BY doc_id""".stripMargin
+
+  /** The oracle of `mm_clipping` and `streaming_clipping`. */
+  private[graft] val clippingOracleSql: String =
+    """WITH ids AS (SELECT DISTINCT CAST(event_id AS BIGINT) AS id
+      |  FROM events WHERE event_id < 200),
+      |c AS (SELECT id, CAST(300 + id % 500 AS BIGINT) AS n,
+      |    CASE WHEN id % 4 = 0 THEN 2 ELSE 1 END AS mult FROM ids),
+      |q AS (SELECT id, n,
+      |    list_transform(range(0, n),
+      |      i -> abs(((id * 13 + i * 29) % 401 - 200) * 25 * mult)) AS qs
+      |  FROM c)
+      |SELECT id AS file, n AS n_samples,
+      |  CAST(list_max(qs) AS BIGINT) AS peak_q,
+      |  CAST(len(list_filter(qs, x -> x >= 9000)) AS BIGINT) AS n_hot,
+      |  CASE WHEN n > 0
+      |    THEN CAST(len(list_filter(qs, x -> x >= 9000)) AS DOUBLE)
+      |      / CAST(n AS DOUBLE)
+      |    ELSE -1.0 END AS hot_rate,
+      |  len(list_filter(qs, x -> x >= 9000)) > 0 AS clipped
+      |FROM q ORDER BY file""".stripMargin
+
+  /** The oracle of `m_wer` and `streaming_wer`. */
+  private[graft] val werOracleSql: String =
+    s"""WITH $toksSqlCte,
+      |base AS (SELECT doc_id, toks[1:40] AS ref FROM d WHERE len(toks) > 0),
+      |hy AS (SELECT doc_id, ref,
+      |    list_transform(list_filter(
+      |      list_transform(range(1, CAST(len(ref) + 1 AS BIGINT)),
+      |        i -> {'w': ref[CAST(i AS INTEGER)], 'i': i}),
+      |      s -> s['i'] % 7 != 4),
+      |      s -> CASE WHEN s['i'] % 5 = 3 THEN s['w'] || 'x' ELSE s['w'] END) AS hyp
+      |  FROM base),
+      |dic AS (SELECT doc_id, ref, hyp,
+      |    list_sort(list_distinct(list_concat(ref, hyp))) AS dict FROM hy),
+      |ec AS (SELECT doc_id,
+      |    CAST(len(ref) AS BIGINT) AS n_ref, CAST(len(hyp) AS BIGINT) AS n_hyp,
+      |    CASE WHEN len(dict) <= 200 THEN CAST(levenshtein(
+      |      list_reduce(list_transform(ref,
+      |        w -> chr(CAST(list_position(dict, w) + 47 AS INTEGER))), (a, b) -> a || b),
+      |      list_reduce(list_transform(hyp,
+      |        w -> chr(CAST(list_position(dict, w) + 47 AS INTEGER))), (a, b) -> a || b))
+      |      AS BIGINT) ELSE -1 END AS dist
+      |  FROM dic)
+      |SELECT doc_id, n_ref, n_hyp, dist,
+      |  CASE WHEN dist >= 0 AND n_ref > 0
+      |    THEN CAST(dist AS DOUBLE) / CAST(n_ref AS DOUBLE)
+      |    ELSE -1.0 END AS wer
+      |FROM ec ORDER BY doc_id""".stripMargin
 }

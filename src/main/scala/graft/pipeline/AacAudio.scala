@@ -39,7 +39,7 @@ import AacTables._
   */
 object AacAudio {
 
-  import Mp3Audio.BitReader // MSB-first, bounds-checked
+  import Bitstream.BitReader // MSB-first, bounds-checked
 
   private val SeqOnlyLong = 0
   private val SeqLongStart = 1

@@ -22,7 +22,7 @@ import AacTables._
   */
 object AacEncoder {
 
-  import Mp3Encoder.BitWriter
+  import Bitstream.BitWriter
 
   private val QMax = 320 // peak target: comfortably inside escape range
 

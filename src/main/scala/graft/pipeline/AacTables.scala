@@ -20,7 +20,8 @@ package graft.pipeline
   *    container; this engine substitutes deterministic ENGINE-LOCAL
   *    tables with the spec's exact domain semantics (band counts
   *    monotone to 1024/128; codebook dims/LAV/signedness/escape per
-  *    spec), built by an explicit Huffman construction over a
+  *    spec), built by the canonical-Huffman construction MP3's
+  *    engine-local tables share ([[Bitstream.canonicalCode]]) over a
   *    documented frequency model and machine-validated by
   *    [[validate]] as complete prefix codes (Kraft sum exactly 1).
   *    [[AacEncoder]] and [[AacAudio]] share them, so engine-minted
@@ -104,60 +105,6 @@ object AacTables {
     }
   }
 
-  /** Deterministic engine-local canonical codebook over `n` symbols
-    * from a weight model — the same construction (and the same exact
-    * tie-break discipline) as [[Mp3Tables]]' canonicalTab: Huffman
-    * merge with equal-weight ties broken by smallest leaf index, depth
-    * capped at 19 with Kraft re-balance, canonical code assignment by
-    * (length, index). Identical across JVM/Scala versions, so a
-    * stream minted by one build always bit-accounts on another.
-    */
-  private def canonicalLengths(freq: Array[Double]): Array[Int] = {
-    val n = freq.length
-    final case class Node(w: Double, leaves: List[Int], minLeaf: Int)
-    val heap = scala.collection.mutable.PriorityQueue.empty[Node](
-      Ordering.by((nd: Node) => (-nd.w, -nd.minLeaf)))
-    (0 until n).foreach(i => heap.enqueue(Node(freq(i), List(i), i)))
-    val depth = new Array[Int](n)
-    while (heap.size > 1) {
-      val a = heap.dequeue(); val b = heap.dequeue()
-      (a.leaves ++ b.leaves).foreach(i => depth(i) += 1)
-      heap.enqueue(Node(a.w + b.w, a.leaves ++ b.leaves,
-        math.min(a.minLeaf, b.minLeaf)))
-    }
-    val cap = 19
-    var i = 0
-    while (i < n) { if (depth(i) > cap) depth(i) = cap; i += 1 }
-    def kraft: Double = depth.map(d => math.pow(2.0, -d)).sum
-    while (kraft > 1.0 + 1e-12) {
-      val j = (0 until n).filter(depth(_) < cap).minBy(freq(_))
-      depth(j) += 1
-    }
-    while (1.0 - kraft > 1e-12) {
-      val cands = (0 until n).filter(j => depth(j) > 1 &&
-        kraft - math.pow(2.0, -depth(j)) + math.pow(2.0, -(depth(j) - 1)) <= 1.0 + 1e-12)
-      if (cands.isEmpty) sys.error("canonicalLengths: cannot complete Kraft")
-      val j = cands.maxBy(freq(_))
-      depth(j) -= 1
-    }
-    depth
-  }
-
-  private def canonicalCodes(depth: Array[Int]): Array[Long] = {
-    val n = depth.length
-    val order = (0 until n).sortBy(j => (depth(j), j))
-    val hcod = new Array[Long](n)
-    var code = 0L
-    var prevLen = 0
-    order.foreach { j =>
-      code <<= (depth(j) - prevLen)
-      prevLen = depth(j)
-      hcod(j) = code
-      code += 1
-    }
-    hcod
-  }
-
   private def specBook(id: Int, dim: Int, lav: Int,
                        signedVals: Boolean): SpecBook = {
     val radix = if (signedVals) 2 * lav + 1 else lav + 1
@@ -178,8 +125,8 @@ object AacTables {
       }
       w
     }
-    val hlen = canonicalLengths(freq)
-    SpecBook(id, dim, lav, signedVals, hlen, canonicalCodes(hlen))
+    val (hlen, hcod) = Bitstream.canonicalCode(freq)
+    SpecBook(id, dim, lav, signedVals, hlen, hcod)
   }
 
   /** Spectral codebooks 1-11 with the spec's exact domain shape:
@@ -211,65 +158,18 @@ object AacTables {
       val d = math.abs(i - 60)
       1.0 / ((d + 1.2) * (d + 1.2))
     }
-    val hlen = canonicalLengths(freq)
-    (hlen, canonicalCodes(hlen))
+    Bitstream.canonicalCode(freq)
   }
 
   // -------------------------------------------------- Huffman decode
-  /** Binary decode trie: node i has children at trie(2i)/(2i+1);
-    * leaf = −(symbol+1). Built once per book.
+  /** Decode tries per book; building them is the collision check
+    * [[validate]] forces.
     */
-  final class Trie(hlen: Array[Int], hcod: Array[Long]) {
-    private val nodes = scala.collection.mutable.ArrayBuffer(0, 0) // root's children
-    private def alloc(): Int = { val at = nodes.length; nodes += 0; nodes += 0; at }
-    (hlen.indices).foreach { sym =>
-      if (hlen(sym) > 0) {
-        var at = 0
-        var b = hlen(sym) - 1
-        while (b > 0) {
-          val bit = ((hcod(sym) >> b) & 1L).toInt
-          if (nodes(at + bit) == 0) nodes(at + bit) = alloc()
-          require(nodes(at + bit) > 0, s"prefix collision at symbol $sym")
-          at = nodes(at + bit)
-          b -= 1
-        }
-        val bit = (hcod(sym) & 1L).toInt
-        require(nodes(at + bit) == 0, s"duplicate code for symbol $sym")
-        nodes(at + bit) = -(sym + 1)
-      }
-    }
-    private val arr = nodes.toArray
-    /** Walk bits until a leaf; returns the symbol. */
-    def decode(nextBit: () => Int): Int = {
-      var at = 0
-      while (true) {
-        val v = arr(at + nextBit())
-        if (v < 0) return -v - 1
-        if (v == 0) throw new IllegalArgumentException("aac: invalid huffman code")
-        at = v
-      }
-      -1
-    }
-  }
-
-  lazy val SpecTries: Map[Int, Trie] =
-    SpecBooks.map { case (id, b) => id -> new Trie(b.hlen, b.hcod) }
-  lazy val SfTrie: Trie = new Trie(SfBook._1, SfBook._2)
+  lazy val SpecTries: Map[Int, Bitstream.Trie] =
+    SpecBooks.map { case (id, b) => id -> new Bitstream.Trie(b.hlen, b.hcod) }
+  lazy val SfTrie: Bitstream.Trie = new Bitstream.Trie(SfBook._1, SfBook._2)
 
   // ----------------------------------------------------------- windows
-  /** Modified Bessel I0 (power series, converges fast for |x| ≤ 30). */
-  private def besselI0(x: Double): Double = {
-    var sum = 1.0
-    var term = 1.0
-    var k = 1
-    while (k < 64 && term > 1e-18 * sum) {
-      term *= (x / (2.0 * k)) * (x / (2.0 * k))
-      sum += term
-      k += 1
-    }
-    sum
-  }
-
   /** Kaiser-Bessel-derived window (spec formula): w[n] =
     * sqrt(Σ_{0..n} v / Σ_{0..N/2} v) over the Kaiser kernel with the
     * spec's α (4.0 long, 6.0 short); right half mirrored. Satisfies
@@ -280,7 +180,7 @@ object AacTables {
     val half = n / 2
     val kernel = Array.tabulate(half + 1) { k =>
       val t = 2.0 * k / half - 1.0
-      besselI0(math.Pi * alpha * math.sqrt(math.max(0.0, 1.0 - t * t)))
+      Mdct.besselI0(math.Pi * alpha * math.sqrt(math.max(0.0, 1.0 - t * t)))
     }
     val cum = kernel.scanLeft(0.0)(_ + _).drop(1)
     val total = cum(half)

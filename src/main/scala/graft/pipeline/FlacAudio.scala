@@ -3,6 +3,8 @@ package graft.pipeline
 import java.io.ByteArrayOutputStream
 import java.security.MessageDigest
 
+import Bitstream.{BitReader, BitWriter}
+
 /** S2 — pure-JVM FLAC decode from the public container spec (RFC 9639):
   * CONSTANT / VERBATIM / FIXED order 0–4 / LPC order 1–32 subframes
   * with Rice-coded residuals (both 4- and 5-bit parameter widths,
@@ -11,7 +13,9 @@ import java.security.MessageDigest
   * CRC-8/CRC-16 verification — the complete subframe surface real
   * encoders emit. Anything outside it (reserved codes, corrupt frames)
   * throws → the S10 failed-status path, exactly like any other
-  * undecodable payload. Reference call sites that read FLAC:
+  * undecodable payload; a stream that ends mid-frame throws the shared
+  * reader's end-of-stream `IllegalStateException` ([[Bitstream]]).
+  * Reference call sites that read FLAC:
   * `modules/separation_filter.py:101` (librosa load),
   * `modules/models/utils.py:11-16` (format glob).
   *
@@ -55,75 +59,6 @@ object FlacAudio {
       i += 1
     }
     crc
-  }
-
-  // ---------------------------------------------------------- bit reader
-
-  private final class BitReader(val bytes: Array[Byte], var bitPos: Long) {
-    def bytePos: Int = (bitPos >> 3).toInt
-    def atByteBoundary: Boolean = (bitPos & 7) == 0
-    def alignToByte(): Unit = bitPos = (bitPos + 7) & ~7L
-    def remainingBits: Long = bytes.length.toLong * 8 - bitPos
-
-    def readBit(): Int = {
-      val b = (bytes((bitPos >> 3).toInt) >> (7 - (bitPos & 7).toInt)) & 1
-      bitPos += 1
-      b
-    }
-
-    /** Up to 56 bits, MSB first, unsigned. */
-    def readBits(n: Int): Long = {
-      require(n >= 0 && n <= 56, s"readBits($n)")
-      var out = 0L
-      var left = n
-      while (left > 0) {
-        val byteI = (bitPos >> 3).toInt
-        val bitI = (bitPos & 7).toInt
-        val avail = 8 - bitI
-        val take = math.min(avail, left)
-        val chunk = ((bytes(byteI) & 0xff) >> (avail - take)) & ((1 << take) - 1)
-        out = (out << take) | chunk
-        bitPos += take
-        left -= take
-      }
-      out
-    }
-
-    /** n-bit two's-complement signed read. */
-    def readSigned(n: Int): Long = {
-      val v = readBits(n)
-      if (n > 0 && (v & (1L << (n - 1))) != 0) v - (1L << n) else v
-    }
-
-    /** Count 0 bits until the terminating 1 (Rice quotient / unary). */
-    def readUnary(): Int = {
-      var q = 0
-      while (readBit() == 0) q += 1
-      q
-    }
-  }
-
-  // ---------------------------------------------------------- bit writer
-
-  private final class BitWriter {
-    private val buf = new ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-
-    def writeBit(b: Int): Unit = {
-      cur = (cur << 1) | (b & 1)
-      nBits += 1
-      if (nBits == 8) { buf.write(cur); cur = 0; nBits = 0 }
-    }
-
-    def writeBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { writeBit(((v >> i) & 1L).toInt); i -= 1 }
-    }
-
-    def alignToByte(): Unit = while (nBits != 0) writeBit(0)
-    def toArray: Array[Byte] = { require(nBits == 0); buf.toByteArray }
-    def size: Int = buf.size()
   }
 
   // ------------------------------------------------------------- tables
@@ -183,9 +118,9 @@ object FlacAudio {
 
   /** One subframe → `n` samples at `bps` bits. */
   private def readSubframe(r: BitReader, n: Int, bps: Int): Array[Long] = {
-    require(r.readBit() == 0, "subframe padding bit != 0")
+    require(r.bit() == 0, "subframe padding bit != 0")
     val tpe = r.readBits(6).toInt
-    val wastedFlag = r.readBit()
+    val wastedFlag = r.bit()
     val wasted = if (wastedFlag == 1) r.readUnary() + 1 else 0
     val eff = bps - wasted
     val out = new Array[Long](n)
@@ -269,20 +204,20 @@ object FlacAudio {
     */
   def decode(bytes: Array[Byte]): (Int, Array[Float]) = {
     require(bytes.length > 42 && bytes.startsWith("fLaC".getBytes), "not a FLAC stream")
-    val r = new BitReader(bytes, 32L)
+    val r = new BitReader(bytes, 32L, bytes.length * 8L)
     // metadata blocks: first MUST be STREAMINFO
     var last = false
     var info: StreamInfo = null
     var first = true
     while (!last) {
-      last = r.readBit() == 1
+      last = r.bit() == 1
       val tpe = r.readBits(7).toInt
       val len = r.readBits(24).toInt
       if (first) {
         require(tpe == 0, s"first metadata block type $tpe != STREAMINFO")
         info = parseStreamInfo(r)
         first = false
-      } else r.bitPos += len.toLong * 8
+      } else r.pos += len.toLong * 8
     }
     val nCh = info.channels
     val acc = Array.ofDim[Float](
@@ -290,18 +225,18 @@ object FlacAudio {
     val dyn = if (info.totalSamples > 0) null else new scala.collection.mutable.ArrayBuffer[Float]()
     var got = 0L
     while ((info.totalSamples > 0 && got < info.totalSamples) ||
-        (info.totalSamples == 0 && r.remainingBits >= 16)) {
+        (info.totalSamples == 0 && r.remaining >= 16)) {
       val frameStart = r.bytePos
       require(r.atByteBoundary, "frame not byte-aligned")
       val sync = r.readBits(14).toInt
       require(sync == 0x3ffe, f"bad frame sync $sync%x at byte $frameStart")
-      require(r.readBit() == 0, "reserved bit != 0")
-      r.readBit() // blocking strategy
+      require(r.bit() == 0, "reserved bit != 0")
+      r.bit() // blocking strategy
       val bsCode = r.readBits(4).toInt
       val srCode = r.readBits(4).toInt
       val chCode = r.readBits(4).toInt
       val bpsCode = r.readBits(3).toInt
-      require(r.readBit() == 0, "reserved bit != 0")
+      require(r.bit() == 0, "reserved bit != 0")
       readCodedNumber(r)
       val blockSize = bsCode match {
         case 0 => throw new IllegalArgumentException("reserved blocksize code 0")
@@ -401,14 +336,14 @@ object FlacAudio {
     out.write("fLaC".getBytes)
     // STREAMINFO: last-block flag set, type 0, length 34
     val si = new BitWriter
-    si.writeBits(1, 1); si.writeBits(0, 7); si.writeBits(34, 24)
-    si.writeBits(blockSize, 16); si.writeBits(blockSize, 16)
-    si.writeBits(0, 24); si.writeBits(0, 24)
-    si.writeBits(sr, 20); si.writeBits(0, 3) /* 1 ch */
-    si.writeBits(15, 5) /* bps 16 */
-    si.writeBits(pcm.length.toLong, 36)
-    md.digest().foreach(b => si.writeBits(b & 0xffL, 8))
-    out.write(si.toArray)
+    si.write(1, 1); si.write(0, 7); si.write(34, 24)
+    si.write(blockSize, 16); si.write(blockSize, 16)
+    si.write(0, 24); si.write(0, 24)
+    si.write(sr, 20); si.write(0, 3) /* 1 ch */
+    si.write(15, 5) /* bps 16 */
+    si.write(pcm.length.toLong, 36)
+    md.digest().foreach(b => si.write(b & 0xffL, 8))
+    out.write(si.toBytes)
 
     var frameNo = 0L
     var off = 0
@@ -417,23 +352,21 @@ object FlacAudio {
       if (n <= 0) return out.toByteArray
       val blk = java.util.Arrays.copyOfRange(pcm, off, off + n)
       val w = new BitWriter
-      w.writeBits(0x3ffe, 14) // sync
-      w.writeBits(0, 1); w.writeBits(0, 1) // reserved, fixed blocksize
-      w.writeBits(7, 4) // blocksize: 16-bit at end
-      w.writeBits(0, 4) // sample rate: STREAMINFO
-      w.writeBits(0, 4) // 1 channel
-      w.writeBits(4, 3) // bps 16
-      w.writeBits(0, 1)
+      w.write(0x3ffe, 14) // sync
+      w.write(0, 1); w.write(0, 1) // reserved, fixed blocksize
+      w.write(7, 4) // blocksize: 16-bit at end
+      w.write(0, 4) // sample rate: STREAMINFO
+      w.write(0, 4) // 1 channel
+      w.write(4, 3) // bps 16
+      w.write(0, 1)
       writeCodedNumber(w, frameNo)
-      w.writeBits(n - 1L, 16)
-      w.alignToByte()
-      val hdr = w.toArray
+      w.write(n - 1L, 16)
+      val hdr = w.toBytes
       val w2 = new BitWriter
-      hdr.foreach(b => w2.writeBits(b & 0xffL, 8))
-      w2.writeBits(crc8(hdr, 0, hdr.length).toLong, 8)
+      hdr.foreach(b => w2.write(b & 0xffL, 8))
+      w2.write(crc8(hdr, 0, hdr.length).toLong, 8)
       writeSubframe(w2, blk, lpc)
-      w2.alignToByte()
-      val body = w2.toArray
+      val body = w2.toBytes
       out.write(body)
       val fcrc = crc16(body, 0, body.length)
       out.write((fcrc >> 8) & 0xff); out.write(fcrc & 0xff)
@@ -444,16 +377,16 @@ object FlacAudio {
   }
 
   private def writeCodedNumber(w: BitWriter, v: Long): Unit =
-    if (v < 0x80) w.writeBits(v, 8)
+    if (v < 0x80) w.write(v, 8)
     else {
       // lead byte with k leading 1s + (k−1) continuation bytes of 6 bits
       var k = 2
       while (k <= 7 && v >= (1L << (6 * (k - 1) + (7 - k)))) k += 1
       val headBits = 7 - k
-      w.writeBits((0xff << (8 - k)) & 0xff | ((v >> (6 * (k - 1))) & ((1 << headBits) - 1)), 8)
+      w.write((0xff << (8 - k)) & 0xff | ((v >> (6 * (k - 1))) & ((1 << headBits) - 1)), 8)
       var i = k - 2
       while (i >= 0) {
-        w.writeBits(0x80L | ((v >> (6 * i)) & 0x3f), 8)
+        w.write(0x80L | ((v >> (6 * i)) & 0x3f), 8)
         i -= 1
       }
     }
@@ -463,23 +396,23 @@ object FlacAudio {
     val n = blk.length
     val constant = blk.forall(_ == blk(0))
     if (constant) {
-      w.writeBits(0, 1); w.writeBits(0, 6); w.writeBits(0, 1)
-      w.writeBits(blk(0) & 0xffff, 16)
+      w.write(0, 1); w.write(0, 6); w.write(0, 1)
+      w.write(blk(0) & 0xffff, 16)
       return
     }
     val order = math.min(2, n - 1)
     val useLpc = lpc && order == 2
     // header: 1 pad bit, 6 type bits, 1 wasted-bits flag. LPC order 2:
     // coefs [3, -1] at precision 5, shift 1 — pred = (3·s[i−1] − s[i−2]) >> 1
-    w.writeBits(0, 1)
-    w.writeBits(if (useLpc) 32 + (order - 1) else 8 + order, 6)
-    w.writeBits(0, 1)
+    w.write(0, 1)
+    w.write(if (useLpc) 32 + (order - 1) else 8 + order, 6)
+    w.write(0, 1)
     var i = 0
-    while (i < order) { w.writeBits(blk(i) & 0xffff, 16); i += 1 }
+    while (i < order) { w.write(blk(i) & 0xffff, 16); i += 1 }
     if (useLpc) {
-      w.writeBits(4, 4)  // precision − 1
-      w.writeBits(1, 5)  // shift
-      w.writeBits(3L & 0x1f, 5); w.writeBits(-1L & 0x1f, 5)
+      w.write(4, 4)  // precision − 1
+      w.write(1, 5)  // shift
+      w.write(3L & 0x1f, 5); w.write(-1L & 0x1f, 5)
     }
     def predict(idx: Int): Long =
       if (useLpc) (3 * blk(idx - 1) - blk(idx - 2)) >> 1
@@ -492,16 +425,16 @@ object FlacAudio {
     val mean = if (zig.isEmpty) 0L else zig.sum / math.max(1, zig.length)
     var param = 0
     while (param < 14 && (1L << (param + 1)) < mean + 1) param += 1
-    w.writeBits(0, 2) // 4-bit Rice
-    w.writeBits(0, 4) // partition order 0
-    w.writeBits(param.toLong, 4)
+    w.write(0, 2) // 4-bit Rice
+    w.write(0, 4) // partition order 0
+    w.write(param.toLong, 4)
     zig.foreach { v =>
       val q = v >>> param
       require(q < (1L << 24), "rice quotient blow-up") // cannot happen at 16-bit order-2
       var j = 0L
-      while (j < q) { w.writeBit(0); j += 1 }
-      w.writeBit(1)
-      w.writeBits(v & ((1L << param) - 1), param)
+      while (j < q) { w.write(0, 1); j += 1 }
+      w.write(1, 1)
+      w.write(v & ((1L << param) - 1), param)
     }
   }
 }

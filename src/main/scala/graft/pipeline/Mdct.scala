@@ -20,6 +20,22 @@ package graft.pipeline
   */
 object Mdct {
 
+  /** Modified Bessel I0 (power series, converges fast for |x| ≤ 30):
+    * the Kaiser kernel of AAC's KBD window and of MP3's polyphase
+    * prototype.
+    */
+  def besselI0(x: Double): Double = {
+    var sum = 1.0
+    var term = 1.0
+    var k = 1
+    while (k < 64 && term > 1e-18 * sum) {
+      term *= (x / (2.0 * k)) * (x / (2.0 * k))
+      sum += term
+      k += 1
+    }
+    sum
+  }
+
   private final class Plan(n: Int) {
     val half: Int = n / 2
     val fftSize: Int = n / 4

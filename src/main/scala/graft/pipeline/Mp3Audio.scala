@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import Bitstream.{BitReader, Trie}
 import Mp3Tables._
 
 /** S2 — pure-JVM MPEG Layer III waveform decode (MPEG-1, MPEG-2 LSF
@@ -17,32 +18,12 @@ import Mp3Tables._
   * overshoot-rewind rule) or the frame is rejected — so a foreign
   * stream that exercises an engine-local table desyncs loudly and the
   * frame routes to the S10 failed path instead of emitting corrupt
-  * audio. Frames are decoded with per-frame fault isolation
-  * ([[decodeWithStats]]); [[decode]] requires a majority of frames to
-  * decode cleanly.
+  * audio. Codewords decode through the shared [[Bitstream.Trie]], one
+  * bit at a time against the granule's part2_3_length bound. Frames
+  * are decoded with per-frame fault isolation ([[decodeWithStats]]);
+  * [[decode]] requires a majority of frames to decode cleanly.
   */
 object Mp3Audio {
-
-  // ------------------------------------------------------- bit reader
-  final class BitReader(val data: Array[Byte], startBit: Int, val endBit: Int) {
-    var pos: Int = startBit
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        v = (v << 1) | bit()
-        i += 1
-      }
-      v
-    }
-    def bit(): Int = {
-      if (pos >= endBit) throw new IllegalStateException("bitstream exhausted")
-      val b = (data(pos >> 3) >> (7 - (pos & 7))) & 1
-      pos += 1
-      b
-    }
-    def remaining: Int = endBit - pos
-  }
 
   // ----------------------------------------------------------- header
   final case class Header(offset: Int, version: Int, srIdx: Int, sampleRate: Int,
@@ -262,38 +243,13 @@ object Mp3Audio {
   }
 
   // -------------------------------------------------- Huffman decode
-  private def decodeOne(br: BitReader, dec: Decoder, limit: Int): Int = {
-    var len = 0
-    var code = 0
-    while (len < 19 + 1) {
-      if (br.pos >= limit) throw new IllegalStateException("huffman ran past part2_3_length")
-      code = (code << 1) | br.bit()
-      len += 1
-      val v = dec.lookup(len, code)
-      if (v >= 0) return v
-    }
-    throw new IllegalStateException("invalid huffman codeword")
-  }
-
-  private def decodeQuad(br: BitReader, dec: QuadDecoder, limit: Int): Int = {
-    var len = 0
-    var code = 0
-    while (len < 7) {
-      if (br.pos >= limit) throw new IllegalStateException("count1 ran past limit")
-      code = (code << 1) | br.bit()
-      len += 1
-      val v = dec.lookup(len, code)
-      if (v >= 0) return v
-    }
-    throw new IllegalStateException("invalid count1 codeword")
-  }
-
   /** Huffman-decode one granule's 576 integer spectral values, under
-    * strict bit accounting. Returns (is values, count of values read).
+    * strict bit accounting: no codeword bit is read at or past `limit`
+    * (granule start + part2_3_length). Returns (is values, count of
+    * values read).
     */
-  def readSpectrum(br: BitReader, g: GranuleInfo, h: Header, part2End: Int): (Array[Int], Int) = {
+  def readSpectrum(br: BitReader, g: GranuleInfo, h: Header, limit: Long): (Array[Int], Int) = {
     val is = new Array[Int](576)
-    val limit = part2End + 0 // already includes part2 bits; limit is granule start + part2_3_length
     val sfbL = sfbLong(h.version, h.srIdx)
     val (region1Start, region2Start) =
       if (g.windowSwitching) {
@@ -304,34 +260,42 @@ object Mp3Audio {
         val r1c = math.min(g.region0Count + g.region1Count + 2, sfbL.length - 1)
         (sfbL(r0c), sfbL(r1c))
       }
+    val nextBit = () => {
+      if (br.pos >= limit) throw new IllegalStateException("huffman ran past part2_3_length")
+      br.bit()
+    }
     val nBig = math.min(g.bigValues * 2, 576)
+    var region = -1
+    var tab: HuffTable = null
+    var trie: Trie = null
     var i = 0
     while (i < nBig) {
-      val region = if (i < region1Start) 0 else if (i < region2Start) 1 else 2
-      val tid = g.tableSelect(region)
-      decoder(tid) match {
-        case None =>
-          is(i) = 0; is(i + 1) = 0
-        case Some(dec) =>
-          val v = decodeOne(br, dec, limit)
-          val tab = dec.table
-          var x = v / tab.xlen
-          var y = v % tab.xlen
-          if (x == 15 && tab.linbits > 0) x += br.bits(tab.linbits)
-          if (x != 0 && br.bit() == 1) x = -x
-          if (y == 15 && tab.linbits > 0) y += br.bits(tab.linbits)
-          if (y != 0 && br.bit() == 1) y = -y
-          is(i) = x; is(i + 1) = y
+      val r = if (i < region1Start) 0 else if (i < region2Start) 1 else 2
+      if (r != region) { // a region's table resolves at its first pair
+        region = r
+        tab = bigTable(g.tableSelect(r)).orNull
+        trie = if (tab == null) null else bigTrie(tab.id)
+      }
+      if (tab == null) {
+        is(i) = 0; is(i + 1) = 0
+      } else {
+        val v = trie.decode(nextBit)
+        var x = v / tab.xlen
+        var y = v % tab.xlen
+        if (x == 15 && tab.linbits > 0) x += br.bits(tab.linbits)
+        if (x != 0 && br.bit() == 1) x = -x
+        if (y == 15 && tab.linbits > 0) y += br.bits(tab.linbits)
+        if (y != 0 && br.bit() == 1) y = -y
+        is(i) = x; is(i + 1) = y
       }
       i += 2
     }
     // count1 region: quads until the bit budget is consumed
-    val qdec = if (g.count1Table == 0) quadA else quadB
+    val qtrie = count1Tries(g.count1Table)
     while (br.pos < limit && i <= 576 - 4) {
-      val mark = br.pos
       var ok = true
       var quad = 0
-      try quad = decodeQuad(br, qdec, limit)
+      try quad = qtrie.decode(nextBit)
       catch { case _: IllegalStateException => ok = false }
       if (!ok) {
         br.pos = limit // spec overshoot rule: discard the partial quad
@@ -349,7 +313,6 @@ object Mp3Audio {
           j += 1
         }
         if (fail) {
-          br.pos = mark
           br.pos = limit
         } else {
           is(i) = vals(0); is(i + 1) = vals(1); is(i + 2) = vals(2); is(i + 3) = vals(3)

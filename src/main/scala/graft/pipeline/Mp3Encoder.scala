@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import Bitstream.BitWriter
 import Mp3Tables._
 
 /** Minimal MPEG-1 Layer III mono CBR encoder — the fixture-minting
@@ -16,28 +17,6 @@ import Mp3Tables._
   * all table rates), mono.
   */
 object Mp3Encoder {
-
-  final class BitWriter {
-    private val buf = new scala.collection.mutable.ArrayBuffer[Byte]()
-    private var cur = 0
-    private var nbits = 0
-    def write(value: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((value >> i) & 1)
-        nbits += 1
-        if (nbits == 8) { buf += cur.toByte; cur = 0; nbits = 0 }
-        i -= 1
-      }
-    }
-    def bitLength: Int = buf.length * 8 + nbits
-    def padToByte(): Unit = if (nbits > 0) write(0, 8 - nbits)
-    def padToBytes(total: Int): Unit = {
-      padToByte()
-      while (buf.length < total) buf += 0.toByte
-    }
-    def toBytes: Array[Byte] = { padToByte(); buf.toArray }
-  }
 
   // ------------------------------------------------- analysis bank
   /** Modulated analysis filters A(k)(n) = h(n)·cos(π/32·(k+½)(n−16)) —

@@ -13,17 +13,19 @@ package graft.pipeline
   *  - Bitrate / sample-rate tables, scalefactor-band partitions,
   *    pretab, alias-reduction coefficients, LSF scalefactor slen
   *    decomposition: spec-exact.
-  *  - Huffman tables 0-12 and the two count1 tables: spec-exact
+  *  - Huffman tables 0-10 and the two count1 tables: spec-exact
   *    (hlen, hcod) listings, machine-validated by [[validate]] as
   *    COMPLETE prefix codes (Kraft sum exactly 1, zero collisions) —
   *    a transcription error in a length or a duplicated code cannot
   *    pass that check.
-  *  - Huffman tables 13, 15, 16-23, 24-31 (the 16x16 codebooks): the
-  *    exact ISO bit codes are large data tables that cannot be
-  *    verified in this container; this engine substitutes
-  *    deterministic ENGINE-LOCAL canonical Huffman codebooks with the
-  *    spec's exact domain semantics (16x16 value pairs, per-table
-  *    linbits, value-15 escape). [[Mp3Encoder]] and [[Mp3Audio]] share
+  *  - Huffman tables 11-13, 15, 16-23, 24-31: the exact ISO bit codes
+  *    are large data tables that cannot be verified in this
+  *    container; this engine substitutes deterministic ENGINE-LOCAL
+  *    codebooks from the canonical construction AAC shares
+  *    ([[Bitstream.canonicalCode]]), with the spec's exact domain
+  *    semantics (8x8 or 16x16 value pairs, per-table linbits,
+  *    value-15 escape). Every table decodes through one
+  *    [[Bitstream.Trie]]. [[Mp3Encoder]] and [[Mp3Audio]] share
   *    them, so engine-minted streams round-trip bit-exactly; a FOREIGN
   *    stream that selects one of these tables fails [[Mp3Audio]]'s
   *    strict per-granule bit accounting (consumed bits must equal
@@ -227,69 +229,19 @@ object Mp3Tables {
   val Count1B: (Array[Int], Array[Int]) =
     (Array.fill(16)(4), Array.tabulate(16)(v => 15 - v))
 
-  /** Deterministic engine-local canonical codebook for an NxN domain:
-    * package-merge-free construction — assign lengths from a documented
-    * frequency model (geometric decay by value magnitude), then
-    * canonical codes. Complete by construction (validated like the
-    * spec tables). Used for tables 13/15/16-23/24-31; see the object
-    * scaladoc for why.
+  /** Deterministic engine-local codebook for an NxN domain: the shared
+    * canonical construction ([[Bitstream.canonicalCode]]) over a
+    * documented frequency model (smaller pairs vastly more common).
+    * Complete by construction (validated like the spec tables). Used
+    * for tables 11-13/15/16-23/24-31; see the object scaladoc for why.
     */
   private def canonicalTab(id: Int, xlen: Int, linbits: Int): HuffTable = {
-    val n = xlen * xlen
-    // frequency model: smaller pairs vastly more common
-    val freq = Array.tabulate(n) { i =>
+    val freq = Array.tabulate(xlen * xlen) { i =>
       val x = i / xlen; val y = i % xlen
       1.0 / ((x + 1.3) * (x + 1.3) * (y + 1.3) * (y + 1.3))
     }
-    // Huffman lengths via a heap merge. The frequency model has exact
-    // ties (freq(x,y)==freq(y,x)), so the ordering breaks ties by the
-    // smallest leaf index — equal-weight nodes dequeue in a FIXED order,
-    // making the codebook identical across JVM/Scala library versions
-    // (a stream minted by one build always bit-accounts on another).
-    final case class Node(w: Double, leaves: List[Int], minLeaf: Int)
-    var heap = scala.collection.mutable.PriorityQueue.empty[Node](
-      Ordering.by((nd: Node) => (-nd.w, -nd.minLeaf)))
-    (0 until n).foreach(i => heap.enqueue(Node(freq(i), List(i), i)))
-    val depth = new Array[Int](n)
-    while (heap.size > 1) {
-      val a = heap.dequeue(); val b = heap.dequeue()
-      (a.leaves ++ b.leaves).foreach(i => depth(i) += 1)
-      heap.enqueue(Node(a.w + b.w, a.leaves ++ b.leaves, math.min(a.minLeaf, b.minLeaf)))
-    }
-    // cap at 19 bits (the spec's own max code length) by flattening:
-    // raise any deeper leaf to 19 and re-balance by lowering the
-    // shallowest leaves until Kraft sums to exactly 1
-    val cap = 19
-    var i = 0
-    while (i < n) { if (depth(i) > cap) depth(i) = cap; i += 1 }
-    def kraft: Double = depth.map(d => math.pow(2.0, -d)).sum
-    while (kraft > 1.0 + 1e-12) {
-      // deepen the least-frequent leaf that is below cap
-      val j = (0 until n).filter(depth(_) < cap).minBy(freq(_))
-      depth(j) += 1
-    }
-    while (1.0 - kraft > 1e-12) {
-      // shallow the most frequent leaf whose raise keeps Kraft <= 1
-      val cands = (0 until n).filter(j => depth(j) > 1 &&
-        kraft - math.pow(2.0, -depth(j)) + math.pow(2.0, -(depth(j) - 1)) <= 1.0 + 1e-12)
-      if (cands.isEmpty) sys.error(s"canonicalTab($id): cannot complete Kraft")
-      val j = cands.maxBy(freq(_))
-      depth(j) -= 1
-    }
-    // canonical code assignment: sort by (length, index)
-    val order = (0 until n).sortBy(j => (depth(j), j))
-    val hlen = new Array[Int](n)
-    val hcod = new Array[Int](n)
-    var code = 0L
-    var prevLen = 0
-    order.foreach { j =>
-      code <<= (depth(j) - prevLen)
-      prevLen = depth(j)
-      hlen(j) = depth(j)
-      hcod(j) = code.toInt
-      code += 1
-    }
-    HuffTable(id, xlen, linbits, hlen, hcod)
+    val (hlen, hcod) = Bitstream.canonicalCode(freq)
+    HuffTable(id, xlen, linbits, hlen, hcod.map(_.toInt))
   }
 
   private val T13 = canonicalTab(13, 16, 0)
@@ -323,58 +275,28 @@ object Mp3Tables {
     case _ => throw new IllegalArgumentException(s"invalid huffman table id $id")
   }
 
-  /** Tables whose bit codes are spec-exact (foreign streams decode
-    * correctly); the rest are engine-local (see object scaladoc).
-    */
-  def isSpecExact(id: Int): Boolean = id <= 10
+  // ------------------------------------------------- decode tries
+  private def trie(hlen: Array[Int], hcod: Array[Int]): Bitstream.Trie =
+    new Bitstream.Trie(hlen, hcod.map(_.toLong))
 
-  // ------------------------------------------------- decode LUT build
-  /** Flat decode structure: walk bit-by-bit via (len, prefix) lookup.
-    * Built once per table: map from (len << 24 | code) to value index.
+  /** Decode trie by big-values table id (null for 0, 4 and 14); tables
+    * 16-23 and 24-31 share one code each, so one trie each.
     */
-  final class Decoder(val table: HuffTable) {
-    private val m = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
-    private var maxLenV = 0
-    locally {
-      var i = 0
-      while (i < table.hlen.length) {
-        val l = table.hlen(i)
-        m.put((l.toLong << 32) | (table.hcod(i).toLong & 0xffffffffL), i)
-        if (l > maxLenV) maxLenV = l
-        i += 1
-      }
-    }
-    def maxLen: Int = maxLenV
-    /** -1 if (len, code) is not a codeword. */
-    def lookup(len: Int, code: Int): Int = {
-      val v = m.get((len.toLong << 32) | (code.toLong & 0xffffffffL))
-      if (v == null) -1 else v.intValue()
+  private lazy val bigTries: Array[Bitstream.Trie] = {
+    val t16 = trie(T16.hlen, T16.hcod)
+    val t24 = trie(T24.hlen, T24.hcod)
+    Array.tabulate(32) {
+      case 0 | 4 | 14 => null
+      case id if id >= 24 => t24
+      case id if id >= 16 => t16
+      case id => val tb = bigTable(id).get; trie(tb.hlen, tb.hcod)
     }
   }
+  def bigTrie(id: Int): Bitstream.Trie = bigTries(id)
 
-  private val decoderCache = new java.util.concurrent.ConcurrentHashMap[Int, Decoder]()
-  def decoder(id: Int): Option[Decoder] =
-    bigTable(id).map(tab => decoderCache.computeIfAbsent(id, _ => new Decoder(tab)))
-
-  final class QuadDecoder(hlen: Array[Int], hcod: Array[Int]) {
-    private val m = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
-    private var maxLenV = 0
-    locally {
-      var i = 0
-      while (i < 16) {
-        m.put((hlen(i).toLong << 32) | (hcod(i).toLong & 0xffffffffL), i)
-        if (hlen(i) > maxLenV) maxLenV = hlen(i)
-        i += 1
-      }
-    }
-    def maxLen: Int = maxLenV
-    def lookup(len: Int, code: Int): Int = {
-      val v = m.get((len.toLong << 32) | (code.toLong & 0xffffffffL))
-      if (v == null) -1 else v.intValue()
-    }
-  }
-  lazy val quadA = new QuadDecoder(Count1A._1, Count1A._2)
-  lazy val quadB = new QuadDecoder(Count1B._1, Count1B._2)
+  /** Count1 decode tries by count1table_select: table A, table B. */
+  lazy val count1Tries: Array[Bitstream.Trie] =
+    Array(Count1A, Count1B).map { case (hlen, hcod) => trie(hlen, hcod) }
 
   // ------------------------------------------------------- validation
   /** Structural proof for every codebook: complete prefix code (Kraft
@@ -387,7 +309,6 @@ object Mp3Tables {
       // exact Kraft in units of 2^-20 (max len 19)
       var sum = 0L
       val unit = 1L << 20
-      val seen = new java.util.HashSet[Long]()
       var i = 0
       while (i < hlen.length) {
         val l = hlen(i)
@@ -395,24 +316,14 @@ object Mp3Tables {
         else {
           sum += unit >> l
           if (hcod(i) >>> l != 0) errs += s"$name: entry $i code ${hcod(i)} overflows length $l"
-          if (!seen.add((l.toLong << 32) | hcod(i).toLong))
-            errs += s"$name: duplicate codeword len=$l code=${hcod(i)}"
         }
         i += 1
       }
       if (sum != unit) errs += s"$name: Kraft sum ${sum.toDouble / unit} != 1"
-      // prefix-freeness: no codeword may be a prefix of another
-      var a = 0
-      while (a < hlen.length) {
-        var b = 0
-        while (b < hlen.length) {
-          if (a != b && hlen(a) < hlen(b) &&
-              (hcod(b) >>> (hlen(b) - hlen(a))) == hcod(a))
-            errs += s"$name: code $a (len ${hlen(a)}) is a prefix of code $b"
-          b += 1
-        }
-        a += 1
-      }
+      // building the decode trie rejects a duplicate codeword or one
+      // that is a prefix of another
+      try trie(hlen, hcod)
+      catch { case e: IllegalArgumentException => errs += s"$name: ${e.getMessage}" }
     }
     Seq(T1, T2, T3, T5, T6, T7, T8, T9, T10, T11, T12, T13, T15, T16, T24)
       .foreach(tb => check(s"table${tb.id}", tb.hlen, tb.hcod))
@@ -465,7 +376,7 @@ object Mp3Tables {
       var i = 0
       while (i < n) {
         val r = 2.0 * i / (n - 1) - 1.0
-        h(i) *= besselI0(beta * math.sqrt(math.max(0.0, 1 - r * r))) / besselI0(beta)
+        h(i) *= Mdct.besselI0(beta * math.sqrt(math.max(0.0, 1 - r * r))) / Mdct.besselI0(beta)
         i += 1
       }
       val s = h.sum
@@ -498,18 +409,6 @@ object Mp3Tables {
       it += 1
     }
     h
-  }
-
-  private def besselI0(x: Double): Double = {
-    var sum = 1.0
-    var term = 1.0
-    var k = 1
-    while (k < 64 && term > 1e-18 * sum) {
-      term *= (x / (2.0 * k)) * (x / (2.0 * k))
-      sum += term
-      k += 1
-    }
-    sum
   }
 
   // --------------------------------------------------- IMDCT windows

@@ -41,8 +41,6 @@ object Ogg {
                         serial: Int, seq: Int, segments: Array[Int],
                         body: Array[Byte]) {
     def isBos: Boolean = (headerType & 2) != 0
-    def isEos: Boolean = (headerType & 4) != 0
-    def isContinuation: Boolean = (headerType & 1) != 0
   }
 
   private def u(b: Byte): Int = b & 0xff

@@ -2,13 +2,14 @@ package graft.pipeline
 
 /** Vorbis I header layer: the LSB-first bit reader, the three header
   * packets (identification, comment, setup) and the full codebook
-  * machinery — parse, spec codeword assignment, Huffman decode, VQ
-  * lookup. Unlike MP3, Vorbis is SELF-DESCRIBING: every codebook
-  * arrives in the stream's own setup header, so there is no fixed
-  * spec data table this offline build cannot verify — the codeword
-  * assignment algorithm is pinned by the specification's own worked
-  * example in VorbisSpec. Audio-packet decode (floor1/residue/MDCT)
-  * builds on this layer.
+  * machinery — parse, spec codeword assignment, Huffman decode through
+  * the codecs' shared trie ([[Bitstream.Trie]]), VQ lookup. Unlike
+  * MP3, Vorbis is SELF-DESCRIBING: every codebook arrives in the
+  * stream's own setup header, so there is no fixed spec data table
+  * this offline build cannot verify — the codeword assignment
+  * algorithm is pinned by the specification's own worked example in
+  * VorbisSpec. Audio-packet decode (floor1/residue/MDCT) builds on
+  * this layer.
   */
 object VorbisHeaders {
 
@@ -101,21 +102,10 @@ object VorbisHeaders {
   final case class Codebook(dim: Int, entries: Int, lengths: Array[Int],
                             codewords: Array[Int], lookupType: Int,
                             vq: Array[Double]) {
+    private lazy val trie =
+      new Bitstream.Trie(lengths, codewords.map(_ & 0xffffffffL))
     /** Huffman-decode one scalar entry index. */
-    def decodeEntry(br: BitReader): Int = {
-      var code = 0
-      var len = 0
-      while (len < 33) {
-        code = (code << 1) | br.bit()
-        len += 1
-        var i = 0
-        while (i < entries) {
-          if (lengths(i) == len && codewords(i) == code) return i
-          i += 1
-        }
-      }
-      throw new IllegalStateException("invalid vorbis codeword")
-    }
+    def decodeEntry(br: BitReader): Int = trie.decode(() => br.bit())
     /** VQ vector for one entry (lookup type 1 or 2). */
     def vector(entry: Int): Array[Double] = {
       require(lookupType != 0, "scalar codebook has no VQ table")

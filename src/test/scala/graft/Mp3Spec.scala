@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{AudioProbe, Mp3Audio, Mp3Encoder, Mp3Tables, WavAudio}
+import graft.pipeline.{AudioProbe, Bitstream, Mp3Audio, Mp3Encoder, Mp3Tables, WavAudio}
 
 /** Pure-JVM MPEG Layer III codec: structural table proofs, stagewise
   * identities, full roundtrips, and a real foreign-encoder stream.
@@ -28,7 +28,7 @@ class Mp3Spec extends AnyFunSuite {
       }
       if (esc > 0) vals ++= Seq(15 + esc, -(15 + esc), 15 + 1, -(15 + esc / 2), 16, 0)
       if (vals.length % 2 == 1) vals += 0
-      val bw = new Mp3Encoder.BitWriter
+      val bw = new Bitstream.BitWriter
       var i = 0
       while (i < vals.length) { Mp3Encoder.writePair(bw, tid, vals(i), vals(i + 1)); i += 2 }
       val nbits = bw.bitLength
@@ -36,7 +36,7 @@ class Mp3Spec extends AnyFunSuite {
       val g = Mp3Audio.GranuleInfo(nbits, vals.length / 2, 210, 0, windowSwitching = false,
         0, false, Array(tid, tid, tid), Array(0, 0, 0), 20, 0, 0, 0, 0)
       val h = Mp3Audio.parseHeader(Array[Byte](0xff.toByte, 0xfb.toByte, 0x58, 0xc0.toByte), 0).get
-      val br = new Mp3Audio.BitReader(bytes, 0, bytes.length * 8)
+      val br = new Bitstream.BitReader(bytes, 0, bytes.length * 8)
       val (is, n) = Mp3Audio.readSpectrum(br, g, h, nbits)
       assert(n >= vals.length, s"table $tid: read $n of ${vals.length}")
       assert(is.take(vals.length).sameElements(vals), s"table $tid roundtrip mismatch")
@@ -45,15 +45,15 @@ class Mp3Spec extends AnyFunSuite {
 
   test("count1 quad write/read is identity for both tables") {
     for (c1t <- Seq(0, 1)) {
-      val dec = if (c1t == 0) Mp3Tables.quadA else Mp3Tables.quadB
+      val trie = Mp3Tables.count1Tries(c1t)
       val (hlen, hcod) = if (c1t == 0) Mp3Tables.Count1A else Mp3Tables.Count1B
       for (v <- 0 until 16) {
-        val bw = new Mp3Encoder.BitWriter
+        val bw = new Bitstream.BitWriter
         bw.write(hcod(v), hlen(v))
         val bytes = bw.toBytes
-        val br = new Mp3Audio.BitReader(bytes, 0, bytes.length * 8)
-        var len = 0; var code = 0; var got = -1
-        while (got < 0 && len < 7) { code = (code << 1) | br.bit(); len += 1; got = dec.lookup(len, code) }
+        val br = new Bitstream.BitReader(bytes, 0, bytes.length * 8)
+        val got = trie.decode(() => br.bit())
+        val len = br.pos
         assert(got == v && len == hlen(v), s"count1 table $c1t value $v")
       }
     }
