@@ -109,6 +109,46 @@ class MdctSpec extends AnyFunSuite {
     sha256(bb.array)
   }
 
+  /** 20 s at 16 kHz: voiced bursts (a 220 Hz harmonic pair under a
+    * 2.5 Hz envelope) over seeded noise, with 2 s of digital silence in
+    * the middle. Its 320,000 samples run the decoders' output buffers
+    * past the 65,536-sample growth point that the 1 s pins never reach.
+    */
+  private def speechLike(sr: Int): Array[Float] = {
+    val rnd = new scala.util.Random(20)
+    Array.tabulate(20 * sr) { i =>
+      val t = i.toDouble / sr
+      if (t >= 9.0 && t < 11.0) 0f
+      else {
+        val env = math.max(0.0, math.sin(2 * math.Pi * 2.5 * t))
+        (env * (0.3 * math.sin(2 * math.Pi * 220 * t) + 0.15 * math.sin(2 * math.Pi * 660 * t)) +
+          0.02 * rnd.nextGaussian()).toFloat
+      }
+    }
+  }
+
+  /** Decoded float32 PCM of [[speechLike]] per codec, pinned before the
+    * decode loops moved onto reused buffers and table-driven CRCs.
+    */
+  private val pinnedLong = Map(
+    "pcm flac 20s" -> "394e521e90fd172ab189046ec5f686a6256006c7316c5cd802f23bc01f10da72",
+    "pcm mp3 lsf 20s" -> "9f65ae2c6aeb1ab31ad085ca026b48efac956b651b0c4fcfbed035b57da120d4",
+    "pcm vorbis 20s" -> "de12025bca336e54c7cc17cc75e4fc73d285d599ba14d818f316dc8963b81c1f",
+    "pcm aac 20s" -> "9d17d862b09965cb8d2ce3294f32de5048220e817a27aeeec5873c05ca5bff57")
+
+  test("decoded PCM pins: FLAC, MP3 LSF, Vorbis and AAC ADTS on a 20 s 16 kHz stream") {
+    val x = speechLike(16000)
+    val streams = Map(
+      "flac" -> FlacAudio.encode(16000, x),
+      "mp3 lsf" -> Mp3Encoder.encodeLsf(16000, x),
+      "vorbis" -> VorbisEncoder.encode(16000, x),
+      "aac" -> AacEncoder.encode(16000, x))
+    val got = streams.map { case (k, b) => s"pcm $k 20s" -> pcmSha(b) }
+    assert(got.keySet == pinnedLong.keySet)
+    val moved = pinnedLong.keys.toSeq.sorted.filter(k => got(k) != pinnedLong(k))
+    assert(moved.isEmpty, s"pinned hashes changed: ${moved.map(k => s"$k -> ${got(k)}").mkString(", ")}")
+  }
+
   test("encoder byte pins: AAC ADTS/M4A and Vorbis equal/mixed on a 1 s tone") {
     val aac = tone(24000)
     val vorbis = tone(16000)
