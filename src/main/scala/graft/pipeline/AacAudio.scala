@@ -311,17 +311,33 @@ object AacAudio {
 
   // ------------------------------------------------------- filterbank
   /** Per-channel synthesis state: 1024-sample overlap + the previous
-    * frame's window shape (the left half of every window uses it).
+    * frame's window shape (the left half of every window uses it), and
+    * the IMDCTs and frame buffers it reuses for the whole stream.
     */
   final class ChannelState {
     val overlap = new Array[Double](1024)
     var prevShape = 0
+    private[AacAudio] val imdctLong = new Mdct.Inverse(2048)
+    private[AacAudio] val imdctShort = new Mdct.Inverse(256)
+    private[AacAudio] val frame = new Array[Double](2048)
+    private[AacAudio] val out = new Array[Double](1024)
   }
 
   /** Composite 2048-sample window for the long sequences; for
-    * EIGHT_SHORT the 8 short blocks are windowed individually.
+    * EIGHT_SHORT the 8 short blocks are windowed individually. Built
+    * once per (sequence, 1-bit shapes); callers only read the halves.
     */
   private[pipeline] def longWindowHalves(seq: Int, prevShape: Int, curShape: Int)
+      : (Array[Double], Array[Double]) = {
+    val h = longHalves(seq * 4 + prevShape * 2 + curShape)
+    if (h != null) h else buildLongWindowHalves(seq, prevShape, curShape) // throws
+  }
+
+  private lazy val longHalves: Array[(Array[Double], Array[Double])] =
+    Array.tabulate(16)(key =>
+      if (key / 4 == SeqEightShort) null else buildLongWindowHalves(key / 4, (key >> 1) & 1, key & 1))
+
+  private def buildLongWindowHalves(seq: Int, prevShape: Int, curShape: Int)
       : (Array[Double], Array[Double]) = {
     val left = new Array[Double](1024)
     val right = new Array[Double](1024)
@@ -364,14 +380,16 @@ object AacAudio {
   }
 
   /** Synthesize one frame (1024 output samples) from a channel's
-    * dequantized spectra, updating `state`.
+    * dequantized spectra, updating `state`. The result is `state.out`,
+    * which the channel's next frame overwrites.
     */
   def synthesize(ch: ChannelSpec, state: ChannelState): Array[Double] = {
-    val frame = new Array[Double](2048)
+    val frame = state.frame
     if (ch.info.short) {
+      java.util.Arrays.fill(frame, 0.0)
       var w = 0
       while (w < 8) {
-        val t = Mdct.inverse(ch.spec(w), 256)
+        val t = state.imdctShort(ch.spec(w))
         val wl = window(if (w == 0) state.prevShape else ch.info.windowShape, 256)
         val wr = window(ch.info.windowShape, 256)
         val base = 448 + 128 * w
@@ -383,7 +401,7 @@ object AacAudio {
         w += 1
       }
     } else {
-      val t = Mdct.inverse(ch.spec(0), 2048)
+      val t = state.imdctLong(ch.spec(0))
       val (wl, wr) = longWindowHalves(ch.info.windowSequence,
         state.prevShape, ch.info.windowShape)
       var i = 0
@@ -393,7 +411,7 @@ object AacAudio {
         i += 1
       }
     }
-    val out = new Array[Double](1024)
+    val out = state.out
     var i = 0
     while (i < 1024) {
       out(i) = state.overlap(i) + frame(i)
@@ -505,46 +523,54 @@ object AacAudio {
     var off = 0
     var sr = -1
     var channels = -1
-    val frames = scala.collection.mutable.ArrayBuffer.empty[Array[Array[Double]]]
+    var mono: MonoOut = null
     var states: Array[ChannelState] = null
     while (off + 7 <= bytes.length) {
       val h = parseAdtsHeader(bytes, off)
       if (sr < 0) { sr = h.sampleRate; channels = h.channels }
       else require(sr == h.sampleRate && channels == h.channels,
         "aac: mid-stream parameter change")
-      if (states == null) states = Array.fill(channels)(new ChannelState)
+      if (states == null) {
+        states = Array.fill(channels)(new ChannelState)
+        mono = new MonoOut(channels)
+      }
+      require(h.frameLen <= bytes.length - off,
+        s"aac: truncated ADTS frame at byte $off: length ${h.frameLen}, ${bytes.length - off} bytes left")
       val br = new BitReader(bytes, (off + h.headerLen) * 8, (off + h.frameLen) * 8)
       val chans = decodeRawBlock(br, states)
       require(chans.length == channels,
         s"aac: frame decoded ${chans.length} channels, header says $channels")
       require(br.remaining < 8, // strict bit accounting: only byte pad left
         s"aac: ${br.remaining} unconsumed payload bits")
-      frames += chans
+      mono.add(chans)
       off += h.frameLen
     }
     require(off == bytes.length, "aac: trailing bytes after last ADTS frame")
-    require(frames.nonEmpty, "aac: no ADTS frames")
-    (sr, interleaveMono(frames.toArray, channels))
+    require(mono != null, "aac: no ADTS frames")
+    (sr, mono.result)
   }
 
-  /** Frames → mono float stream, dropping the 1024-sample priming. */
-  private def interleaveMono(frames: Array[Array[Array[Double]]],
-      channels: Int): Array[Float] = {
-    val n = (frames.length - 1) * 1024
-    val out = new Array[Float](math.max(0, n))
-    var f = 1
-    while (f < frames.length) {
-      var i = 0
-      while (i < 1024) {
-        var acc = 0.0
-        var c = 0
-        while (c < channels) { acc += frames(f)(c)(i); c += 1 }
-        out((f - 1) * 1024 + i) = (acc / channels).toFloat
-        i += 1
+  /** Frames → mono float stream (the channel mean), dropping the first
+    * frame's 1024-sample priming.
+    */
+  private final class MonoOut(channels: Int) {
+    private val pcm = new PcmBuffer
+    private var primed = false
+
+    def add(frame: Array[Array[Double]]): Unit =
+      if (!primed) primed = true
+      else {
+        var i = 0
+        while (i < 1024) {
+          var acc = 0.0
+          var c = 0
+          while (c < channels) { acc += frame(c)(i); c += 1 }
+          pcm += (acc / channels).toFloat
+          i += 1
+        }
       }
-      f += 1
-    }
-    out
+
+    def result: Array[Float] = pcm.result
   }
 
   // --------------------------------------------------------- M4A front
@@ -655,18 +681,19 @@ object AacAudio {
     val t = demuxM4a(bytes)
     val channels = t.chanCfg
     val states = Array.fill(channels)(new ChannelState)
+    val mono = new MonoOut(channels)
     var off = t.chunkOffset
-    val frames = t.sizes.map { sz =>
+    t.sizes.foreach { sz =>
       require(off + sz <= bytes.length, "aac: sample outside file")
       val br = new BitReader(bytes, off.toInt * 8, (off + sz).toInt * 8)
       val chans = decodeRawBlock(br, states)
       require(chans.length == channels, "aac: channel count mismatch")
       require(br.remaining < 8,
         s"aac: ${br.remaining} unconsumed sample bits")
+      mono.add(chans)
       off += sz
-      chans
     }
-    (SampleRates(t.srIdx), interleaveMono(frames, channels))
+    (SampleRates(t.srIdx), mono.result)
   }
 
   /** Container sniff used by [[WavAudio.decode]]. */

@@ -28,34 +28,41 @@ object FlacAudio {
 
   // ---------------------------------------------------------------- CRC
 
+  /** The CRC of the one byte `b`, MSB first, through the `width`-bit
+    * polynomial `poly`: the entry for `b` of a byte-at-a-time table.
+    */
+  private def crcOfByte(b: Int, width: Int, poly: Int): Int = {
+    val top = 1 << (width - 1)
+    val mask = (1 << width) - 1
+    var crc = b << (width - 8)
+    var i = 0
+    while (i < 8) {
+      crc = if ((crc & top) != 0) ((crc << 1) ^ poly) & mask else (crc << 1) & mask
+      i += 1
+    }
+    crc
+  }
+
+  private val Crc8Table: Array[Int] = Array.tabulate(256)(crcOfByte(_, 8, 0x07))
+  private val Crc16Table: Array[Int] = Array.tabulate(256)(crcOfByte(_, 16, 0x8005))
+
   /** CRC-8, polynomial 0x07, init 0 — frame-header checksum. */
-  private[pipeline] def crc8(bytes: Array[Byte], from: Int, until: Int): Int = {
+  private[graft] def crc8(bytes: Array[Byte], from: Int, until: Int): Int = {
     var crc = 0
     var i = from
     while (i < until) {
-      crc ^= bytes(i) & 0xff
-      var b = 0
-      while (b < 8) {
-        crc = if ((crc & 0x80) != 0) ((crc << 1) ^ 0x07) & 0xff else (crc << 1) & 0xff
-        b += 1
-      }
+      crc = Crc8Table((crc ^ bytes(i)) & 0xff)
       i += 1
     }
     crc
   }
 
   /** CRC-16, polynomial 0x8005, init 0 — whole-frame checksum. */
-  private[pipeline] def crc16(bytes: Array[Byte], from: Int, until: Int): Int = {
+  private[graft] def crc16(bytes: Array[Byte], from: Int, until: Int): Int = {
     var crc = 0
     var i = from
     while (i < until) {
-      crc ^= (bytes(i) & 0xff) << 8
-      var b = 0
-      while (b < 8) {
-        crc = if ((crc & 0x8000) != 0) ((crc << 1) ^ 0x8005) & 0xffff
-        else (crc << 1) & 0xffff
-        b += 1
-      }
+      crc = ((crc << 8) ^ Crc16Table(((crc >> 8) ^ bytes(i)) & 0xff)) & 0xffff
       i += 1
     }
     crc
@@ -116,18 +123,17 @@ object FlacAudio {
     }
   }
 
-  /** One subframe → `n` samples at `bps` bits. */
-  private def readSubframe(r: BitReader, n: Int, bps: Int): Array[Long] = {
+  /** One subframe → `n` samples at `bps` bits, into `out[0, n)`. */
+  private def readSubframe(r: BitReader, n: Int, bps: Int, out: Array[Long]): Unit = {
     require(r.bit() == 0, "subframe padding bit != 0")
     val tpe = r.readBits(6).toInt
     val wastedFlag = r.bit()
     val wasted = if (wastedFlag == 1) r.readUnary() + 1 else 0
     val eff = bps - wasted
-    val out = new Array[Long](n)
     tpe match {
       case 0 => // CONSTANT
         val v = r.readSigned(eff)
-        java.util.Arrays.fill(out, v)
+        java.util.Arrays.fill(out, 0, n, v)
       case 1 => // VERBATIM
         var i = 0
         while (i < n) { out(i) = r.readSigned(eff); i += 1 }
@@ -163,7 +169,6 @@ object FlacAudio {
       var i = 0
       while (i < n) { out(i) <<= wasted; i += 1 }
     }
-    out
   }
 
   /** Rice-coded residual (spec §9.2.7), written into `out[order..n)`. */
@@ -195,6 +200,9 @@ object FlacAudio {
       }
       p += 1
     }
+    // a first partition shorter than the predictor order leaves a tail
+    // unread; it decodes as zero residual
+    if (idx < n) java.util.Arrays.fill(out, idx, n, 0L)
   }
 
   /** Decode a FLAC container to (sampleRate, mono float samples in
@@ -222,7 +230,10 @@ object FlacAudio {
     val nCh = info.channels
     val acc = Array.ofDim[Float](
       if (info.totalSamples > 0) info.totalSamples.toInt else 0)
-    val dyn = if (info.totalSamples > 0) null else new scala.collection.mutable.ArrayBuffer[Float]()
+    val dyn = if (info.totalSamples > 0) null else new PcmBuffer
+    // per channel, the current frame's samples, reused while the block
+    // size holds
+    var chans = Array.fill(nCh)(new Array[Long](0))
     var got = 0L
     while ((info.totalSamples > 0 && got < info.totalSamples) ||
         (info.totalSamples == 0 && r.remaining >= 16)) {
@@ -267,28 +278,40 @@ object FlacAudio {
       }
       val hdrCrc = crc8(bytes, frameStart, r.bytePos)
       require(r.readBits(8).toInt == hdrCrc, "frame header CRC-8 mismatch")
-      // subframes
-      val chans: Array[Array[Long]] = chCode match {
+      // subframes, decorrelated in place; the buffers stay exactly one
+      // block long, so an index past the block fails as it always has
+      if (chans(0).length != blockSize) chans = Array.fill(nCh)(new Array[Long](blockSize))
+      chCode match {
         case c if c <= 7 =>
           require(c + 1 == nCh, "frame channel count != STREAMINFO")
-          Array.tabulate(nCh)(_ => readSubframe(r, blockSize, bps))
+          var k = 0
+          while (k < nCh) { readSubframe(r, blockSize, bps, chans(k)); k += 1 }
         case 8 => // left/side
           require(nCh == 2, s"stereo-decorrelated frame in a $nCh-channel stream")
-          val l = readSubframe(r, blockSize, bps)
-          val s = readSubframe(r, blockSize, bps + 1)
-          Array(l, Array.tabulate(blockSize)(i => l(i) - s(i)))
+          val l = chans(0); val s = chans(1)
+          readSubframe(r, blockSize, bps, l)
+          readSubframe(r, blockSize, bps + 1, s)
+          var i = 0
+          while (i < blockSize) { s(i) = l(i) - s(i); i += 1 }
         case 9 => // right/side
           require(nCh == 2, s"stereo-decorrelated frame in a $nCh-channel stream")
-          val s = readSubframe(r, blockSize, bps + 1)
-          val rr = readSubframe(r, blockSize, bps)
-          Array(Array.tabulate(blockSize)(i => rr(i) + s(i)), rr)
+          val s = chans(0); val rr = chans(1)
+          readSubframe(r, blockSize, bps + 1, s)
+          readSubframe(r, blockSize, bps, rr)
+          var i = 0
+          while (i < blockSize) { s(i) = rr(i) + s(i); i += 1 }
         case 10 => // mid/side
           require(nCh == 2, s"stereo-decorrelated frame in a $nCh-channel stream")
-          val m = readSubframe(r, blockSize, bps)
-          val s = readSubframe(r, blockSize, bps + 1)
-          Array.tabulate(2, blockSize) { (c, i) =>
-            val mm = (m(i) << 1) | (s(i) & 1)
-            if (c == 0) (mm + s(i)) >> 1 else (mm - s(i)) >> 1
+          val m = chans(0); val s = chans(1)
+          readSubframe(r, blockSize, bps, m)
+          readSubframe(r, blockSize, bps + 1, s)
+          var i = 0
+          while (i < blockSize) {
+            val side = s(i)
+            val mm = (m(i) << 1) | (side & 1)
+            m(i) = (mm + side) >> 1
+            s(i) = (mm - side) >> 1
+            i += 1
           }
         case c => throw new IllegalArgumentException(s"reserved channel code $c")
       }
@@ -310,7 +333,7 @@ object FlacAudio {
       }
       got += blockSize
     }
-    (info.sampleRate, if (dyn == null) acc else dyn.toArray)
+    (info.sampleRate, if (dyn == null) acc else dyn.result)
   }
 
   // ------------------------------------------------------------- encode

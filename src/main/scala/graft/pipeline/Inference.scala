@@ -33,6 +33,13 @@ object ModelCache {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
   def getOrCreate[M <: AnyRef](name: String)(load: => M): M =
     cache.computeIfAbsent(name, _ => load).asInstanceOf[M]
+
+  /** Caches `model` under `name` (or drops the entry if null) and returns
+    * what was there before (null if nothing): a test wraps the cached
+    * session to watch its calls, then puts the old one back.
+    */
+  private[graft] def swap(name: String, model: AnyRef): AnyRef =
+    if (model == null) cache.remove(name) else cache.put(name, model)
 }
 
 object InferenceOp {

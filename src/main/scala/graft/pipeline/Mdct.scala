@@ -15,8 +15,9 @@ package graft.pipeline
   * the MDCT → IMDCT cascade unity under overlap-add with a
   * Princen-Bradley window (the TDAC identity pinned in VorbisSpec).
   *
-  * Twiddle tables are O(n) and memoized per size. Sizes must be powers
-  * of two ≥ 8: AAC uses 256 and 2048, Vorbis 64..8192.
+  * Twiddle tables are O(n) and memoized per size; a decoder resolves
+  * them once per stream through [[Inverse]]. Sizes must be powers of
+  * two ≥ 8: AAC uses 256 and 2048, Vorbis 64..8192.
   */
 object Mdct {
 
@@ -59,12 +60,14 @@ object Mdct {
     plans.computeIfAbsent(n, _ => new Plan(n))
   }
 
-  /** DCT-IV of the first N values of `x`: C[m] = Σ_k x[k]·cos(π/N·(m + ½)(k + ½)). */
-  private def dct4(x: Array[Double], p: Plan): Array[Double] = {
+  /** DCT-IV of the first N values of `x` into `out`: C[m] = Σ_k x[k]·
+    * cos(π/N·(m + ½)(k + ½)). `re`/`im` are N/2-long work buffers; every
+    * slot of them and of `out` is written before it is read.
+    */
+  private def dct4(x: Array[Double], p: Plan, re: Array[Double], im: Array[Double],
+                   out: Array[Double]): Unit = {
     val nn = p.half
     val m = p.fftSize
-    val re = new Array[Double](m)
-    val im = new Array[Double](m)
     var q = 0
     while (q < m) {
       // (x[2q] + i·x[N−1−2q])·e^(−iθ), stored bit-reversed for the FFT
@@ -96,7 +99,6 @@ object Mdct {
       }
       size *= 2
     }
-    val out = new Array[Double](nn)
     q = 0
     while (q < m) {
       val c = p.twCos(q); val s = p.twSin(q)
@@ -104,24 +106,36 @@ object Mdct {
       out(nn - 1 - 2 * q) = re(q) * s - im(q) * c
       q += 1
     }
-    out
   }
 
-  /** IMDCT: n output samples from the n/2 lines of `spec`. */
-  def inverse(spec: Array[Double], n: Int): Array[Double] = {
-    val p = plan(n)
-    val nn = p.half
-    val c = dct4(spec, p)
+  /** The IMDCT of one size n with its plan resolved and its buffers
+    * allocated once, so a decoder pays neither per block: it keeps one
+    * per block size for a whole stream. [[apply]] returns the n-sample
+    * buffer [[out]], which the next call overwrites. Not thread-safe.
+    */
+  final class Inverse(n: Int) {
+    private val p = plan(n)
+    private val re = new Array[Double](p.fftSize)
+    private val im = new Array[Double](p.fftSize)
+    private val c = new Array[Double](p.half)
     val out = new Array[Double](n)
-    val q = nn / 2
-    // y[j] = c(j + N/2): direct for j < N/2, mirrored for j < 3N/2,
-    // then periodic
-    var j = 0
-    while (j < q) { out(j) = c(j + q); j += 1 }
-    while (j < 3 * q) { out(j) = -c(3 * q - 1 - j); j += 1 }
-    while (j < n) { out(j) = -c(j - 3 * q); j += 1 }
-    out
+
+    /** n output samples from the n/2 lines of `spec`. */
+    def apply(spec: Array[Double]): Array[Double] = {
+      dct4(spec, p, re, im, c)
+      val q = p.half / 2
+      // y[j] = c(j + N/2): direct for j < N/2, mirrored for j < 3N/2,
+      // then periodic
+      var j = 0
+      while (j < q) { out(j) = c(j + q); j += 1 }
+      while (j < 3 * q) { out(j) = -c(3 * q - 1 - j); j += 1 }
+      while (j < n) { out(j) = -c(j - 3 * q); j += 1 }
+      out
+    }
   }
+
+  /** IMDCT: n output samples from the n/2 lines of `spec`, in a fresh array. */
+  def inverse(spec: Array[Double], n: Int): Array[Double] = new Inverse(n)(spec)
 
   /** MDCT of the windowed block x·w: n/2 lines from n = x.length
     * samples. The exact transpose of [[inverse]], scaled by 4/n.
@@ -144,7 +158,8 @@ object Mdct {
       u(i) = x(a) * win(a) - x(b) * win(b)
       i += 1
     }
-    val c = dct4(u, p)
+    val c = new Array[Double](nn)
+    dct4(u, p, new Array[Double](p.fftSize), new Array[Double](p.fftSize), c)
     i = 0
     while (i < nn) { c(i) = c(i) * 4.0 / n; i += 1 }
     c

@@ -503,14 +503,31 @@ object Mp3Audio {
   }
 
   // ------------------------------------------------------------ IMDCT
-  private lazy val imdctLongCos: Array[Array[Double]] = Array.tabulate(36, 18)((i, k) =>
-    math.cos(math.Pi / 72.0 * (2 * i + 1 + 18) * (2 * k + 1)))
-  private lazy val imdctShortCos: Array[Array[Double]] = Array.tabulate(12, 6)((i, k) =>
-    math.cos(math.Pi / 24.0 * (2 * i + 1 + 6) * (2 * k + 1)))
+  /** cos(π/72·(2i + 1 + 18)(2k + 1)) at [18i + k], i < 36, k < 18. */
+  private val imdctLongCos: Array[Double] = Array.tabulate(36 * 18)(ik =>
+    math.cos(math.Pi / 72.0 * (2 * (ik / 18) + 1 + 18) * (2 * (ik % 18) + 1)))
+  /** cos(π/24·(2i + 1 + 6)(2k + 1)) at [6i + k], i < 12, k < 6. */
+  private val imdctShortCos: Array[Double] = Array.tabulate(12 * 6)(ik =>
+    math.cos(math.Pi / 24.0 * (2 * (ik / 6) + 1 + 6) * (2 * (ik % 6) + 1)))
 
   /** 36-sample IMDCT+window output for one subband's 18 lines. */
   def imdctBlock(lines: Array[Double], off: Int, blockType: Int, isShort: Boolean): Array[Double] = {
     val out = new Array[Double](36)
+    imdctInto(lines, off, blockType, isShort, out)
+    out
+  }
+
+  /** [[imdctBlock]] into the 36 slots of `out`. A subband whose 18 lines
+    * are all zero skips the transform: every sum would be +0.0 and
+    * every window is non-negative, so its output is +0.0 throughout.
+    */
+  private def imdctInto(lines: Array[Double], off: Int, blockType: Int, isShort: Boolean,
+                        out: Array[Double]): Unit = {
+    val win = if (isShort) WinShort else windowFor(blockType)
+    var nz = 0
+    while (nz < 18 && lines(off + nz) == 0.0) nz += 1
+    if (nz == 18 || isShort) java.util.Arrays.fill(out, 0.0)
+    if (nz == 18) return
     if (isShort) {
       var w = 0
       while (w < 3) {
@@ -519,57 +536,56 @@ object Mp3Audio {
           var sum = 0.0
           var k = 0
           while (k < 6) {
-            sum += lines(off + 3 * k + w) * imdctShortCos(i)(k)
+            sum += lines(off + 3 * k + w) * imdctShortCos(6 * i + k)
             k += 1
           }
-          out(6 + 6 * w + i) += sum * WinShort(i)
+          out(6 + 6 * w + i) += sum * win(i)
           i += 1
         }
         w += 1
       }
     } else {
-      val win = windowFor(blockType)
       var i = 0
       while (i < 36) {
         var sum = 0.0
         var k = 0
         while (k < 18) {
-          sum += lines(off + k) * imdctLongCos(i)(k)
+          sum += lines(off + k) * imdctLongCos(18 * i + k)
           k += 1
         }
         out(i) = sum * win(i)
         i += 1
       }
     }
-    out
   }
 
   /** Hybrid synthesis for one granule: 576 lines → 32 subbands × 18
-    * time samples, with overlap-add state `store(sb)(0..17)` and
-    * frequency inversion.
+    * time samples into `out`, with overlap-add state `store(sb)(0..17)`,
+    * frequency inversion and a 36-sample work buffer `x`.
     */
-  def hybridSynthesis(xr: Array[Double], g: GranuleInfo, store: Array[Array[Double]]): Array[Array[Double]] = {
-    val out = Array.ofDim[Double](32, 18)
+  def hybridSynthesis(xr: Array[Double], g: GranuleInfo, store: Array[Array[Double]],
+                      out: Array[Array[Double]], x: Array[Double]): Unit = {
     val shortBlock = g.windowSwitching && g.blockType == 2
     var sb = 0
     while (sb < 32) {
       val isShort = shortBlock && (!g.mixedBlock || sb >= 2)
       val bt = if (isShort) 2 else if (shortBlock && g.mixedBlock) 0 else g.blockType
-      val x = imdctBlock(xr, 18 * sb, if (isShort) 2 else bt, isShort)
+      imdctInto(xr, 18 * sb, if (isShort) 2 else bt, isShort, x)
+      val o = out(sb)
+      val st = store(sb)
       var i = 0
       while (i < 18) {
-        out(sb)(i) = x(i) + store(sb)(i)
-        store(sb)(i) = x(18 + i)
+        o(i) = x(i) + st(i)
+        st(i) = x(18 + i)
         i += 1
       }
       // frequency inversion: odd time samples of odd subbands
       if ((sb & 1) == 1) {
         i = 1
-        while (i < 18) { out(sb)(i) = -out(sb)(i); i += 2 }
+        while (i < 18) { o(i) = -o(i); i += 2 }
       }
       sb += 1
     }
-    out
   }
 
   // ------------------------------------------- polyphase synthesis
@@ -592,6 +608,13 @@ object Mp3Audio {
     private val acc = new Array[Double](512)
     /** One time step: 32 subband samples in → 32 PCM samples out. */
     def step(s: Array[Array[Double]], t: Int): Array[Double] = {
+      val out = new Array[Double](32)
+      step(s, t, out, 0)
+      out
+    }
+
+    /** [[step]] into `out[off, off + 32)`. */
+    def step(s: Array[Array[Double]], t: Int, out: Array[Double], off: Int): Unit = {
       var k = 0
       while (k < 32) {
         val v = s(k)(t)
@@ -602,21 +625,25 @@ object Mp3Audio {
         }
         k += 1
       }
-      val out = new Array[Double](32)
-      System.arraycopy(acc, 0, out, 0, 32)
+      System.arraycopy(acc, 0, out, off, 32)
       System.arraycopy(acc, 32, acc, 0, 480)
       java.util.Arrays.fill(acc, 480, 512, 0.0)
-      out
     }
   }
 
   // -------------------------------------------------- frame pipeline
   final case class FrameStat(offset: Int, ok: Boolean, err: String, tables: Set[Int])
 
+  /** One channel's decode state: overlap-add store, synthesis filter,
+    * granule-0 scalefactors, and the granule work buffers it reuses.
+    */
   final class ChannelState {
     val store = Array.ofDim[Double](32, 18)
     val synth = new Synth
     var prevScalefacs: Scalefacs = new Scalefacs
+    val sub = Array.ofDim[Double](32, 18)
+    val imdct = new Array[Double](36)
+    val pcm = new Array[Double](576)
   }
 
   /** Skip ID3v2 at `off` if present; returns the new offset. */
@@ -670,7 +697,8 @@ object Mp3Audio {
       else bytes.length
 
     val stats = Seq.newBuilder[FrameStat]
-    var pcm: Array[scala.collection.mutable.ArrayBuffer[Float]] = null
+    var pcm: Array[PcmBuffer] = null
+    var frameOut: Array[Array[Float]] = null
     var sampleRate = 0
     var channels = 1
     var states: Array[ChannelState] = null
@@ -688,8 +716,8 @@ object Mp3Audio {
             sampleRate = h.sampleRate
             channels = h.channels
             states = Array.fill(h.channels)(new ChannelState)
-            pcm = Array.fill(h.channels)(
-              new scala.collection.mutable.ArrayBuffer[Float](1 << 16))
+            pcm = Array.fill(h.channels)(new PcmBuffer)
+            frameOut = Array.ofDim[Float](h.channels, 1152)
           }
           val frameEnd = math.min(off + h.frameBytes, end)
           val mainStart = off + 4 + (if (h.hasCrc) 2 else 0) + h.sideInfoBytes
@@ -712,21 +740,21 @@ object Mp3Audio {
                 if (startInRes < 0) {
                   stats += FrameStat(off, ok = false, "bit reservoir underrun", Set.empty)
                   // frames contribute silence to keep durations aligned
-                  pcm.foreach(_ ++= Iterator.fill(h.samplesPerFrame)(0f))
+                  pcm.foreach(_.appendZeros(h.samplesPerFrame))
                 } else {
                   val tablesUsed = side.granules.flatten
                     .flatMap(g => g.tableSelect.take(if (g.windowSwitching) 2 else 3))
                     .filter(_ > 0).toSet
                   try {
-                    val samples = decodeFrame(h, side, combined, startInRes, states)
+                    decodeFrame(h, side, combined, startInRes, states, frameOut)
                     var c = 0
-                    while (c < channels) { pcm(c) ++= samples(c); c += 1 }
+                    while (c < channels) { pcm(c).appendFrom(frameOut(c), 0, h.samplesPerFrame); c += 1 }
                     stats += FrameStat(off, ok = true, "", tablesUsed)
                   } catch {
                     case e: Exception =>
                       stats += FrameStat(off, ok = false,
                         s"${e.getClass.getSimpleName}: ${e.getMessage}", tablesUsed)
-                      pcm.foreach(_ ++= Iterator.fill(h.samplesPerFrame)(0f))
+                      pcm.foreach(_.appendZeros(h.samplesPerFrame))
                   }
                 }
                 // keep at most 511 trailing bytes (max main_data_begin)
@@ -740,10 +768,16 @@ object Mp3Audio {
       }
     }
     require(sampleRate > 0, "no decodable MPEG frames")
+    val chans = pcm.map(_.result)
     val mono =
-      if (channels == 1) pcm(0).toArray
-      else Array.tabulate(pcm(0).length)(i => (pcm(0)(i) + pcm(1)(i)) / 2f)
-    (sampleRate, mono, stats.result(), pcm.map(_.toArray))
+      if (channels == 1) chans(0)
+      else {
+        val m = new Array[Float](chans(0).length)
+        var i = 0
+        while (i < m.length) { m(i) = (chans(0)(i) + chans(1)(i)) / 2f; i += 1 }
+        m
+      }
+    (sampleRate, mono, stats.result(), chans)
   }
 
   /** Strict decode for the production seam: at least half the frames
@@ -758,11 +792,11 @@ object Mp3Audio {
     (sr, wave)
   }
 
+  /** Decode one frame's granules into `out(ch)[0, samplesPerFrame)`. */
   private def decodeFrame(h: Header, side: SideInfo, main: Array[Byte], startByte: Int,
-                          states: Array[ChannelState]): Array[Array[Float]] = {
+                          states: Array[ChannelState], out: Array[Array[Float]]): Unit = {
     val br = new BitReader(main, startByte * 8, main.length * 8)
     val nch = h.channels
-    val out = Array.ofDim[Float](nch, h.samplesPerFrame)
     var gr = 0
     while (gr < h.granules) {
       val xr = new Array[Array[Double]](nch)
@@ -787,31 +821,26 @@ object Mp3Audio {
       }
       stereo(xr, side.granules(gr), sfs, h)
       ch = 0
-      val chOut = new Array[Array[Double]](nch)
       while (ch < nch) {
         val g = side.granules(gr)(ch)
+        val st = states(ch)
         aliasReduce(xr(ch), g)
-        val sub = hybridSynthesis(xr(ch), g, states(ch).store)
+        hybridSynthesis(xr(ch), g, st.store, st.sub, st.imdct)
         // polyphase: 18 steps of 32 samples
-        val pcm = new Array[Double](576)
         var t = 0
-        while (t < 18) {
-          val block = states(ch).synth.step(sub, t)
-          System.arraycopy(block, 0, pcm, 32 * t, 32)
-          t += 1
-        }
-        chOut(ch) = pcm
+        while (t < 18) { st.synth.step(st.sub, t, st.pcm, 32 * t); t += 1 }
         ch += 1
       }
-      var i = 0
-      while (i < 576) {
-        ch = 0
-        while (ch < nch) { out(ch)(gr * 576 + i) = chOut(ch)(i).toFloat; ch += 1 }
-        i += 1
+      ch = 0
+      while (ch < nch) {
+        val pcm = states(ch).pcm
+        val o = out(ch)
+        var i = 0
+        while (i < 576) { o(gr * 576 + i) = pcm(i).toFloat; i += 1 }
+        ch += 1
       }
       gr += 1
     }
-    out
   }
 
   /** True if the payload looks like an MP3 stream (ID3v2 tag or a

@@ -366,12 +366,45 @@ object VorbisAudio {
     val setup = readSetup(pkts(2), ident.channels)
     val ch = ident.channels
     val modeBits = math.max(ilog(setup.modes.length - 1), 0)
-    val out = Array.fill(ch)(new scala.collection.mutable.ArrayBuffer[Float](1 << 16))
-    var prevTail: Array[Array[Double]] = null // per channel, windowed samples [prevN/2, prevN)
+    /** The block size an audio packet's mode selects, or 0 if its first
+      * bits do not name one (the packet then fails below as well).
+      */
+    def blockSize(pkt: Array[Byte]): Int =
+      try {
+        val br = new BitReader(pkt)
+        require(br.bit() == 0, "not an audio packet")
+        val mode = setup.modes(if (modeBits == 0) 0 else br.bits(modeBits))
+        if (mode.blockFlag) ident.blocksize1 else ident.blocksize0
+      } catch { case _: Exception => 0 }
+    // Output per channel: (prevN + n)/4 samples for each consecutive
+    // pair of blocks. Summed over every packet whose mode bits parse,
+    // this is exact for a clean stream and an upper bound otherwise (a
+    // packet that fails drops its pairs, which only shortens the output).
+    val audio = pkts.drop(3)
+    var bound = 0L
+    var lastN = 0
+    audio.foreach { pkt =>
+      val n = blockSize(pkt)
+      if (n > 0) {
+        if (lastN > 0) bound += lastN / 4 + n / 4
+        lastN = n
+      }
+    }
+    val out = Array.fill(ch)(new PcmBuffer(math.min(bound, Int.MaxValue - 8L).toInt))
+    // per mapping and submap, the channels it muxes
+    val submapChannels = setup.mappings.map(m =>
+      Array.tabulate(m.submaps)(sm => (0 until ch).filter(m.mux(_) == sm).toArray))
+    val maxN = math.max(ident.blocksize0, ident.blocksize1)
+    // the IMDCT per block size, and per channel the current and previous
+    // windowed block and the spectrum, all reused across packets
+    val imdcts = scala.collection.mutable.Map.empty[Int, Mdct.Inverse]
+    var cur = Array.ofDim[Double](ch, maxN)
+    var prev = Array.ofDim[Double](ch, maxN) // windowed samples [prevN/2, prevN) used
+    val spec = new Array[Double](maxN / 2)
     var prevN = 0
     var ok = 0
     var failed = 0
-    pkts.drop(3).foreach { pkt =>
+    audio.foreach { pkt =>
       try {
         val br = new BitReader(pkt)
         require(br.bit() == 0, "not an audio packet")
@@ -412,31 +445,35 @@ object VorbisAudio {
         val residueVecs = Array.ofDim[Array[Double]](ch)
         var sm = 0
         while (sm < mapping.submaps) {
-          val chIdx = (0 until ch).filter(mapping.mux(_) == sm)
-          val dnd = chIdx.map(noDecode(_)).toArray
+          val chIdx = submapChannels(mode.mapping)(sm)
+          val dnd = new Array[Boolean](chIdx.length)
+          var k = 0
+          while (k < chIdx.length) { dnd(k) = noDecode(chIdx(k)); k += 1 }
           val r = setup.residues(mapping.submapResidue(sm))
           val vs = decodeResidue(br, r, setup.codebooks, chIdx.length, n2, dnd)
-          chIdx.zipWithIndex.foreach { case (cc, k) => residueVecs(cc) = vs(k) }
+          k = 0
+          while (k < chIdx.length) { residueVecs(chIdx(k)) = vs(k); k += 1 }
           sm += 1
         }
         inverseCoupling(mapping, residueVecs)
         // floor curve × residue, IMDCT, window, overlap-add
         val win = windowShaped(n, ident.blocksize0, prevShort, nextShort)
-        val blockOut = Array.ofDim[Double](ch, n)
+        val imdct = imdcts.getOrElseUpdate(n, new Mdct.Inverse(n))
         c = 0
         while (c < ch) {
-          val spec = new Array[Double](n2)
           floorY(c) match {
             case Some(y) =>
               val fIdx = mapping.submapFloor(mapping.mux(c))
               val curve = synthesizeFloor1(setup.floors(fIdx), y, n2)
+              val res = residueVecs(c)
               var k = 0
-              while (k < n2) { spec(k) = curve(k) * residueVecs(c)(k); k += 1 }
-            case None => () // silent channel
+              while (k < n2) { spec(k) = curve(k) * res(k); k += 1 }
+            case None => java.util.Arrays.fill(spec, 0, n2, 0.0) // silent channel
           }
-          val t = Mdct.inverse(spec, n)
+          val t = imdct(spec)
+          val block = cur(c)
           var j = 0
-          while (j < n) { blockOut(c)(j) = t(j) * win(j); j += 1 }
+          while (j < n) { block(j) = t(j) * win(j); j += 1 }
           c += 1
         }
         // Overlap-add by block CENTERS (spec 1.3.2): consecutive centers
@@ -447,30 +484,30 @@ object VorbisAudio {
         // previous block's end (short-after-long) take only the current
         // one — exactly where the asymmetric windows are 0/1. Equal
         // sizes reduce to the classic half-block lap.
-        if (prevTail != null) {
+        if (prevN > 0) {
           val outLen = prevN / 4 + n / 4
           val curOff = 3 * prevN / 4 - n / 4
           c = 0
           while (c < ch) {
+            val pb = prev(c); val cb = cur(c); val o = out(c)
             var t = prevN / 2
             while (t < prevN / 2 + outLen) {
-              val a = if (t < prevN) prevTail(c)(t - prevN / 2) else 0.0
+              val a = if (t < prevN) pb(t) else 0.0
               val ci = t - curOff
-              val b = if (ci >= 0) blockOut(c)(ci) else 0.0
-              out(c) += (a + b).toFloat
+              val b = if (ci >= 0) cb(ci) else 0.0
+              o += (a + b).toFloat
               t += 1
             }
             c += 1
           }
         }
-        prevTail = Array.tabulate(ch)(cc =>
-          java.util.Arrays.copyOfRange(blockOut(cc), n2, n))
+        val done = prev; prev = cur; cur = done
         prevN = n
         ok += 1
       } catch {
         case _: Exception => failed += 1
       }
     }
-    DecodeResult(ident.sampleRate, ch, out.map(_.toArray), ok, failed)
+    DecodeResult(ident.sampleRate, ch, out.map(_.result), ok, failed)
   }
 }

@@ -149,14 +149,24 @@ object WavAudio {
     decodeDataset(df.selectExpr("path", "content").as[(String, Array[Byte])])
   }
 
-  /** The decode kernel with per-record status (emits, never throws). */
+  /** The status row of a payload that failed to decode. */
+  private def failedRow(file: String, e: Throwable): graft.model.DecodedAudio =
+    graft.model.DecodedAudio(file, 0, Array.empty, "failed",
+      s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}")
+
+  /** The decode kernel with per-record status (emits, never throws).
+    * Status is decided per payload, so a corrupt payload fails only its
+    * own row and no payload of its batch is decoded twice.
+    */
   final class WavDecodeStatusModel
       extends BatchModel[(String, Array[Byte]), graft.model.DecodedAudio] {
     val name = "wav_decode_status"
     def predictBatch(xs: Seq[(String, Array[Byte])]): Seq[graft.model.DecodedAudio] =
       xs.map { case (file, bytes) =>
-        val (sr, wave) = decode(bytes)
-        graft.model.DecodedAudio(file, sr, wave, "completed", "")
+        try {
+          val (sr, wave) = decode(bytes)
+          graft.model.DecodedAudio(file, sr, wave, "completed", "")
+        } catch { case scala.util.control.NonFatal(e) => failedRow(file, e) }
       }
   }
 
@@ -173,8 +183,7 @@ object WavAudio {
     import ds.sparkSession.implicits._
     InferenceOp.mapBatchedWithStatus[(String, Array[Byte]), graft.model.DecodedAudio](
       ds, "wav_decode_status", () => new WavDecodeStatusModel,
-      onFailure = (x, e) => graft.model.DecodedAudio(x._1, 0, Array.empty,
-        "failed", s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}"),
+      onFailure = (x, e) => failedRow(x._1, e),
       batchSize)
   }
 }

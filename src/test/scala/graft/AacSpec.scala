@@ -112,6 +112,23 @@ class AacSpec extends AnyFunSuite {
     intercept[Exception](AacAudio.decodeAdts(badProfile))
   }
 
+  test("truncated ADTS streams fail with a typed truncation error, never an index error") {
+    val good = AacEncoder.encode(24000, tone(500.0, 4096, 24000))
+    // a cut on a frame start leaves a shorter valid stream
+    val starts = Iterator.iterate(0)(o => o + AacAudio.parseAdtsHeader(good, o).frameLen)
+      .takeWhile(_ < good.length).toSet
+    val cuts = ((1 until good.length by 13) ++ (good.length - 9 until good.length))
+      .filterNot(starts.contains)
+    for (cut <- cuts) {
+      val e = intercept[Exception](AacAudio.decodeAdts(java.util.Arrays.copyOf(good, cut)))
+      assert(e.isInstanceOf[IllegalArgumentException] || e.isInstanceOf[IllegalStateException],
+        s"cut at $cut of ${good.length}: $e")
+      assert(e.getMessage != null &&
+        (e.getMessage.contains("truncated") || e.getMessage.contains("trailing bytes")),
+        s"cut at $cut of ${good.length}: $e")
+    }
+  }
+
   test("stereo CPE with M/S decodes and downmixes (hand-built two-SCE check)") {
     // the encoder mints mono; exercise the CPE/M-S decode path with a
     // synthetic frame: encode two mono streams, decode each, and pin

@@ -375,6 +375,36 @@ class PipelineSpec extends SparkSpec {
     assert(rows.filter(_.status == "completed").forall(_.waveform.nonEmpty))
   }
 
+  test("S10: a batch holding a corrupt payload hands the decode model each payload once") {
+    import graft.pipeline.{BatchModel, ModelCache, WavAudio}
+    val fx = fixture("x")
+    val wav = WavAudio.encode(fx.sr, fx.waveform)
+    val corrupt = "fLaC".getBytes ++ Array.tabulate[Byte](4092)(i => (i * 37 + 11).toByte)
+    val batch = Seq(("once_a.wav", wav), ("once_bad.flac", corrupt), ("once_c.wav", wav))
+    val inner = new WavAudio.WavDecodeStatusModel
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val counted = new BatchModel[(String, Array[Byte]), DecodedAudio] {
+      val name: String = inner.name
+      def predictBatch(xs: Seq[(String, Array[Byte])]): Seq[DecodedAudio] = {
+        xs.foreach(x => seen.add(x._1))
+        inner.predictBatch(xs)
+      }
+    }
+    val prev = ModelCache.swap(inner.name, counted)
+    val rows =
+      try WavAudio.decodeDatasetWithStatus(batch.toDS().coalesce(1)).collect()
+      finally ModelCache.swap(inner.name, prev)
+    import scala.jdk.CollectionConverters._
+    val calls = seen.asScala.toSeq.filter(_.startsWith("once_"))
+    assert(calls.sorted == batch.map(_._1).sorted, s"the model saw $calls")
+    val byFile = rows.map(r => r.file -> r).toMap
+    assert(byFile("once_a.wav").status == "completed" && byFile("once_c.wav").status == "completed")
+    // the failed row keeps the "<SimpleName>: <message>" error text
+    val e = intercept[Exception](WavAudio.decode(corrupt))
+    assert(byFile("once_bad.flac").status == "failed")
+    assert(byFile("once_bad.flac").error == s"${e.getClass.getSimpleName}: ${e.getMessage}")
+  }
+
   test("vadStage runs on REAL decoded WAV bytes end-to-end") {
     import graft.pipeline.WavAudio
     // write real .wav files, glob-scan them (S1), decode (S2), VAD (M1)
