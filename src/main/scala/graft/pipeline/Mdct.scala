@@ -110,15 +110,15 @@ object Mdct {
 
   /** The IMDCT of one size n with its plan resolved and its buffers
     * allocated once, so a decoder pays neither per block: it keeps one
-    * per block size for a whole stream. [[apply]] returns the n-sample
-    * buffer [[out]], which the next call overwrites. Not thread-safe.
+    * per block size for a whole stream. [[apply]] returns its n-sample
+    * output buffer, which the next call overwrites. Not thread-safe.
     */
   final class Inverse(n: Int) {
     private val p = plan(n)
     private val re = new Array[Double](p.fftSize)
     private val im = new Array[Double](p.fftSize)
     private val c = new Array[Double](p.half)
-    val out = new Array[Double](n)
+    private val out = new Array[Double](n)
 
     /** n output samples from the n/2 lines of `spec`. */
     def apply(spec: Array[Double]): Array[Double] = {

@@ -748,7 +748,7 @@ object Mp3Audio {
                   try {
                     decodeFrame(h, side, combined, startInRes, states, frameOut)
                     var c = 0
-                    while (c < channels) { pcm(c).appendFrom(frameOut(c), 0, h.samplesPerFrame); c += 1 }
+                    while (c < channels) { pcm(c).appendFrom(frameOut(c), h.samplesPerFrame); c += 1 }
                     stats += FrameStat(off, ok = true, "", tablesUsed)
                   } catch {
                     case e: Exception =>

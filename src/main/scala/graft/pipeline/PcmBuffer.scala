@@ -2,15 +2,13 @@ package graft.pipeline
 
 /** A growable float sample buffer: what the codecs append decoded PCM
   * to, in place of a boxed `ArrayBuffer[Float]`. Capacity doubles when
-  * full; [[result]] hands back the samples trimmed to [[length]].
+  * full; [[result]] hands back exactly the samples held.
   */
 private[pipeline] final class PcmBuffer(initialCapacity: Int = 1 << 16) {
   private var buf = new Array[Float](math.max(initialCapacity, 16))
   private var n = 0
 
-  def length: Int = n
-
-  /** Room for `more` samples past [[length]]. */
+  /** Room for `more` samples past the `n` held. */
   private def reserve(more: Int): Unit = {
     val need = n + more
     if (need > buf.length)
@@ -23,20 +21,20 @@ private[pipeline] final class PcmBuffer(initialCapacity: Int = 1 << 16) {
     n += 1
   }
 
-  def appendFrom(src: Array[Float], from: Int, count: Int): Unit = {
+  /** The first `count` samples of `src`. */
+  def appendFrom(src: Array[Float], count: Int): Unit = {
     reserve(count)
-    System.arraycopy(src, from, buf, n, count)
+    System.arraycopy(src, 0, buf, n, count)
     n += count
   }
 
-  /** `count` samples of silence. */
+  /** `count` samples of silence: slots past `n` are never written, so
+    * they already hold 0.
+    */
   def appendZeros(count: Int): Unit = {
     reserve(count)
-    java.util.Arrays.fill(buf, n, n + count, 0f)
     n += count
   }
-
-  def apply(i: Int): Float = buf(i)
 
   /** The samples; the buffer is done once this is called. */
   def result: Array[Float] = if (n == buf.length) buf else java.util.Arrays.copyOf(buf, n)

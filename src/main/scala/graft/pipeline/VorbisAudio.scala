@@ -97,10 +97,20 @@ object VorbisAudio {
     Some(y)
   }
 
+  /** What a floor's x list fixes for every packet: each point's low and
+    * high neighbor, and the point indices in ascending x.
+    */
+  final class FloorPlan(xList: Array[Int]) {
+    val lo: Array[Int] = Array.tabulate(xList.length)(lowNeighbor(xList, _))
+    val hi: Array[Int] = Array.tabulate(xList.length)(highNeighbor(xList, _))
+    val order: Array[Int] = (0 until xList.length).sortBy(xList(_)).toArray
+  }
+
   /** Spec floor1 curve synthesis (amplitude step2 logic + line render),
     * returning the amplitude multiplier per spectral line [0, n2).
+    * `plan` is `f`'s [[FloorPlan]].
     */
-  def synthesizeFloor1(f: Floor1, y: Array[Int], n2: Int): Array[Double] = {
+  def synthesizeFloor1(f: Floor1, plan: FloorPlan, y: Array[Int], n2: Int): Array[Double] = {
     val range = FloorRange(f.multiplier - 1)
     val n = f.xList.length
     val step2 = new Array[Boolean](n)
@@ -109,8 +119,8 @@ object VorbisAudio {
     finalY(0) = y(0); finalY(1) = y(1)
     var i = 2
     while (i < n) {
-      val lo = lowNeighbor(f.xList, i)
-      val hi = highNeighbor(f.xList, i)
+      val lo = plan.lo(i)
+      val hi = plan.hi(i)
       val predicted = renderPoint(f.xList(lo), finalY(lo), f.xList(hi), finalY(hi), f.xList(i))
       val v = y(i)
       val highroom = range - predicted
@@ -130,14 +140,16 @@ object VorbisAudio {
       }
       i += 1
     }
-    // render: sort points by x, draw lines between step2 points
-    val order = (0 until n).sortBy(f.xList(_))
+    // render: points in x order, lines between step2 points
+    val order = plan.order
     val out = new Array[Double](n2)
     var hx = 0
     var hy = 0
     var lx = 0
-    var ly = finalY(order.head) * f.multiplier
-    order.foreach { idx =>
+    var ly = finalY(order(0)) * f.multiplier
+    var o = 0
+    while (o < n) {
+      val idx = order(o)
       if (step2(idx)) {
         hx = f.xList(idx)
         hy = math.min(math.max(finalY(idx), 0), range - 1) * f.multiplier
@@ -145,6 +157,7 @@ object VorbisAudio {
         else if (hx == 0) out(0) = InverseDb(math.min(hy, 255))
         lx = hx; ly = hy
       }
+      o += 1
     }
     if (hx < n2) {
       // extend flat to the end
@@ -184,7 +197,7 @@ object VorbisAudio {
     */
   def decodeResidue(br: BitReader, r: Residue, books: Array[Codebook],
                     ch: Int, n2: Int, doNotDecode: Array[Boolean]): Array[Array[Double]] = {
-    val out = Array.ofDim[Double](ch, n2)
+    val out = zeros(ch, n2)
     if (r.resType == 2) {
       if (doNotDecode.forall(identity)) return out
       val v = decodeResidueCore(br, r, books, 1, n2 * ch, Array(false), format2 = true)
@@ -196,10 +209,18 @@ object VorbisAudio {
     }
   }
 
+  /** `rows` zeroed vectors of length `cols`. */
+  private def zeros(rows: Int, cols: Int): Array[Array[Double]] = {
+    val a = new Array[Array[Double]](rows)
+    var i = 0
+    while (i < rows) { a(i) = new Array[Double](cols); i += 1 }
+    a
+  }
+
   private def decodeResidueCore(br: BitReader, r: Residue, books: Array[Codebook],
                                 ch: Int, n2: Int, doNotDecode: Array[Boolean],
                                 format2: Boolean): Array[Array[Double]] = {
-    val out = Array.ofDim[Double](ch, n2)
+    val out = zeros(ch, n2)
     val begin = math.min(r.begin, n2)
     val end = math.min(r.end, n2)
     val nToRead = end - begin
@@ -398,6 +419,10 @@ object VorbisAudio {
     // the IMDCT per block size, and per channel the current and previous
     // windowed block and the spectrum, all reused across packets
     val imdcts = scala.collection.mutable.Map.empty[Int, Mdct.Inverse]
+    // per floor its plan, per (block flag, prev short, next short) its
+    // window, each made at first use
+    val floorPlans = new Array[FloorPlan](setup.floors.length)
+    val windows = new Array[Array[Double]](8)
     var cur = Array.ofDim[Double](ch, maxN)
     var prev = Array.ofDim[Double](ch, maxN) // windowed samples [prevN/2, prevN) used
     val spec = new Array[Double](maxN / 2)
@@ -457,14 +482,18 @@ object VorbisAudio {
         }
         inverseCoupling(mapping, residueVecs)
         // floor curve × residue, IMDCT, window, overlap-add
-        val win = windowShaped(n, ident.blocksize0, prevShort, nextShort)
+        val shape = (if (mode.blockFlag) 4 else 0) + (if (prevShort) 2 else 0) + (if (nextShort) 1 else 0)
+        if (windows(shape) == null) windows(shape) = windowShaped(n, ident.blocksize0, prevShort, nextShort)
+        val win = windows(shape)
         val imdct = imdcts.getOrElseUpdate(n, new Mdct.Inverse(n))
         c = 0
         while (c < ch) {
           floorY(c) match {
             case Some(y) =>
               val fIdx = mapping.submapFloor(mapping.mux(c))
-              val curve = synthesizeFloor1(setup.floors(fIdx), y, n2)
+              val f = setup.floors(fIdx)
+              if (floorPlans(fIdx) == null) floorPlans(fIdx) = new FloorPlan(f.xList)
+              val curve = synthesizeFloor1(f, floorPlans(fIdx), y, n2)
               val res = residueVecs(c)
               var k = 0
               while (k < n2) { spec(k) = curve(k) * res(k); k += 1 }
