@@ -324,20 +324,9 @@ object AacAudio {
   }
 
   /** Composite 2048-sample window for the long sequences; for
-    * EIGHT_SHORT the 8 short blocks are windowed individually. Built
-    * once per (sequence, 1-bit shapes); callers only read the halves.
+    * EIGHT_SHORT the 8 short blocks are windowed individually.
     */
   private[pipeline] def longWindowHalves(seq: Int, prevShape: Int, curShape: Int)
-      : (Array[Double], Array[Double]) = {
-    val h = longHalves(seq * 4 + prevShape * 2 + curShape)
-    if (h != null) h else buildLongWindowHalves(seq, prevShape, curShape) // throws
-  }
-
-  private lazy val longHalves: Array[(Array[Double], Array[Double])] =
-    Array.tabulate(16)(key =>
-      if (key / 4 == SeqEightShort) null else buildLongWindowHalves(key / 4, (key >> 1) & 1, key & 1))
-
-  private def buildLongWindowHalves(seq: Int, prevShape: Int, curShape: Int)
       : (Array[Double], Array[Double]) = {
     val left = new Array[Double](1024)
     val right = new Array[Double](1024)

@@ -200,9 +200,6 @@ object FlacAudio {
       }
       p += 1
     }
-    // a first partition shorter than the predictor order leaves a tail
-    // unread; it decodes as zero residual
-    if (idx < n) java.util.Arrays.fill(out, idx, n, 0L)
   }
 
   /** Decode a FLAC container to (sampleRate, mono float samples in

@@ -33,9 +33,10 @@ final class HttpInferenceException(msg: String, cause: Throwable)
 /** The EXTERNAL-SERVICE inference operator (SURVEY §7.4.4): the variant
   * of [[InferenceOp]] for models with no JVM runtime (M3 Sortformer, M7
   * Whisper, M9 CTC) served behind a batch HTTP endpoint. Same relational
-  * contract as [[InferenceOp.mapBatchedWithStatus]] — a
-  * `Dataset[I] => Dataset[O]` transform with per-record S10 fault
-  * routing — plus the operational concerns a remote service adds:
+  * contract as [[InferenceOp.mapBatched]] — a `Dataset[I] => Dataset[O]`
+  * transform — with per-record S10 fault routing (as
+  * [[WavAudio.WavDecodeStatusModel]] gives decode, one status row per
+  * payload), plus the operational concerns a remote service adds:
   *
   *  - ONE `java.net.http.HttpClient` per executor JVM ([[ModelCache]]):
   *    HTTP/1.1 keep-alive pools connections across every task and

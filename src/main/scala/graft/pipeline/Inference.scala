@@ -54,21 +54,4 @@ object InferenceOp {
       val model = ModelCache.getOrCreate(modelName)(load())
       it.grouped(batchSize).flatMap(b => model.predictBatch(b))
     }
-
-  /** S10 — per-record fault isolation: wrap inference in Try, emit a
-    * status instead of failing the task (the reference's per-file
-    * try/except, `vad_multi.py:48-54`); Spark adds task retry on top.
-    */
-  def mapBatchedWithStatus[I, O: Encoder](ds: Dataset[I], modelName: String,
-                                          load: () => BatchModel[I, O],
-                                          onFailure: (I, Throwable) => O,
-                                          batchSize: Int = 32): Dataset[O] =
-    ds.mapPartitions { it =>
-      val model = ModelCache.getOrCreate(modelName)(load())
-      it.grouped(batchSize).flatMap { b =>
-        scala.util.Try(model.predictBatch(b)).getOrElse(
-          b.map(x => scala.util.Try(model.predictBatch(Seq(x)).head)
-            .fold(e => onFailure(x, e), identity)))
-      }
-    }
 }

@@ -4,8 +4,8 @@ package graft.pipeline
   * to, in place of a boxed `ArrayBuffer[Float]`. Capacity doubles when
   * full; [[result]] hands back exactly the samples held.
   */
-private[pipeline] final class PcmBuffer(initialCapacity: Int = 1 << 16) {
-  private var buf = new Array[Float](math.max(initialCapacity, 16))
+private[pipeline] final class PcmBuffer {
+  private var buf = new Array[Float](1 << 12)
   private var n = 0
 
   /** Room for `more` samples past the `n` held. */

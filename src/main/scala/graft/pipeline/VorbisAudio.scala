@@ -387,42 +387,22 @@ object VorbisAudio {
     val setup = readSetup(pkts(2), ident.channels)
     val ch = ident.channels
     val modeBits = math.max(ilog(setup.modes.length - 1), 0)
-    /** The block size an audio packet's mode selects, or 0 if its first
-      * bits do not name one (the packet then fails below as well).
-      */
-    def blockSize(pkt: Array[Byte]): Int =
-      try {
-        val br = new BitReader(pkt)
-        require(br.bit() == 0, "not an audio packet")
-        val mode = setup.modes(if (modeBits == 0) 0 else br.bits(modeBits))
-        if (mode.blockFlag) ident.blocksize1 else ident.blocksize0
-      } catch { case _: Exception => 0 }
-    // Output per channel: (prevN + n)/4 samples for each consecutive
-    // pair of blocks. Summed over every packet whose mode bits parse,
-    // this is exact for a clean stream and an upper bound otherwise (a
-    // packet that fails drops its pairs, which only shortens the output).
     val audio = pkts.drop(3)
-    var bound = 0L
-    var lastN = 0
-    audio.foreach { pkt =>
-      val n = blockSize(pkt)
-      if (n > 0) {
-        if (lastN > 0) bound += lastN / 4 + n / 4
-        lastN = n
-      }
-    }
-    val out = Array.fill(ch)(new PcmBuffer(math.min(bound, Int.MaxValue - 8L).toInt))
+    val out = Array.fill(ch)(new PcmBuffer)
     // per mapping and submap, the channels it muxes
     val submapChannels = setup.mappings.map(m =>
       Array.tabulate(m.submaps)(sm => (0 until ch).filter(m.mux(_) == sm).toArray))
     val maxN = math.max(ident.blocksize0, ident.blocksize1)
-    // the IMDCT per block size, and per channel the current and previous
-    // windowed block and the spectrum, all reused across packets
-    val imdcts = scala.collection.mutable.Map.empty[Int, Mdct.Inverse]
-    // per floor its plan, per (block flag, prev short, next short) its
-    // window, each made at first use
-    val floorPlans = new Array[FloorPlan](setup.floors.length)
-    val windows = new Array[Array[Double]](8)
+    // Built once per stream: the IMDCT per block size, each floor1's plan
+    // (floor0 entries are null and fail their packets below), the window
+    // per (block flag, prev short, next short) and, per channel, the
+    // current and previous windowed block and the spectrum.
+    val imdct0 = new Mdct.Inverse(ident.blocksize0)
+    val imdct1 = new Mdct.Inverse(ident.blocksize1)
+    val floorPlans = setup.floors.map(f => if (f == null) null else new FloorPlan(f.xList))
+    val windows = Array.tabulate(8)(shape => windowShaped(
+      if (shape >= 4) ident.blocksize1 else ident.blocksize0, ident.blocksize0,
+      (shape & 2) != 0, (shape & 1) != 0))
     var cur = Array.ofDim[Double](ch, maxN)
     var prev = Array.ofDim[Double](ch, maxN) // windowed samples [prevN/2, prevN) used
     val spec = new Array[Double](maxN / 2)
@@ -483,17 +463,14 @@ object VorbisAudio {
         inverseCoupling(mapping, residueVecs)
         // floor curve × residue, IMDCT, window, overlap-add
         val shape = (if (mode.blockFlag) 4 else 0) + (if (prevShort) 2 else 0) + (if (nextShort) 1 else 0)
-        if (windows(shape) == null) windows(shape) = windowShaped(n, ident.blocksize0, prevShort, nextShort)
         val win = windows(shape)
-        val imdct = imdcts.getOrElseUpdate(n, new Mdct.Inverse(n))
+        val imdct = if (mode.blockFlag) imdct1 else imdct0
         c = 0
         while (c < ch) {
           floorY(c) match {
             case Some(y) =>
               val fIdx = mapping.submapFloor(mapping.mux(c))
-              val f = setup.floors(fIdx)
-              if (floorPlans(fIdx) == null) floorPlans(fIdx) = new FloorPlan(f.xList)
-              val curve = synthesizeFloor1(f, floorPlans(fIdx), y, n2)
+              val curve = synthesizeFloor1(setup.floors(fIdx), floorPlans(fIdx), y, n2)
               val res = residueVecs(c)
               var k = 0
               while (k < n2) { spec(k) = curve(k) * res(k); k += 1 }

@@ -149,11 +149,6 @@ object WavAudio {
     decodeDataset(df.selectExpr("path", "content").as[(String, Array[Byte])])
   }
 
-  /** The status row of a payload that failed to decode. */
-  private def failedRow(file: String, e: Throwable): graft.model.DecodedAudio =
-    graft.model.DecodedAudio(file, 0, Array.empty, "failed",
-      s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}")
-
   /** The decode kernel with per-record status (emits, never throws).
     * Status is decided per payload, so a corrupt payload fails only its
     * own row and no payload of its batch is decoded twice.
@@ -166,7 +161,11 @@ object WavAudio {
         try {
           val (sr, wave) = decode(bytes)
           graft.model.DecodedAudio(file, sr, wave, "completed", "")
-        } catch { case scala.util.control.NonFatal(e) => failedRow(file, e) }
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            graft.model.DecodedAudio(file, 0, Array.empty, "failed",
+              s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage)}")
+        }
       }
   }
 
@@ -181,9 +180,7 @@ object WavAudio {
   def decodeDatasetWithStatus(ds: Dataset[(String, Array[Byte])], batchSize: Int = 8)
       : Dataset[graft.model.DecodedAudio] = {
     import ds.sparkSession.implicits._
-    InferenceOp.mapBatchedWithStatus[(String, Array[Byte]), graft.model.DecodedAudio](
-      ds, "wav_decode_status", () => new WavDecodeStatusModel,
-      onFailure = (x, e) => failedRow(x._1, e),
-      batchSize)
+    InferenceOp.mapBatched[(String, Array[Byte]), graft.model.DecodedAudio](
+      ds, "wav_decode_status", () => new WavDecodeStatusModel, batchSize)
   }
 }
