@@ -387,7 +387,6 @@ object VorbisAudio {
     val setup = readSetup(pkts(2), ident.channels)
     val ch = ident.channels
     val modeBits = math.max(ilog(setup.modes.length - 1), 0)
-    val audio = pkts.drop(3)
     val out = Array.fill(ch)(new PcmBuffer)
     // per mapping and submap, the channels it muxes
     val submapChannels = setup.mappings.map(m =>
@@ -409,7 +408,7 @@ object VorbisAudio {
     var prevN = 0
     var ok = 0
     var failed = 0
-    audio.foreach { pkt =>
+    pkts.drop(3).foreach { pkt =>
       try {
         val br = new BitReader(pkt)
         require(br.bit() == 0, "not an audio packet")
