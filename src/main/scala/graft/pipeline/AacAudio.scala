@@ -40,6 +40,7 @@ import AacTables._
 object AacAudio {
 
   import Bitstream.BitReader // MSB-first, bounds-checked
+  import Bytes.{be32, isCode}
 
   private val SeqOnlyLong = 0
   private val SeqLongStart = 1
@@ -483,24 +484,46 @@ object AacAudio {
   final case class AdtsHeader(srIdx: Int, sampleRate: Int, channels: Int,
       frameLen: Int, headerLen: Int)
 
+  /** ADTS sync at `off` with the 7 header bytes present: 0xFFF, then
+    * layer bits 00 (Layer III streams carry 01 there, so the two never
+    * collide).
+    */
+  def isAdtsSync(bytes: Array[Byte], off: Int): Boolean =
+    bytes.length >= off + 7 && (bytes(off) & 0xff) == 0xff &&
+      (bytes(off + 1) & 0xf6) == 0xf0
+
+  /** The fields of the ADTS header at `off` (ISO/IEC 13818-7 §6.2), as
+    * written, or None where [[isAdtsSync]] fails. [[parseAdtsHeader]]
+    * holds them to what the decoder supports; the S3 probe reads any.
+    */
+  private[graft] final case class AdtsFields(protectionAbsent: Boolean,
+      profile: Int, srIdx: Int, chanCfg: Int, frameLen: Int, blocks: Int)
+
+  private[graft] def adtsFields(bytes: Array[Byte], off: Int): Option[AdtsFields] =
+    if (!isAdtsSync(bytes, off)) None
+    else {
+      def u(i: Int): Int = bytes(off + i) & 0xff
+      Some(AdtsFields(protectionAbsent = (u(1) & 1) == 1,
+        profile = (u(2) >> 6) & 0x3,
+        srIdx = (u(2) >> 2) & 0xf,
+        chanCfg = ((u(2) & 1) << 2) | ((u(3) >> 6) & 0x3),
+        frameLen = ((u(3) & 0x3) << 11) | (u(4) << 3) | ((u(5) >> 5) & 0x7),
+        blocks = (u(6) & 0x3) + 1))
+    }
+
   def parseAdtsHeader(bytes: Array[Byte], off: Int): AdtsHeader = {
     require(off + 7 <= bytes.length, "aac: truncated ADTS header")
-    def u(i: Int): Int = bytes(off + i) & 0xff
-    require(u(0) == 0xff && (u(1) & 0xf6) == 0xf0, "aac: bad ADTS sync")
-    val protAbsent = u(1) & 1
-    val profile = (u(2) >> 6) & 0x3
-    require(profile == 1, s"aac: only AAC-LC (profile 1), got $profile")
-    val srIdx = (u(2) >> 2) & 0xf
-    require(srIdx < SampleRates.length, s"aac: reserved sr index $srIdx")
-    val chanCfg = ((u(2) & 1) << 2) | ((u(3) >> 6) & 0x3)
-    require(chanCfg == 1 || chanCfg == 2,
-      s"aac: channel configuration $chanCfg unsupported")
-    val frameLen = ((u(3) & 0x3) << 11) | (u(4) << 3) | ((u(5) >> 5) & 0x7)
-    val blocks = (u(6) & 0x3) + 1
-    require(blocks == 1, "aac: multi-block ADTS frames unsupported")
-    val headerLen = if (protAbsent == 1) 7 else 9
-    require(frameLen >= headerLen, s"aac: frame length $frameLen too small")
-    AdtsHeader(srIdx, SampleRates(srIdx), chanCfg, frameLen, headerLen)
+    val fields = adtsFields(bytes, off)
+    require(fields.isDefined, "aac: bad ADTS sync")
+    val f = fields.get
+    require(f.profile == 1, s"aac: only AAC-LC (profile 1), got ${f.profile}")
+    require(f.srIdx < SampleRates.length, s"aac: reserved sr index ${f.srIdx}")
+    require(f.chanCfg == 1 || f.chanCfg == 2,
+      s"aac: channel configuration ${f.chanCfg} unsupported")
+    require(f.blocks == 1, "aac: multi-block ADTS frames unsupported")
+    val headerLen = if (f.protectionAbsent) 7 else 9
+    require(f.frameLen >= headerLen, s"aac: frame length ${f.frameLen} too small")
+    AdtsHeader(f.srIdx, SampleRates(f.srIdx), f.chanCfg, f.frameLen, headerLen)
   }
 
   /** Decode an ADTS stream to (sampleRate, mono waveform). Strict: the
@@ -563,14 +586,6 @@ object AacAudio {
   }
 
   // --------------------------------------------------------- M4A front
-  private def be32(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) |
-      ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-
-  private def boxIs(b: Array[Byte], o: Int, t: String): Boolean =
-    b(o) == t(0).toByte && b(o + 1) == t(1).toByte &&
-      b(o + 2) == t(2).toByte && b(o + 3) == t(3).toByte
-
   private final class M4aTable {
     var srIdx: Int = -1
     var chanCfg: Int = -1
@@ -586,40 +601,35 @@ object AacAudio {
     */
   private def demuxM4a(bytes: Array[Byte]): M4aTable = {
     val t = new M4aTable
-    def walk(from: Long, to: Long, depth: Int): Unit = {
+    def walk(from: Int, to: Int): Unit = {
       var off = from
       while (off + 8 <= to) {
-        var size = be32(bytes, off.toInt).toLong & 0xffffffffL
-        var body = off + 8
-        if (size == 1 && off + 16 <= to) {
-          size = (be32(bytes, off.toInt + 8).toLong << 32) |
-            (be32(bytes, off.toInt + 12).toLong & 0xffffffffL)
-          body = off + 16
-        } else if (size == 0) size = to - off
-        require(size >= 8 && off + size <= to, "aac: bad m4a box size")
-        val ty = off.toInt + 4
-        if (boxIs(bytes, ty, "moov") || boxIs(bytes, ty, "trak") ||
-            boxIs(bytes, ty, "mdia") || boxIs(bytes, ty, "minf") ||
-            boxIs(bytes, ty, "stbl"))
-          walk(body, off + size, depth + 1)
-        else if (boxIs(bytes, ty, "stsd")) {
+        val box = Mp4Probe.boxAt(bytes, off, to)
+        require(box.isDefined, "aac: bad m4a box size")
+        val (body, end) = box.get
+        val ty = off + 4
+        if (isCode(bytes, ty, "moov") || isCode(bytes, ty, "trak") ||
+            isCode(bytes, ty, "mdia") || isCode(bytes, ty, "minf") ||
+            isCode(bytes, ty, "stbl"))
+          walk(body, end)
+        else if (isCode(bytes, ty, "stsd")) {
           // fullbox(4) + entry_count(4) + one mp4a sample entry
-          val entry = body.toInt + 8
-          require(boxIs(bytes, entry + 4, "mp4a"), "aac: stsd entry not mp4a")
+          val entry = body + 8
+          require(isCode(bytes, entry + 4, "mp4a"), "aac: stsd entry not mp4a")
           // mp4a: 8 box hdr + 28 audio sample entry fields, then esds
           val esds = entry + 8 + 28
-          require(boxIs(bytes, esds + 4, "esds"), "aac: mp4a without esds")
-          readEsds(bytes, esds + 8 + 4, esds + be32(bytes, esds))
-        } else if (boxIs(bytes, ty, "stsz")) {
-          val n = be32(bytes, body.toInt + 8)
-          require(be32(bytes, body.toInt + 4) == 0, "aac: fixed stsz unsupported")
-          t.sizes = Array.tabulate(n)(i => be32(bytes, body.toInt + 12 + 4 * i))
-        } else if (boxIs(bytes, ty, "stco")) {
-          require(be32(bytes, body.toInt + 4) == 1,
+          require(isCode(bytes, esds + 4, "esds"), "aac: mp4a without esds")
+          readEsds(bytes, esds + 8 + 4, esds + be32(bytes, esds).toInt)
+        } else if (isCode(bytes, ty, "stsz")) {
+          val n = be32(bytes, body + 8).toInt
+          require(be32(bytes, body + 4) == 0, "aac: fixed stsz unsupported")
+          t.sizes = Array.tabulate(n)(i => be32(bytes, body + 12 + 4 * i).toInt)
+        } else if (isCode(bytes, ty, "stco")) {
+          require(be32(bytes, body + 4) == 1,
             "aac: multi-chunk m4a unsupported")
-          t.chunkOffset = be32(bytes, body.toInt + 8).toLong & 0xffffffffL
+          t.chunkOffset = be32(bytes, body + 8)
         }
-        off += size
+        off = end
       }
     }
     def readEsds(b: Array[Byte], from: Int, to: Int): Unit = {
@@ -657,7 +667,7 @@ object AacAudio {
       }
       throw new IllegalArgumentException("aac: esds without DecoderSpecificInfo")
     }
-    walk(0, bytes.length.toLong, 0)
+    walk(0, bytes.length)
     require(t.srIdx >= 0 && (t.chanCfg == 1 || t.chanCfg == 2),
       "aac: m4a missing AudioSpecificConfig")
     require(t.sizes != null && t.sizes.nonEmpty && t.chunkOffset >= 0,
@@ -687,8 +697,7 @@ object AacAudio {
 
   /** Container sniff used by [[WavAudio.decode]]. */
   def looksLikeAdts(bytes: Array[Byte]): Boolean =
-    bytes != null && bytes.length >= 7 && (bytes(0) & 0xff) == 0xff &&
-      (bytes(1) & 0xf6) == 0xf0
+    bytes != null && isAdtsSync(bytes, 0)
   def looksLikeM4a(bytes: Array[Byte]): Boolean =
-    bytes != null && bytes.length >= 12 && boxIs(bytes, 4, "ftyp")
+    bytes != null && bytes.length >= 12 && isCode(bytes, 4, "ftyp")
 }

@@ -23,6 +23,8 @@ import AacTables._
 object AacEncoder {
 
   import Bitstream.BitWriter
+  import Bytes.putBe32
+  import Mp4Probe.box
 
   private val QMax = 320 // peak target: comfortably inside escape range
 
@@ -253,32 +255,38 @@ object AacEncoder {
   /** ADTS stream: 7-byte headers (no CRC), AAC-LC, mono. */
   def encode(sr: Int, samples: Array[Float], shape: Int = 0,
       shortPeriod: Int = 0, tns: Boolean = false): Array[Byte] = {
-    val srIdx = SampleRates.indexOf(sr)
-    require(srIdx >= 0, s"no ADTS rate index for $sr")
+    val srIdx = adtsRateIndex(sr)
     val out = new java.io.ByteArrayOutputStream()
     encodeRawBlocks(samples, shape, shortPeriod, tns).foreach { payload =>
-      val frameLen = 7 + payload.length
-      require(frameLen < (1 << 13), "aac: frame too long for ADTS")
-      out.write(0xff); out.write(0xf1) // MPEG-4, layer 00, no CRC
-      out.write((1 << 6) | (srIdx << 2)) // profile LC, sr index
-      out.write((1 << 6) | ((frameLen >> 11) & 0x3)) // chan cfg 1 (mono)
-      out.write((frameLen >> 3) & 0xff)
-      out.write(((frameLen & 0x7) << 5) | 0x1f) // fullness hi
-      out.write(0xfc) // fullness lo + 1 raw data block
-      out.write(payload)
+      writeAdtsFrame(out, srIdx, payload)
     }
     out.toByteArray
   }
 
-  // -------------------------------------------------------- M4A mux
-  private def be32(v: Long): Array[Byte] =
-    Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-
-  private def box(t: String, body: Array[Byte]*): Array[Byte] = {
-    val payload = body.flatten.toArray
-    be32(8L + payload.length) ++ t.getBytes("US-ASCII") ++ payload
+  private[graft] def adtsRateIndex(sr: Int): Int = {
+    val srIdx = SampleRates.indexOf(sr)
+    require(srIdx >= 0, s"no ADTS rate index for $sr")
+    srIdx
   }
 
+  /** One ADTS frame: the 7-byte header (MPEG-4, no CRC, AAC-LC, mono,
+    * one raw data block) that [[AacAudio.adtsFields]] reads, then
+    * `payload`.
+    */
+  private[graft] def writeAdtsFrame(out: java.io.ByteArrayOutputStream,
+      srIdx: Int, payload: Array[Byte]): Unit = {
+    val frameLen = 7 + payload.length
+    require(frameLen < (1 << 13), "aac: frame too long for ADTS")
+    out.write(0xff); out.write(0xf1) // MPEG-4, layer 00, no CRC
+    out.write((1 << 6) | (srIdx << 2)) // profile LC, sr index
+    out.write((1 << 6) | ((frameLen >> 11) & 0x3)) // chan cfg 1 (mono)
+    out.write((frameLen >> 3) & 0xff)
+    out.write(((frameLen & 0x7) << 5) | 0x1f) // fullness hi
+    out.write(0xfc) // fullness lo + 1 raw data block
+    out.write(payload)
+  }
+
+  // -------------------------------------------------------- M4A mux
   /** Descriptor with the 1-byte length form (payload < 128 bytes). */
   private def desc(tag: Int, body: Array[Byte]): Array[Byte] = {
     require(body.length < 128, "esds descriptor too long")
@@ -296,7 +304,7 @@ object AacEncoder {
     require(srIdx >= 0, s"no rate index for $sr")
     val units = encodeRawBlocks(samples, shape, shortPeriod, tns)
     val mdatPayload = units.flatten.toArray
-    val ftyp = box("ftyp", "M4A ".getBytes("US-ASCII"), be32(0),
+    val ftyp = box("ftyp", "M4A ".getBytes("US-ASCII"), putBe32(0),
       "M4A ".getBytes("US-ASCII"))
     val mdat = box("mdat", mdatPayload)
     val chunkOffset = ftyp.length + 8L // first byte of mdat payload
@@ -306,7 +314,7 @@ object AacEncoder {
       val b1 = ((srIdx & 1) << 7) | (1 << 3)
       Array(b0.toByte, b1.toByte)
     }
-    val esds = box("esds", be32(0),
+    val esds = box("esds", putBe32(0),
       desc(0x03, Array[Byte](0, 1, 0) ++
         desc(0x04, Array[Byte](0x40, 0x15, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0) ++
           desc(0x05, asc)) ++
@@ -316,31 +324,31 @@ object AacEncoder {
       entry(7) = 1 // data_reference_index
       entry(17) = 1 // channelcount = 1 (mono)
       entry(19) = 16 // samplesize = 16
-      val srFixed = be32(sr.toLong << 16) // 16.16 sample rate
+      val srFixed = putBe32(sr.toLong << 16) // 16.16 sample rate
       System.arraycopy(srFixed, 0, entry, 24, 4)
       box("mp4a", entry, esds)
     }
-    val stsd = box("stsd", be32(0), be32(1), mp4a)
-    val stts = box("stts", be32(0), be32(1), be32(units.length.toLong),
-      be32(1024))
-    val stsc = box("stsc", be32(0), be32(1), be32(1),
-      be32(units.length.toLong), be32(1))
-    val stsz = box("stsz", be32(0), be32(0), be32(units.length.toLong),
-      units.flatMap(u => be32(u.length.toLong)).toArray)
-    val stco = box("stco", be32(0), be32(1), be32(chunkOffset))
+    val stsd = box("stsd", putBe32(0), putBe32(1), mp4a)
+    val stts = box("stts", putBe32(0), putBe32(1), putBe32(units.length.toLong),
+      putBe32(1024))
+    val stsc = box("stsc", putBe32(0), putBe32(1), putBe32(1),
+      putBe32(units.length.toLong), putBe32(1))
+    val stsz = box("stsz", putBe32(0), putBe32(0), putBe32(units.length.toLong),
+      units.flatMap(u => putBe32(u.length.toLong)).toArray)
+    val stco = box("stco", putBe32(0), putBe32(1), putBe32(chunkOffset))
     val stbl = box("stbl", stsd, stts, stsc, stsz, stco)
-    val dinf = box("dinf", box("dref", be32(0), be32(1),
-      box("url ", be32(1))))
-    val smhd = box("smhd", be32(0), be32(0))
+    val dinf = box("dinf", box("dref", putBe32(0), putBe32(1),
+      box("url ", putBe32(1))))
+    val smhd = box("smhd", putBe32(0), putBe32(0))
     val minf = box("minf", smhd, dinf, stbl)
-    val hdlr = box("hdlr", be32(0), be32(0), "soun".getBytes("US-ASCII"),
+    val hdlr = box("hdlr", putBe32(0), putBe32(0), "soun".getBytes("US-ASCII"),
       new Array[Byte](13))
-    val mdhd = box("mdhd", be32(0), be32(0), be32(0), be32(sr.toLong),
-      be32(durationSamples), be32(0))
-    val tkhd = box("tkhd", Array[Byte](0, 0, 0, 7), be32(0), be32(0),
-      be32(1), be32(0), be32(durationSamples), new Array[Byte](60))
-    val mvhd = box("mvhd", be32(0), be32(0), be32(0), be32(sr.toLong),
-      be32(durationSamples), new Array[Byte](80))
+    val mdhd = box("mdhd", putBe32(0), putBe32(0), putBe32(0), putBe32(sr.toLong),
+      putBe32(durationSamples), putBe32(0))
+    val tkhd = box("tkhd", Array[Byte](0, 0, 0, 7), putBe32(0), putBe32(0),
+      putBe32(1), putBe32(0), putBe32(durationSamples), new Array[Byte](60))
+    val mvhd = box("mvhd", putBe32(0), putBe32(0), putBe32(0), putBe32(sr.toLong),
+      putBe32(durationSamples), new Array[Byte](80))
     val moov = box("moov", mvhd,
       box("trak", tkhd, box("mdia", mdhd, hdlr, minf)))
     ftyp ++ mdat ++ moov

@@ -37,6 +37,8 @@ import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
   */
 object AudioMeta {
 
+  import Bytes.{le32, putLe32}
+
   /** Probe result: `format` ("wav" | "flac"), `nFields` = tag fields
     * readable from the metadata structures (INFO sub-chunks / vorbis
     * comment fields), `metaBytes` = total container bytes occupied by
@@ -55,14 +57,6 @@ object AudioMeta {
       b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
       b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'
 
-  private def u32le(b: Array[Byte], p: Int): Int =
-    (b(p) & 0xff) | ((b(p + 1) & 0xff) << 8) |
-      ((b(p + 2) & 0xff) << 16) | ((b(p + 3) & 0xff) << 24)
-
-  private def putU32le(v: Int): Array[Byte] =
-    Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-
   /** Top-level RIFF chunks as (id, payloadOffset, payloadLen). */
   private def riffChunks(b: Array[Byte]): Seq[(String, Int, Int)] = {
     require(isWav(b), "not a RIFF/WAVE container")
@@ -70,7 +64,7 @@ object AudioMeta {
     var p = 12
     while (p + 8 <= b.length) {
       val id = new String(b, p, 4, US_ASCII)
-      val len = u32le(b, p + 4)
+      val len = le32(b, p + 4).toInt
       require(len >= 0 && p + 8 + len <= b.length,
         s"RIFF chunk '$id' at $p overruns the container")
       out += ((id, p + 8, len))
@@ -88,13 +82,13 @@ object AudioMeta {
     val body = new ByteArrayOutputStream()
     chunks.foreach { case (id, payload) =>
       body.write(id.getBytes(US_ASCII))
-      body.write(putU32le(payload.length))
+      body.write(putLe32(payload.length))
       body.write(payload)
       if ((payload.length & 1) == 1) body.write(0)
     }
     val out = new ByteArrayOutputStream()
     out.write("RIFF".getBytes(US_ASCII))
-    out.write(putU32le(4 + body.size()))
+    out.write(putLe32(4 + body.size()))
     out.write("WAVE".getBytes(US_ASCII))
     body.writeTo(out)
     out.toByteArray
@@ -113,7 +107,7 @@ object AudioMeta {
       val v = value.getBytes(UTF_8)
       val padded = v.length + 1 + ((v.length + 1) & 1)
       info.write(tag.getBytes(US_ASCII))
-      info.write(putU32le(padded))
+      info.write(putLe32(padded))
       info.write(v)
       var pad = padded - v.length
       while (pad > 0) { info.write(0); pad -= 1 }
@@ -138,7 +132,7 @@ object AudioMeta {
             new String(b, off, 4, US_ASCII) == "INFO") {
           var p = off + 4
           while (p + 8 <= off + len) {
-            val sublen = u32le(b, p + 4)
+            val sublen = le32(b, p + 4).toInt
             require(sublen >= 0 && p + 8 + sublen <= off + len,
               "INFO sub-chunk overruns its LIST")
             nFields += 1
@@ -175,14 +169,12 @@ object AudioMeta {
     var last = false
     while (!last) {
       require(p + 4 <= b.length, "FLAC metadata header overruns stream")
-      last = (b(p) & 0x80) != 0
-      val tpe = b(p) & 0x7f
-      val len = ((b(p + 1) & 0xff) << 16) | ((b(p + 2) & 0xff) << 8) |
-        (b(p + 3) & 0xff)
-      require(p + 4 + len <= b.length,
-        s"FLAC metadata block type $tpe overruns stream")
-      out += ((tpe, p + 4, len))
-      p += 4 + len
+      val h = FlacAudio.readBlockHeader(new Bitstream.BitReader(b, p * 8L, b.length * 8L))
+      last = h.last
+      require(p + 4 + h.length <= b.length,
+        s"FLAC metadata block type ${h.blockType} overruns stream")
+      out += ((h.blockType, p + 4, h.length))
+      p += 4 + h.length
     }
     (out.result(), p)
   }
@@ -194,11 +186,7 @@ object AudioMeta {
     val out = new ByteArrayOutputStream()
     out.write("fLaC".getBytes(US_ASCII))
     blocks.zipWithIndex.foreach { case ((tpe, payload), i) =>
-      val lastFlag = if (i == blocks.size - 1) 0x80 else 0
-      out.write(lastFlag | tpe)
-      out.write((payload.length >> 16) & 0xff)
-      out.write((payload.length >> 8) & 0xff)
-      out.write(payload.length & 0xff)
+      out.write(FlacAudio.blockHeader(i == blocks.size - 1, tpe, payload.length))
       out.write(payload)
     }
     out.write(frames)
@@ -220,11 +208,11 @@ object AudioMeta {
       fields: Seq[(String, String)]): Array[Byte] = {
     val payload = new ByteArrayOutputStream()
     val v = vendor.getBytes(UTF_8)
-    payload.write(putU32le(v.length)); payload.write(v)
-    payload.write(putU32le(fields.size))
+    payload.write(putLe32(v.length)); payload.write(v)
+    payload.write(putLe32(fields.size))
     fields.foreach { case (k, value) =>
       val f = s"$k=$value".getBytes(UTF_8)
-      payload.write(putU32le(f.length)); payload.write(f)
+      payload.write(putLe32(f.length)); payload.write(f)
     }
     val (blocks, frames) = parsedFlac(flac)
     rebuildFlac(flac, blocks :+ ((4, payload.toByteArray)), frames)
@@ -248,10 +236,10 @@ object AudioMeta {
         metaBytes += 4L + len
         if (tpe == 4) {
           require(len >= 8, "VORBIS_COMMENT too short")
-          val vlen = u32le(b, off)
+          val vlen = le32(b, off).toInt
           require(vlen >= 0 && off + 4 + vlen + 4 <= off + len,
             "VORBIS_COMMENT vendor overruns block")
-          nFields += u32le(b, off + 4 + vlen).toLong
+          nFields += le32(b, off + 4 + vlen).toInt
         }
       }
     }

@@ -7,27 +7,35 @@ import javax.sound.sampled.AudioSystem
 /** S3 — HEADER-LEVEL duration/rate probe for containers the JVM cannot
   * decode. The reference globs six formats and ffprobe-style metadata is
   * enough for the S3 duration gate and the S1 manifest stats — decoding
-  * is only needed once a file passes them. All parsing here is from the
-  * public container specs, pure JVM, reads only the first few hundred
-  * bytes:
+  * is only needed once a file passes them. Each container layout is
+  * read through the module that owns it ([[FlacAudio]], [[Id3]] and
+  * [[Mp3Audio]], [[Ogg]], [[Mp4Probe]], [[AacAudio]]). The probe reads
+  * headers only, with bounded reads; it never decodes a payload or
+  * checks its CRCs:
   *
   *  - WAV/AIFF/AU: `javax.sound` file-format headers (frame count /
   *    frame rate), no sample decode.
   *  - FLAC: the mandatory STREAMINFO block (sample rate 20 bits, total
   *    samples 36 bits) right after the `fLaC` magic.
-  *  - MP3: skip an ID3v2 tag (syncsafe size, honoring the v2.4 footer
-  *    flag), scan a bounded span for the first frame sync (padding
-  *    before the first frame is legal), parse the frame header
-  *    (version/layer/bitrate/samplerate tables). If the first frame
-  *    carries a Xing/Info or VBRI header the frame count gives the
-  *    EXACT duration (frames × samplesPerFrame / sr); otherwise the
-  *    CBR estimate `bytes·8/bitrate` — exact for CBR files, a
-  *    documented estimate for headerless VBR.
+  *  - MP3: skip an ID3v2 tag, scan up to [[Mp3Audio.firstFrame]]'s
+  *    64 KiB past it for the first valid frame header (padding before
+  *    the first frame is legal), the same bound as the decoder. If the
+  *    first frame carries a Xing/Info or VBRI header the frame count
+  *    gives the EXACT duration (frames × samplesPerFrame / sr);
+  *    otherwise the CBR estimate `bytes·8/bitrate` — exact for CBR
+  *    files, a documented estimate for headerless VBR.
+  *  - Ogg/Vorbis: the first page's identification header for the rate,
+  *    and the granule position of the last page, found in the last
+  *    64 KiB.
+  *  - M4A: the box tree down to `mvhd` and the first `mdhd`.
+  *  - ADTS AAC: every frame header, one per frame.
   *
   * The probe NEVER throws on foreign bytes — `None` routes the file to
   * the S10 failed-status path, same as decode failures.
   */
 object AudioProbe {
+
+  import Bytes.{be32, be64, isCode, le32, putLe32}
 
   /** (container, sampleRate Hz, duration µs, exact?) — `exact = false`
     * marks the MP3 CBR estimate.
@@ -53,10 +61,9 @@ object AudioProbe {
     if (bytes == null || bytes.length < 12) None
     else if (bytes.startsWith("fLaC".getBytes)) probeFlac(bytes)
     else if (bytes.startsWith("OggS".getBytes)) probeOgg(bytes)
-    else if (bytes.length >= 12 && tagAt(bytes, 4, "ftyp")) probeMp4(bytes)
-    else if (isAdtsSync(bytes, 0)) probeAdts(bytes, 0)
-    else if (bytes.startsWith("ID3".getBytes) || isMp3Sync(bytes, 0))
-      probeMp3(bytes)
+    else if (isCode(bytes, 4, "ftyp")) probeMp4(bytes)
+    else if (AacAudio.isAdtsSync(bytes, 0)) probeAdts(bytes)
+    else if (Id3.hasTag(bytes) || Mp3Audio.isSync(bytes, 0)) probeMp3(bytes)
     else probeJavaSound(bytes)
 
   private def probeJavaSound(bytes: Array[Byte]): Option[Probe] =
@@ -71,203 +78,115 @@ object AudioProbe {
         exact = true))
     } catch { case _: Exception => None }
 
-  private def u(b: Byte): Int = b & 0xff
-
-  /** STREAMINFO (spec §9.1): after the 4-byte magic, block header
-    * (1 byte type+last, 3 bytes length = 34), then the 34-byte body:
-    * sample rate = 20 bits at body offset 10, total samples = the low
-    * 4 bits of byte 13 and bytes 14-17.
+  /** STREAMINFO (spec §8.2): the first metadata block, right after the
+    * 4-byte magic; its 34-byte body lies inside the 42 bytes checked.
     */
   private def probeFlac(bytes: Array[Byte]): Option[Probe] = {
     if (bytes.length < 8 + 34) return None
-    if ((u(bytes(4)) & 0x7f) != 0) return None // first block must be STREAMINFO
-    val b = 8 // body start
-    val sr = (u(bytes(b + 10)) << 12) | (u(bytes(b + 11)) << 4) | (u(bytes(b + 12)) >> 4)
-    val total = ((u(bytes(b + 13)) & 0x0f).toLong << 32) |
-      (u(bytes(b + 14)).toLong << 24) | (u(bytes(b + 15)).toLong << 16) |
-      (u(bytes(b + 16)).toLong << 8) | u(bytes(b + 17)).toLong
-    if (sr <= 0 || total <= 0) None
-    else Some(Probe("flac", sr, total * 1000000L / sr, exact = true))
+    val r = new Bitstream.BitReader(bytes, 32L, bytes.length * 8L)
+    if (FlacAudio.readBlockHeader(r).blockType != 0) return None
+    val si = FlacAudio.parseStreamInfo(r)
+    if (si.sampleRate <= 0 || si.totalSamples <= 0) None
+    else Some(Probe("flac", si.sampleRate,
+      si.totalSamples * 1000000L / si.sampleRate, exact = true))
   }
 
-  private def isMp3Sync(bytes: Array[Byte], off: Int): Boolean =
-    bytes.length >= off + 4 && u(bytes(off)) == 0xff && (u(bytes(off + 1)) & 0xe0) == 0xe0
-
-  // bitrate (kbps) and sample-rate tables for Layer III (public spec);
-  // index 0 = "free", 15 = invalid
-  private val brV1 =
-    Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-  private val brV2 =
-    Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
-  private val srV1 = Array(44100, 48000, 32000)
-  private val srV2 = Array(22050, 24000, 16000)
-  private val srV25 = Array(11025, 12000, 8000)
-
-  private def be32(bytes: Array[Byte], off: Int): Long =
-    (u(bytes(off)).toLong << 24) | (u(bytes(off + 1)).toLong << 16) |
-      (u(bytes(off + 2)).toLong << 8) | u(bytes(off + 3)).toLong
-
-  private def tagAt(bytes: Array[Byte], off: Int, t: String): Boolean =
-    off >= 0 && bytes.length >= off + 4 &&
-      bytes(off) == t.charAt(0).toByte && bytes(off + 1) == t.charAt(1).toByte &&
-      bytes(off + 2) == t.charAt(2).toByte && bytes(off + 3) == t.charAt(3).toByte
-
-  /** Bytes scanned past the ID3 tag looking for the first frame sync —
-    * bounded so foreign bytes can never turn the probe O(file).
-    */
-  private val SyncScanLimit = 8192
-
-  /** A full frame-header validity check at `off`: sync + version/layer/
-    * bitrate/samplerate fields all legal — a bare 0xFF,0xE0+ pair in
-    * junk must NOT end the scan.
-    */
-  private def isValidFrameHeader(bytes: Array[Byte], off: Int): Boolean = {
-    if (!isMp3Sync(bytes, off)) return false
-    val h1 = u(bytes(off + 1)); val h2 = u(bytes(off + 2))
-    val version = (h1 >> 3) & 0x3
-    val layer = (h1 >> 1) & 0x3
-    val brIdx = (h2 >> 4) & 0xf
-    val srIdx = (h2 >> 2) & 0x3
-    version != 1 && layer == 1 && brIdx != 0 && brIdx != 15 && srIdx != 3
-  }
-
-  private def probeMp3(bytes: Array[Byte]): Option[Probe] = {
-    // ID3v2: "ID3" ver(2) flags(1) size(4 × 7-bit syncsafe); the v2.4
-    // footer flag (byte 5 bit 4) adds a 10-byte footer after the tag
-    val tagEnd =
-      if (bytes.startsWith("ID3".getBytes) && bytes.length >= 10) {
-        val sz = (u(bytes(6)) << 21) | (u(bytes(7)) << 14) |
-          (u(bytes(8)) << 7) | u(bytes(9))
-        10 + sz + (if ((u(bytes(5)) & 0x10) != 0) 10 else 0)
-      } else 0
-    // padding/junk before the first frame is legal — bounded forward
-    // scan for the first FULLY VALID header, skipping false syncs
-    val limit = math.min(bytes.length - 4, tagEnd + SyncScanLimit)
-    var start = tagEnd
-    while (start <= limit && !isValidFrameHeader(bytes, start)) start += 1
-    if (start > limit) return None
-    val h1 = u(bytes(start + 1)); val h2 = u(bytes(start + 2))
-    val version = (h1 >> 3) & 0x3 // 3=MPEG1, 2=MPEG2, 0=MPEG2.5
-    val brIdx = (h2 >> 4) & 0xf
-    val srIdx = (h2 >> 2) & 0x3
-    val kbps = if (version == 3) brV1(brIdx) else brV2(brIdx)
-    val sr = version match {
-      case 3 => srV1(srIdx)
-      case 2 => srV2(srIdx)
-      case _ => srV25(srIdx)
-    }
-    // VBR headers in the first frame give an exact frame count.
-    // Xing/Info sits after the side info (MPEG1: 17 mono / 32 stereo;
-    // MPEG2/2.5: 9 / 17); VBRI always at header + 36.
-    val mono = ((u(bytes(start + 3)) >> 6) & 0x3) == 3
-    val sideInfo =
-      if (version == 3) { if (mono) 17 else 32 } else { if (mono) 9 else 17 }
-    val samplesPerFrame = if (version == 3) 1152L else 576L
-    val xingOff = start + 4 + sideInfo
-    val vbrFrames: Option[Long] =
-      if (tagAt(bytes, xingOff, "Xing") || tagAt(bytes, xingOff, "Info")) {
-        if (bytes.length >= xingOff + 12 && (be32(bytes, xingOff + 4) & 1L) != 0)
-          Some(be32(bytes, xingOff + 8))
+  private def probeMp3(bytes: Array[Byte]): Option[Probe] =
+    Mp3Audio.firstFrame(bytes).map { h =>
+      // VBR headers in the first frame give an exact frame count.
+      // Xing/Info sits after the side info; VBRI always at header + 36.
+      val xing = h.offset + 4 + h.sideInfoBytes
+      val vbri = h.offset + 36
+      val vbrFrames: Option[Long] =
+        if (bytes.length >= xing + 4 &&
+            (isCode(bytes, xing, "Xing") || isCode(bytes, xing, "Info"))) {
+          if (bytes.length >= xing + 12 && (be32(bytes, xing + 4) & 1L) != 0)
+            Some(be32(bytes, xing + 8))
+          else None
+        } else if (bytes.length >= vbri + 18 && isCode(bytes, vbri, "VBRI"))
+          Some(be32(bytes, vbri + 14))
         else None
-      } else if (tagAt(bytes, start + 36, "VBRI") && bytes.length >= start + 36 + 18)
-        Some(be32(bytes, start + 36 + 14))
-      else None
-    // Encoder conventions disagree on whether the Xing/VBRI frame count
-    // includes the header frame itself (LAME does, some others don't), so
-    // "exact" carries a one-frame (~26 ms at 44.1 kHz) ambiguity. The
-    // count is used as written — downstream gates operate at whole-second
-    // granularity (`vad_multi.py` min/max duration), so one frame never
-    // flips a decision.
-    vbrFrames.filter(_ > 0) match {
-      case Some(nf) =>
-        Some(Probe("mp3", sr, nf * samplesPerFrame * 1000000L / sr, exact = true))
-      case None =>
-        val payload = (bytes.length - start).toLong
-        Some(Probe("mp3", sr, payload * 8000000L / (kbps * 1000L), exact = false))
+      // Encoder conventions disagree on whether the Xing/VBRI frame count
+      // includes the header frame itself (LAME does, some others don't), so
+      // "exact" carries a one-frame (~26 ms at 44.1 kHz) ambiguity. The
+      // count is used as written — downstream gates operate at whole-second
+      // granularity (`vad_multi.py` min/max duration), so one frame never
+      // flips a decision.
+      vbrFrames.filter(_ > 0) match {
+        case Some(nf) =>
+          Probe("mp3", h.sampleRate, nf * h.samplesPerFrame * 1000000L / h.sampleRate,
+            exact = true)
+        case None =>
+          val payload = (bytes.length - h.offset).toLong
+          Probe("mp3", h.sampleRate, payload * 8000000L / (h.bitrateKbps * 1000L),
+            exact = false)
+      }
     }
-  }
 
   // ------------------------------------------------------- Ogg/Vorbis
-  /** Ogg page: "OggS" ver(1) type(1) granulepos(8 LE) serial(4) seq(4)
-    * crc(4) nsegs(1) segtable. The FIRST page's first packet is the
-    * Vorbis identification header `\x01vorbis`: version(4) channels(1)
+  /** The FIRST page's first packet is the Vorbis identification header
+    * (Vorbis I §4.2.2): type 1, "vorbis", version(4), channels(1),
     * rate(4 LE). Duration = the LAST page's granule position (absolute
     * PCM sample count) / rate — found by a bounded backward scan for
-    * the final "OggS" capture pattern. Exact by the container spec.
+    * the final page header. Exact by the container spec.
     */
   private def probeOgg(bytes: Array[Byte]): Option[Probe] = {
     if (bytes.length < 58) return None
-    val nsegs = u(bytes(26))
-    val packet = 27 + nsegs
+    val packet = Ogg.bodyAt(bytes, 0)
     if (bytes.length < packet + 30) return None
-    if (bytes(packet) != 1 || !tagAt(bytes, packet + 1, "vorb")) return None
+    if (bytes(packet) != 1 || !isCode(bytes, packet + 1, "vorb")) return None
     val sr = le32(bytes, packet + 12)
     if (sr <= 0) return None
-    // last page: scan backward (bounded) for the final OggS capture
     val scanFrom = math.max(0, bytes.length - 65536)
-    var last = -1
-    var p = bytes.length - 27
-    while (p >= scanFrom && last < 0) {
-      if (tagAt(bytes, p, "OggS") && bytes(p + 4) == 0) last = p
-      p -= 1
-    }
-    if (last < 0) return None
-    val gp = le64(bytes, last + 6)
+    var last = bytes.length - 27
+    while (last >= scanFrom && !Ogg.isPageAt(bytes, last)) last -= 1
+    if (last < scanFrom) return None
+    val gp = Ogg.granuleAt(bytes, last)
     if (gp <= 0) None
     else Some(Probe("ogg", sr.toInt, gp * 1000000L / sr, exact = true))
   }
 
-  private def le32(bytes: Array[Byte], off: Int): Long =
-    u(bytes(off)).toLong | (u(bytes(off + 1)).toLong << 8) |
-      (u(bytes(off + 2)).toLong << 16) | (u(bytes(off + 3)).toLong << 24)
-
-  private def le64(bytes: Array[Byte], off: Int): Long =
-    le32(bytes, off) | (le32(bytes, off + 4) << 32)
-
   // ---------------------------------------------------------- MP4/M4A
-  /** ISO-BMFF box walk: top-level boxes [size(4 BE) type(4)], size 1 →
-    * 64-bit largesize. Inside `moov`, `mvhd` v0 holds timescale(4) +
-    * duration(4) at offset 12 past the version byte block; v1 widens
-    * times to 64 bits. The first `mdhd` (track media header) supplies
-    * the media timescale — the audio sample rate for sound tracks.
-    * Duration = mvhd duration / mvhd timescale, exact per container.
+  /** ISO-BMFF box walk through [[Mp4Probe.boxAt]]. Inside `moov`,
+    * `mvhd` v0 holds timescale(4) + duration(4) at offset 12 past the
+    * version byte block; v1 widens times to 64 bits. The first `mdhd`
+    * (track media header) supplies the media timescale — the audio
+    * sample rate for sound tracks. Duration = mvhd duration / mvhd
+    * timescale, exact per container.
     */
   private def probeMp4(bytes: Array[Byte]): Option[Probe] = {
     var mvhdDur = -1L
     var mvhdScale = -1L
     var mdhdScale = -1L
-    def walk(from: Long, to: Long, depth: Int): Unit = {
+    def walk(from: Int, to: Int, depth: Int): Unit = {
       var off = from
       while (off + 8 <= to && depth < 8) {
-        var size = be32(bytes, off.toInt)
-        val typOff = off + 4
-        var body = off + 8
-        if (size == 1 && off + 16 <= to) {
-          size = (be32(bytes, off.toInt + 8) << 32) | be32(bytes, off.toInt + 12)
-          body = off + 16
-        } else if (size == 0) size = to - off // box extends to end
-        if (size < 8 || off + size > to) return
-        if (tagAt(bytes, typOff.toInt, "moov") || tagAt(bytes, typOff.toInt, "trak") ||
-            tagAt(bytes, typOff.toInt, "mdia"))
-          walk(body, off + size, depth + 1)
-        else if (tagAt(bytes, typOff.toInt, "mvhd") && mvhdDur < 0) {
-          val ver = u(bytes(body.toInt))
-          if (ver == 1 && body + 28 <= to) {
-            mvhdScale = be32(bytes, body.toInt + 20)
-            mvhdDur = (be32(bytes, body.toInt + 24) << 32) | be32(bytes, body.toInt + 28)
-          } else if (ver == 0 && body + 20 <= to) {
-            mvhdScale = be32(bytes, body.toInt + 12)
-            mvhdDur = be32(bytes, body.toInt + 16)
-          }
-        } else if (tagAt(bytes, typOff.toInt, "mdhd") && mdhdScale < 0) {
-          val ver = u(bytes(body.toInt))
-          if (ver == 1 && body + 24 <= to) mdhdScale = be32(bytes, body.toInt + 20)
-          else if (ver == 0 && body + 16 <= to) mdhdScale = be32(bytes, body.toInt + 12)
+        val (body, end) = Mp4Probe.boxAt(bytes, off, to) match {
+          case Some(box) => box
+          case None => return
         }
-        off += size
+        val typ = off + 4
+        if (isCode(bytes, typ, "moov") || isCode(bytes, typ, "trak") ||
+            isCode(bytes, typ, "mdia"))
+          walk(body, end, depth + 1)
+        else if (isCode(bytes, typ, "mvhd") && mvhdDur < 0) {
+          val ver = bytes(body) & 0xff
+          if (ver == 1 && body + 28 <= to) {
+            mvhdScale = be32(bytes, body + 20)
+            mvhdDur = be64(bytes, body + 24)
+          } else if (ver == 0 && body + 20 <= to) {
+            mvhdScale = be32(bytes, body + 12)
+            mvhdDur = be32(bytes, body + 16)
+          }
+        } else if (isCode(bytes, typ, "mdhd") && mdhdScale < 0) {
+          val ver = bytes(body) & 0xff
+          if (ver == 1 && body + 24 <= to) mdhdScale = be32(bytes, body + 20)
+          else if (ver == 0 && body + 16 <= to) mdhdScale = be32(bytes, body + 12)
+        }
+        off = end
       }
     }
-    try walk(0, bytes.length.toLong, 0)
+    try walk(0, bytes.length, 0)
     catch { case _: Exception => return None }
     if (mvhdDur <= 0 || mvhdScale <= 0) None
     else {
@@ -277,36 +196,26 @@ object AudioProbe {
   }
 
   // --------------------------------------------------------- ADTS AAC
-  /** ADTS sync: 0xFFF + layer bits 00 (Layer III streams carry 01
-    * there, so the two never collide).
-    */
-  private def isAdtsSync(bytes: Array[Byte], off: Int): Boolean =
-    bytes.length >= off + 7 && u(bytes(off)) == 0xff && (u(bytes(off + 1)) & 0xf6) == 0xf0
-
-  private val AdtsRates = Array(96000, 88200, 64000, 48000, 44100, 32000,
-    24000, 22050, 16000, 12000, 11025, 8000, 7350)
-
-  /** ADTS frame walk: header carries a 13-bit frame length and a 2-bit
-    * raw-data-block count; each block is 1024 samples. Duration =
+  /** ADTS frame walk: each header carries a 13-bit frame length and a
+    * 2-bit raw-data-block count; each block is 1024 samples. Duration =
     * Σ blocks · 1024 / rate — exact, one header read per frame.
     */
-  private def probeAdts(bytes: Array[Byte], start: Int): Option[Probe] = {
-    var off = start
+  private def probeAdts(bytes: Array[Byte]): Option[Probe] = {
+    var off = 0
     var sr = -1
     var samples = 0L
     var frames = 0
-    while (off + 7 <= bytes.length && isAdtsSync(bytes, off)) {
-      val srIdx = (u(bytes(off + 2)) >> 2) & 0xf
-      if (srIdx >= AdtsRates.length) return None
-      val rate = AdtsRates(srIdx)
+    var next = AacAudio.adtsFields(bytes, off)
+    while (next.isDefined) {
+      val h = next.get
+      if (h.srIdx >= AacTables.SampleRates.length) return None
+      val rate = AacTables.SampleRates(h.srIdx)
       if (sr < 0) sr = rate else if (sr != rate) return None
-      val frameLen = ((u(bytes(off + 3)) & 0x3) << 11) |
-        (u(bytes(off + 4)) << 3) | (u(bytes(off + 5)) >> 5)
-      if (frameLen < 7) return None
-      val blocks = (u(bytes(off + 6)) & 0x3) + 1
-      samples += blocks.toLong * 1024L
+      if (h.frameLen < 7) return None
+      samples += h.blocks.toLong * 1024L
       frames += 1
-      off += frameLen
+      off += h.frameLen
+      next = AacAudio.adtsFields(bytes, off)
     }
     if (sr <= 0 || samples <= 0 || frames == 0) None
     else Some(Probe("aac", sr, samples * 1000000L / sr, exact = true))
@@ -323,52 +232,28 @@ object AudioProbe {
       * whose granule position encodes `totalSamples`.
       */
     def ogg(sr: Int, totalSamples: Long): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      def page(granule: Long, seq: Int, packet: Array[Byte], bos: Boolean): Unit = {
-        out.write("OggS".getBytes)
-        out.write(0) // version
-        out.write(if (bos) 2 else 4) // header type: BOS / EOS
-        var g = granule
-        (0 until 8).foreach { _ => out.write((g & 0xff).toInt); g >>= 8 }
-        (0 until 4).foreach(i => out.write((0x1234 >> (8 * i)) & 0xff)) // serial
-        (0 until 4).foreach(i => out.write((seq >> (8 * i)) & 0xff))
-        (0 until 4).foreach(_ => out.write(0)) // crc (probe does not verify)
-        out.write(1) // one segment
-        out.write(packet.length)
-        out.write(packet)
-      }
       val ident = new java.io.ByteArrayOutputStream()
       ident.write(1); ident.write("vorbis".getBytes)
-      (0 until 4).foreach(_ => ident.write(0)) // version
+      ident.write(new Array[Byte](4)) // version
       ident.write(1) // channels
-      (0 until 4).foreach(i => ident.write((sr >> (8 * i)) & 0xff))
-      (0 until 12).foreach(_ => ident.write(0)) // bitrates
+      ident.write(putLe32(sr))
+      ident.write(new Array[Byte](12)) // bitrates
       ident.write(0xb8); ident.write(1) // blocksizes + framing
-      page(0L, 0, ident.toByteArray, bos = true)
-      page(totalSamples, 1, Array.fill[Byte](32)(0), bos = false)
+      val out = new java.io.ByteArrayOutputStream()
+      Ogg.writePage(out, headerType = 2, granule = 0L, serial = 0x1234, seq = 0,
+        Seq(ident.toByteArray))
+      Ogg.writePage(out, headerType = 4, granule = totalSamples, serial = 0x1234,
+        seq = 1, Seq(new Array[Byte](32)))
       out.toByteArray
     }
 
-    /** Minimal ISO-BMFF shell: ftyp + moov(mvhd v0 + trak/mdia/mdhd). */
-    def m4a(sr: Int, durationInSr: Long): Array[Byte] = {
-      def box(typ: String, body: Array[Byte]): Array[Byte] = {
-        val out = java.nio.ByteBuffer.allocate(8 + body.length)
-        out.putInt(8 + body.length); out.put(typ.getBytes); out.put(body)
-        out.array()
-      }
-      val mvhd = java.nio.ByteBuffer.allocate(100)
-      mvhd.putInt(0) // version+flags
-      mvhd.putInt(0); mvhd.putInt(0) // ctime mtime
-      mvhd.putInt(sr) // movie timescale = sample rate (audio-only file)
-      mvhd.putInt(durationInSr.toInt)
-      val mdhd = java.nio.ByteBuffer.allocate(24)
-      mdhd.putInt(0); mdhd.putInt(0); mdhd.putInt(0)
-      mdhd.putInt(sr); mdhd.putInt(durationInSr.toInt); mdhd.putInt(0)
-      val moov = box("moov", box("mvhd", mvhd.array()) ++
-        box("trak", box("mdia", box("mdhd", mdhd.array()))))
-      box("ftyp", "M4A ".getBytes ++ Array.fill[Byte](8)(0)) ++ moov ++
-        box("mdat", Array.fill[Byte](16)(0))
-    }
+    /** Minimal ISO-BMFF shell: [[Mp4Probe.mint]]'s ftyp + moov with one
+      * sound track, then a silent mdat.
+      */
+    def m4a(sr: Int, durationInSr: Long): Array[Byte] =
+      Mp4Probe.mint("M4A ", sr, durationInSr,
+        Seq(Mp4Probe.TrackInfo(1L, "soun", sr, durationInSr, 0L, 0L))) ++
+        Mp4Probe.box("mdat", new Array[Byte](16))
 
     /** CBR MPEG-1 Layer III silence: `frames` all-zero frames (zero
       * side info = empty granules, a fully legal silent stream — the
@@ -388,20 +273,9 @@ object AudioProbe {
 
     /** ADTS shell: `frames` one-block frames at `sr` (1024 samples each). */
     def adts(sr: Int, frames: Int): Array[Byte] = {
-      val srIdx = AdtsRates.indexOf(sr)
-      require(srIdx >= 0, s"no ADTS rate index for $sr")
-      val payload = 13
-      val frameLen = 7 + payload
+      val srIdx = AacEncoder.adtsRateIndex(sr)
       val out = new java.io.ByteArrayOutputStream()
-      (0 until frames).foreach { _ =>
-        out.write(0xff); out.write(0xf1) // MPEG-4, layer 00, no CRC
-        out.write((1 << 6) | (srIdx << 2)) // AAC-LC, sr index, private 0
-        out.write((1 << 6) | ((frameLen >> 11) & 0x3)) // mono chan cfg
-        out.write((frameLen >> 3) & 0xff)
-        out.write(((frameLen & 0x7) << 5) | 0x1f)
-        out.write(0xfc) // fullness + 1 block (00)
-        (0 until payload).foreach(_ => out.write(0))
-      }
+      (0 until frames).foreach(_ => AacEncoder.writeAdtsFrame(out, srIdx, new Array[Byte](13)))
       out.toByteArray
     }
   }

@@ -87,10 +87,30 @@ object FlacAudio {
 
   // ------------------------------------------------------------- decode
 
-  private final case class StreamInfo(sampleRate: Int, channels: Int,
+  /** A metadata block header (spec §8.1): 1 byte, the last-block flag
+    * in bit 7 and the block type in bits 0-6, then the body length in 24
+    * bits, big-endian.
+    */
+  private[graft] final case class BlockHeader(last: Boolean, blockType: Int, length: Int)
+
+  /** The one block-header reader of the decoder, the S3 probe and
+    * [[AudioMeta]]; the writer is [[blockHeader]].
+    */
+  private[graft] def readBlockHeader(r: BitReader): BlockHeader = {
+    val last = r.bit() == 1
+    val tpe = r.readBits(7).toInt
+    BlockHeader(last, tpe, r.readBits(24).toInt)
+  }
+
+  private[graft] def blockHeader(last: Boolean, blockType: Int, length: Int): Array[Byte] =
+    Array(((if (last) 0x80 else 0) | blockType).toByte, (length >> 16).toByte,
+      (length >> 8).toByte, length.toByte)
+
+  private[graft] final case class StreamInfo(sampleRate: Int, channels: Int,
       bps: Int, totalSamples: Long, md5: Array[Byte])
 
-  private def parseStreamInfo(r: BitReader): StreamInfo = {
+  /** The STREAMINFO body (spec §8.2), read from the block's first byte. */
+  private[graft] def parseStreamInfo(r: BitReader): StreamInfo = {
     r.readBits(16); r.readBits(16) // min/max blocksize
     r.readBits(24); r.readBits(24) // min/max framesize
     val sr = r.readBits(20).toInt
@@ -215,14 +235,13 @@ object FlacAudio {
     var info: StreamInfo = null
     var first = true
     while (!last) {
-      last = r.bit() == 1
-      val tpe = r.readBits(7).toInt
-      val len = r.readBits(24).toInt
+      val h = readBlockHeader(r)
+      last = h.last
       if (first) {
-        require(tpe == 0, s"first metadata block type $tpe != STREAMINFO")
+        require(h.blockType == 0, s"first metadata block type ${h.blockType} != STREAMINFO")
         info = parseStreamInfo(r)
         first = false
-      } else r.pos += len.toLong * 8
+      } else r.pos += h.length.toLong * 8
     }
     val nCh = info.channels
     val acc = Array.ofDim[Float](
@@ -354,9 +373,8 @@ object FlacAudio {
     }
     val out = new ByteArrayOutputStream()
     out.write("fLaC".getBytes)
-    // STREAMINFO: last-block flag set, type 0, length 34
+    out.write(blockHeader(last = true, blockType = 0, length = 34))
     val si = new BitWriter
-    si.write(1, 1); si.write(0, 7); si.write(34, 24)
     si.write(blockSize, 16); si.write(blockSize, 16)
     si.write(0, 24); si.write(0, 24)
     si.write(sr, 20); si.write(0, 3) /* 1 ch */

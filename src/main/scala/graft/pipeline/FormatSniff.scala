@@ -5,7 +5,7 @@ package graft.pipeline
   * mis-labeled blobs, and the S1 glob scan only routes what the path
   * already claims; this sniffs the CONTENT. All signatures are the
   * public container magics (PNG/JPEG/GIF/BMP imaging, WAV/AIFF/AU/
-  * FLAC/OGG/MP3 audio, PDF, WARC, gzip, zip). Container-first: a
+  * FLAC/OGG/AAC/MP3 audio, PDF, WARC, gzip, zip). Container-first: a
   * `.warc.gz` reports `gzip` — layered containers are unwrapped one
   * level at a time, each level's router loud and explicit (the same
   * posture as [[WarcIO]]'s member walk).
@@ -38,9 +38,9 @@ object FormatSniff {
     else if (starts(bytes, ascii(".snd"))) "au"
     else if (starts(bytes, ascii("fLaC"))) "flac"
     else if (starts(bytes, ascii("OggS"))) "ogg"
-    else if (starts(bytes, ascii("ID3"))
-      || (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff
-        && (bytes(1) & 0xe0) == 0xe0)) "mp3"
+    // ADTS's 0xFFF sync also passes the MPEG audio sync test below
+    else if (AacAudio.isAdtsSync(bytes, 0)) "aac"
+    else if (starts(bytes, ascii("ID3")) || Mp3Audio.isSync(bytes, 0)) "mp3"
     else if (starts(bytes, ascii("%PDF-"))) "pdf"
     else if (starts(bytes, ascii("WARC/"))) "warc"
     else if (starts(bytes, Array(0x1f, 0x8b))) "gzip"

@@ -42,10 +42,6 @@ object Id3 {
       ((b(off + 2) & 0x7f) << 7) | (b(off + 3) & 0x7f)
   }
 
-  private def be32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-
   /** Mint an ID3v2.3 or v2.4 tag followed by `audio`: text frames
     * (latin-1, encoding byte 0) from (frameId, text) pairs, then
     * `padding` zero bytes (fixture dual of [[probe]]/[[strip]]).
@@ -60,11 +56,8 @@ object Id3 {
       require(fid.length == 4, s"bad frame id: $fid")
       val payload = 0.toByte +: text.getBytes(ISO_8859_1)
       body.write(fid.getBytes(ISO_8859_1))
-      if (versionMajor == 4) body.write(syncsafe(payload.length))
-      else body.write(Array(((payload.length >> 24) & 0xff).toByte,
-        ((payload.length >> 16) & 0xff).toByte,
-        ((payload.length >> 8) & 0xff).toByte,
-        (payload.length & 0xff).toByte))
+      body.write(if (versionMajor == 4) syncsafe(payload.length)
+        else Bytes.putBe32(payload.length))
       body.write(Array(0.toByte, 0.toByte))
       body.write(payload)
     }
@@ -81,6 +74,19 @@ object Id3 {
   def hasTag(bytes: Array[Byte]): Boolean =
     bytes.length >= 10 && bytes(0) == 'I' && bytes(1) == 'D' &&
       bytes(2) == '3'
+
+  /** Where the audio after a leading ID3v2 tag starts (0 without a
+    * tag): the 10-byte header, the body size in its four syncsafe bytes
+    * (7 bits each, the high bit ignored), and the 10-byte footer when
+    * the v2.4 footer flag (flags bit 4) is set. The MP3 decoder and the
+    * S3 probe skip the tag by it; unlike [[probe]] it accepts any
+    * version and flags.
+    */
+  def tagEnd(bytes: Array[Byte]): Int =
+    if (!hasTag(bytes)) 0
+    else 10 + (((bytes(6) & 0x7f) << 21) | ((bytes(7) & 0x7f) << 14) |
+      ((bytes(8) & 0x7f) << 7) | (bytes(9) & 0x7f)) +
+      (if ((bytes(5) & 0x10) != 0) 10 else 0)
 
   /** Parse the leading ID3v2 tag, loudly. */
   def probe(bytes: Array[Byte]): Tag = {
@@ -102,7 +108,7 @@ object Id3 {
         require(fid.forall(c => c.isUpper || c.isDigit),
           s"bad ID3v2 frame id '$fid' at offset $pos")
         val size = if (ver == 4) unsyncsafe(bytes, pos + 4)
-          else be32(bytes, pos + 4)
+          else Bytes.be32(bytes, pos + 4).toInt
         require(size >= 0 && pos + 10 + size <= end,
           s"ID3v2 frame $fid ($size octets) runs past the tag body")
         val text =

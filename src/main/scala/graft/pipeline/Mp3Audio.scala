@@ -38,12 +38,20 @@ object Mp3Audio {
       else { if (channels == 1) 17 else 32 }
   }
 
-  private def u(b: Byte): Int = b & 0xff
+  /** MPEG audio frame sync at `off` with the 4 header bytes present:
+    * 11 set bits.
+    */
+  def isSync(bytes: Array[Byte], off: Int): Boolean =
+    bytes.length >= off + 4 && (bytes(off) & 0xff) == 0xff &&
+      (bytes(off + 1) & 0xe0) == 0xe0
 
+  /** The Layer III frame header at `off`, or None unless the sync and
+    * every field (version, layer, bitrate, sample rate) are legal: the
+    * one frame-header reader of the decoder and the S3 probe.
+    */
   def parseHeader(bytes: Array[Byte], off: Int): Option[Header] = {
-    if (off + 4 > bytes.length) return None
-    if (u(bytes(off)) != 0xff || (u(bytes(off + 1)) & 0xe0) != 0xe0) return None
-    val h1 = u(bytes(off + 1)); val h2 = u(bytes(off + 2)); val h3 = u(bytes(off + 3))
+    if (!isSync(bytes, off)) return None
+    val h1 = bytes(off + 1) & 0xff; val h2 = bytes(off + 2) & 0xff; val h3 = bytes(off + 3) & 0xff
     val version = (h1 >> 3) & 0x3
     val layer = (h1 >> 1) & 0x3
     if (version == 1 || layer != 1) return None // reserved version / not Layer III
@@ -646,14 +654,25 @@ object Mp3Audio {
     val pcm = new Array[Double](576)
   }
 
-  /** Skip ID3v2 at `off` if present; returns the new offset. */
-  private def skipId3(bytes: Array[Byte], off: Int): Int = {
-    if (off + 10 <= bytes.length && bytes(off) == 'I' && bytes(off + 1) == 'D' && bytes(off + 2) == '3') {
-      val size = ((bytes(off + 6) & 0x7f) << 21) | ((bytes(off + 7) & 0x7f) << 14) |
-        ((bytes(off + 8) & 0x7f) << 7) | (bytes(off + 9) & 0x7f)
-      val footer = if ((bytes(off + 5) & 0x10) != 0) 10 else 0
-      off + 10 + size + footer
-    } else off
+  /** Bytes scanned past the ID3v2 tag for the first frame header: junk
+    * before the first frame is legal, and the bound keeps a scan over
+    * foreign bytes from running the whole payload.
+    */
+  private val SyncScanBytes = 65536
+
+  /** The first valid frame header at most [[SyncScanBytes]] past the
+    * ID3v2 tag, if any: where the decoder starts and the S3 probe reads.
+    */
+  def firstFrame(bytes: Array[Byte]): Option[Header] = {
+    val from = Id3.tagEnd(bytes)
+    val limit = math.min(bytes.length - 4, from + SyncScanBytes)
+    var p = from
+    while (p <= limit) {
+      val h = parseHeader(bytes, p)
+      if (h.isDefined) return h
+      p += 1
+    }
+    None
   }
 
   /** Decode with per-frame fault isolation. Returns (sampleRate,
@@ -680,16 +699,9 @@ object Mp3Audio {
   private def decodeFull(bytes: Array[Byte])
       : (Int, Array[Float], Seq[FrameStat], Array[Array[Float]]) = {
     require(bytes != null && bytes.length >= 4, "empty payload")
-    var off = skipId3(bytes, 0)
-    // bounded pre-sync scan (junk before first frame is legal)
-    val scanLimit = math.min(bytes.length - 4, off + 65536)
-    var found = -1
-    var p = off
-    while (found < 0 && p <= scanLimit) {
-      if (parseHeader(bytes, p).isDefined) found = p else p += 1
-    }
-    require(found >= 0, "no MPEG audio frame found")
-    off = found
+    val first = firstFrame(bytes)
+    require(first.isDefined, "no MPEG audio frame found")
+    var off = first.get.offset
     val end = // ignore ID3v1 trailer
       if (bytes.length >= 128 && bytes(bytes.length - 128) == 'T' &&
         bytes(bytes.length - 127) == 'A' && bytes(bytes.length - 126) == 'G')

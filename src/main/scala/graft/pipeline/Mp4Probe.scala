@@ -16,21 +16,39 @@ package graft.pipeline
   */
 object Mp4Probe {
 
+  import Bytes._
+
   final case class TrackInfo(trackId: Long, handler: String,
       timescale: Long, duration: Long, width: Long, height: Long)
 
   final case class Mp4Info(brand: String, timescale: Long, duration: Long,
       tracks: Seq[TrackInfo])
 
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-      ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+  /** The box header at `off` in a parent that ends at `to` (ISO/IEC
+    * 14496-12 §4.2): [size(4 BE) type(4)]; size 1 means a 64-bit
+    * largesize follows, size 0 means the box runs to the end of its
+    * parent. Returns (body offset, box end), or None when the header or
+    * the box does not fit the parent. The one box-header rule of the
+    * M4A decoder, the S3 probe and this probe.
+    */
+  private[graft] def boxAt(b: Array[Byte], off: Int, to: Int): Option[(Int, Int)] =
+    if (off + 8 > to) None
+    else {
+      val small = be32(b, off)
+      val body = if (small == 1) off + 16 else off + 8
+      if (body > to) None
+      else {
+        val size = if (small == 1) be64(b, off + 8) else if (small == 0) to - off else small
+        if (size < body - off || size > to - off) None
+        else Some((body, off + size.toInt))
+      }
+    }
 
-  private def be64(b: Array[Byte], o: Int): Long =
-    (be32(b, o) << 32) | be32(b, o + 4)
-
-  private def typ(b: Array[Byte], o: Int): String =
-    new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
+  /** One box: [size(4 BE) type(4)] then `body`, in order. */
+  private[graft] def box(t: String, body: Array[Byte]*): Array[Byte] = {
+    val payload = body.flatten.toArray
+    putBe32(8L + payload.length) ++ t.getBytes("US-ASCII") ++ payload
+  }
 
   def probe(bytes: Array[Byte]): Mp4Info = {
     var brand = ""
@@ -55,23 +73,17 @@ object Mp4Probe {
       var off = from
       while (off < to) {
         require(off + 8 <= to, s"mp4: truncated box header at $off")
-        var size = be32(bytes, off)
-        var body = off + 8
-        if (size == 1) {
-          require(off + 16 <= to, "mp4: truncated largesize")
-          size = be64(bytes, off + 8); body = off + 16
-        }
-        require(size >= (body - off) && off + size <= to,
-          s"mp4: box size $size overruns parent at $off")
-        val t = typ(bytes, off + 4)
-        t match {
+        val (body, end) = boxAt(bytes, off, to).getOrElse(
+          throw new IllegalArgumentException(
+            s"mp4: box size ${be32(bytes, off)} overruns parent at $off"))
+        code(bytes, off + 4) match {
           case "ftyp" if brand.isEmpty =>
-            require(size >= 12, "mp4: ftyp too small")
-            brand = typ(bytes, body)
+            require(end - off >= 12, "mp4: ftyp too small")
+            brand = code(bytes, body)
           case "moov" | "mdia" =>
-            walk(body, off + size.toInt, depth + 1)
+            walk(body, end, depth + 1)
           case "trak" =>
-            walk(body, off + size.toInt, depth + 1)
+            walk(body, end, depth + 1)
             flushTrak()
           case "mvhd" =>
             val ver = bytes(body) & 0xff
@@ -88,7 +100,7 @@ object Mp4Probe {
             tkId = if (ver == 1) be32(bytes, body + 20)
                    else be32(bytes, body + 12)
             // width/height: last 8 bytes of the box, 16.16 fixed
-            val wOff = off + size.toInt - 8
+            val wOff = end - 8
             tkW = be32(bytes, wOff) >> 16
             tkH = be32(bytes, wOff + 4) >> 16
           case "mdhd" =>
@@ -101,10 +113,10 @@ object Mp4Probe {
               mdDur = be32(bytes, body + 16)
             }
           case "hdlr" =>
-            hdlr = typ(bytes, body + 8)
+            hdlr = code(bytes, body + 8)
           case _ => () // skip: mdat, free, udta, minf, ...
         }
-        off += size.toInt
+        off = end
       }
     }
     walk(0, bytes.length, 0)
@@ -112,20 +124,6 @@ object Mp4Probe {
     require(mvScale > 0, "mp4: no mvhd box")
     Mp4Info(brand, mvScale, mvDur, tracks.result())
   }
-
-  private def box(t: String, payload: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](8 + payload.length)
-    val size = out.length.toLong
-    out(0) = (size >> 24).toByte; out(1) = (size >> 16).toByte
-    out(2) = (size >> 8).toByte; out(3) = size.toByte
-    t.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      .copyToArray(out, 4)
-    payload.copyToArray(out, 8)
-    out
-  }
-
-  private def be32b(v: Long): Array[Byte] =
-    Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
 
   /** Mint a minimal probe-valid MP4 (fixture dual of [[probe]]):
     * ftyp + moov(mvhd + one trak per spec) — v0 headers, no mdat.
@@ -135,22 +133,22 @@ object Mp4Probe {
     require(brand.length == 4, s"mp4: ftyp brand must be 4 chars, got '$brand'")
     val ftyp = box("ftyp",
       brand.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++
-        be32b(0) ++ // minor_version
+        putBe32(0) ++ // minor_version
         brand.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     val mvhd = box("mvhd", Array[Byte](0, 0, 0, 0) ++
-      be32b(0) ++ be32b(0) ++ be32b(timescale) ++ be32b(duration) ++
+      putBe32(0) ++ putBe32(0) ++ putBe32(timescale) ++ putBe32(duration) ++
       new Array[Byte](80))
     val traks = tracks.map { tr =>
       val tkhd = box("tkhd", Array[Byte](0, 0, 0, 7) ++
-        be32b(0) ++ be32b(0) ++ be32b(tr.trackId) ++
+        putBe32(0) ++ putBe32(0) ++ putBe32(tr.trackId) ++
         // reserved(4) duration(4) reserved(8) layer/group/volume/res(8)
         // matrix(36) = 60 bytes to the 16.16 width/height pair
         new Array[Byte](60) ++
-        be32b(tr.width << 16) ++ be32b(tr.height << 16))
+        putBe32(tr.width << 16) ++ putBe32(tr.height << 16))
       val mdhd = box("mdhd", Array[Byte](0, 0, 0, 0) ++
-        be32b(0) ++ be32b(0) ++ be32b(tr.timescale) ++
-        be32b(tr.duration) ++ Array[Byte](0x55, (0xc4 & 0xff).toByte, 0, 0))
-      val hdlr = box("hdlr", Array[Byte](0, 0, 0, 0) ++ be32b(0) ++
+        putBe32(0) ++ putBe32(0) ++ putBe32(tr.timescale) ++
+        putBe32(tr.duration) ++ Array[Byte](0x55, (0xc4 & 0xff).toByte, 0, 0))
+      val hdlr = box("hdlr", Array[Byte](0, 0, 0, 0) ++ putBe32(0) ++
         tr.handler.getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++
         new Array[Byte](13))
       box("trak", tkhd ++ box("mdia", mdhd ++ hdlr))

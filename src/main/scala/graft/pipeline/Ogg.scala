@@ -8,6 +8,8 @@ package graft.pipeline
   */
 object Ogg {
 
+  import Bytes.{le32, le64}
+
   /** Ogg CRC32: polynomial 0x04c11db7, no pre/post inversion, MSB-first
     * (NOT zlib's). Table-driven.
     */
@@ -27,8 +29,11 @@ object Ogg {
     t
   }
 
-  def crc32(bytes: Array[Byte], from: Int, until: Int): Int = {
-    var crc = 0
+  def crc32(bytes: Array[Byte], from: Int, until: Int): Int =
+    crcUpdate(0, bytes, from, until)
+
+  private def crcUpdate(crc0: Int, bytes: Array[Byte], from: Int, until: Int): Int = {
+    var crc = crc0
     var i = from
     while (i < until) {
       crc = (crc << 8) ^ CrcTable(((crc >>> 24) ^ (bytes(i) & 0xff)) & 0xff)
@@ -37,19 +42,38 @@ object Ogg {
     crc
   }
 
+  /** The CRC of the page at `off` ending at `end`, taken as the spec
+    * defines it: over the whole page with its 4 CRC bytes read as zero.
+    */
+  private def pageCrc(bytes: Array[Byte], off: Int, end: Int): Int = {
+    var crc = crcUpdate(0, bytes, off, off + 22)
+    var i = 0
+    while (i < 4) { crc = (crc << 8) ^ CrcTable((crc >>> 24) & 0xff); i += 1 }
+    crcUpdate(crc, bytes, off + 26, end)
+  }
+
   final case class Page(offset: Int, headerType: Int, granulePos: Long,
                         serial: Int, seq: Int, segments: Array[Int],
                         body: Array[Byte]) {
     def isBos: Boolean = (headerType & 2) != 0
   }
 
-  private def u(b: Byte): Int = b & 0xff
+  /** True when a page header starts at `off` (RFC 3533 §6): its 27
+    * fixed bytes are present, with the "OggS" capture pattern and
+    * stream structure version 0.
+    */
+  def isPageAt(bytes: Array[Byte], off: Int): Boolean =
+    off >= 0 && off + 27 <= bytes.length && bytes(off) == 'O' &&
+      bytes(off + 1) == 'g' && bytes(off + 2) == 'g' && bytes(off + 3) == 'S' &&
+      bytes(off + 4) == 0
 
-  private def le32(b: Array[Byte], off: Int): Int =
-    u(b(off)) | (u(b(off + 1)) << 8) | (u(b(off + 2)) << 16) | (u(b(off + 3)) << 24)
+  /** The granule position of the page whose header is at `off`. */
+  def granuleAt(bytes: Array[Byte], off: Int): Long = le64(bytes, off + 6)
 
-  private def le64(b: Array[Byte], off: Int): Long =
-    (le32(b, off).toLong & 0xffffffffL) | (le32(b, off + 4).toLong << 32)
+  /** Where the body of the page whose header is at `off` starts: after
+    * the 27 fixed bytes and the segment table, whose length is byte 26.
+    */
+  def bodyAt(bytes: Array[Byte], off: Int): Int = off + 27 + (bytes(off + 26) & 0xff)
 
   /** Parse every well-formed page; a CRC mismatch rejects the page
     * (decode skips it — the codec layer's fault isolation reports the
@@ -59,28 +83,26 @@ object Ogg {
     val out = Seq.newBuilder[Page]
     var off = 0
     while (off + 27 <= bytes.length) {
-      if (bytes(off) == 'O' && bytes(off + 1) == 'g' && bytes(off + 2) == 'g' &&
-          bytes(off + 3) == 'S' && bytes(off + 4) == 0) {
-        val nsegs = u(bytes(off + 26))
-        val headEnd = off + 27 + nsegs
+      if (isPageAt(bytes, off)) {
+        val headEnd = bodyAt(bytes, off)
+        val nsegs = headEnd - off - 27
         if (headEnd > bytes.length) { off += 1 }
         else {
-          val segs = Array.tabulate(nsegs)(i => u(bytes(off + 27 + i)))
-          val bodyLen = segs.sum
-          val pageEnd = headEnd + bodyLen
-          if (pageEnd > bytes.length) { off += 1 }
-          else {
-            // CRC: whole page with the 4 CRC bytes zeroed
-            val page = java.util.Arrays.copyOfRange(bytes, off, pageEnd)
-            val stored = le32(page, 22)
-            page(22) = 0; page(23) = 0; page(24) = 0; page(25) = 0
-            if (crc32(page, 0, page.length) == stored) {
-              out += Page(off, u(bytes(off + 5)), le64(bytes, off + 6),
-                le32(bytes, off + 14), le32(bytes, off + 18), segs,
-                java.util.Arrays.copyOfRange(bytes, headEnd, pageEnd))
-              off = pageEnd
-            } else off += 1
+          val segs = new Array[Int](nsegs)
+          var pageEnd = headEnd
+          var i = 0
+          while (i < nsegs) {
+            segs(i) = bytes(off + 27 + i) & 0xff
+            pageEnd += segs(i)
+            i += 1
           }
+          if (pageEnd > bytes.length) { off += 1 }
+          else if (pageCrc(bytes, off, pageEnd) == le32(bytes, off + 22).toInt) {
+            out += Page(off, bytes(off + 5) & 0xff, granuleAt(bytes, off),
+              le32(bytes, off + 14).toInt, le32(bytes, off + 18).toInt, segs,
+              java.util.Arrays.copyOfRange(bytes, headEnd, pageEnd))
+            off = pageEnd
+          } else off += 1
         }
       } else off += 1
     }

@@ -193,4 +193,12 @@ class ContainersSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Mp4Probe.probe(java.util.Arrays.copyOfRange(mp4, 0, mp4.length - 6)))
   }
+
+  test("mp4 probe: a last box of size 0 runs to the end of the file") {
+    val tracks = Seq(Mp4Probe.TrackInfo(1L, "soun", 48000L, 96000L, 0L, 0L))
+    val mp4 = Mp4Probe.mint("isom", 1000L, 2000L, tracks)
+    // ISO/IEC 14496-12 §4.2: size 0 = "box extends to end of file"
+    val mdat = new Array[Byte](4) ++ "mdat".getBytes("US-ASCII") ++ new Array[Byte](100)
+    assert(Mp4Probe.probe(mp4 ++ mdat) == Mp4Probe.probe(mp4))
+  }
 }

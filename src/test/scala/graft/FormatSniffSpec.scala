@@ -35,4 +35,12 @@ class FormatSniffSpec extends AnyFunSuite {
     // fails the 0xe0 sync mask
     assert(FormatSniff.sniff(b(0xff, 0xc0, 0x00, 0x00)) == "unknown")
   }
+
+  test("ADTS AAC routes to aac, ahead of the MPEG audio sync rule") {
+    import graft.pipeline.AacEncoder
+    val adts = AacEncoder.encode(16000, Array.tabulate(4000)(i =>
+      (0.3 * math.sin(2 * math.Pi * 440 * i / 16000)).toFloat))
+    assert((adts(1) & 0xe0) == 0xe0, "ADTS bytes carry the 11-bit MPEG sync")
+    assert(FormatSniff.sniff(adts) == "aac")
+  }
 }

@@ -341,6 +341,13 @@ class PipelineSpec extends SparkSpec {
     fsync(14) = 0xff.toByte; fsync(15) = 0xfb.toByte; fsync(16) = 0x90.toByte
     val pj = AudioProbe.probe(fsync).get
     assert(pj.container == "mp3" && pj.sampleRate == 44100, s"got $pj")
+    // the probe scans as far past the tag for the first frame as the
+    // decoder does: a 16 KB gap after the tag changes nothing
+    val cbr = AudioProbe.Mint.mp3Cbr(40)
+    val gapped = graft.pipeline.Id3.mint(4, Seq("TIT2" -> "gap"), 0,
+      new Array[Byte](16384) ++ cbr)
+    assert(AudioProbe.probe(gapped).map(_.durationUs) ==
+      AudioProbe.probe(cbr).map(_.durationUs) && AudioProbe.probe(cbr).isDefined)
     // foreign bytes: None, never a throw (the S10 contract)
     assert(AudioProbe.probe("not audio at all".getBytes ++ new Array[Byte](64)).isEmpty)
     // the pre-decode gate: keep only payloads probing inside the band;
