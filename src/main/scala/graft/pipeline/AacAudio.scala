@@ -488,7 +488,7 @@ object AacAudio {
     * layer bits 00 (Layer III streams carry 01 there, so the two never
     * collide).
     */
-  def isAdtsSync(bytes: Array[Byte], off: Int): Boolean =
+  private[graft] def isAdtsSync(bytes: Array[Byte], off: Int): Boolean =
     bytes.length >= off + 7 && (bytes(off) & 0xff) == 0xff &&
       (bytes(off + 1) & 0xf6) == 0xf0
 

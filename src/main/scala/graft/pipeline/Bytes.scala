@@ -7,7 +7,7 @@ package graft.pipeline
   * `ArrayIndexOutOfBoundsException`, as the plain array read does, so a
   * reader that must not throw checks the length first.
   */
-object Bytes {
+private[graft] object Bytes {
 
   def be32(b: Array[Byte], off: Int): Long =
     ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |

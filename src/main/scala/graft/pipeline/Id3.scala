@@ -82,7 +82,7 @@ object Id3 {
     * S3 probe skip the tag by it; unlike [[probe]] it accepts any
     * version and flags.
     */
-  def tagEnd(bytes: Array[Byte]): Int =
+  private[graft] def tagEnd(bytes: Array[Byte]): Int =
     if (!hasTag(bytes)) 0
     else 10 + (((bytes(6) & 0x7f) << 21) | ((bytes(7) & 0x7f) << 14) |
       ((bytes(8) & 0x7f) << 7) | (bytes(9) & 0x7f)) +

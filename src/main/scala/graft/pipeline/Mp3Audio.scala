@@ -41,7 +41,7 @@ object Mp3Audio {
   /** MPEG audio frame sync at `off` with the 4 header bytes present:
     * 11 set bits.
     */
-  def isSync(bytes: Array[Byte], off: Int): Boolean =
+  private[graft] def isSync(bytes: Array[Byte], off: Int): Boolean =
     bytes.length >= off + 4 && (bytes(off) & 0xff) == 0xff &&
       (bytes(off + 1) & 0xe0) == 0xe0
 
@@ -51,7 +51,9 @@ object Mp3Audio {
     */
   def parseHeader(bytes: Array[Byte], off: Int): Option[Header] = {
     if (!isSync(bytes, off)) return None
-    val h1 = bytes(off + 1) & 0xff; val h2 = bytes(off + 2) & 0xff; val h3 = bytes(off + 3) & 0xff
+    val h1 = bytes(off + 1) & 0xff
+    val h2 = bytes(off + 2) & 0xff
+    val h3 = bytes(off + 3) & 0xff
     val version = (h1 >> 3) & 0x3
     val layer = (h1 >> 1) & 0x3
     if (version == 1 || layer != 1) return None // reserved version / not Layer III
@@ -663,7 +665,7 @@ object Mp3Audio {
   /** The first valid frame header at most [[SyncScanBytes]] past the
     * ID3v2 tag, if any: where the decoder starts and the S3 probe reads.
     */
-  def firstFrame(bytes: Array[Byte]): Option[Header] = {
+  private[graft] def firstFrame(bytes: Array[Byte]): Option[Header] = {
     val from = Id3.tagEnd(bytes)
     val limit = math.min(bytes.length - 4, from + SyncScanBytes)
     var p = from

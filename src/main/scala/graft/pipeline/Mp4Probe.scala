@@ -16,7 +16,7 @@ package graft.pipeline
   */
 object Mp4Probe {
 
-  import Bytes._
+  import Bytes.{be32, be64, code, putBe32}
 
   final case class TrackInfo(trackId: Long, handler: String,
       timescale: Long, duration: Long, width: Long, height: Long)
@@ -73,9 +73,9 @@ object Mp4Probe {
       var off = from
       while (off < to) {
         require(off + 8 <= to, s"mp4: truncated box header at $off")
-        val (body, end) = boxAt(bytes, off, to).getOrElse(
-          throw new IllegalArgumentException(
-            s"mp4: box size ${be32(bytes, off)} overruns parent at $off"))
+        val box = boxAt(bytes, off, to)
+        require(box.isDefined, s"mp4: box size ${be32(bytes, off)} overruns parent at $off")
+        val (body, end) = box.get
         code(bytes, off + 4) match {
           case "ftyp" if brand.isEmpty =>
             require(end - off >= 12, "mp4: ftyp too small")

@@ -62,18 +62,19 @@ object Ogg {
     * fixed bytes are present, with the "OggS" capture pattern and
     * stream structure version 0.
     */
-  def isPageAt(bytes: Array[Byte], off: Int): Boolean =
+  private[graft] def isPageAt(bytes: Array[Byte], off: Int): Boolean =
     off >= 0 && off + 27 <= bytes.length && bytes(off) == 'O' &&
       bytes(off + 1) == 'g' && bytes(off + 2) == 'g' && bytes(off + 3) == 'S' &&
       bytes(off + 4) == 0
 
   /** The granule position of the page whose header is at `off`. */
-  def granuleAt(bytes: Array[Byte], off: Int): Long = le64(bytes, off + 6)
+  private[graft] def granuleAt(bytes: Array[Byte], off: Int): Long = le64(bytes, off + 6)
 
   /** Where the body of the page whose header is at `off` starts: after
     * the 27 fixed bytes and the segment table, whose length is byte 26.
     */
-  def bodyAt(bytes: Array[Byte], off: Int): Int = off + 27 + (bytes(off + 26) & 0xff)
+  private[graft] def bodyAt(bytes: Array[Byte], off: Int): Int =
+    off + 27 + (bytes(off + 26) & 0xff)
 
   /** Parse every well-formed page; a CRC mismatch rejects the page
     * (decode skips it — the codec layer's fault isolation reports the
